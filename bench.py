@@ -1,7 +1,7 @@
 """Benchmark harness: runs every registered query at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints one
 JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
-"queries": {name: sec, ...}, "sf": ...}.
+"queries": {name: sec, ...}, "sf": ..., "n_errors": ...}.
 
 Each query is timed as cold plan → collect (count of materialized rows),
 after a warmup query to amortize JVM/session startup out of the numbers.
@@ -18,7 +18,7 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent))
 
-from mcp_server_vector_search_spark import registry  # noqa: E402
+from mcp_server_vector_search_spark import artifacts, registry  # noqa: E402
 from mcp_server_vector_search_spark.cache import release_scratch  # noqa: E402
 from mcp_server_vector_search_spark.session import get_spark  # noqa: E402
 
@@ -140,6 +140,8 @@ def main() -> None:
         "unit": "sec",
         "queries": timings,
         "sf": float(sf),
+        # a query that fails every pass drops out of the total: count it
+        "n_errors": len(errors),
     }
     full_payload = {
         **payload,
@@ -152,6 +154,7 @@ def main() -> None:
         "loadavg": {"start": loadavg_start, "end": os.getloadavg()},
         "wallclock": {"start": ts_start, "end": time.time()},
         "errors": errors,
+        "artifact_store": dict(artifacts.STATS),
     }
     # Lossless record: the driver archives only a truncated tail of stdout,
     # which has repeatedly lost 100+ per-query timings (VERDICT r6 task 1).

@@ -32,10 +32,6 @@ additionally asserts recall@10 against the exact operator
 
 from __future__ import annotations
 
-import hashlib
-import json
-import os
-from pathlib import Path
 from typing import Sequence
 
 import numpy as np
@@ -45,6 +41,7 @@ from pyspark.ml.functions import array_to_vector
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..artifacts import load_or_build
 from ..functions.embedder import DEFAULT_DIM, _token_vector
 from ..functions.train import ORACLE_SF_DIR, kmeans, load_sorted_vectors, sql_floats
 from ..functions.vector import (
@@ -56,7 +53,7 @@ from ..functions.vector import (
     vector_lit,
 )
 from ..registry import register
-from ..sources.tables import load_table
+from ..sources.tables import load_table, table_path
 from .topk import QUERY_VEC_ID, SCORE_DECIMALS, query_vector_df
 
 SEED = 42
@@ -227,18 +224,23 @@ def write_ivf_index(assigned: DataFrame, path: str) -> None:
     ).parquet(path)
 
 
-# Built indexes are offline artifacts reused across queries (the
-# reference's `embeddableIndex` likewise exists before any query hits
-# it — reference README.md:72-79 creates it as DDL, server.py:87 only
-# reads it).  Keyed by (dataset, quantizer params); gitignored.
-_INDEX_CACHE_ROOT = Path(__file__).resolve().parents[2] / ".cache" / "ivf"
+def _ivf_entry(
+    spark: SparkSession, sf_dir: str, n_centroids: int = N_CENTROIDS, seed: int = IVF_SEED
+) -> tuple[str, dict]:
+    """The build-once IVF store entry for ``sf_dir``: ``data/`` holds the
+    centroid_id-partitioned layout; the meta holds the centroids and the
+    per-cell radii (``ivf_cell_radii``), both computed in the one build
+    job (FAISS keeps per-list stats next to the quantizer the same way)."""
 
+    def build(out: str) -> dict:
+        emb = load_table(spark, sf_dir, "embeddings")
+        assigned, centroids = build_ivf_index(emb, n_centroids, seed)
+        write_ivf_index(assigned, out)
+        radii = ivf_cell_radii(spark.read.parquet(out), centroids)
+        return {"centroids": centroids, "radii": radii}
 
-def _ivf_cache_dir(
-    sf_dir: str, n_centroids: int = N_CENTROIDS, seed: int = IVF_SEED
-) -> Path:
-    tag = hashlib.md5(f"{sf_dir}:{n_centroids}:{seed}:v3".encode()).hexdigest()[:12]
-    return _INDEX_CACHE_ROOT / tag
+    params = {"n_centroids": n_centroids, "seed": seed, "v": 3}
+    return load_or_build("ivf", params, [table_path(sf_dir, "embeddings")], build)
 
 
 def load_or_build_ivf_index(
@@ -248,22 +250,14 @@ def load_or_build_ivf_index(
     seed: int = IVF_SEED,
 ) -> tuple[DataFrame, list[list[float]]]:
     """Build-once / query-many IVF: return the centroid_id-partitioned
-    layout for ``sf_dir``, building and materializing it on first use.
+    layout for ``sf_dir`` and its centroids, building and materializing
+    them on first use.
 
     Query-time cost becomes a partition-pruned read — the quantizer fit
     and assignment pass are paid once per corpus, exactly like the
-    reference's index DDL vs its per-query ``queryNodes`` call.  The
-    centroids file is written LAST so a half-built cache is never read.
-    """
-    root = _ivf_cache_dir(sf_dir, n_centroids, seed)
-    meta, data = root / "centroids.json", root / "data"
-    if meta.exists():
-        return spark.read.parquet(str(data)), json.loads(meta.read_text())
-    emb = load_table(spark, sf_dir, "embeddings")
-    assigned, centroids = build_ivf_index(emb, n_centroids, seed)
-    write_ivf_index(assigned, str(data))
-    meta.write_text(json.dumps(centroids))
-    return spark.read.parquet(str(data)), centroids
+    reference's index DDL vs its per-query ``queryNodes`` call."""
+    path, meta = _ivf_entry(spark, sf_dir, n_centroids, seed)
+    return spark.read.parquet(path), meta["centroids"]
 
 
 def nearest_centroids(
@@ -436,9 +430,6 @@ def _py_bucket(vec: Sequence[float], planes: np.ndarray, table: int, bits: int =
     return out
 
 
-_SRP_CACHE_ROOT = Path(__file__).resolve().parents[2] / ".cache" / "srp"
-
-
 def load_or_build_srp_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Build-once/query-many SRP index: one pass computes every row's
     L bucket ids (the only time the plane dot products run over the
@@ -448,12 +439,8 @@ def load_or_build_srp_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     caches.  At 100 TB this is the LSH index-build job, and the bucket
     columns are additionally the sort key a real deployment would
     cluster the files by."""
-    tag = hashlib.md5(
-        f"{sf_dir}:{SRP_BITS}:{SRP_TABLES}:{SEED}:v1".encode()
-    ).hexdigest()[:12]
-    data = _SRP_CACHE_ROOT / tag / "data"
-    done = _SRP_CACHE_ROOT / tag / "_DONE"
-    if not done.exists():
+
+    def build(out: str) -> dict:
         emb = load_table(spark, sf_dir, "embeddings")
         planes = srp_planes()
         indexed = emb.withColumn("__b", bucket_columns_expr(planes)).select(
@@ -461,9 +448,12 @@ def load_or_build_srp_index(spark: SparkSession, sf_dir: str) -> DataFrame:
             "embedding",
             *[F.element_at("__b", t + 1).alias(f"b{t}") for t in range(SRP_TABLES)],
         )
-        indexed.write.mode("overwrite").parquet(str(data))
-        done.write_text("")  # written LAST: gates half-built cache
-    return spark.read.parquet(str(data))
+        indexed.write.parquet(out)
+        return {}
+
+    params = {"bits": SRP_BITS, "tables": SRP_TABLES, "seed": SEED, "v": 1}
+    path, _ = load_or_build("srp", params, [table_path(sf_dir, "embeddings")], build)
+    return spark.read.parquet(path)
 
 
 def srp_lsh_topk(
@@ -997,41 +987,6 @@ def ivf_cell_radii(
     return {int(r["centroid_id"]): float(r["r"]) for r in rows}
 
 
-def load_or_build_ivf_radii(
-    spark: SparkSession,
-    sf_dir: str,
-    indexed: DataFrame,
-    centroids: list[list[float]],
-    n_centroids: int = N_CENTROIDS,
-    seed: int = IVF_SEED,
-) -> dict[int, float]:
-    """Per-cell radii as BUILD-ONCE index metadata (r16):
-    ``ivf_cell_radii``'s own contract says this statistic is computed
-    in the index build job and lands next to the centroids (FAISS
-    per-list stats) — it was being recomputed per range query.  Stored
-    in the same keyed cache dir as the layout, written atomically
-    (tmp + rename) so a half-written file is never read; if the file is
-    missing (pre-r16 cache) the aggregate runs once and lands it.
-
-    ``indexed``/``centroids`` MUST come from ``load_or_build_ivf_index``
-    with the same (sf_dir, n_centroids, seed) — the cache key does not
-    cover their content, so a caller passing a different index would
-    silently read stale radii (ADVICE r16)."""
-    root = _ivf_cache_dir(sf_dir, n_centroids, seed)
-    f = root / "radii.json"
-    if f.exists():
-        return {int(k): float(v) for k, v in json.loads(f.read_text()).items()}
-    radii = ivf_cell_radii(indexed, centroids)
-    # parents=True: the radii file may land before the layout write when a
-    # caller builds its own index frames; pid-unique tmp so two concurrent
-    # builders never rename each other's half-written file
-    root.mkdir(parents=True, exist_ok=True)
-    tmp = f.with_name(f"radii.json.tmp.{os.getpid()}")
-    tmp.write_text(json.dumps({str(k): v for k, v in radii.items()}))
-    tmp.rename(f)
-    return radii
-
-
 def range_feasible_cells(
     query_vec: Sequence[float],
     centroids: list[list[float]],
@@ -1120,14 +1075,14 @@ def q_ann_range_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     radii (index metadata), triangle-inequality feasible cells,
     partition-pruned scan, exact threshold filter — hash-matched
     against the full-scan oracle."""
-    indexed, cents = load_or_build_ivf_index(spark, sf_dir)
-    radii = load_or_build_ivf_radii(spark, sf_dir, indexed, cents)
+    path, meta = _ivf_entry(spark, sf_dir)
+    radii = {int(c): r for c, r in meta["radii"].items()}
     emb = load_table(spark, sf_dir, "embeddings")
     qvec = [
         float(v)
         for v in emb.where(F.col("vec_id") == QUERY_VEC_ID).first()["embedding"]
     ]
-    return ivf_range_search(indexed, cents, radii, qvec)
+    return ivf_range_search(spark.read.parquet(path), meta["centroids"], radii, qvec)
 
 
 # ---------------------------------------------------------------------------

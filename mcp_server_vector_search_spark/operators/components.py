@@ -135,7 +135,7 @@ def _edge_fingerprint(e: DataFrame):
 
     PRECONDITION (both call sites satisfy it): ``e`` is already DISTINCT
     and consistently oriented — the initial edge set is distinct with
-    u < v, every post-round set is small-star output, distinct with
+    u > v, every post-round set is small-star output, distinct with
     u > v — so no two rows canonicalize to the same (hi, lo) and the
     probe needs NO distinct of its own.  (r17, guide §2.4: the explicit
     ``.distinct()`` here was a set-level no-op that still paid one full
@@ -178,6 +178,9 @@ def _distributed_star(edges: DataFrame, max_iter: int) -> DataFrame:
     )
     prev = _edge_fingerprint(e)
     for _ in range(max_iter):
+        # load-bearing .distinct(): small-star emits the same (u, v) from
+        # several rows, and the fingerprint probe counts rows — it is the
+        # probe's distinct input, not a set-level no-op
         new_e = _small_star(_large_star(e)).distinct().localCheckpoint()
         cur = _edge_fingerprint(new_e)
         e.unpersist()

@@ -37,19 +37,18 @@ from __future__ import annotations
 
 import hashlib
 import heapq
-import json
 import math
-from pathlib import Path
 from typing import Sequence
 
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..artifacts import load_or_build
 from ..functions.train import ORACLE_SF_DIR, load_sorted_vectors
 from ..functions.vector import neo4j_score, vector_lit
 from ..registry import register
-from ..sources.tables import load_table
+from ..sources.tables import load_table, table_path
 from .ann import (
     ASSIGN_DECIMALS,
     K,
@@ -185,37 +184,32 @@ def _train_graph(
     return nodes, build_knn_graph(nodes)
 
 
-_GRAPH_CACHE_ROOT = Path(__file__).resolve().parents[2] / ".cache" / "graphann"
+def _graph_entry(spark: SparkSession, sf_dir: str) -> tuple[str, dict]:
+    """The build-once graph-ANN store entry: ``data/`` holds the
+    ``node_id``-partitioned layout (the same partition-pruning contract
+    as the IVF family); the meta holds the routing nodes and graph."""
 
+    def build(out: str) -> dict:
+        emb = load_table(spark, sf_dir, "embeddings")
+        nodes, graph = _train_graph(emb)
+        assigned = emb.withColumn("node_id", assignment_expr(nodes))
+        assigned.repartition("node_id").write.partitionBy("node_id").parquet(
+            out
+        )
+        return {"nodes": nodes, "graph": graph}
 
-def _graph_cache_dir(sf_dir: str) -> Path:
-    tag = hashlib.md5(
-        f"{sf_dir}:{GRAPH_NODES}:{GRAPH_DEGREE}:{TRAIN_SAMPLE}:v2".encode()
-    ).hexdigest()[:12]
-    return _GRAPH_CACHE_ROOT / tag
+    params = {
+        "nodes": GRAPH_NODES, "degree": GRAPH_DEGREE, "sample": TRAIN_SAMPLE, "v": 2
+    }
+    return load_or_build("graphann", params, [table_path(sf_dir, "embeddings")], build)
 
 
 def load_or_build_graph_index(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, list[list[float]], list[list[int]]]:
-    """Build-once/query-many graph-ANN layout: (index df, nodes, graph).
-    The layout is ``node_id``-partitioned parquet — the same
-    partition-pruning contract as the IVF family; metadata is written
-    LAST so a half-built cache is never read."""
-    root = _graph_cache_dir(sf_dir)
-    meta, data = root / "meta.json", root / "data"
-    if meta.exists():
-        m = json.loads(meta.read_text())
-        return spark.read.parquet(str(data)), m["nodes"], m["graph"]
-    emb = load_table(spark, sf_dir, "embeddings")
-    nodes, graph = _train_graph(emb)
-    assigned = emb.withColumn("node_id", assignment_expr(nodes))
-    assigned.repartition("node_id").write.mode("overwrite").partitionBy(
-        "node_id"
-    ).parquet(str(data))
-    meta.parent.mkdir(parents=True, exist_ok=True)
-    meta.write_text(json.dumps({"nodes": nodes, "graph": graph}))
-    return spark.read.parquet(str(data)), nodes, graph
+    """Build-once/query-many graph-ANN layout: (index df, nodes, graph)."""
+    path, m = _graph_entry(spark, sf_dir)
+    return spark.read.parquet(path), m["nodes"], m["graph"]
 
 
 def graph_topk(
@@ -751,7 +745,8 @@ def q_ann_hnsw_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from .ann import replace_partitions
 
-    _, nodes, _ = load_or_build_graph_index(spark, sf_dir)
+    path, meta = _graph_entry(spark, sf_dir)
+    nodes = meta["nodes"]
     emb = load_table(spark, sf_dir, "embeddings")
     fixed = {
         r["vec_id"]: [float(v) for v in r["embedding"]]
@@ -773,7 +768,7 @@ def q_ann_hnsw_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     # to the index, never a recompute of the assignment pass
     layout = tempfile.mkdtemp(prefix="hnsw_upsert_")
     shutil.rmtree(layout)
-    shutil.copytree(_graph_cache_dir(sf_dir) / "data", layout)
+    shutil.copytree(path, layout)
 
     stored = spark.read.parquet(layout)
     # movers: vectors a NEW node wins (assignment over the superset

@@ -30,16 +30,14 @@ residual → encode → probed ADC+offset → exact re-rank.
 
 from __future__ import annotations
 
-import hashlib
-import json
 import math
-from pathlib import Path
 from typing import Sequence
 
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..artifacts import load_or_build
 from ..functions.train import (
     ORACLE_SF_DIR,
     kmeans,
@@ -49,7 +47,7 @@ from ..functions.train import (
 )
 from ..functions.vector import l2_normalize, matrix_lit, neo4j_score
 from ..registry import register
-from ..sources.tables import load_table
+from ..sources.tables import load_table, table_path
 from .ann import (
     ASSIGN_DECIMALS,
     IVF_SEED,
@@ -77,8 +75,6 @@ from .pq import (
     cached_query_vector,
 )
 from .topk import QUERY_VEC_ID, SCORE_DECIMALS
-
-_IVFPQ_CACHE_ROOT = Path(__file__).resolve().parents[2] / ".cache" / "ivfpq"
 
 
 def _train_residual_codebooks(sample_vectors, cents, seed: int = SEED):
@@ -133,43 +129,41 @@ def load_or_build_ivfpq_index(
     Both models train on the same sorted bounded sample as their
     standalone operators (the FAISS sampling discipline); the one full
     corpus pass computes assignment + residual + codes together,
-    map-side only.  Metadata is written LAST so a half-built cache is
-    never read."""
-    # The tag names every constant that determines the persisted model:
-    # TRAIN_SAMPLE drives the trained centroids/codebooks in meta.json,
-    # so changing it must invalidate the cache (ADVICE r4).  "res:v3"
-    # marks the residual-encoding generation.
-    tag = hashlib.md5(
-        f"{sf_dir}:{N_CENTROIDS}:{IVF_SEED}:{M_SUBSPACES}:{K_CODEWORDS}:"
-        f"{TRAIN_SAMPLE}:res:v3".encode()
-    ).hexdigest()[:12]
-    root = _IVFPQ_CACHE_ROOT / tag
-    meta, data = root / "meta.json", root / "data"
-    if meta.exists():
-        m = json.loads(meta.read_text())
-        return spark.read.parquet(str(data)), m["cents"], m["books"]
-    emb = load_table(spark, sf_dir, "embeddings")
-    _, vecs = _sorted_sample(emb, TRAIN_SAMPLE)
-    cents = train_centroids(vecs)
-    books = _train_residual_codebooks(vecs, cents)
-    unit = emb.select(
-        "vec_id",
-        assignment_col(cents).alias("centroid_id"),
-        l2_normalize("embedding").alias("__unit"),
-    )
-    resid = unit.select(
-        "vec_id", "centroid_id", _residual_expr(cents).alias("__unit")
-    )
-    coded = _encode(resid, books).join(
-        unit.select("vec_id", "centroid_id"), "vec_id"
-    )
-    # repartition on the partition column: one writer task per cell, so
-    # the layout is cells files, not writers×cells (see write_ivf_index)
-    coded.repartition("centroid_id").write.mode("overwrite").partitionBy(
-        "centroid_id"
-    ).parquet(str(data))
-    meta.write_text(json.dumps({"cents": cents, "books": books}))
-    return spark.read.parquet(str(data)), cents, books
+    map-side only."""
+
+    def build(out: str) -> dict:
+        emb = load_table(spark, sf_dir, "embeddings")
+        _, vecs = _sorted_sample(emb, TRAIN_SAMPLE)
+        cents = train_centroids(vecs)
+        books = _train_residual_codebooks(vecs, cents)
+        unit = emb.select(
+            "vec_id",
+            assignment_col(cents).alias("centroid_id"),
+            l2_normalize("embedding").alias("__unit"),
+        )
+        resid = unit.select(
+            "vec_id", "centroid_id", _residual_expr(cents).alias("__unit")
+        )
+        coded = _encode(resid, books).join(
+            unit.select("vec_id", "centroid_id"), "vec_id"
+        )
+        # repartition on the partition column: one writer task per cell, so
+        # the layout is cells files, not writers×cells (see write_ivf_index)
+        coded.repartition("centroid_id").write.partitionBy("centroid_id").parquet(
+            out
+        )
+        return {"cents": cents, "books": books}
+
+    # The params name every constant that determines the persisted model:
+    # TRAIN_SAMPLE drives the trained centroids/codebooks in the meta, so
+    # changing it must invalidate the entry.  "res:v3" marks the
+    # residual-encoding generation.
+    params = {
+        "n_centroids": N_CENTROIDS, "seed": IVF_SEED, "m": M_SUBSPACES,
+        "k": K_CODEWORDS, "sample": TRAIN_SAMPLE, "v": "res:v3",
+    }
+    path, m = load_or_build("ivfpq", params, [table_path(sf_dir, "embeddings")], build)
+    return spark.read.parquet(path), m["cents"], m["books"]
 
 
 def ivfpq_topk(

@@ -31,6 +31,7 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..artifacts import load_or_build
 from ..functions.embedder import OPENAI_EMBED_DIM, embed_text_driver, hash_embedder
 from ..functions.train import (
     ORACLE_SF_DIR,
@@ -41,7 +42,7 @@ from ..functions.train import (
 )
 from ..functions.vector import dim_check, neo4j_score, vector_lit
 from ..registry import register
-from ..sources.tables import load_table, spread
+from ..sources.tables import load_table, spread, table_path
 from .ann import (
     ASSIGN_DECIMALS,
     NPROBE,
@@ -441,11 +442,8 @@ FROM (VALUES
 """
 
 
-_IDX1536_ROOT = None  # set lazily next to ann's cache root
-
-
 def _load_or_build_1536_layout(
-    spark: SparkSession, sf_dir: str, cents, cell_col: str, kind: str
+    spark: SparkSession, sf_dir: str, cents, cell_col: str
 ) -> DataFrame:
     """Build-once / query-many layout at the reference dimension: the
     1536-dim corpus embed + GEMM cell assignment materialize as a
@@ -458,46 +456,36 @@ def _load_or_build_1536_layout(
     made them the bench's most host-noise-sensitive entries.  float32
     embeddings round-trip parquet bit-exactly, and the assignment is
     the same HALF_UP GEMM, so cached and inline forms value-hash
-    identically."""
-    import hashlib as _hashlib
-    from pathlib import Path as _Path
+    identically.
 
-    from .ann import _INDEX_CACHE_ROOT, assignment_gemm
+    ONE artifact serves both navigation styles (``cell_col`` names only
+    the caller's cell-column alias): the IVF and HNSW rows share the
+    quantizer, so their layouts are byte-identical — the flat-probe vs
+    graph-descent difference is entirely in WHICH cells they read."""
+    import hashlib
 
-    # ONE artifact serves both navigation styles (``kind`` names only
-    # the caller's cell-column alias): the IVF and HNSW rows share the
-    # quantizer, so their layouts are byte-identical — the flat-probe
-    # vs graph-descent difference is entirely in WHICH cells they read.
-    del kind
-    # The centroid VALUES are part of the cache identity: a caller with
-    # a different quantizer (or a change to the assignment math — bump
-    # the version token for that) must miss and rebuild, not read a
-    # layout whose cell ids were assigned against other centroids.
-    cents_tag = _hashlib.md5(
-        np.asarray(cents, dtype=np.float32).tobytes()
-    ).hexdigest()[:12]
-    root = (
-        _Path(_INDEX_CACHE_ROOT).parent
-        / "idx1536"
-        / _hashlib.md5(
-            f"{sf_dir}:{IVF1536_CELLS}:{cents_tag}:v1".encode()
-        ).hexdigest()[:12]
-    )
-    meta, data = root / "ok", root / "data"
-    if not meta.exists():
+    from .ann import assignment_gemm
+
+    def build(out: str) -> dict:
         docs = spread(load_table(spark, sf_dir, "documents"))
         embed = hash_embedder(OPENAI_EMBED_DIM)
         emb = docs.select("doc_id", embed(F.col("text")).alias("embedding"))
         assigned = emb.withColumn("cell", assignment_gemm(cents))
-        root.mkdir(parents=True, exist_ok=True)
         # repartition on the cell aligns writer tasks with partitions
-        # (write_ivf_index's small-files discipline); the marker file is
-        # written LAST so a half-built cache is never read
-        assigned.repartition("cell").write.mode("overwrite").partitionBy(
-            "cell"
-        ).parquet(str(data))
-        meta.write_text("ok")
-    return spark.read.parquet(str(data)).select(
+        # (write_ivf_index's small-files discipline)
+        assigned.repartition("cell").write.partitionBy("cell").parquet(
+            out
+        )
+        return {}
+
+    # The centroid VALUES are part of the entry's identity: a caller with
+    # a different quantizer (or a change to the assignment math — bump
+    # the version token for that) must miss and rebuild, not read a
+    # layout whose cell ids were assigned against other centroids.
+    cents_tag = hashlib.md5(np.asarray(cents, dtype=np.float32).tobytes()).hexdigest()
+    params = {"cells": IVF1536_CELLS, "cents": cents_tag, "v": 1}
+    path, _ = load_or_build("idx1536", params, [table_path(sf_dir, "documents")], build)
+    return spark.read.parquet(path).select(
         "doc_id", "embedding", F.col("cell").alias(cell_col)
     )
 
@@ -522,9 +510,7 @@ def q_ann_ivf_dim1536(spark: SparkSession, sf_dir: str) -> DataFrame:
         raise RuntimeError("registration fixture unavailable")
     cents, probes, _expected = _IVF1536
     qcol = vector_lit([float(v) for v in _embed_1536(PROMPT_1536)])
-    assigned = _load_or_build_1536_layout(
-        spark, sf_dir, cents, "centroid_id", "ivf"
-    )
+    assigned = _load_or_build_1536_layout(spark, sf_dir, cents, "centroid_id")
     return (
         assigned.where(F.col("centroid_id").isin(*probes))
         .select(
@@ -612,7 +598,7 @@ def q_ann_hnsw_dim1536(spark: SparkSession, sf_dir: str) -> DataFrame:
         raise RuntimeError("registration fixture unavailable")
     cents, probes, _expected = _HNSW1536
     qcol = vector_lit([float(v) for v in _embed_1536(PROMPT_1536)])
-    assigned = _load_or_build_1536_layout(spark, sf_dir, cents, "node_id", "hnsw")
+    assigned = _load_or_build_1536_layout(spark, sf_dir, cents, "node_id")
     return (
         assigned.where(F.col("node_id").isin(*probes))
         .select(

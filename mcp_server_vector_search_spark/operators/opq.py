@@ -40,16 +40,14 @@ same discipline as pq.py/functions/train.py.
 
 from __future__ import annotations
 
-import hashlib
-import json
 import math
-from pathlib import Path
 from typing import Sequence
 
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..artifacts import load_or_build
 from ..functions.train import (
     ORACLE_SF_DIR,
     kmeans,
@@ -59,9 +57,10 @@ from ..functions.train import (
 )
 from ..functions.vector import l2_normalize, matrix_lit, neo4j_score
 from ..registry import register
-from ..sources.tables import load_table
+from ..sources.tables import load_table, table_path
 from .pq import (
     _encode as pq_encode,
+    _sorted_sample,
     cached_query_vector,
     DIST_DECIMALS,
     K,
@@ -78,8 +77,6 @@ from .topk import QUERY_VEC_ID, SCORE_DECIMALS
 SEED = 77
 DIM = 64
 ROT_DECIMALS = 12  # rounding for rotated coordinates (both engines)
-
-_OPQ_CACHE_ROOT = Path(__file__).resolve().parents[2] / ".cache" / "opq"
 
 
 def _train_rotation(sample_unit: np.ndarray) -> list[list[float]]:
@@ -149,37 +146,24 @@ def _rotated_unit(rot) -> F.Column:
     )
 
 
-def _cache_paths(sf_dir: str, seed: int) -> tuple[Path, Path]:
-    tag = hashlib.md5(
-        f"{sf_dir}:{M_SUBSPACES}:{K_CODEWORDS}:{TRAIN_SAMPLE}:{seed}:v1".encode()
-    ).hexdigest()[:12]
-    root = _OPQ_CACHE_ROOT / tag
-    return root / "meta.json", root / "data"
-
-
 def load_or_build_opq_index(spark: SparkSession, sf_dir: str, seed: int = SEED):
     """Build-once/query-many OPQ codes: (codes_df, rotation, books)."""
-    meta, data = _cache_paths(sf_dir, seed)
-    if meta.exists():
-        m = json.loads(meta.read_text())
-        return spark.read.parquet(str(data)), m["rot"], m["books"]
-    emb = load_table(spark, sf_dir, "embeddings")
-    rows = (
-        emb.orderBy("vec_id").limit(TRAIN_SAMPLE).select("vec_id", "embedding").collect()
-    )
-    ids = [int(r["vec_id"]) for r in rows]
-    vecs = [[float(x) for x in r["embedding"]] for r in rows]
-    rot, books = _train_opq(vecs, seed)
-    rotated = emb.select("vec_id", _rotated_unit(rot).alias("__unit"))
-    # pq._encode is parameterized by codebooks and reads the ``__unit``
-    # column — the identical nearest-codeword stage, reused verbatim
-    pq_encode(rotated, books).write.mode("overwrite").parquet(str(data))
-    meta.write_text(
-        json.dumps(
-            {"rot": rot, "books": books, "sample_ids": ids, "sample_vecs": vecs}
-        )
-    )
-    return spark.read.parquet(str(data)), rot, books
+
+    def build(out: str) -> dict:
+        emb = load_table(spark, sf_dir, "embeddings")
+        _, vecs = _sorted_sample(emb, TRAIN_SAMPLE)
+        rot, books = _train_opq(vecs, seed)
+        rotated = emb.select("vec_id", _rotated_unit(rot).alias("__unit"))
+        # pq._encode is parameterized by codebooks and reads the ``__unit``
+        # column — the identical nearest-codeword stage, reused verbatim
+        pq_encode(rotated, books).write.parquet(out)
+        return {"rot": rot, "books": books}
+
+    params = {
+        "m": M_SUBSPACES, "k": K_CODEWORDS, "sample": TRAIN_SAMPLE, "seed": seed, "v": 1
+    }
+    path, m = load_or_build("opq", params, [table_path(sf_dir, "embeddings")], build)
+    return spark.read.parquet(path), m["rot"], m["books"]
 
 
 def _rot_apply(rot, q: Sequence[float]) -> list[float]:

@@ -40,16 +40,14 @@ tests/test_ann.py asserts recall@10 against the exact operator too.
 
 from __future__ import annotations
 
-import hashlib
-import json
 import math
-from pathlib import Path
 from typing import Sequence
 
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..artifacts import load_or_build
 from ..functions.train import (
     ORACLE_SF_DIR,
     kmeans,
@@ -59,7 +57,7 @@ from ..functions.train import (
 )
 from ..functions.vector import l2_normalize, matrix_lit, neo4j_score
 from ..registry import register
-from ..sources.tables import load_table
+from ..sources.tables import load_table, table_path
 from .topk import QUERY_VEC_ID, SCORE_DECIMALS
 
 SEED = 42
@@ -75,8 +73,6 @@ RERANK_POOL = 100
 # vec_id) so Spark and DuckDB agree despite ulp-level summation-order
 # differences.
 DIST_DECIMALS = 9
-
-_PQ_CACHE_ROOT = Path(__file__).resolve().parents[2] / ".cache" / "pq"
 
 
 def _train_codebooks(sample_vectors, seed: int = SEED):
@@ -146,12 +142,20 @@ def _sorted_sample(
     ]
 
 
-def _cache_paths(sf_dir: str, seed: int) -> tuple[Path, Path]:
-    tag = hashlib.md5(
-        f"{sf_dir}:{M_SUBSPACES}:{K_CODEWORDS}:{seed}:v3".encode()
-    ).hexdigest()[:12]
-    root = _PQ_CACHE_ROOT / tag
-    return root / "meta.json", root / "data"
+def _pq_entry(spark: SparkSession, sf_dir: str, seed: int) -> tuple[str, dict]:
+    """The build-once PQ store entry: ``data/`` holds the codes; the
+    meta holds the codebooks and the training sample (ids + vectors)."""
+
+    def build(out: str) -> dict:
+        emb = load_table(spark, sf_dir, "embeddings")
+        ids, vecs = _sorted_sample(emb)
+        books = _train_codebooks(vecs, seed)
+        unit = emb.select("vec_id", l2_normalize("embedding").alias("__unit"))
+        _encode(unit, books).write.parquet(out)
+        return {"books": books, "sample_ids": ids, "sample_vecs": vecs}
+
+    params = {"m": M_SUBSPACES, "k": K_CODEWORDS, "seed": seed, "v": 3}
+    return load_or_build("pq", params, [table_path(sf_dir, "embeddings")], build)
 
 
 def load_or_build_pq_index(
@@ -159,22 +163,13 @@ def load_or_build_pq_index(
 ) -> tuple[DataFrame, list]:
     """Build-once/query-many PQ codes for ``sf_dir``'s embeddings.
 
-    The cache metadata keeps the training sample (ids + vectors)
-    alongside the codebooks: queries whose vector is in the sample
-    (the deterministic low-vec_id head) are served driver-side with NO
-    extra Spark job per query (json float round-trip is exact, so the
-    vector is bit-identical to the collected one)."""
-    meta, data = _cache_paths(sf_dir, seed)
-    if meta.exists():
-        return spark.read.parquet(str(data)), json.loads(meta.read_text())["books"]
-    emb = load_table(spark, sf_dir, "embeddings")
-    ids, vecs = _sorted_sample(emb)
-    books = _train_codebooks(vecs, seed)
-    unit = emb.select("vec_id", l2_normalize("embedding").alias("__unit"))
-    _encode(unit, books).write.mode("overwrite").parquet(str(data))
-    # written LAST: gates half-built cache
-    meta.write_text(json.dumps({"books": books, "sample_ids": ids, "sample_vecs": vecs}))
-    return spark.read.parquet(str(data)), books
+    The store meta keeps the training sample (ids + vectors) alongside
+    the codebooks: queries whose vector is in the sample (the
+    deterministic low-vec_id head) are served driver-side with NO extra
+    Spark job per query (json float round-trip is exact, so the vector
+    is bit-identical to the collected one)."""
+    path, meta = _pq_entry(spark, sf_dir, seed)
+    return spark.read.parquet(path), meta["books"]
 
 
 def cached_query_vector(
@@ -184,10 +179,7 @@ def cached_query_vector(
     served from the index cache's training sample when possible.  The
     sample is the sorted low-vec_id head, so the canonical query id 0 is
     always in it; out-of-sample ids fall back to one bounded lookup."""
-    meta, _ = _cache_paths(sf_dir, seed)
-    if not meta.exists():
-        load_or_build_pq_index(spark, sf_dir, seed)
-    m = json.loads(meta.read_text())
+    _, m = _pq_entry(spark, sf_dir, seed)
     try:
         return m["sample_vecs"][m["sample_ids"].index(vec_id)]
     except ValueError:

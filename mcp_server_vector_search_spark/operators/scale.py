@@ -29,27 +29,22 @@ query so the technique is exercised, not just described.
 
 from __future__ import annotations
 
-import hashlib
+import uuid
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from ..artifacts import load_or_build
 from ..registry import register
-from ..sources.tables import load_table, spread
+from ..sources.tables import load_table, spread, table_path
 from ..cache import scratch_persist
 
 N_SALTS = 16
 PRICE_BIN = 5000.0
 N_BUCKETS = 8
 R = 6
-
-# Bucketed layouts are ingest-time artifacts reused across queries
-# (same build-once/query-many discipline as the IVF index cache in
-# operators/ann.py — the reference likewise creates its index via DDL
-# once, reference README.md:72-79, and only reads it per query).
-_BUCKET_CACHE_ROOT = Path(__file__).resolve().parents[2] / ".cache" / "bucketed"
 
 
 def _ddl(df: DataFrame) -> str:
@@ -60,31 +55,31 @@ def load_or_build_bucketed(
     spark: SparkSession, sf_dir: str, table: str, key: str, n_buckets: int = N_BUCKETS
 ) -> DataFrame:
     """Return ``table`` from ``sf_dir`` as a bucketed+sorted catalog
-    table, writing the layout on first use and re-attaching the
-    existing files via DDL (cheap) on later sessions.
+    table.  Bucketed layouts are ingest-time artifacts reused across
+    queries (the build-once discipline of the IVF index store).
 
-    The bucket spec lives in table metadata, so a fresh session must
-    re-register it — but re-registration is a CREATE TABLE over the
-    already-written files, not a re-shuffle of the data.  A `_SUCCESS`
-    marker gates reuse so a half-written layout is never attached.
-    """
-    tag = hashlib.md5(f"{sf_dir}:{table}:{key}:{n_buckets}:v1".encode()).hexdigest()[:12]
-    name = f"bucketed_{table}_{tag}"
-    if spark.catalog.tableExists(name):
-        return spark.table(name)
-    path = _BUCKET_CACHE_ROOT / tag
+    The build writes the bucketed files once, through a temporary
+    catalog entry that it drops again.  The bucket spec lives in table
+    metadata, so every session attaches the published files with one
+    CREATE TABLE over them — a metadata operation, not a re-shuffle of
+    the data."""
     df = load_table(spark, sf_dir, table)
-    if (path / "_SUCCESS").exists():
+
+    def build(out: str) -> dict:
+        scratch = f"bucketed_build_{uuid.uuid4().hex}"
+        writer = df.write.bucketBy(n_buckets, key).sortBy(key).option("path", out)
+        writer.saveAsTable(scratch)
+        spark.sql(f"DROP TABLE {scratch}")  # external: the files stay
+        return {}
+
+    params = {"table": table, "key": key, "buckets": n_buckets, "v": 1}
+    path, _ = load_or_build("bucketed", params, [table_path(sf_dir, table)], build)
+    name = f"bucketed_{table}_{Path(path).parent.name}"  # the entry's key
+    if not spark.catalog.tableExists(name):
         spark.sql(
             f"CREATE TABLE {name} ({_ddl(df)}) USING PARQUET "
             f"CLUSTERED BY ({key}) SORTED BY ({key}) INTO {n_buckets} BUCKETS "
             f"LOCATION '{path}'"
-        )
-    else:
-        (
-            df.write.bucketBy(n_buckets, key).sortBy(key)
-            .option("path", str(path)).mode("overwrite")
-            .saveAsTable(name)
         )
     return spark.table(name)
 
@@ -537,25 +532,22 @@ def join_bloom_runtime_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 DPP_DIM_ROWS = [("R", "returned"), ("A", "accepted"), ("N", "none")]
-_DPP_CACHE_ROOT = Path(__file__).resolve().parents[2] / ".cache" / "dpp"
 
 
 def _dpp_layout(spark: SparkSession, sf_dir: str) -> str:
     """Build-once l_returnflag-partitioned lineitem layout (the
     partitioned-fact precondition DPP prunes against)."""
-    tag = hashlib.md5(f"{sf_dir}:dpp:v1".encode()).hexdigest()[:12]
-    root = _DPP_CACHE_ROOT / tag
-    data, marker = root / "data", root / "_done"
-    if not marker.exists():
+
+    def build(out: str) -> dict:
         li = load_table(spark, sf_dir, "lineitem")
         li.select(
             "l_orderkey", "l_extendedprice", "l_returnflag"
-        ).repartition("l_returnflag").write.mode("overwrite").partitionBy(
-            "l_returnflag"
-        ).parquet(str(data))
-        marker.parent.mkdir(parents=True, exist_ok=True)
-        marker.write_text("ok")
-    return str(data)
+        ).repartition("l_returnflag").write.partitionBy("l_returnflag").parquet(
+            out
+        )
+        return {}
+
+    return load_or_build("dpp", {"v": 1}, [table_path(sf_dir, "lineitem")], build)[0]
 
 
 @register(

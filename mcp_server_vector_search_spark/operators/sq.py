@@ -24,19 +24,17 @@ in the DuckDB oracle, so the approximate result itself is value-hashed.
 
 from __future__ import annotations
 
-import hashlib
-import json
 import math
-from pathlib import Path
 from typing import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..artifacts import load_or_build
 from ..functions.train import ORACLE_SF_DIR, load_sorted_vectors, sql_float, sql_floats
 from ..functions.vector import l2_normalize, neo4j_score
 from ..registry import register
-from ..sources.tables import load_table
+from ..sources.tables import load_table, table_path
 from .pq import (
     DIM,
     DIST_DECIMALS,
@@ -48,7 +46,6 @@ from .pq import (
 )
 from .topk import QUERY_VEC_ID, SCORE_DECIMALS
 
-_SQ_CACHE_ROOT = Path(__file__).resolve().parents[2] / ".cache" / "sq8"
 SQ_LEVELS = 255  # codes span 0..255
 
 
@@ -105,20 +102,19 @@ def load_or_build_sq8_index(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, list[float], list[float]]:
     """Build-once/query-many SQ8 codes for ``sf_dir``'s embeddings;
-    returns (index, vmin, vdelta).  Metadata written LAST."""
-    tag = hashlib.md5(f"{sf_dir}:{DIM}:{SQ_LEVELS}:{TRAIN_SAMPLE}:v1".encode()).hexdigest()[:12]
-    root = _SQ_CACHE_ROOT / tag
-    meta, data = root / "meta.json", root / "data"
-    if meta.exists():
-        m = json.loads(meta.read_text())
-        return spark.read.parquet(str(data)), m["vmin"], m["vdelta"]
-    emb = load_table(spark, sf_dir, "embeddings")
-    _, vecs = _sorted_sample(emb, TRAIN_SAMPLE)
-    vmin, vdelta = train_sq8_bounds(vecs)
-    unit = emb.select("vec_id", l2_normalize("embedding").alias("__unit"))
-    sq8_encode(unit, vmin, vdelta).write.mode("overwrite").parquet(str(data))
-    meta.write_text(json.dumps({"vmin": vmin, "vdelta": vdelta}))
-    return spark.read.parquet(str(data)), vmin, vdelta
+    returns (index, vmin, vdelta)."""
+
+    def build(out: str) -> dict:
+        emb = load_table(spark, sf_dir, "embeddings")
+        _, vecs = _sorted_sample(emb, TRAIN_SAMPLE)
+        vmin, vdelta = train_sq8_bounds(vecs)
+        unit = emb.select("vec_id", l2_normalize("embedding").alias("__unit"))
+        sq8_encode(unit, vmin, vdelta).write.parquet(out)
+        return {"vmin": vmin, "vdelta": vdelta}
+
+    params = {"dim": DIM, "levels": SQ_LEVELS, "sample": TRAIN_SAMPLE, "v": 1}
+    path, m = load_or_build("sq8", params, [table_path(sf_dir, "embeddings")], build)
+    return spark.read.parquet(path), m["vmin"], m["vdelta"]
 
 
 def _query_weights(

@@ -215,10 +215,6 @@ def sink_compaction_certificate(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out
 
 
-import hashlib as _hashlib  # noqa: E402
-from pathlib import Path  # noqa: E402
-
-_ZORDER_CACHE_ROOT = Path(__file__).resolve().parents[2] / ".cache" / "zorder"
 ZORDER_FILES = 16
 ZORDER_PART_LO, ZORDER_PART_HI = 100, 400
 ZORDER_SUPP_LO, ZORDER_SUPP_HI = 10, 40
@@ -227,19 +223,18 @@ ZORDER_SUPP_LO, ZORDER_SUPP_HI = 10, 40
 def _zorder_layout(spark: SparkSession, sf_dir: str) -> str:
     """Build-once Z-order-clustered lineitem layout on
     (l_partkey, l_suppkey)."""
-    tag = _hashlib.md5(f"{sf_dir}:zorder:{ZORDER_FILES}:v1".encode()).hexdigest()[:12]
-    root = _ZORDER_CACHE_ROOT / tag
-    data, marker = root / "data", root / "_done"
-    if not marker.exists():
-        from .tables import load_table
+    from ..artifacts import load_or_build
+    from .tables import load_table, table_path
 
+    def build(out: str) -> dict:
         li = load_table(spark, sf_dir, "lineitem").select(
             "l_orderkey", "l_partkey", "l_suppkey", "l_quantity"
         )
-        write_zorder_layout(li, str(data), ["l_partkey", "l_suppkey"], ZORDER_FILES)
-        marker.parent.mkdir(parents=True, exist_ok=True)
-        marker.write_text("ok")
-    return str(data)
+        write_zorder_layout(li, out, ["l_partkey", "l_suppkey"], ZORDER_FILES)
+        return {}
+
+    sources = [table_path(sf_dir, "lineitem")]
+    return load_or_build("zorder", {"files": ZORDER_FILES, "v": 1}, sources, build)[0]
 
 
 @register(

@@ -32,9 +32,10 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..artifacts import load_or_build
 from ..functions.png import decode_png, encode_png, nn_resize
 from ..registry import register
-from .tables import load_table, spread
+from .tables import load_table, spread, table_path
 
 # Synthetic image model, shared verbatim with the SQL oracles:
 #   width  = 16 + doc_id % 17
@@ -1115,7 +1116,7 @@ def q_multimodal_video_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
 # read path — a corpus DIRECTORY of real image/audio files scanned via
 # Spark's binaryFile source, magic-byte dispatched, decoded, and
 # feature-hashed by the same integer oracles.  The corpus is written
-# ONCE per sf (build-once cache, the zorder-layout pattern) by the
+# ONCE per sf (a build-once artifact-store entry) by the
 # EXECUTORS (mapInPandas writer — on a cluster the same code writes to
 # the shared object store), so the per-run cost is the binaryFile scan
 # itself.
@@ -1123,9 +1124,6 @@ def q_multimodal_video_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 from pathlib import Path as _Path  # noqa: E402
 
-_BINARY_CORPUS_ROOT = (
-    _Path(__file__).resolve().parents[2] / ".cache" / "binary_corpus"
-)
 _BINARY_EXT = {"png": "png", "pgm": "pgm", "jpeg": "jpg", "wav": "wav", "avi": "avi"}
 AVI_EVERY = 5  # every 5th document also gets an MJPEG-AVI clip
 
@@ -1156,11 +1154,9 @@ def binary_corpus_dir(spark: SparkSession, sf_dir: str) -> str:
     document (PNG/PGM/JPEG by doc_id % 3), one WAV per document, and
     one MJPEG-AVI clip per AVI_EVERY-th document — all four modalities
     on the real-file read path."""
-    tag = hashlib.md5(f"{sf_dir}:binary_corpus:v2".encode()).hexdigest()[:12]
-    root = _BINARY_CORPUS_ROOT / tag
-    data, marker = root / "data", root / "_done"
-    if not marker.exists():
-        data.mkdir(parents=True, exist_ok=True)
+
+    def build(out: str) -> dict:
+        os.mkdir(out)
         docs = load_table(spark, sf_dir, "documents")
         imgs = attach_mixed_payload(docs)
         wavs = attach_wav_payload(docs).select(
@@ -1171,12 +1167,14 @@ def binary_corpus_dir(spark: SparkSession, sf_dir: str) -> str:
         ).select("doc_id", F.lit("avi").alias("fmt"), "payload")
         written = (
             imgs.unionByName(wavs).unionByName(avis)
-            .mapInPandas(_corpus_writer(str(data)), schema="n_written long")
+            .mapInPandas(_corpus_writer(out), schema="n_written long")
             .agg(F.sum("n_written").alias("n"))
             .first()["n"]
         )
-        marker.write_text(str(written))
-    return str(data)
+        return {"n_files": int(written)}
+
+    sources = [table_path(sf_dir, "documents")]
+    return load_or_build("binary_corpus", {"v": 2}, sources, build)[0]
 
 
 @register(
@@ -1254,16 +1252,15 @@ def q_multimodal_binaryfile_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     # partition count — total corpus bytes / 128 MB, floored at the
     # session's parallelism — which leaves real large corpora untouched
     # (their byte-derived count exceeds the scan's) and only collapses
-    # the open-cost padding.  The byte total is driver-side metadata
-    # over the operator's own local corpus dir, no Spark job.
+    # the open-cost padding (coalesce never raises the partition count).
+    # The byte total is driver-side metadata, no Spark job; the scandir
+    # sum assumes a FLAT LOCAL directory, which the store entry guarantees.
     corpus_bytes = sum(e.stat().st_size for e in os.scandir(root))
     target_parts = max(
         spark.sparkContext.defaultParallelism,
         -(-corpus_bytes // (128 * 1024 * 1024)),
     )
-    files = spark.read.format("binaryFile").load(root)
-    if target_parts < files.rdd.getNumPartitions():
-        files = files.coalesce(target_parts)
+    files = spark.read.format("binaryFile").load(root).coalesce(target_parts)
     files = files.select(
         F.regexp_extract(F.col("path"), r"doc_(\d+)_", 1)
         .cast("long")

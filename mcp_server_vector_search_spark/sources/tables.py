@@ -28,6 +28,11 @@ TABLES = (
 EMBEDDING_DIM = 64  # testdata embedding dimension (reference uses 1536; dim is a parameter, not a constant — see SURVEY.md §1.4)
 
 
+def table_path(sf_dir: str, name: str) -> str:
+    """The parquet path of one testdata table."""
+    return f"{sf_dir}/{name}.parquet"
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Lazy Parquet scan of one testdata table.
 
@@ -49,14 +54,14 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         raise ValueError(f"unknown table {name!r}; expected one of {TABLES}")
     if name == "events":
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+        df = spark.read.parquet(table_path(sf_dir, name))
         ts_type = dict(df.dtypes).get("ts")
         if ts_type == "bigint":
             df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
         elif ts_type == "timestamp_ntz":
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
         return df
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    return spark.read.parquet(table_path(sf_dir, name))
 
 
 def spread(df: DataFrame) -> DataFrame:

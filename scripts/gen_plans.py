@@ -739,6 +739,9 @@ properties are asserted programmatically in `tests/test_plans.py`.
 
 
 _EXPR_ID = re.compile(r"#\d+")
+# Bucketed catalog tables are named after their artifact-store key, which
+# fingerprints the source files (mtime included), so it is host-specific.
+_STORE_KEY = re.compile(r"(bucketed_[a-z]+_)[0-9a-f]{16}")
 
 # Run-specific tokens in executed streaming plans (checkpoint tmpdirs,
 # runIds, JVM object hashes, plan ids) — normalized so two renders of
@@ -815,7 +818,7 @@ def render_plans(spark) -> str:
         ]
         detail_block = ("\n" + "\n".join(details)) if details else ""
         section = f"\n## {name}\n\n{why}\n\n```\n{tree.strip()}{detail_block}\n```\n"
-        parts.append(_EXPR_ID.sub("#N", section))
+        parts.append(_STORE_KEY.sub(r"\1KEY", _EXPR_ID.sub("#N", section)))
     return "".join(parts)
 
 

@@ -80,21 +80,20 @@ def test_hash_embedder_deterministic(spark):
     assert all(abs(sum(x * x for x in r.v) - 1.0) < 1e-3 for r in e1)
 
 
-def test_ivf_index_cache_roundtrip(spark):
+def test_ivf_index_cache_roundtrip(spark, tmp_path, monkeypatch):
     """load_or_build builds once, then serves the SAME layout from the
-    cached partition-pruned parquet — second call must not retrain."""
-    import shutil
+    cached partition-pruned parquet — second call must not retrain.
+    Runs on a private store root so the shared one is never cleared."""
+    from mcp_server_vector_search_spark import artifacts
+    from mcp_server_vector_search_spark.operators.ann import load_or_build_ivf_index
 
-    from mcp_server_vector_search_spark.operators.ann import (
-        _INDEX_CACHE_ROOT,
-        load_or_build_ivf_index,
-    )
-
-    shutil.rmtree(_INDEX_CACHE_ROOT, ignore_errors=True)
+    monkeypatch.setattr(artifacts, "ROOT", tmp_path)
+    builds = artifacts.STATS["builds"]
     idx1, cent1 = load_or_build_ivf_index(spark, SF_CORRECTNESS)
-    cached_dirs = list(_INDEX_CACHE_ROOT.iterdir())
-    assert len(cached_dirs) == 1
+    assert artifacts.STATS["builds"] == builds + 1
+    assert len(list((tmp_path / "ivf").iterdir())) == 1
     idx2, cent2 = load_or_build_ivf_index(spark, SF_CORRECTNESS)
+    assert artifacts.STATS["builds"] == builds + 1
     assert cent1 == cent2
     a = {(r.vec_id, r.centroid_id) for r in idx1.collect()}
     b = {(r.vec_id, r.centroid_id) for r in idx2.collect()}

@@ -210,6 +210,7 @@ def test_binaryfile_scan_reads_real_files(spark):
     re-running must reuse the build-once cache."""
     from pathlib import Path
 
+    from mcp_server_vector_search_spark import artifacts
     from mcp_server_vector_search_spark.plans.explain import formatted_plan
     from mcp_server_vector_search_spark.sources.multimodal import (
         binary_corpus_dir,
@@ -231,11 +232,10 @@ def test_binaryfile_scan_reads_real_files(spark):
     plan = formatted_plan(df)
     assert "binaryfile" in plan.lower()
     assert df.count() == 2 * n_docs + n_avi
-    # build-once: second call must not rewrite (marker mtime unchanged)
-    marker = root.parent / "_done"
-    before = marker.stat().st_mtime_ns
-    binary_corpus_dir(spark, sf)
-    assert marker.stat().st_mtime_ns == before
+    # build-once: second call must not rebuild
+    builds = artifacts.STATS["builds"]
+    assert binary_corpus_dir(spark, sf) == str(root)
+    assert artifacts.STATS["builds"] == builds
 
 
 def test_mixed_corpus_pil_parity():
