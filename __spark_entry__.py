@@ -6,7 +6,9 @@ matching ``oracle_sql()[name]`` via DuckDB (row-count + schema +
 order-insensitive value-hash → CORRECTNESS_r{N}.json).
 
 All real logic lives in ``mcp_server_vector_search_spark``; this file
-only exposes the registry.
+only exposes the registry.  Importing the operators builds no oracle:
+the generators (driver-side training folded into SQL literals) run on
+the first ``oracle_sql()`` call, once per process.
 
 The driver's correctness gate samples a bounded prefix (~50 entries)
 of the ``queries()`` iteration order.  To maximize UNION coverage
@@ -87,4 +89,4 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 def oracle_sql() -> dict[str, str]:
     registry.load_all_operators()
-    return _prioritized(dict(registry.ORACLES))
+    return _prioritized(registry.oracles())

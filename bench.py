@@ -5,10 +5,19 @@ JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
 
 Each query is timed as cold plan → collect (count of materialized rows),
 after a warmup query to amortize JVM/session startup out of the numbers.
+
+Profiling a few queries uses the same warmup and timing loop:
+
+  SPARK_GRAFT_BENCH_RUNS=3 python bench.py --only NAME [NAME...] [--plans DIR]
+
+``--only`` times just the named queries and writes no ``BENCH_FULL*.json``
+record; ``--plans DIR`` first saves each query's formatted physical plan
+to ``DIR/<name>.txt`` (outside the timed region).
 """
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import random
@@ -23,11 +32,22 @@ from mcp_server_vector_search_spark.cache import release_scratch  # noqa: E402
 from mcp_server_vector_search_spark.session import get_spark  # noqa: E402
 
 
-def main() -> None:
+def main(argv: list[str] | None = None) -> None:
+    ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
+    ap.add_argument("--only", nargs="+", metavar="NAME",
+                    help="time only these queries")
+    ap.add_argument("--plans", metavar="DIR",
+                    help="save formatted plans to DIR/<name>.txt")
+    args = ap.parse_args(argv)
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").split("sf")[-1]
-    spark = get_spark(app_name="bench")
+    t0 = time.perf_counter()
     registry.load_all_operators()
+    registry_load_s = round(time.perf_counter() - t0, 4)
+    unknown = sorted(set(args.only or ()) - set(registry.QUERIES))
+    if unknown:
+        ap.error(f"not registered: {', '.join(unknown)}")
+    spark = get_spark(app_name="bench")
 
     # warmup: touch the session + parquet footers once, and spin up the
     # Python data-source worker pool (same amortization as the JVM
@@ -74,6 +94,16 @@ def main() -> None:
     # shuffled with a fixed seed — so the two samples of any query are
     # taken ~5 minutes apart and a stall window can never hit both.  The
     # pass orders are recorded in the payload ("pass_orders").
+    names = sorted(set(args.only or registry.QUERIES))
+    if args.plans:
+        from mcp_server_vector_search_spark.plans.explain import formatted_plan
+
+        Path(args.plans).mkdir(parents=True, exist_ok=True)
+        for name in names:
+            plan = formatted_plan(registry.QUERIES[name](spark, sf_dir))
+            (Path(args.plans) / f"{name}.txt").write_text(plan)
+            release_scratch()
+            spark.catalog.clearCache()
     runs_per_query = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "2"))
     loadavg_start = os.getloadavg()
     ts_start = time.time()
@@ -82,7 +112,6 @@ def main() -> None:
     row_counts: dict[str, int] = {}
     row_count_mismatches: dict[str, list[int]] = {}
     errors: dict[str, str] = {}
-    names = sorted(registry.QUERIES)
     pass_orders: list[str] = []
     for pass_no in range(runs_per_query):
         if pass_no == 0:
@@ -155,6 +184,7 @@ def main() -> None:
         "wallclock": {"start": ts_start, "end": time.time()},
         "errors": errors,
         "artifact_store": dict(artifacts.STATS),
+        "registry_load_s": registry_load_s,
     }
     # Lossless record: the driver archives only a truncated tail of stdout,
     # which has repeatedly lost 100+ per-query timings (VERDICT r6 task 1).
@@ -162,9 +192,10 @@ def main() -> None:
     # per-query numbers stay auditable regardless of stdout truncation.
     repo = Path(__file__).resolve().parent
     text = json.dumps(full_payload, indent=1, sort_keys=True) + "\n"
-    # Only official-SF runs (the driver's sf0.1) overwrite the committed
-    # records; iterating locally at sf0.001/0.01 must not clobber them.
-    if float(sf) >= 0.1:
+    # Only full official-SF runs (the driver's sf0.1) overwrite the
+    # committed records; iterating locally at sf0.001/0.01 or on an
+    # --only subset must not clobber them.
+    if float(sf) >= 0.1 and not args.only:
         (repo / "BENCH_FULL.json").write_text(text)
         # ...and a per-round copy (BENCH_FULL.json is overwritten each run,
         # so round N+1's verdict could only diff the truncated stdout tail;

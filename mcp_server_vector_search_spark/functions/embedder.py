@@ -43,7 +43,7 @@ def embed_text_driver(
 ) -> np.ndarray:
     """Driver-side mirror of ``hash_embedder``'s per-row math (bag of
     md5-seeded token vectors summed in float64, L2-normalized, cast
-    float32) — the single source for every registration-time oracle
+    float32) — the single source for every oracle
     fold (ann.prompt_embedding, lifecycle's dim-1536 corpus embed), so
     the embedding convention cannot silently fork between the UDF and
     its oracle replications."""
@@ -234,10 +234,8 @@ def token_unit(token: str, dim: int = MAXSIM_DIM) -> list:
     md5-seeded generator is bit-stable on every process (no BLAS), and
     the norm folds left-to-right in float64 — so driver replication and
     Arrow workers produce identical bytes.  Lives in this LIGHT module
-    so the maxsim vocab UDF's worker-side import costs ~0 s instead of
-    the ~7 s registration-time oracle replication that importing
-    operators.late_interaction triggers (the cause of the r13 bench's
-    bimodal semantic_search_maxsim timings)."""
+    so the maxsim vocab UDF's worker-side import stays small instead of
+    pulling in operators.late_interaction and its sibling modules."""
     import math
 
     raw = [float(x) for x in _token_vector(token, dim)]

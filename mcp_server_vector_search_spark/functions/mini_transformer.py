@@ -29,7 +29,7 @@ Determinism: ``encode`` runs one text at a time, so the array shapes
 seen by BLAS depend only on the text — the same text produces a
 bit-identical float32 vector on the driver and on any worker of this
 container, which is what lets the facade row hash-match a
-registration-time numpy replication.
+oracle-time numpy replication.
 """
 
 from __future__ import annotations

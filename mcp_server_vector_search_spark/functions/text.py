@@ -180,8 +180,7 @@ def bag_signature(text: Column) -> Column:
 
 # Unigram-LM Viterbi segmenter — lives in this LIGHT module so the
 # trainer's worker-side E-step UDF imports ~0 s of code instead of the
-# operator module's registration-time oracle replication (~0.9 s per
-# fresh worker).  Default maxlen mirrors operators.text_analysis.
+# operator modules.  Default maxlen mirrors operators.text_analysis.
 # UNIGRAM_MAXLEN (4); callers pass it explicitly anyway.
 def _viterbi_segment(word: str, logp: dict[str, float], maxlen: int = 4):
     """Best segmentation of ``word`` under piece log-probs: maximize

@@ -30,6 +30,8 @@ Scale notes baked into each operator:
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
@@ -856,7 +858,7 @@ def welch_tail_sql(stats_rel: str) -> str:
     return "WITH " + _WELCH_TAIL_SQL.replace("{stats}", stats_rel)
 
 
-@register("stats_ab_welch", oracle=welch_sql("events"))
+@register("stats_ab_welch", oracle=functools.partial(welch_sql, "events"))
 def q_stats_ab_welch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Welch's two-sample t-test per event type over a deterministic
     A/B split (user_id parity — reproducible on any cluster size, any
@@ -1142,7 +1144,7 @@ ORDER BY event_type
 """
 
 
-@register("stats_bootstrap_poisson_ci", oracle=_bootstrap_oracle())
+@register("stats_bootstrap_poisson_ci", oracle=_bootstrap_oracle)
 def q_stats_bootstrap_poisson_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-event-type mean with a Poisson-bootstrap 95% CI in ONE
     corpus pass: each row carries BOOT_B deterministic Poisson(1)

@@ -22,16 +22,17 @@ Every non-SQL stage is DRIVER-SIDE deterministic numpy — the coarse
 quantizer trains on a sorted bounded sample (the FAISS discipline:
 production quantizers train on 10^5-10^6 samples regardless of corpus
 size), SRP planes come from a seeded RNG.  The oracle generator
-(functions/train.py) re-runs that training at registration time and
-folds the outputs into SQL literals, so the distributed stages —
-assignment, pruned scan, candidate filter, scoring — are exact
-value-hash-checked by the driver, not rows-only.  tests/test_ann.py
-additionally asserts recall@10 against the exact operator
+(functions/train.py) re-runs that training on the first
+``oracle_sql()`` call and folds the outputs into SQL literals, so the
+distributed stages — assignment, pruned scan, candidate filter,
+scoring — are exact value-hash-checked by the driver, not rows-only.
+tests/test_ann.py additionally asserts recall@10 against the exact operator
 (SURVEY.md §4.3.3).
 """
 
 from __future__ import annotations
 
+import functools
 from typing import Sequence
 
 import numpy as np
@@ -96,11 +97,26 @@ def train_centroids(
     which the cosine query ignores (observed: recall@10 drops to 0.5).
     Driver-side numpy on a SAMPLE is the honest 100 TB shape: the
     assignment pass below is the only full scan."""
-    x = np.asarray(sample_vectors, dtype=np.float64)
+    x = np.array(sample_vectors, dtype=np.float64)
     x /= np.maximum(np.linalg.norm(x, axis=1, keepdims=True), 1e-12)
     centers = kmeans(x, n_centroids, KMEANS_ITERS, seed)
     centers /= np.maximum(np.linalg.norm(centers, axis=1, keepdims=True), 1e-12)
     return [[float(v) for v in c] for c in centers]
+
+
+def oracle_centroids(n_centroids: int = N_CENTROIDS) -> tuple[tuple[float, ...], ...]:
+    """The quantizer every IVF-mirroring oracle folds in: trained on
+    the first ``TRAIN_SAMPLE`` vectors of ``ORACLE_SF_DIR`` by vec_id
+    (the sample ``_sample_vectors`` feeds the served index)."""
+    return _sample_centroids(ORACLE_SF_DIR, n_centroids)
+
+
+@functools.cache
+def _sample_centroids(sf_dir: str, n_centroids: int) -> tuple[tuple[float, ...], ...]:
+    """Memoized per (directory, cell count); immutable, since every
+    oracle shares it."""
+    _, x = load_sorted_vectors(sf_dir)
+    return tuple(map(tuple, train_centroids(x[:TRAIN_SAMPLE], n_centroids)))
 
 
 def assignment_expr(centroids: list[list[float]]) -> F.Column:
@@ -329,17 +345,14 @@ assign AS (
 )"""
 
 
-def _ivf_oracle() -> str | None:
+def _ivf_oracle() -> str:
     """Exact DuckDB mirror of ``q_ann_ivf_topk`` at the driver's
     correctness SF: the same numpy training produces the same centroid
     literals; assignment is the same rounded-sim argmax (ROW_NUMBER
     over sim DESC, cid ASC); probes come from the same
     ``nearest_centroids`` call."""
-    try:
-        ids, x = load_sorted_vectors(ORACLE_SF_DIR)
-    except Exception:  # pragma: no cover - testdata absent
-        return None
-    cents = train_centroids([list(v) for v in x[:TRAIN_SAMPLE]])
+    ids, x = load_sorted_vectors(ORACLE_SF_DIR)
+    cents = oracle_centroids()
     qvec = [float(v) for v in x[ids.index(QUERY_VEC_ID)]]
     probes = nearest_centroids(qvec, cents, NPROBE)
     return f"""
@@ -355,7 +368,7 @@ LIMIT {K}
 """
 
 
-@register("ann_ivf_topk", oracle=_ivf_oracle())
+@register("ann_ivf_topk", oracle=_ivf_oracle)
 def q_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     indexed, centroids = load_or_build_ivf_index(spark, sf_dir)
     emb = load_table(spark, sf_dir, "embeddings")
@@ -478,13 +491,10 @@ def srp_lsh_topk(
     )
 
 
-def _srp_oracle() -> str | None:
+def _srp_oracle() -> str:
     """DuckDB mirror of ``q_ann_lsh_topk``: same seeded planes as SQL
     literals, same query buckets via ``_py_bucket``."""
-    try:
-        ids, x = load_sorted_vectors(ORACLE_SF_DIR)
-    except Exception:  # pragma: no cover - testdata absent
-        return None
+    ids, x = load_sorted_vectors(ORACLE_SF_DIR)
     planes = srp_planes()
     qvec = [float(v) for v in x[ids.index(QUERY_VEC_ID)]]
 
@@ -576,13 +586,10 @@ def srp_multiprobe_topk(
     )
 
 
-def _srp_multiprobe_oracle() -> str | None:
+def _srp_multiprobe_oracle() -> str:
     """Same seeded planes, same driver-computed probe sets, recomputed
     stored buckets via the shared CASE fragment — `IN` per table."""
-    try:
-        ids, x = load_sorted_vectors(ORACLE_SF_DIR)
-    except Exception:  # pragma: no cover - testdata absent
-        return None
+    ids, x = load_sorted_vectors(ORACLE_SF_DIR)
     planes = srp_planes()
     qvec = [float(v) for v in x[ids.index(QUERY_VEC_ID)]]
 
@@ -609,7 +616,7 @@ LIMIT {K}
 """
 
 
-@register("ann_lsh_multiprobe", oracle=_srp_multiprobe_oracle())
+@register("ann_lsh_multiprobe", oracle=_srp_multiprobe_oracle)
 def q_ann_lsh_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Query-directed multi-probe over the shared SRP index — the
     recall of many tables from a quarter of them."""
@@ -622,7 +629,7 @@ def q_ann_lsh_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     return srp_multiprobe_topk(indexed, qvec)
 
 
-@register("ann_lsh_topk", oracle=_srp_oracle())
+@register("ann_lsh_topk", oracle=_srp_oracle)
 def q_ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     indexed = load_or_build_srp_index(spark, sf_dir)
     emb = load_table(spark, sf_dir, "embeddings")
@@ -704,7 +711,7 @@ ORDER BY h.score DESC, d.doc_id
 """
 
 
-@register("semantic_search_hash_embedder", oracle=_semantic_oracle())
+@register("semantic_search_hash_embedder", oracle=_semantic_oracle)
 def q_semantic_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end reference pipeline (server.py:71-102): embed the
     prompt with OUR embedder, exact top-k over the pre-embedded corpus,
@@ -739,15 +746,11 @@ def q_semantic_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 UPSERT_FRACTION = 0.9
 
 
-def _ivf_upsert_oracle() -> str | None:
+def _ivf_upsert_oracle() -> str:
     """Assignment of the post-upsert EFFECTIVE vectors (reversed for
     updated ids), aggregated per cell — what reading back the upserted
     layout must equal."""
-    try:
-        _, x = load_sorted_vectors(ORACLE_SF_DIR)
-    except Exception:  # pragma: no cover - testdata absent
-        return None
-    cents = train_centroids([list(v) for v in x[:TRAIN_SAMPLE]])
+    cents = oracle_centroids()
     values = ",\n  ".join(
         f"({i}, {sql_floats(c)}::DOUBLE[])" for i, c in enumerate(cents)
     )
@@ -809,7 +812,7 @@ def replace_partitions(
     ).parquet(layout)
 
 
-@register("ann_ivf_upsert_cells", oracle=_ivf_upsert_oracle())
+@register("ann_ivf_upsert_cells", oracle=_ivf_upsert_oracle)
 def q_ann_ivf_upsert_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF index MAINTENANCE, end to end through real files: build the
     centroid_id-partitioned layout, upsert a re-embedded batch (ids
@@ -894,14 +897,8 @@ def q_ann_ivf_upsert_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
 GEMM_CERT_CELLS = 64
 
 
-def _gemm_assign_oracle() -> str | None:
-    from ..functions.train import ORACLE_SF_DIR, load_sorted_vectors
-
-    try:
-        _ids, x = load_sorted_vectors(ORACLE_SF_DIR)
-    except Exception:  # pragma: no cover - testdata absent
-        return None
-    cents = train_centroids([list(v) for v in x[:TRAIN_SAMPLE]], GEMM_CERT_CELLS)
+def _gemm_assign_oracle() -> str:
+    cents = oracle_centroids(GEMM_CERT_CELLS)
     return f"""
 WITH {ivf_assign_sql(cents)}
 SELECT CAST(centroid_id AS INTEGER) AS centroid_id,
@@ -913,7 +910,7 @@ ORDER BY centroid_id
 """
 
 
-@register("ann_assign_gemm_cells", oracle=_gemm_assign_oracle())
+@register("ann_assign_gemm_cells", oracle=_gemm_assign_oracle)
 def q_ann_assign_gemm_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-cell census of the ARROW-GEMM assignment at a 64-cell
     quantizer (above the dispatch threshold, so this exercises the
@@ -1069,7 +1066,7 @@ ORDER BY score DESC, e.vec_id
 """
 
 
-@register("ann_range_search", oracle=_range_oracle())
+@register("ann_range_search", oracle=_range_oracle)
 def q_ann_range_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Range search end to end over the build-once IVF layout: per-cell
     radii (index metadata), triangle-inequality feasible cells,
@@ -1092,7 +1089,7 @@ def q_ann_range_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 # exactly this audit (FAISS benchmarks, Lucene's KNN regression
 # harness); here every stage is deterministic (trained constants,
 # rounded scores, id tie-breaks), so the whole report is value-hashed
-# against a registration-time numpy replication — the driver certifies
+# against an oracle-time numpy replication — the driver certifies
 # not just that search runs, but that its measured quality is exactly
 # what the index math says it must be.
 # ---------------------------------------------------------------------------
@@ -1100,7 +1097,7 @@ def q_ann_range_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 REPORT_QUERIES = 5  # vec_id < 5, the batch-query convention
 
 
-def _recall_report_expected() -> list[tuple[int, int]] | None:
+def _recall_report_expected() -> list[tuple[int, int]]:
     """(query_id, ann_hits) per report query, replicated in numpy:
     same trained centroids, same rounded-argmax assignment, same
     nprobe selection, same rounded-score/vec_id tie-breaks."""
@@ -1108,11 +1105,8 @@ def _recall_report_expected() -> list[tuple[int, int]] | None:
     # avoids the operator module import cycle (vsearch_extra's top
     # imports this module)
 
-    try:
-        ids, x = load_sorted_vectors(ORACLE_SF_DIR)
-    except Exception:  # pragma: no cover - testdata absent
-        return None
-    cents = train_centroids([list(v) for v in x[:TRAIN_SAMPLE]])
+    ids, x = load_sorted_vectors(ORACLE_SF_DIR)
+    cents = oracle_centroids()
     C = np.asarray(cents, dtype=np.float64)
     X = np.asarray(x, dtype=np.float64)
     U = X / np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-12)
@@ -1133,10 +1127,8 @@ def _recall_report_expected() -> list[tuple[int, int]] | None:
     return out
 
 
-def _recall_report_oracle() -> str | None:
+def _recall_report_oracle() -> str:
     expected = _recall_report_expected()
-    if expected is None:  # pragma: no cover - testdata absent
-        return None
     values = ",\n  ".join(
         f"({qid}, {hits}, {hits / K!r})" for qid, hits in expected
     )
@@ -1151,7 +1143,7 @@ ORDER BY query_id
 """
 
 
-@register("ann_recall_report", oracle=_recall_report_oracle())
+@register("ann_recall_report", oracle=_recall_report_oracle)
 def q_ann_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The index quality audit, distributed: batch the report queries
     against the IVF layout (one scan of the UNION of probed cells,

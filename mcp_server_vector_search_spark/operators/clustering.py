@@ -38,7 +38,7 @@ partition order cannot change a single bit:
 
 The DuckDB oracle replays ALL THREE iterations in pure SQL (exploded
 point-dimension CTEs, one dist/assign/update block per iteration) — no
-registration-time training constants; the driver genuinely re-executes
+oracle-time training constants; the driver genuinely re-executes
 the algorithm on both engines and hash-compares the result.
 
 Scale notes: at 100 TB the per-iteration scan dominates; production
@@ -51,6 +51,7 @@ accumulator widens to DECIMAL(38,0) — the plan shape is unchanged.
 
 from __future__ import annotations
 
+import functools
 import math
 
 import numpy as np
@@ -406,7 +407,7 @@ ORDER BY b.cluster_id, s.d
 """
 
 
-@register("cluster_kmeans_lloyd", oracle=_kmeans_oracle())
+@register("cluster_kmeans_lloyd", oracle=_kmeans_oracle)
 def q_cluster_kmeans_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distributed Lloyd k-means, 3 iterations end to end on BOTH
     engines — map-side literal-centroid assignment, K-key micro-unit
@@ -448,7 +449,7 @@ GEMM_CENSUS_ITERS = 2
 
 @register(
     "cluster_kmeans_gemm_census",
-    oracle=_kmeans_oracle(k=GEMM_CENSUS_K, iters=GEMM_CENSUS_ITERS),
+    oracle=functools.partial(_kmeans_oracle, k=GEMM_CENSUS_K, iters=GEMM_CENSUS_ITERS),
 )
 def q_cluster_kmeans_gemm_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The SAME Lloyd loop at k=16 — at or above GEMM_WON_MIN_CELLS, so
@@ -472,7 +473,7 @@ def q_cluster_kmeans_gemm_census(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Lloyd loop above trains the quantizer, the corpus is assigned to its
 # cells, and a probe-pruned top-k answers a query — train, index, and
 # search in ONE value-hashed pipeline, every stage replayed by the
-# oracle in pure SQL (no registration-time constants anywhere).
+# oracle in pure SQL (no oracle-time constants anywhere).
 # ---------------------------------------------------------------------------
 
 SEARCH_ITERS = 2
@@ -520,7 +521,7 @@ LIMIT {SEARCH_K}
 """
 
 
-@register("cluster_kmeans_ivf_search", oracle=_ivf_search_oracle())
+@register("cluster_kmeans_ivf_search", oracle=_ivf_search_oracle)
 def q_cluster_kmeans_ivf_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Train the coarse quantizer DISTRIBUTED (2 Lloyd rounds), probe
     the NPROBE cells nearest the query (the newest vector, searching

@@ -25,6 +25,8 @@ per round, no driver-side diffing of edge tables).
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -426,7 +428,9 @@ LIMIT {PAGERANK_TOP}
 """
 
 
-@register("graph_pagerank_integer", oracle=_pagerank_sql("documents"))
+@register(
+    "graph_pagerank_integer", oracle=functools.partial(_pagerank_sql, "documents")
+)
 def q_graph_pagerank_integer(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact-integer PageRank over the synthesized citation graph:
     four damped rounds of the SAME iteration SQL text the oracle runs
@@ -592,7 +596,10 @@ def _pagerank_incr_sql(documents: str) -> str:
     )
 
 
-@register("graph_pagerank_incremental", oracle=_pagerank_incr_sql("documents"))
+@register(
+    "graph_pagerank_incremental",
+    oracle=functools.partial(_pagerank_incr_sql, "documents"),
+)
 def q_graph_pagerank_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rolling-ingest PageRank: 4 stored rounds over the OLD graph
     (doc_id < 0.8·max — in production the persisted artifact of the
@@ -725,7 +732,7 @@ edges AS (
 """
 
 
-@register("graph_hits_integer", oracle=_hits_sql("documents"))
+@register("graph_hits_integer", oracle=functools.partial(_hits_sql, "documents"))
 def q_graph_hits_integer(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact-integer HITS over the synthesized citation graph: two
     hub↔authority alternations of the SAME SQL text the oracle runs,
@@ -835,7 +842,7 @@ edges AS (
 """
 
 
-@register("graph_triangle_count", oracle=_triangle_sql("documents"))
+@register("graph_triangle_count", oracle=functools.partial(_triangle_sql, "documents"))
 def q_graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact triangle census: canonicalize the synthesized links to
     undirected edges, orient by (degree, id), wedge-join oriented
@@ -973,7 +980,7 @@ a0 AS MATERIALIZED (
 """
 
 
-@register("graph_kcore_membership", oracle=_kcore_sql("documents"))
+@register("graph_kcore_membership", oracle=functools.partial(_kcore_sql, "documents"))
 def q_graph_kcore_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
     """K-core membership (K=KCORE_K) by synchronized distributed peel:
     each round censuses degrees over the surviving edge set, removes

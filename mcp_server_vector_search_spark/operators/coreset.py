@@ -39,7 +39,7 @@ doubles in both engines — and the per-row distance is the exact BIGINT
 sum of those terms, so partition order cannot move a bit.  Ties on the
 argmax break to the smaller vec_id via ``-vec_id`` in the struct.  The
 DuckDB oracle replays every round in chained CTEs — no
-registration-time constants.
+oracle-time constants.
 
 Scale notes: each round is one scan of the projected (vec_id, emb)
 columns; production persists that projection once and runs k rounds
@@ -191,7 +191,7 @@ ORDER BY p.sel_rank
 """
 
 
-@register("sample_coreset_kcenter", oracle=_kcenter_oracle())
+@register("sample_coreset_kcenter", oracle=_kcenter_oracle)
 def q_sample_coreset_kcenter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gonzalez greedy k-center on BOTH engines: k-1 distributed argmax
     rounds (map-side micro-distance fold, one-row struct-max reduce),

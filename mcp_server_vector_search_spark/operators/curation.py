@@ -652,7 +652,7 @@ ORDER BY doc_id
 """
 
 
-@register("text_blocklist_multiscan", oracle=_blocklist_oracle())
+@register("text_blocklist_multiscan", oracle=_blocklist_oracle)
 def q_text_blocklist_multiscan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Every document scanned against the full blocklist in ONE pass
     (Aho-Corasick over mapInPandas): per matched doc, total

@@ -49,6 +49,7 @@ from .ann import (
     TRAIN_SAMPLE,
     build_ivf_index,
     ivf_assign_sql,
+    oracle_centroids,
     train_centroids,
 )
 
@@ -173,12 +174,8 @@ def semdedup_dropped_gemm(
     )
 
 
-def _semdedup_oracle() -> str | None:
-    try:
-        _, x = load_sorted_vectors(ORACLE_SF_DIR)
-    except Exception:  # pragma: no cover - testdata absent
-        return None
-    cents = train_centroids([list(v) for v in x[:TRAIN_SAMPLE]])
+def _semdedup_oracle() -> str:
+    cents = oracle_centroids()
     return f"""
 WITH {ivf_assign_sql(cents)},
 pairs AS (
@@ -198,7 +195,7 @@ ORDER BY vec_id
 """
 
 
-@register("semdedup_prune", oracle=_semdedup_oracle())
+@register("semdedup_prune", oracle=_semdedup_oracle)
 def q_semdedup_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = spread(load_table(spark, sf_dir, "embeddings"))
     # the IVF build IS the clustering — one quantizer shared between
@@ -224,11 +221,8 @@ def q_semdedup_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
 SEMDEDUP_INCR_FRACTION = 0.8  # cut = 0.8 · max(vec_id), family convention
 
 
-def _incr_semdedup_oracle() -> str | None:
-    try:
-        ids, x = load_sorted_vectors(ORACLE_SF_DIR)
-    except Exception:  # pragma: no cover - testdata absent
-        return None
+def _incr_semdedup_oracle() -> str:
+    ids, x = load_sorted_vectors(ORACLE_SF_DIR)
     cut = int(SEMDEDUP_INCR_FRACTION * max(ids))
     old = [list(v) for i, v in zip(ids, x) if i < cut]
     cents = train_centroids(old[:TRAIN_SAMPLE])
@@ -252,7 +246,7 @@ ORDER BY vec_id
 """
 
 
-@register("dedup_incremental_semdedup", oracle=_incr_semdedup_oracle())
+@register("dedup_incremental_semdedup", oracle=_incr_semdedup_oracle)
 def q_dedup_incremental_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental SemDeDup: assign BOTH sides with the stored
     quantizer (trained on the OLD corpus's deterministic sample — at a
@@ -724,9 +718,9 @@ _LR_CACHE: dict[str, tuple[list[float], float]] = {}
 
 def _lr_weights(sf_dir: str) -> tuple[list[float], float]:
     """Deterministic full-batch gradient descent in float64 numpy over
-    the LR_MAX_TRAIN LOWEST doc_ids.  Registration-time oracle
-    generation and query-time scoring both call THIS function, so at
-    the driver-gate SF the folded literals are bitwise identical."""
+    the LR_MAX_TRAIN LOWEST doc_ids.  Oracle generation and query-time
+    scoring both call THIS function, so at the driver-gate SF the
+    folded literals are bitwise identical."""
     if sf_dir in _LR_CACHE:
         return _LR_CACHE[sf_dir]
     import heapq
@@ -811,11 +805,8 @@ z AS (
 )"""
 
 
-def _lr_oracle() -> str | None:
-    try:
-        w, b = _lr_weights(ORACLE_SF_DIR)
-    except Exception:  # pragma: no cover - testdata absent
-        return None
+def _lr_oracle() -> str:
+    w, b = _lr_weights(ORACLE_SF_DIR)
     return f"""
 WITH {_lr_z_sql(w, b)}
 SELECT doc_id, label,
@@ -857,7 +848,7 @@ def _lr_label_z_cols(w, b):
     return label, z
 
 
-@register("quality_classifier_lr", oracle=_lr_oracle())
+@register("quality_classifier_lr", oracle=_lr_oracle)
 def q_quality_classifier_lr(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distilled quality classifier: logistic regression fit
     driver-side (bounded sample = the LR_MAX_TRAIN lowest doc_ids, 200
@@ -913,11 +904,8 @@ def _calib_logits() -> list[tuple[int, float]]:
     return [(p, math.log((p / 100.0) / (1.0 - p / 100.0))) for p in CALIB_THR_PCTS]
 
 
-def _calib_oracle() -> str | None:
-    try:
-        w, b = _lr_weights(ORACLE_SF_DIR)
-    except Exception:  # pragma: no cover - testdata absent
-        return None
+def _calib_oracle() -> str:
+    w, b = _lr_weights(ORACLE_SF_DIR)
     from ..functions.train import sql_float
 
     values = ",\n    ".join(
@@ -939,7 +927,7 @@ ORDER BY t.thr_pct
 """
 
 
-@register("quality_classifier_calibration", oracle=_calib_oracle())
+@register("quality_classifier_calibration", oracle=_calib_oracle)
 def q_quality_classifier_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Calibration sweep for the distilled quality classifier: the
     exact confusion matrix (TP/FP/FN/TN vs the Gopher-rule teacher) at
@@ -949,7 +937,7 @@ def q_quality_classifier_calibration(spark: SparkSession, sf_dir: str) -> DataFr
     chosen against a held-out teacher sweep, not assumed).
 
     Determinism: score ≥ t ⟺ z ≥ logit(t) (sigmoid monotone), so each
-    decision is a raw-double comparison against a registration-time
+    decision is a raw-double comparison against an oracle-time
     logit literal shared by both engines — no rounding anywhere, all
     outputs exact BIGINT counts.
 

@@ -507,7 +507,7 @@ WHERE ROUND(i.i::DOUBLE / (ca.n + cb.n - i.i), {R}) >= {MINHASH_VERIFY_T}
 """
 
 
-@register("dedup_minhash_lsh", oracle=_minhash_oracle())
+@register("dedup_minhash_lsh", oracle=_minhash_oracle)
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash-LSH near-dedup, exact-verified.
 
@@ -753,7 +753,7 @@ def dedup_embedding_cosine_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _embedding_lsh_oracle() -> str | None:
+def _embedding_lsh_oracle() -> str:
     """DuckDB mirror of ``dedup_embedding_lsh``: the same seeded SRP
     planes as literals, 20 bucket expressions, bucket-collision
     candidates, exact rounded-cosine verify."""
@@ -878,7 +878,7 @@ def _embedding_lsh_lazy(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, Da
     return lazy, emb
 
 
-@register("dedup_embedding_lsh", oracle=_embedding_lsh_oracle())
+@register("dedup_embedding_lsh", oracle=_embedding_lsh_oracle)
 def dedup_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-cosine near-dup pairs via SRP-LSH candidates — the
     sub-quadratic 100 TB semantic dedup.
@@ -930,7 +930,7 @@ def _embedding_cosine_lazy(
     return lazy, emb
 
 
-@register("dedup_embedding_cosine", oracle=_embedding_lsh_oracle())
+@register("dedup_embedding_cosine", oracle=_embedding_lsh_oracle)
 def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-cosine near-dup pairs: SRP candidates → vectorized
     batch-kernel verify — the composed candidates→verify pipeline
@@ -1161,7 +1161,10 @@ def dedup_jaccard_prefix_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # one explode pass: document frequency of every (distinct-per-doc)
     # shingle via a partition count window — same value the old
-    # groupBy("s").count() + join("s") produced for every row
+    # groupBy("s").count() + join("s") produced for every row.  Skew: a
+    # boilerplate shingle's whole window partition lands on one task,
+    # where the join form had AQE skew-join splitting; acceptable at
+    # bench scale.
     exploded = sh_arrays.select(
         "doc_id", F.size("sh").alias("n"), F.explode("sh").alias("s")
     ).withColumn("df", F.count(F.lit(1)).over(W.partitionBy("s")))
@@ -1269,7 +1272,7 @@ WHERE ROUND(i.i::DOUBLE / (ca.n + cb.n - i.i), {R}) >= {MINHASH_VERIFY_T}
 """
 
 
-@register("dedup_incremental_minhash", oracle=_inc_minhash_oracle())
+@register("dedup_incremental_minhash", oracle=_inc_minhash_oracle)
 def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental NEAR-dedup: today's batch against the accumulated
     corpus signature store, without re-comparing the corpus to itself —
@@ -1986,7 +1989,7 @@ def q_dedup_incremental_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the pair's EXACT Jaccard bins it (pure integer math — div(10·|∩|,
 # |∪|)), and the banding verdict comes from the PRODUCTION signature
 # expression (`minhash_sig_expr`) applied to both texts.  Theory
-# enters as a registration-time literal (round6 of the closed form at
+# enters as an oracle-time literal (round6 of the closed form at
 # each bin midpoint) joined by bin — never engine-evaluated POWER(),
 # whose libm rounding Spark and DuckDB do not share.
 # ---------------------------------------------------------------------------
@@ -2072,7 +2075,7 @@ ORDER BY p.bin
 """
 
 
-@register("dedup_lsh_scurve_certificate", oracle=_scurve_oracle())
+@register("dedup_lsh_scurve_certificate", oracle=_scurve_oracle)
 def q_dedup_lsh_scurve_certificate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The deployed MinHash band geometry's measured S-curve: per
     exact-Jaccard bin, how many (document, mutated-twin) pairs exist
@@ -2242,7 +2245,7 @@ ORDER BY n.a_id, n.b_id
 """
 
 
-@register("dedup_minhash_weighted", oracle=_minhash_weighted_oracle())
+@register("dedup_minhash_weighted", oracle=_minhash_weighted_oracle)
 def dedup_minhash_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Weighted-Jaccard near-dedup, exact end to end: tf-expanded
     MinHash signatures band into the SAME salted LSH bucket join as the

@@ -67,7 +67,7 @@ LIMIT {ENGINE_K}
 """
 
 
-@register("engine_search_e2e", oracle=_engine_oracle())
+@register("engine_search_e2e", oracle=_engine_oracle)
 def q_engine_search_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reference's actual end-to-end path (server.py:71-102) through
     the facade: construct the engine over the corpus, search a fixed
@@ -76,27 +76,16 @@ def q_engine_search_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     return engine.search_df(PROMPT_TEXT, k=ENGINE_K)
 
 
-def _engine_ann_oracle() -> str | None:
+def _engine_ann_oracle() -> str:
     """IVF-pruned mirror of the facade search: the same trained
     centroid literals, the same rounded-argmax assignment, the same
     driver-side probe list over the PROMPT's hash embedding — then the
     docs join and (name, description, score) projection."""
-    from ..functions.train import ORACLE_SF_DIR, load_sorted_vectors
-    from .ann import (
-        NPROBE,
-        TRAIN_SAMPLE,
-        ivf_assign_sql,
-        nearest_centroids,
-        train_centroids,
-    )
+    from .ann import NPROBE, ivf_assign_sql, nearest_centroids, oracle_centroids
 
-    try:
-        _, x = load_sorted_vectors(ORACLE_SF_DIR)
-    except Exception:  # pragma: no cover - testdata absent
-        return None
-    # TRAIN_SAMPLE from .ann — it must mirror the sample the SERVED IVF
-    # index trains on (ann._sample_vectors' default), not PQ's
-    cents = train_centroids([list(v) for v in x[:TRAIN_SAMPLE]])
+    # ann's quantizer — it must mirror the sample the SERVED IVF index
+    # trains on (ann._sample_vectors' default), not PQ's
+    cents = oracle_centroids()
     qvec = prompt_embedding()
     probes = nearest_centroids(qvec, cents, NPROBE)
     qv = sql_floats(qvec)
@@ -122,7 +111,7 @@ FROM pool p JOIN documents d ON d.doc_id = p.vec_id
 """
 
 
-@register("engine_search_ann", oracle=_engine_ann_oracle())
+@register("engine_search_ann", oracle=_engine_ann_oracle)
 def q_engine_search_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The facade search over the ANN INDEX — the reference's actual
     architecture (its tool delegates to Neo4j's HNSW index, reference
@@ -172,8 +161,8 @@ WARM_REPEATS = 8
 LAST_WARM_STATS: dict | None = None
 
 
-def _warm_expected() -> list[tuple[str, float]] | None:
-    """Registration-time replication of the embed-at-build facade path:
+def _warm_expected() -> list[tuple[str, float]]:
+    """Oracle-side replication of the embed-at-build facade path:
     hash-embed every sf0.01 document text at DEFAULT_DIM driver-side
     (embed_text_driver — the single certified mirror of the UDF math),
     sequential-fold cosine vs the prompt embedding, HALF_UP at 6, top-k
@@ -183,14 +172,9 @@ def _warm_expected() -> list[tuple[str, float]] | None:
     from ..functions.train import ORACLE_SF_DIR
     from .lifecycle import _score_round6
 
-    try:
-        import pyarrow.parquet as pq
+    import pyarrow.parquet as pq
 
-        t = pq.read_table(
-            f"{ORACLE_SF_DIR}/documents.parquet", columns=["doc_id", "text"]
-        )
-    except Exception:  # pragma: no cover - testdata absent
-        return None
+    t = pq.read_table(f"{ORACLE_SF_DIR}/documents.parquet", columns=["doc_id", "text"])
     cache: dict = {}
     qvec = [float(v) for v in embed_text_driver(PROMPT_TEXT, DEFAULT_DIM, cache)]
     scored = sorted(
@@ -207,10 +191,8 @@ def _warm_expected() -> list[tuple[str, float]] | None:
     return [(name, -s) for s, name in scored]
 
 
-def _warm_oracle() -> str | None:
+def _warm_oracle() -> str:
     expected = _warm_expected()
-    if expected is None:  # pragma: no cover - testdata absent
-        return None
     from ..functions.train import sql_float
 
     values = ",\n  ".join(f"('{n}', {sql_float(s)})" for n, s in expected)
@@ -221,7 +203,7 @@ SELECT name, score FROM (VALUES
 """
 
 
-@register("engine_search_warm_cache", oracle=_warm_oracle())
+@register("engine_search_warm_cache", oracle=_warm_oracle)
 def q_engine_search_warm_cache(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Warm-serving certificate: corpus built by embedding document
     text through the facade's Arrow UDF and persisted ONCE; the cold
@@ -229,7 +211,7 @@ def q_engine_search_warm_cache(spark: SparkSession, sf_dir: str) -> DataFrame:
     serve from cached blocks, return byte-identical JSON, and beat the
     cold latency at the median.  Returns the (name, score) top-k so
     the driver value-hashes the actual served results against the
-    registration-time replication."""
+    oracle-time replication."""
     import time
 
     from ..engine import SparkVectorSearch, corpus_from_documents
@@ -335,10 +317,10 @@ WITH corpus AS (
 """
 
 
-@register("engine_search_concurrent", oracle=_concurrent_oracle())
+@register("engine_search_concurrent", oracle=_concurrent_oracle)
 def q_engine_search_concurrent(spark: SparkSession, sf_dir: str) -> DataFrame:
     """N interleaved facade searches on one session, hash-matched
-    against sequential execution AND the registration-time oracle.
+    against sequential execution AND the generated oracle.
     Sequential payloads are served first (the ground truth), then the
     same prompts run concurrently from a thread pool; each concurrent
     payload must be byte-identical to its sequential twin — a shared

@@ -28,8 +28,8 @@ graph-structured design, re-expressed for a batch engine:
 
 Training is deterministic (sorted bounded sample, first-max
 tie-breaks, rounded sims), so the oracle generator re-runs the SAME
-graph build + beam search at registration time and folds the node
-literals and probe list into SQL — the distributed stages are exact
+graph build + beam search on the first ``oracle_sql()`` call and folds
+the node literals and probe list into SQL — the distributed stages are exact
 value-hash-checked like the rest of the ANN family.
 """
 
@@ -56,6 +56,7 @@ from .ann import (
     _sample_vectors,
     assignment_expr,
     ivf_assign_sql,
+    oracle_centroids,
     train_centroids,
 )
 from .topk import QUERY_VEC_ID, SCORE_DECIMALS
@@ -261,31 +262,25 @@ LIMIT {K}
 """
 
 
-def _oracle_nodes_and_query() -> tuple[list[list[float]], list[float]] | None:
+def _oracle_nodes_and_query() -> tuple[list[list[float]], list[float]]:
     """(trained routing nodes, fixture query vector) at the driver's
-    correctness SF — None when testdata is absent."""
-    try:
-        ids, x = load_sorted_vectors(ORACLE_SF_DIR)
-    except Exception:  # pragma: no cover - testdata absent
-        return None
-    nodes = train_centroids([list(v) for v in x[:TRAIN_SAMPLE]], GRAPH_NODES)
+    correctness SF."""
+    ids, x = load_sorted_vectors(ORACLE_SF_DIR)
+    nodes = [list(c) for c in oracle_centroids(GRAPH_NODES)]
     qvec = [float(v) for v in x[ids.index(QUERY_VEC_ID)]]
     return nodes, qvec
 
 
-def _graph_oracle() -> str | None:
+def _graph_oracle() -> str:
     """Exact DuckDB mirror: the same sample -> same graph -> same beam
     -> same probe list; assignment reuses the IVF family's shared
     rounded-argmax fragment with the node literals."""
-    trained = _oracle_nodes_and_query()
-    if trained is None:
-        return None
-    nodes, qvec = trained
+    nodes, qvec = _oracle_nodes_and_query()
     probes = beam_search(nodes, build_knn_graph(nodes), qvec)
     return _probe_oracle_sql(nodes, probes)
 
 
-@register("ann_graph_topk", oracle=_graph_oracle())
+@register("ann_graph_topk", oracle=_graph_oracle)
 def q_ann_graph_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HNSW-equivalent query path (reference server.py:87): navigable
     graph descent picks the cells, the engine reads only those."""
@@ -416,19 +411,16 @@ def hnsw_topk(
     return _pruned_node_topk(index, probes, query_vec, k)
 
 
-def _hnsw_oracle() -> str | None:
+def _hnsw_oracle() -> str:
     """Same trained-constant discipline as ``_graph_oracle``: re-run
-    the node training + hierarchy build + layered descent at
-    registration time, fold the probe list into the shared SQL."""
-    trained = _oracle_nodes_and_query()
-    if trained is None:
-        return None
-    nodes, qvec = trained
+    the node training + hierarchy build + layered descent when the
+    oracle is built, fold the probe list into the shared SQL."""
+    nodes, qvec = _oracle_nodes_and_query()
     probes = hnsw_search(nodes, build_hnsw(nodes), qvec)
     return _probe_oracle_sql(nodes, probes)
 
 
-@register("ann_hnsw_topk", oracle=_hnsw_oracle())
+@register("ann_hnsw_topk", oracle=_hnsw_oracle)
 def q_ann_hnsw_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Structure-parity query for the reference's Lucene-HNSW index
     (reference server.py:87, README.md:72-79): geometric level
@@ -634,19 +626,16 @@ def hnsw_insert_nodes(
     return {"levels": levels, "graphs": graphs, "entry": entry}
 
 
-def _hnsw_heuristic_oracle() -> str | None:
+def _hnsw_heuristic_oracle() -> str:
     """Trained-constant re-run of the HEURISTIC incremental build +
     descent (same discipline as ``_hnsw_oracle``)."""
-    trained = _oracle_nodes_and_query()
-    if trained is None:
-        return None
-    nodes, qvec = trained
+    nodes, qvec = _oracle_nodes_and_query()
     hnsw = build_hnsw_incremental(nodes, heuristic=True)
     probes = hnsw_search(nodes, hnsw, qvec)
     return _probe_oracle_sql(nodes, probes)
 
 
-@register("ann_hnsw_heuristic_topk", oracle=_hnsw_heuristic_oracle())
+@register("ann_hnsw_heuristic_topk", oracle=_hnsw_heuristic_oracle)
 def q_ann_hnsw_heuristic_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The layered descent over the ALGORITHM-4 built structure
     (``select_neighbors_heuristic`` — Malkov & Yashunin 2016's
@@ -689,7 +678,7 @@ def blend_upsert_nodes(
 ) -> list[list[float]]:
     """Deterministic new-node vectors: unit(0.9·unit(q) + 0.1·unit(s))
     per source vector — pure float64 numpy from identical inputs, so
-    the Spark side and the registration-time oracle replay produce
+    the Spark side and the oracle replay produce
     bit-identical node literals."""
     q = np.asarray(query_vec, dtype=np.float64)
     q = q / np.linalg.norm(q)
@@ -702,7 +691,7 @@ def blend_upsert_nodes(
     return out
 
 
-def _hnsw_upsert_oracle() -> str | None:
+def _hnsw_upsert_oracle() -> str:
     """Trained-constant re-run of the SAME insertion: base nodes from
     the shared trainer, new nodes from the shared blend, the layered
     search over the post-insert structure — the probe list and the
@@ -710,10 +699,7 @@ def _hnsw_upsert_oracle() -> str | None:
     value hash certifies the delete-and-append write path end to end
     (a lost, stale, or duplicated row in any touched cell changes the
     top-k)."""
-    trained = _oracle_nodes_and_query()
-    if trained is None:
-        return None
-    nodes, qvec = trained
+    nodes, qvec = _oracle_nodes_and_query()
     ids, x = load_sorted_vectors(ORACLE_SF_DIR)
     src = [[float(v) for v in x[ids.index(i)]] for i in HNSW_UPSERT_SRC_IDS]
     all_nodes = nodes + blend_upsert_nodes(qvec, src)
@@ -724,7 +710,7 @@ def _hnsw_upsert_oracle() -> str | None:
     return _probe_oracle_sql(all_nodes, probes)
 
 
-@register("ann_hnsw_upsert", oracle=_hnsw_upsert_oracle())
+@register("ann_hnsw_upsert", oracle=_hnsw_upsert_oracle)
 def q_ann_hnsw_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HNSW upsert end to end through real files: build the node_id-
     partitioned layout for the BASE structure, insert a batch of new
@@ -815,11 +801,8 @@ def q_ann_hnsw_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
 HNSW_BATCH_Q = 5  # query batch = vec_id < 5 (the batch-search convention)
 
 
-def _hnsw_batch_oracle() -> str | None:
-    trained = _oracle_nodes_and_query()
-    if trained is None:
-        return None
-    nodes, _ = trained
+def _hnsw_batch_oracle() -> str:
+    nodes, _ = _oracle_nodes_and_query()
     ids, x = load_sorted_vectors(ORACLE_SF_DIR)
     hnsw = build_hnsw(nodes)
     probe_rows = []
@@ -855,7 +838,7 @@ FROM ranked WHERE rn <= {K}
 """
 
 
-@register("ann_hnsw_batch_topk", oracle=_hnsw_batch_oracle())
+@register("ann_hnsw_batch_topk", oracle=_hnsw_batch_oracle)
 def q_ann_hnsw_batch_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bulk retrieval through the LAYERED index: each query's probe
     cells come from its own greedy-descent + layer-0 beam (driver-side,

@@ -191,7 +191,7 @@ LIMIT {FINAL_K}
 """
 
 
-@register("hybrid_search_rrf", oracle=_hybrid_oracle())
+@register("hybrid_search_rrf", oracle=_hybrid_oracle)
 def q_hybrid_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hybrid retrieval for the fixed prompt (the same trained-constant
     oracle device as ``semantic_search_hash_embedder``): BM25 top-20 ∪
@@ -297,7 +297,7 @@ LIMIT {FINAL_K}
 """
 
 
-@register("hybrid_search_weighted", oracle=_hybrid_weighted_oracle())
+@register("hybrid_search_weighted", oracle=_hybrid_weighted_oracle)
 def q_hybrid_search_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Weighted-sum hybrid (alpha blend): each leg's top-POOL scores are
     min-max normalized WITHIN the pool (extrema from a broadcast 1-row

@@ -220,14 +220,11 @@ def ivfpq_topk(
     )
 
 
-def _ivfpq_oracle() -> str | None:
+def _ivfpq_oracle() -> str:
     """The IVF assign fragment chained with the residual + PQ
     encode/ADC fragments (each already proven against its standalone
     operator), restricted to the probed cells, then the exact re-rank."""
-    try:
-        ids, x = load_sorted_vectors(ORACLE_SF_DIR)
-    except Exception:  # pragma: no cover - testdata absent
-        return None
+    ids, x = load_sorted_vectors(ORACLE_SF_DIR)
     vecs = [list(v) for v in x[:TRAIN_SAMPLE]]
     cents = train_centroids(vecs)
     books = _train_residual_codebooks(vecs, cents)
@@ -332,7 +329,7 @@ LIMIT {K}
 """
 
 
-@register("ann_ivfpq_topk", oracle=_ivfpq_oracle())
+@register("ann_ivfpq_topk", oracle=_ivfpq_oracle)
 def q_ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     index, cents, books = load_or_build_ivfpq_index(spark, sf_dir)
     emb = load_table(spark, sf_dir, "embeddings")

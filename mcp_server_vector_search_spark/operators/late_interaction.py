@@ -23,7 +23,7 @@ Determinism contract (what makes the row value-hashable): token
 vectors come from the md5-seeded generator with a PURE-SEQUENTIAL
 float64 normalization, similarities fold left-to-right exactly like
 ``functions.vector.dot``'s ``F.aggregate``, and every comparison
-happens on HALF_UP-rounded values — the registration-time replication
+happens on HALF_UP-rounded values — the oracle-time replication
 (`_maxsim_expected`) runs the identical arithmetic, so the oracle
 literals are bit-faithful (the ``lifecycle`` dim-1536 rows prove this
 device end to end).
@@ -60,19 +60,14 @@ MAXSIM_K = 10
 SIM_DECIMALS = 6
 
 
-def _round6(v: float) -> float:
-    from ..functions.train import round6  # light; no operator-module pull
-
-    return round6(v)
+from ..functions.train import round6 as _round6  # noqa: E402
 
 
-# token_unit moved to functions.embedder (light-import home): the vocab
+# token_unit lives in functions.embedder (light-import home): the vocab
 # UDF below is pickled as a CLOSURE (by value), and its worker-side body
-# imports only functions.embedder (~0 s) — a top-level UDF here would
-# pickle by module reference and force every fresh worker through this
-# module's ~7 s registration-time oracle replication (the r13 bench's
-# bimodal maxsim timings, 0.5 s vs 8 s depending on which worker the
-# 31-row vocab task landed on).
+# imports only functions.embedder — a top-level UDF here would pickle by
+# module reference and make every fresh worker import this module and
+# the operator modules it pulls in.
 from ..functions.embedder import token_unit  # noqa: E402
 
 
@@ -148,20 +143,15 @@ def maxsim_topk(
     )
 
 
-def _maxsim_expected() -> list[tuple[int, float]] | None:
-    """Registration-time replication: identical token vectors,
-    identical sequential dot fold, identical HALF_UP rounding."""
+def _maxsim_expected() -> list[tuple[int, float]]:
+    """Oracle-side replication: identical token vectors, identical
+    sequential dot fold, identical HALF_UP rounding."""
+    import pyarrow.parquet as pq
+
     from ..functions.train import ORACLE_SF_DIR
     from ..functions.train import seq_dot as _seq_dot
 
-    try:
-        import pyarrow.parquet as pq
-
-        t = pq.read_table(
-            f"{ORACLE_SF_DIR}/documents.parquet", columns=["doc_id", "text"]
-        )
-    except Exception:  # pragma: no cover - testdata absent
-        return None
+    t = pq.read_table(f"{ORACLE_SF_DIR}/documents.parquet", columns=["doc_id", "text"])
     qmat = query_token_matrix()
     cache: dict[str, list[float]] = {}
     scored: list[tuple[float, int]] = []
@@ -188,10 +178,8 @@ def _maxsim_expected() -> list[tuple[int, float]] | None:
     return [(doc_id, -neg) for neg, doc_id in scored[:MAXSIM_K]]
 
 
-def _maxsim_oracle() -> str | None:
+def _maxsim_oracle() -> str:
     expected = _maxsim_expected()
-    if expected is None:  # pragma: no cover - testdata absent
-        return None
     from ..functions.train import sql_float
 
     values = ",\n  ".join(
@@ -206,7 +194,7 @@ ORDER BY score DESC, doc_id
 """
 
 
-@register("semantic_search_maxsim", oracle=_maxsim_oracle())
+@register("semantic_search_maxsim", oracle=_maxsim_oracle)
 def q_semantic_search_maxsim(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ColBERT-style late interaction end to end: distributed doc-token
     embed, literal query-token matrix, per-doc MaxSim reduction, top-k

@@ -18,13 +18,14 @@ Two certificates VERDICT r8 asked for (tasks 5 and 6):
   recomputes that effective state declaratively.
 
 Oracle discipline: trained constants and driver-side embeddings are
-re-computed at registration time and folded into the SQL as literals
-(functions/train.py); all doubles follow the family's sequential-
+re-computed on the first ``oracle_sql()`` call and folded into the SQL
+as literals (functions/train.py); all doubles follow the family's sequential-
 summation + HALF_UP-at-6 conventions so both engines hash identically.
 """
 
 from __future__ import annotations
 
+import functools
 import math
 
 import numpy as np
@@ -50,6 +51,7 @@ from .ann import (
     _sample_vectors,
     assignment_col,
     nearest_centroids,
+    oracle_centroids,
     replace_partitions,
     train_centroids,
 )
@@ -75,9 +77,7 @@ def _embed_1536(text: str) -> np.ndarray:
     return embed_text_driver(text, OPENAI_EMBED_DIM, _TOKEN_CACHE)
 
 
-# _seq_dot moved to functions.train.seq_dot (light-import home) —
-# re-exported here because tests and sibling modules import it by this
-# name; see seq_dot's docstring for the worker-import-cost rationale.
+# re-exported here because tests and sibling modules import it by this name
 from ..functions.train import seq_dot as _seq_dot  # noqa: E402
 
 
@@ -92,43 +92,32 @@ def _score_round6(doc_vec, query_vec) -> float:
 
 IVF1536_CELLS = 64  # = GEMM_ASSIGN_MIN_CELLS: forces the production path
 
-_CORPUS_1536_CACHE: object = "unset"
 
-
-def _corpus_1536():
+@functools.cache
+def _corpus_1536(sf_dir: str = ORACLE_SF_DIR):
     """Sorted doc ids, their 1536-dim embeddings, the trained 64-cell
     centroids, and the round-then-argmax assignments over the sf0.01
-    documents — computed ONCE at registration and shared by the
+    documents — computed ONCE per directory and shared by the
     brute-force, IVF, and HNSW dim-1536 oracles (embedding the corpus
-    is the expensive part; three independent passes tripled it)."""
-    global _CORPUS_1536_CACHE
-    if _CORPUS_1536_CACHE != "unset":
-        return _CORPUS_1536_CACHE
-    try:
-        import pyarrow.parquet as pq
+    is the expensive part; three independent passes tripled it).
+    Shared, so immutable: tuples and read-only arrays."""
+    import pyarrow.parquet as pq
 
-        t = pq.read_table(
-            f"{ORACLE_SF_DIR}/documents.parquet", columns=["doc_id", "text"]
-        )
-    except Exception:  # pragma: no cover - testdata absent
-        _CORPUS_1536_CACHE = None
-        return None
+    t = pq.read_table(f"{sf_dir}/documents.parquet", columns=["doc_id", "text"])
     ids = t.column("doc_id").to_pylist()
     texts = t.column("text").to_pylist()
     order = np.argsort(ids)
-    ids = [int(ids[i]) for i in order]
-    vecs = [_embed_1536(texts[i]) for i in order]
-    cents = train_centroids(
-        [[float(v) for v in w] for w in vecs[:TRAIN_SAMPLE]], IVF1536_CELLS
-    )
+    ids = tuple(int(ids[i]) for i in order)
+    vecs = np.stack([_embed_1536(texts[i]) for i in order])
+    cents = train_centroids(vecs[:TRAIN_SAMPLE], IVF1536_CELLS)
     C = np.asarray(cents, dtype=np.float64)
-    V = np.stack([np.asarray(v, dtype=np.float64) for v in vecs])
+    V = vecs.astype(np.float64)
     nrm = np.maximum(np.linalg.norm(V, axis=1), 1e-12)
     # replicates the distributed assignment_gemm path, so it must share
     # its rounding (decimal HALF_UP round6_arr, not np.round — r13 advisor)
     assign = np.argmax(round6_arr((V @ C.T) / nrm[:, None]), axis=1)
-    _CORPUS_1536_CACHE = (ids, vecs, cents, assign)
-    return _CORPUS_1536_CACHE
+    vecs.flags.writeable = assign.flags.writeable = False
+    return ids, vecs, tuple(map(tuple, cents)), assign
 
 
 def _probe_topk_1536(probes) -> list[tuple[int, float, int]]:
@@ -146,14 +135,11 @@ def _probe_topk_1536(probes) -> list[tuple[int, float, int]]:
     return [(doc_id, -s, cell) for s, doc_id, cell in scored]
 
 
-def _dim1536_expected() -> list[tuple[int, float]] | None:
+def _dim1536_expected() -> list[tuple[int, float]]:
     """Score every sf0.01 document at dim 1536 against the prompt
-    embedding, return the exact top-K — registration-time fold, same
+    embedding, return the exact top-K — folded into the oracle, same
     discipline as quantizer training."""
-    corpus = _corpus_1536()
-    if corpus is None:  # pragma: no cover - testdata absent
-        return None
-    ids, vecs, _cents, _assign = corpus
+    ids, vecs, _cents, _assign = _corpus_1536()
     qvec = _embed_1536(PROMPT_1536)
     scored = sorted(
         ((-_score_round6(v, qvec), i) for i, v in zip(ids, vecs)),
@@ -161,10 +147,8 @@ def _dim1536_expected() -> list[tuple[int, float]] | None:
     return [(int(i), -s) for s, i in scored]
 
 
-def _dim1536_oracle() -> str | None:
+def _dim1536_oracle() -> str:
     expected = _dim1536_expected()
-    if expected is None:  # pragma: no cover - testdata absent
-        return None
     values = ",\n  ".join(
         f"({i}, {sql_float(s)}, TRUE)" for i, s in expected
     )
@@ -175,7 +159,7 @@ SELECT CAST(doc_id AS BIGINT) AS doc_id, score, dim_ok FROM (VALUES
 """
 
 
-@register("semantic_search_dim1536", oracle=_dim1536_oracle())
+@register("semantic_search_dim1536", oracle=_dim1536_oracle)
 def q_semantic_search_dim1536(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The flagship pipeline at the reference's hard-coded dimension
     (server.py:55-56 ``len(embedding) != 1536`` hard-fail;
@@ -183,7 +167,7 @@ def q_semantic_search_dim1536(spark: SparkSession, sf_dir: str) -> DataFrame:
     UDF, dim-check every vector (surfaced as a per-row ``dim_ok``
     column, all TRUE or the hash breaks), score with the same JVM
     sequential-fold cosine as dim 64, take the top-k.  The oracle is
-    the registration-time driver-side replication of the identical
+    the oracle-time driver-side replication of the identical
     math — a mismatch at any stage (UDF batching, float32 cast, fold
     order, rounding) shifts a score or an id."""
     # spread BEFORE the 1536-dim Arrow embed: the sf* corpora are one
@@ -215,12 +199,9 @@ DELETE_SQL = "vec_id % 7 = 3"  # never touches QUERY_VEC_ID (0 % 7 = 0)
 CHURN_UPSERT_FRACTION = 0.9  # ids >= floor(frac·max) get re-embedded (reversed)
 
 
-def _churn_oracle() -> str | None:
-    try:
-        ids, x = load_sorted_vectors(ORACLE_SF_DIR)
-    except Exception:  # pragma: no cover - testdata absent
-        return None
-    cents = train_centroids([list(v) for v in x[:TRAIN_SAMPLE]])
+def _churn_oracle() -> str:
+    ids, x = load_sorted_vectors(ORACLE_SF_DIR)
+    cents = oracle_centroids()
     qvec = [float(v) for v in x[ids.index(QUERY_VEC_ID)]]
     probes = nearest_centroids(qvec, cents, NPROBE)
     values = ",\n  ".join(
@@ -273,7 +254,7 @@ def _pruned_topk(layout_df: DataFrame, probes: list[int], qvec) -> DataFrame:
     )
 
 
-@register("ann_lifecycle_churn", oracle=_churn_oracle())
+@register("ann_lifecycle_churn", oracle=_churn_oracle)
 def q_ann_lifecycle_churn(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Composed index-churn lifecycle through REAL files: build the
     centroid_id-partitioned IVF layout, then (1) physically DELETE a
@@ -401,16 +382,14 @@ def q_ann_lifecycle_churn(spark: SparkSession, sf_dir: str) -> DataFrame:
 IVF1536_NPROBE = 8
 
 
-def _ivf1536_model() -> tuple[list[list[float]], list[int], list[tuple[int, float, int]]] | None:
-    """Registration-time replication of the whole 1536-dim IVF path in
+@functools.cache
+def _ivf1536_model() -> tuple[tuple, list[int], list[tuple[int, float, int]]]:
+    """Numpy replication of the whole 1536-dim IVF path in
     numpy: corpus embed (the certified float32 mirror), unit-sphere
     k-means, GEMM assignment (same round-then-argmax), query-probe cell
     ranking, exact re-rank inside the probe set.  Returns (centroids,
     probe cells, expected top-K rows)."""
-    corpus = _corpus_1536()
-    if corpus is None:  # pragma: no cover - testdata absent
-        return None
-    _ids, _vecs, cents, _assign = corpus
+    _ids, _vecs, cents, _assign = _corpus_1536()
     C = np.asarray(cents, dtype=np.float64)
     qvec = _embed_1536(PROMPT_1536)
     q64 = np.asarray(qvec, dtype=np.float64)
@@ -423,13 +402,8 @@ def _ivf1536_model() -> tuple[list[list[float]], list[int], list[tuple[int, floa
     return cents, probes, _probe_topk_1536(probes)
 
 
-_IVF1536 = _ivf1536_model()
-
-
-def _ivf1536_oracle() -> str | None:
-    if _IVF1536 is None:  # pragma: no cover - testdata absent
-        return None
-    _cents, _probes, expected = _IVF1536
+def _ivf1536_oracle() -> str:
+    _cents, _probes, expected = _ivf1536_model()
     values = ",\n  ".join(
         f"({i}, {sql_float(s)}, {c})" for i, s, c in expected
     )
@@ -490,7 +464,7 @@ def _load_or_build_1536_layout(
     )
 
 
-@register("ann_ivf_dim1536", oracle=_ivf1536_oracle())
+@register("ann_ivf_dim1536", oracle=_ivf1536_oracle)
 def q_ann_ivf_dim1536(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF at the reference's native 1536 dims, end to end on the
     PRODUCTION code path: distributed Arrow embed → GEMM coarse
@@ -502,13 +476,11 @@ def q_ann_ivf_dim1536(spark: SparkSession, sf_dir: str) -> DataFrame:
     probe cells.  `semantic_search_dim1536` certifies the
     brute-force scan at this width; this row certifies that INDEXING
     math survives the 24× dimension change — the oracle is a complete
-    registration-time numpy replication (same float32 embed mirror,
+    oracle-time numpy replication (same float32 embed mirror,
     same unit-sphere k-means, same round-then-argmax assignment), so a
     drift anywhere in the 1536-dim build shifts an id, a score, or a
     cell."""
-    if _IVF1536 is None:  # pragma: no cover - testdata absent
-        raise RuntimeError("registration fixture unavailable")
-    cents, probes, _expected = _IVF1536
+    cents, probes, _expected = _ivf1536_model()
     qcol = vector_lit([float(v) for v in _embed_1536(PROMPT_1536)])
     assigned = _load_or_build_1536_layout(spark, sf_dir, cents, "centroid_id")
     return (
@@ -535,17 +507,15 @@ def q_ann_ivf_dim1536(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _hnsw1536_model() -> tuple[list[list[float]], list[int], list[tuple[int, float, int]]] | None:
+@functools.cache
+def _hnsw1536_model() -> tuple[tuple, list[int], list[tuple[int, float, int]]]:
     """Layered-HNSW probe selection over the 1536-dim routing nodes:
     geometric level hierarchy, greedy upper-layer descent, layer-0 beam
     (graph_ann.build_hnsw / hnsw_search — the code the dim-64 row
     certifies), then the family's shared exact re-rank inside the probe
     cells.  Deterministic end to end, so the oracle is a complete
-    registration-time numpy replication."""
-    corpus = _corpus_1536()
-    if corpus is None:  # pragma: no cover - testdata absent
-        return None
-    _ids, _vecs, cents, _assign = corpus
+    oracle-time numpy replication."""
+    _ids, _vecs, cents, _assign = _corpus_1536()
     from .graph_ann import build_hnsw, hnsw_search
 
     qvec = [float(v) for v in _embed_1536(PROMPT_1536)]
@@ -553,13 +523,8 @@ def _hnsw1536_model() -> tuple[list[list[float]], list[int], list[tuple[int, flo
     return cents, probes, _probe_topk_1536(probes)
 
 
-_HNSW1536 = _hnsw1536_model()
-
-
-def _hnsw1536_oracle() -> str | None:
-    if _HNSW1536 is None:  # pragma: no cover - testdata absent
-        return None
-    _cents, _probes, expected = _HNSW1536
+def _hnsw1536_oracle() -> str:
+    _cents, _probes, expected = _hnsw1536_model()
     values = ",\n  ".join(
         f"({i}, {sql_float(s)}, {c})" for i, s, c in expected
     )
@@ -572,7 +537,7 @@ FROM (VALUES
 """
 
 
-@register("ann_hnsw_dim1536", oracle=_hnsw1536_oracle())
+@register("ann_hnsw_dim1536", oracle=_hnsw1536_oracle)
 def q_ann_hnsw_dim1536(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HNSW at the reference's native 1536 dims on the production code
     path: distributed Arrow embed → GEMM coarse assignment to the 64
@@ -594,9 +559,7 @@ def q_ann_hnsw_dim1536(spark: SparkSession, sf_dir: str) -> DataFrame:
     cell) at its measured floor and (b) >=0.95 planted recall on a
     CLUSTERED synthetic 1536-dim node set, where real-corpus structure
     exists and the descent must find it."""
-    if _HNSW1536 is None:  # pragma: no cover - testdata absent
-        raise RuntimeError("registration fixture unavailable")
-    cents, probes, _expected = _HNSW1536
+    cents, probes, _expected = _hnsw1536_model()
     qcol = vector_lit([float(v) for v in _embed_1536(PROMPT_1536)])
     assigned = _load_or_build_1536_layout(spark, sf_dir, cents, "node_id")
     return (

@@ -26,7 +26,7 @@ micro-unit sum (``floor((x.v piecewise) * 1e9)`` per row,
 bit; the normalizing division is one IEEE double op on identical
 integers.  The Gram matrix is PSD, so the iteration cannot oscillate
 sign.  The DuckDB oracle replays ALL iterations in pure SQL — no
-registration-time constants.
+oracle-time constants.
 
 Scale notes: per-iteration driver traffic is 64 longs; the scan
 dominates, so production persists the projected column once and
@@ -160,7 +160,7 @@ ORDER BY v.d
 """
 
 
-@register("linalg_power_iteration", oracle=_power_iteration_oracle())
+@register("linalg_power_iteration", oracle=_power_iteration_oracle)
 def q_linalg_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distributed power iteration, 4 mat-vec rounds on BOTH engines —
     map-side literal-iterate dot, 64-column single-row reduce, max-norm
@@ -381,7 +381,7 @@ ORDER BY v.d
 """
 
 
-@register("linalg_top2_deflation", oracle=_top2_oracle())
+@register("linalg_top2_deflation", oracle=_top2_oracle)
 def q_linalg_top2_deflation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Second principal direction by deflated power iteration, 4+4
     distributed mat-vec rounds — every cross-row reduction an exact

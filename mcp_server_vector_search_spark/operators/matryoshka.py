@@ -59,13 +59,10 @@ def _prefix_cosine(vec_col: F.Column, q_prefix: list[float]) -> F.Column:
     return F.round(dot / F.sqrt(n2 * F.lit(float(qn2))), DIST_DECIMALS)
 
 
-def _matryoshka_oracle() -> str | None:
+def _matryoshka_oracle() -> str:
     from ..functions.train import ORACLE_SF_DIR, load_sorted_vectors, sql_floats
 
-    try:
-        ids, x = load_sorted_vectors(ORACLE_SF_DIR)
-    except Exception:  # pragma: no cover - testdata absent
-        return None
+    ids, x = load_sorted_vectors(ORACLE_SF_DIR)
     qvec = [float(v) for v in x[ids.index(QUERY_VEC_ID)]]
     qp = qvec[:PREFIX_DIM]
     qn2 = sum(v * v for v in qp)
@@ -92,7 +89,7 @@ LIMIT {K}
 """
 
 
-@register("ann_matryoshka_topk", oracle=_matryoshka_oracle())
+@register("ann_matryoshka_topk", oracle=_matryoshka_oracle)
 def q_ann_matryoshka_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-stage Matryoshka retrieval (module docstring): prefix-cosine
     pool via ``TakeOrderedAndProject``, exact re-rank of POOL rows."""

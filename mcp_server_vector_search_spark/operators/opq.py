@@ -231,14 +231,11 @@ def opq_adc_topk(
     )
 
 
-def _opq_oracle() -> str | None:
+def _opq_oracle() -> str:
     """DuckDB mirror at the driver's correctness SF: literal R rotates
     each unit vector (same sequential dots, same rounding), literal
     codebooks encode, literal LUT scores, exact re-rank."""
-    try:
-        ids, x = load_sorted_vectors(ORACLE_SF_DIR)
-    except Exception:  # pragma: no cover - testdata absent
-        return None
+    ids, x = load_sorted_vectors(ORACLE_SF_DIR)
     rot, books = _train_opq([list(v) for v in x[:TRAIN_SAMPLE]])
     norms2 = _codeword_norms2(books)
     qvec = [float(v) for v in x[ids.index(QUERY_VEC_ID)]]
@@ -310,7 +307,7 @@ LIMIT {K}
 """
 
 
-@register("ann_opq_topk", oracle=_opq_oracle())
+@register("ann_opq_topk", oracle=_opq_oracle)
 def q_ann_opq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """OPQ = learned rotation + PQ, two-stage retrieval (module
     docstring).  Scan reads ONLY the codes column; re-rank touches

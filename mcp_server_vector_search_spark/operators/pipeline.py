@@ -273,19 +273,15 @@ def pipeline_build_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _index_cells_oracle() -> str | None:
+def _index_cells_oracle() -> str:
     """Centroid-assignment fragment (proven by the IVF family oracles)
     applied to the pipeline's kept TRAIN documents."""
-    from ..functions.train import ORACLE_SF_DIR, load_sorted_vectors, sql_floats
-    # TRAIN_SAMPLE from .ann — must mirror the IVF index's own training
-    # sample (load_or_build_ivf_index), not PQ's codebook sample
-    from ..operators.ann import ASSIGN_DECIMALS, TRAIN_SAMPLE, train_centroids
+    from ..functions.train import sql_floats
+    # ann's quantizer — must mirror the IVF index's own training sample
+    # (load_or_build_ivf_index), not PQ's codebook sample
+    from ..operators.ann import ASSIGN_DECIMALS, oracle_centroids
 
-    try:
-        _, x = load_sorted_vectors(ORACLE_SF_DIR)
-    except Exception:  # pragma: no cover - testdata absent
-        return None
-    cents = train_centroids([list(v) for v in x[:TRAIN_SAMPLE]])
+    cents = oracle_centroids()
     cent_rows = ",\n  ".join(
         f"({i}, {sql_floats(c)}::DOUBLE[])" for i, c in enumerate(cents)
     )
@@ -321,7 +317,7 @@ GROUP BY cid
 """
 
 
-@register("pipeline_index_cells", oracle=_index_cells_oracle())
+@register("pipeline_index_cells", oracle=_index_cells_oracle)
 def pipeline_index_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The pipeline's INDEX stage: the deduped TRAIN split's canonical
     documents join their embeddings and are assigned to IVF cells with
@@ -338,7 +334,6 @@ def pipeline_index_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     "build the index from today's cleaned crawl" join a rolling 100 TB
     pipeline runs.
     """
-    from ..functions.train import load_sorted_vectors  # noqa: F401 (parity doc)
     from ..operators.ann import assignment_col, load_or_build_ivf_index
 
     kept = (
@@ -466,7 +461,7 @@ GROUP BY source
 """
 
 
-@register("pipeline_export_packed", oracle=_export_oracle())
+@register("pipeline_export_packed", oracle=_export_oracle)
 def q_pipeline_export_packed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The training-data EXPORT job as one lazy plan: Gopher keep gate
     (shared predicate with ``quality_gopher_rules`` — the filter runs
@@ -552,7 +547,7 @@ GROUP BY r.split
 """
 
 
-@register("split_fp_atomic", oracle=_fp_atomic_oracle())
+@register("split_fp_atomic", oracle=_fp_atomic_oracle)
 def split_fp_atomic(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Re-key the gated chunk stream's split on the content
     fingerprint: every chunk with the same fingerprint — across

@@ -33,7 +33,7 @@ Spark-first shape:
 
 Because training is driver-side deterministic numpy, the oracle
 generator (functions/train.py rationale) re-trains the same codebooks
-at registration time and folds them into DuckDB literals — the whole
+when the oracle is built and folds them into DuckDB literals — the whole
 encode→ADC→re-rank pipeline is exact value-hash-checked by the driver.
 tests/test_ann.py asserts recall@10 against the exact operator too.
 """
@@ -243,15 +243,12 @@ def pq_adc_topk(
     )
 
 
-def _pq_oracle() -> str | None:
+def _pq_oracle() -> str:
     """DuckDB mirror of ``q_ann_pq_topk`` at the driver's correctness
     SF: identical numpy-trained codebooks as literals, the same rounded
     expanded-distance encode, the same rounded ADC ordering, the same
     exact re-rank."""
-    try:
-        ids, x = load_sorted_vectors(ORACLE_SF_DIR)
-    except Exception:  # pragma: no cover - testdata absent
-        return None
+    ids, x = load_sorted_vectors(ORACLE_SF_DIR)
     books = _train_codebooks([list(v) for v in x[:TRAIN_SAMPLE]])
     norms2 = _codeword_norms2(books)
     qvec = [float(v) for v in x[ids.index(QUERY_VEC_ID)]]
@@ -310,7 +307,7 @@ LIMIT {K}
 """
 
 
-@register("ann_pq_topk", oracle=_pq_oracle())
+@register("ann_pq_topk", oracle=_pq_oracle)
 def q_ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     codes, books = load_or_build_pq_index(spark, sf_dir)
     emb = load_table(spark, sf_dir, "embeddings")

@@ -406,7 +406,7 @@ def temperature_mix_plan(counts: dict[str, int]) -> dict[str, tuple[int, int]]:
     temperature-alpha rebalance that PRESERVES total corpus size.
 
     Pure driver-side arithmetic shared verbatim between the Spark query
-    (runtime counts) and the oracle generator (registration-time
+    (runtime counts) and the oracle generator (oracle-time
     counts), so both engines apply bit-identical literals — the
     functions/train.py discipline applied to mixing weights.  The
     deterministic sequential sum over name-sorted sources removes the
@@ -425,20 +425,19 @@ def temperature_mix_plan(counts: dict[str, int]) -> dict[str, tuple[int, int]]:
     return plan
 
 
-def _temp_mix_oracle() -> str | None:
+def _temp_mix_oracle() -> str:
     import duckdb
 
     from ..functions.train import ORACLE_SF_DIR
 
+    con = duckdb.connect()
     try:
-        con = duckdb.connect()
         rows = con.execute(
             "SELECT source, COUNT(*) FROM read_parquet("
             f"'{ORACLE_SF_DIR}/documents.parquet') GROUP BY source"
         ).fetchall()
+    finally:
         con.close()
-    except Exception:  # pragma: no cover - testdata absent
-        return None
     plan = temperature_mix_plan({s: int(c) for s, c in rows})
     fl_case = " ".join(
         f"WHEN '{s}' THEN {fl}" for s, (fl, _) in sorted(plan.items())
@@ -467,7 +466,7 @@ FROM replicated GROUP BY source
 """
 
 
-@register("mix_temperature_sources", oracle=_temp_mix_oracle())
+@register("mix_temperature_sources", oracle=_temp_mix_oracle)
 def mix_temperature_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Temperature-scaled source mixing (the multilingual-pretraining
     standard, e.g. mT5/XLM-R's alpha-sampling, public papers): source s

@@ -1159,7 +1159,7 @@ FROM exacts e CROSS JOIN metrics m
 """
 
 
-@register("agg_kmv_jaccard_certificate", oracle=_kmv_oracle())
+@register("agg_kmv_jaccard_certificate", oracle=_kmv_oracle)
 def agg_kmv_jaccard_certificate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """KMV bottom-k sketch over two user-day sets (days a user
     purchased vs days a user hit an error): mergeable distinct-union
@@ -1318,7 +1318,7 @@ FROM s CROSS JOIN ex
 """
 
 
-@register("agg_ams_f2_certificate", oracle=_ams_oracle())
+@register("agg_ams_f2_certificate", oracle=_ams_oracle)
 def q_agg_ams_f2_certificate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """AMS second-frequency-moment sketch vs exact, one row: the 32
     sign-sums collapse in a SINGLE map-side-combined ungrouped

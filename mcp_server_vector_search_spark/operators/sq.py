@@ -166,13 +166,10 @@ def sq8_adc_topk(
     )
 
 
-def _sq8_oracle() -> str | None:
+def _sq8_oracle() -> str:
     """Normalize → encode → weighted-code-sum → pool → exact re-rank,
     every constant the trained literals the Spark side uses."""
-    try:
-        ids, x = load_sorted_vectors(ORACLE_SF_DIR)
-    except Exception:  # pragma: no cover - testdata absent
-        return None
+    ids, x = load_sorted_vectors(ORACLE_SF_DIR)
     vecs = [list(v) for v in x[:TRAIN_SAMPLE]]
     vmin, vdelta = train_sq8_bounds(vecs)
     qvec = [float(v) for v in x[ids.index(QUERY_VEC_ID)]]
@@ -218,7 +215,7 @@ LIMIT {K}
 """
 
 
-@register("ann_sq8_topk", oracle=_sq8_oracle())
+@register("ann_sq8_topk", oracle=_sq8_oracle)
 def q_ann_sq8_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     index, vmin, vdelta = load_or_build_sq8_index(spark, sf_dir)
     emb = load_table(spark, sf_dir, "embeddings")
@@ -261,14 +258,11 @@ def bq_fingerprint_expr() -> F.Column:
     )
 
 
-def _bq_oracle() -> str | None:
+def _bq_oracle() -> str:
     """Hamming over per-dimension sign disagreement (the unpacked form
     of bit_count(xor) — independent of any bit-packing), then the exact
     re-rank."""
-    try:
-        ids, x = load_sorted_vectors(ORACLE_SF_DIR)
-    except Exception:  # pragma: no cover - testdata absent
-        return None
+    load_sorted_vectors(ORACLE_SF_DIR)  # rows-only without the testdata, as sq8
     qid = QUERY_VEC_ID
     return f"""
 WITH q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = {qid}),
@@ -289,7 +283,7 @@ LIMIT {K}
 """
 
 
-@register("ann_bq_topk", oracle=_bq_oracle())
+@register("ann_bq_topk", oracle=_bq_oracle)
 def q_ann_bq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Binary-quantized ANN: each vector's DIM sign bits pack into ONE
     long (8 bytes/vector — 64× below float64, 8× below SQ8), the

@@ -202,6 +202,9 @@ def text_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     tf = toks.groupBy("doc_id", "tok").agg(F.count(F.lit(1)).alias("tf"))
     from pyspark.sql import Window as W
 
+    # Skew: a stopword-like token's whole window partition lands on one
+    # task; the replaced groupBy + join form had AQE skew-join splitting.
+    # Acceptable at bench scale.
     scored = tf.withColumn(
         "df", F.count(F.lit(1)).over(W.partitionBy("tok"))
     ).select(
@@ -369,7 +372,7 @@ def text_repetition_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # Conjunctive query terms: the engine's canonical prompt (ann.PROMPT_TEXT),
-# imported lazily to avoid a module cycle at registration time.
+# imported lazily to avoid a module cycle at import time.
 def _prompt_terms() -> tuple[str, ...]:
     from .ann import PROMPT_TEXT
 
@@ -395,7 +398,7 @@ FROM hits GROUP BY doc_id HAVING COUNT(*) = {n_terms}
 """
 
 
-@register("text_inverted_conjunctive", oracle=_inverted_oracle())
+@register("text_inverted_conjunctive", oracle=_inverted_oracle)
 def text_inverted_conjunctive(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Inverted-index build + conjunctive (AND) term query — the text
     counterpart of the IVF principle that the LAYOUT is the index: the
@@ -435,34 +438,27 @@ def text_inverted_conjunctive(spark: SparkSession, sf_dir: str) -> DataFrame:
 PHRASE_LEN = 3
 
 
-def _phrase_terms() -> tuple[str, ...] | None:
+def _phrase_terms() -> tuple[str, ...]:
     """The canonical test phrase: the first PHRASE_LEN tokens of doc 0
     at the oracle scale — a constant of the registered query (the text
     analog of the ANN family's trained-constant device), guaranteeing
     at least one corpus match."""
-    try:
-        import pyarrow.parquet as pq
+    import pyarrow.parquet as pq
 
-        from ..functions.train import ORACLE_SF_DIR
+    from ..functions.train import ORACLE_SF_DIR
 
-        t = pq.read_table(
-            f"{ORACLE_SF_DIR}/documents.parquet", columns=["doc_id", "text"]
-        )
-        ids = t.column("doc_id").to_pylist()
-        texts = t.column("text").to_pylist()
-        return tuple(texts[ids.index(0)].split(" ")[:PHRASE_LEN])
-    except Exception:  # pragma: no cover - testdata absent
-        return None
+    t = pq.read_table(f"{ORACLE_SF_DIR}/documents.parquet", columns=["doc_id", "text"])
+    ids = t.column("doc_id").to_pylist()
+    texts = t.column("text").to_pylist()
+    return tuple(texts[ids.index(0)].split(" ")[:PHRASE_LEN])
 
 
-def _phrase_oracle() -> str | None:
+def _phrase_oracle() -> str:
     """Deliberately a DIFFERENT algorithm than the engine: a brute
     sliding-window scan over every document (the O(corpus · phrase)
     shape the positional index exists to avoid).  Same answer from an
     independent formulation is stronger evidence than a mirrored one."""
     terms = _phrase_terms()
-    if terms is None:  # pragma: no cover
-        return None
     conds = " AND ".join(
         f"tokens[s + {i}] = '{t}'" for i, t in enumerate(terms)
     )
@@ -482,7 +478,7 @@ GROUP BY doc_id
 """
 
 
-@register("text_phrase_query", oracle=_phrase_oracle())
+@register("text_phrase_query", oracle=_phrase_oracle)
 def text_phrase_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """POSITIONAL inverted index + exact phrase query — the lexical
     retrieval step conjunctive AND (``text_inverted_conjunctive``)
@@ -499,9 +495,10 @@ def text_phrase_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     a corpus scan).  The oracle verifies with an independent
     brute-force sliding-window scan.
     """
-    terms = _phrase_terms()
     d = load_table(spark, sf_dir, "documents")
-    if terms is None:  # oracle corpus absent: derive from THIS sf_dir
+    try:
+        terms = _phrase_terms()
+    except FileNotFoundError:  # oracle corpus absent: derive from THIS sf_dir
         row = d.where(F.col("doc_id") == 0).select("text").first()
         terms = tuple(row["text"].split(" ")[:PHRASE_LEN]) if row else ()
     if len(terms) < PHRASE_LEN:
@@ -579,7 +576,7 @@ LIMIT {BM25_K}
 """
 
 
-@register("text_bm25_topk", oracle=_bm25_oracle())
+@register("text_bm25_topk", oracle=_bm25_oracle)
 def text_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BM25 ranked retrieval (Robertson-Sparck Jones; the Lucene
     ``k1=1.2, b=0.75`` defaults and its ``ln(1 + (N-df+0.5)/(df+0.5))``
@@ -702,17 +699,14 @@ def _bpe_learn_driver(word_freq: dict[str, int], n_merges: int):
     return merges
 
 
-def _bpe_corpus_freq() -> dict[str, int] | None:
-    """Registration-time word-frequency table over the oracle corpus
-    (the trained-constant device of functions/train.py)."""
-    try:
-        import pyarrow.parquet as pq
+def _bpe_corpus_freq() -> dict[str, int]:
+    """Word-frequency table over the oracle corpus (the trained-constant
+    device of functions/train.py)."""
+    import pyarrow.parquet as pq
 
-        from ..functions.train import ORACLE_SF_DIR
+    from ..functions.train import ORACLE_SF_DIR
 
-        t = pq.read_table(f"{ORACLE_SF_DIR}/documents.parquet", columns=["text"])
-    except Exception:  # pragma: no cover - testdata absent
-        return None
+    t = pq.read_table(f"{ORACLE_SF_DIR}/documents.parquet", columns=["text"])
     freq: dict[str, int] = {}
     for text in t.column("text").to_pylist():
         for w in (text or "").split(" "):
@@ -726,10 +720,8 @@ def _sqlq(s: str) -> str:
     return "'" + s.replace("'", "''") + "'"
 
 
-def _bpe_oracle() -> str | None:
+def _bpe_oracle() -> str:
     freq = _bpe_corpus_freq()
-    if freq is None:  # pragma: no cover - testdata absent
-        return None
     merges = _bpe_learn_driver(freq, BPE_MERGES)
 
     q = _sqlq
@@ -746,7 +738,7 @@ FROM (VALUES
 """
 
 
-@register("tokenizer_bpe_merges", oracle=_bpe_oracle())
+@register("tokenizer_bpe_merges", oracle=_bpe_oracle)
 def q_tokenizer_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Byte-pair-encoding merge training (Sennrich et al. 2016) with
     the production cost split: the CORPUS-scale stage is one
@@ -759,7 +751,7 @@ def q_tokenizer_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg, collects the single argmax row (count DESC, pair ASC — the
     deterministic tie-break), and applies the merge with a
     lookaround regex whose left-to-right non-overlapping semantics
-    equal the classic merge loop.  The oracle is the registration-time
+    equal the classic merge loop.  The oracle is a
     pure-python replication over the same corpus: any divergence in
     pair counting, tie-breaking, or merge order shifts a row."""
     merges = _bpe_merges_for(spark, sf_dir)
@@ -884,10 +876,8 @@ def _bpe_encode_expr(merges) -> Column:
     return seq
 
 
-def _bpe_encode_oracle() -> str | None:
+def _bpe_encode_oracle() -> str:
     freq = _bpe_corpus_freq()
-    if freq is None:  # pragma: no cover - testdata absent
-        return None
     merges = _bpe_learn_driver(freq, BPE_MERGES)
     expr = _bpe_seq0_sql("word")
     for _rank, a, b, m, _n in merges:
@@ -916,7 +906,7 @@ ORDER BY dw.doc_id
 """
 
 
-@register("tokenizer_bpe_encode", oracle=_bpe_encode_oracle())
+@register("tokenizer_bpe_encode", oracle=_bpe_encode_oracle)
 def q_tokenizer_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Apply distributed-trained BPE merges to tokenize the corpus:
     per-document token counts and fertility (tokens per word).
@@ -930,7 +920,7 @@ def q_tokenizer_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     ships no corpus bytes; encode work is O(vocab), not O(corpus),
     which is exactly how production tokenizers amortize (word-level
     memoization).  The oracle replays the identical replace chain in
-    DuckDB with registration-time python-trained merges — the trainer
+    DuckDB with oracle-time python-trained merges — the trainer
     equivalence is already value-hashed by tokenizer_bpe_merges, so any
     drift in the ENCODE semantics (overlap handling, merge order)
     shifts a token count."""
@@ -1148,7 +1138,7 @@ def q_text_collocations_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
 # corpus-scale pass is the word-frequency aggregate; every EM pass is
 # bounded by vocabulary, and the per-iteration exchange is <= |pieces|
 # integer rows.  Same trained-constant oracle discipline as
-# Lloyd/power-iteration: the registration-time pure-python replication
+# Lloyd/power-iteration: the oracle-time pure-python replication
 # runs the IDENTICAL seed selection, Viterbi tie-breaks, and count
 # updates, so any drift in segmentation or EM bookkeeping shifts a row.
 # ---------------------------------------------------------------------------
@@ -1299,10 +1289,8 @@ def _unigram_learn_driver(word_freq: dict[str, int], iters: int = UNIGRAM_ITERS)
     return _unigram_em_rounds(vocab, count_pass, iters)
 
 
-def _unigram_oracle() -> str | None:
+def _unigram_oracle() -> str:
     freq = _bpe_corpus_freq()
-    if freq is None:  # pragma: no cover - testdata absent
-        return None
     from ..functions.train import sql_float
 
     rows = _unigram_report(_unigram_learn_driver(freq))
@@ -1336,13 +1324,13 @@ def _unigram_vocab_for(spark: SparkSession, sf_dir: str) -> dict[str, int]:
     return _UNIGRAM_CACHE[sf_dir]
 
 
-@register("tokenizer_unigram_train", oracle=_unigram_oracle())
+@register("tokenizer_unigram_train", oracle=_unigram_oracle)
 def q_tokenizer_unigram_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SentencePiece-style unigram-LM training (Kudo 2018): substring
     seed inventory → hard EM (Arrow-batched Viterbi E-step, count
     M-step) over the distinct-word table — reported as the top pieces
     with EM counts and final probabilities.  The distributed trainer
-    and the registration-time python replication share every decision
+    and the oracle-time python replication share every decision
     function (seed selection, Viterbi tie-breaks, EM rounds), so the
     row value-hashes exactly; probabilities divide the same exact
     integers in the same CPython driver on both sides."""
@@ -1359,10 +1347,8 @@ def _unigram_encode_logp(vocab: dict[str, int]) -> dict[str, float]:
     return {p: math.log(n / total) for p, n in vocab.items() if n > 0}
 
 
-def _unigram_encode_oracle() -> str | None:
+def _unigram_encode_oracle() -> str:
     freq = _bpe_corpus_freq()
-    if freq is None:  # pragma: no cover - testdata absent
-        return None
     logp = _unigram_encode_logp(_unigram_learn_driver(freq))
     q = _sqlq
     values = ",\n  ".join(
@@ -1386,7 +1372,7 @@ ORDER BY dw.doc_id
 """
 
 
-@register("tokenizer_unigram_encode", oracle=_unigram_encode_oracle())
+@register("tokenizer_unigram_encode", oracle=_unigram_encode_oracle)
 def q_tokenizer_unigram_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Apply the distributed-trained unigram LM to tokenize the corpus:
     per-document token counts and fertility, the Viterbi counterpart of

@@ -33,7 +33,7 @@ re-expressed as a Spark plan over the IVF layout from ``ann.py``:
 Determinism follows the ANN family conventions: sims rounded at 6
 decimals before any comparison, ties broken by id, trained/selected
 constants folded into the oracle by re-running the same pure-python
-computation at registration time (functions/train.py).
+computation on the first ``oracle_sql()`` call (functions/train.py).
 """
 
 from __future__ import annotations
@@ -52,12 +52,11 @@ from .ann import (
     ASSIGN_DECIMALS,
     N_CENTROIDS,
     NPROBE,
-    TRAIN_SAMPLE,
     UPSERT_FRACTION,
     ivf_assign_sql,
     load_or_build_ivf_index,
     nearest_centroids,
-    train_centroids,
+    oracle_centroids,
 )
 from .topk import QUERY_VEC_ID, SCORE_DECIMALS
 
@@ -99,12 +98,9 @@ def filtered_ivf_topk(
     )
 
 
-def _filtered_oracle() -> str | None:
-    try:
-        ids, x = load_sorted_vectors(ORACLE_SF_DIR)
-    except Exception:  # pragma: no cover - testdata absent
-        return None
-    cents = train_centroids([list(v) for v in x[:TRAIN_SAMPLE]])
+def _filtered_oracle() -> str:
+    ids, x = load_sorted_vectors(ORACLE_SF_DIR)
+    cents = oracle_centroids()
     qvec = [float(v) for v in x[ids.index(QUERY_VEC_ID)]]
     probes = nearest_centroids(qvec, cents, NPROBE)
     return f"""
@@ -120,7 +116,7 @@ LIMIT {K}
 """
 
 
-@register("ann_filtered_topk", oracle=_filtered_oracle())
+@register("ann_filtered_topk", oracle=_filtered_oracle)
 def q_ann_filtered_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     indexed, centroids = load_or_build_ivf_index(spark, sf_dir)
     emb = load_table(spark, sf_dir, "embeddings")
@@ -194,19 +190,16 @@ def adaptive_filtered_topk(
     return out, cur
 
 
-def _adaptive_oracle() -> str | None:
-    """Replays the SAME escalation ladder against DuckDB at
-    registration time — each rung's starvation check runs the shared
+def _adaptive_oracle() -> str:
+    """Replays the SAME escalation ladder against DuckDB when the
+    oracle is built — each rung's starvation check runs the shared
     ``ivf_assign_sql`` fragment, so the oracle's final probe list can
     only diverge from the Spark side if the assignment SQL itself
     diverges (which every IVF-family driver row already guards)."""
-    try:
-        import duckdb
+    import duckdb
 
-        ids, x = load_sorted_vectors(ORACLE_SF_DIR)
-    except Exception:  # pragma: no cover - testdata absent
-        return None
-    cents = train_centroids([list(v) for v in x[:TRAIN_SAMPLE]])
+    ids, x = load_sorted_vectors(ORACLE_SF_DIR)
+    cents = oracle_centroids()
     qvec = [float(v) for v in x[ids.index(QUERY_VEC_ID)]]
     con = duckdb.connect()
     con.execute(
@@ -246,7 +239,7 @@ LIMIT {K}
 """
 
 
-@register("ann_filtered_adaptive", oracle=_adaptive_oracle())
+@register("ann_filtered_adaptive", oracle=_adaptive_oracle)
 def q_ann_filtered_adaptive(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Filtered search that RECOVERS from starvation instead of merely
     detecting it: the registered predicate leaves < k survivors in the
@@ -337,19 +330,16 @@ def planned_filtered_topk(
     return out, cur, rungs
 
 
-def _planned_oracle() -> str | None:
-    """Replays the estimate arithmetic against DuckDB at registration
-    time: the same single-cell (t, m) counts through the shared
+def _planned_oracle() -> str:
+    """Replays the estimate arithmetic against DuckDB when the oracle
+    is built: the same single-cell (t, m) counts through the shared
     ``ivf_assign_sql``, the same ``_planned_nprobe``, the same
     fallback ladder — so Spark and oracle can only diverge if the
     assignment SQL itself diverges."""
-    try:
-        import duckdb
+    import duckdb
 
-        ids, x = load_sorted_vectors(ORACLE_SF_DIR)
-    except Exception:  # pragma: no cover - testdata absent
-        return None
-    cents = train_centroids([list(v) for v in x[:TRAIN_SAMPLE]])
+    ids, x = load_sorted_vectors(ORACLE_SF_DIR)
+    cents = oracle_centroids()
     qvec = [float(v) for v in x[ids.index(QUERY_VEC_ID)]]
     con = duckdb.connect()
     con.execute(
@@ -392,7 +382,7 @@ LIMIT {K}
 """
 
 
-@register("ann_filtered_planned", oracle=_planned_oracle())
+@register("ann_filtered_planned", oracle=_planned_oracle)
 def q_ann_filtered_planned(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Filtered search that PLANS instead of reacting: the same
     starving 1-in-43 predicate as ``ann_filtered_adaptive``, but the
@@ -417,12 +407,9 @@ def q_ann_filtered_planned(spark: SparkSession, sf_dir: str) -> DataFrame:
 TOMBSTONE_SQL = "vec_id % 7 = 3"  # the deleted set (demo predicate)
 
 
-def _tombstone_oracle() -> str | None:
-    try:
-        ids, x = load_sorted_vectors(ORACLE_SF_DIR)
-    except Exception:  # pragma: no cover - testdata absent
-        return None
-    cents = train_centroids([list(v) for v in x[:TRAIN_SAMPLE]])
+def _tombstone_oracle() -> str:
+    ids, x = load_sorted_vectors(ORACLE_SF_DIR)
+    cents = oracle_centroids()
     qvec = [float(v) for v in x[ids.index(QUERY_VEC_ID)]]
     probes = nearest_centroids(qvec, cents, NPROBE)
     return f"""
@@ -439,7 +426,7 @@ LIMIT {K}
 """
 
 
-@register("ann_delete_tombstone", oracle=_tombstone_oracle())
+@register("ann_delete_tombstone", oracle=_tombstone_oracle)
 def q_ann_delete_tombstone(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Search over an index with deletions applied as tombstones.
 
@@ -483,9 +470,7 @@ def _unit(x: np.ndarray) -> np.ndarray:
     return x / np.maximum(np.linalg.norm(x, axis=-1, keepdims=True), 1e-12)
 
 
-# _round6 moved to functions.train.round6 (light-import home, and it
-# breaks the late_interaction → vsearch_extra → ann oracle-generation
-# import cycle); re-exported under the family's historical name.
+# re-exported under the family's historical name
 from ..functions.train import round6 as _round6  # noqa: E402
 
 
@@ -540,20 +525,17 @@ def _mmr_pool(ids: Sequence[int], x: np.ndarray, qvec: np.ndarray) -> list[int]:
     return [int(ids[i]) for i in order[:MMR_POOL]]
 
 
-def _mmr_oracle() -> str | None:
-    """Re-run pool selection + greedy MMR at registration time and fold
+def _mmr_oracle() -> str:
+    """Re-run pool selection + greedy MMR when the oracle is built, fold
     the selected (rank, vec_id) pairs as literals; the SQL re-scores
     them against the embeddings table, verifying the distributed
     scoring join exactly (trained-constant oracle discipline)."""
-    try:
-        ids, x = load_sorted_vectors(ORACLE_SF_DIR)
-        qvec = x[ids.index(QUERY_VEC_ID)]
-        pool_ids = _mmr_pool(ids, x, qvec)
-        id_to_row = {v: i for i, v in enumerate(ids)}
-        pool_vecs = x[[id_to_row[v] for v in pool_ids]]
-        sel = mmr_select(pool_ids, pool_vecs, qvec)
-    except Exception:  # pragma: no cover - testdata absent/reshaped
-        return None
+    ids, x = load_sorted_vectors(ORACLE_SF_DIR)
+    qvec = x[ids.index(QUERY_VEC_ID)]
+    pool_ids = _mmr_pool(ids, x, qvec)
+    id_to_row = {v: i for i, v in enumerate(ids)}
+    pool_vecs = x[[id_to_row[v] for v in pool_ids]]
+    sel = mmr_select(pool_ids, pool_vecs, qvec)
     values = ",\n  ".join(f"({r + 1}, {v})" for r, v in enumerate(sel))
     return f"""
 WITH sel(mmr_rank, vec_id) AS (VALUES
@@ -568,7 +550,7 @@ ORDER BY s.mmr_rank
 """
 
 
-@register("topk_mmr_diverse", oracle=_mmr_oracle())
+@register("topk_mmr_diverse", oracle=_mmr_oracle)
 def q_topk_mmr_diverse(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MMR-diversified top-k: distributed exact top-P pool
     (TakeOrderedAndProject — P rows to the driver, never the corpus),
@@ -690,12 +672,9 @@ def q_maxsim_multivector(spark: SparkSession, sf_dir: str) -> DataFrame:
 BATCH_Q = 5  # query batch = vec_id < 5 (the batch-search convention)
 
 
-def _batch_oracle() -> str | None:
-    try:
-        ids, x = load_sorted_vectors(ORACLE_SF_DIR)
-    except Exception:  # pragma: no cover - testdata absent
-        return None
-    cents = train_centroids([list(v) for v in x[:TRAIN_SAMPLE]])
+def _batch_oracle() -> str:
+    ids, x = load_sorted_vectors(ORACLE_SF_DIR)
+    cents = oracle_centroids()
     probe_rows = []
     for qid in range(BATCH_Q):
         qvec = [float(v) for v in x[ids.index(qid)]]
@@ -728,7 +707,7 @@ FROM ranked WHERE rn <= {K}
 """
 
 
-@register("ann_batch_ivf_topk", oracle=_batch_oracle())
+@register("ann_batch_ivf_topk", oracle=_batch_oracle)
 def q_ann_batch_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Query-BATCH ANN over the IVF layout: the serving shape for bulk
     retrieval (RAG re-indexing, nightly recommendation sweeps), where
@@ -791,12 +770,8 @@ def q_ann_batch_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 MICRO = 1_000_000
 
 
-def _stats_oracle() -> str | None:
-    try:
-        _, x = load_sorted_vectors(ORACLE_SF_DIR)
-    except Exception:  # pragma: no cover - testdata absent
-        return None
-    cents = train_centroids([list(v) for v in x[:TRAIN_SAMPLE]])
+def _stats_oracle() -> str:
+    cents = oracle_centroids()
     return f"""
 WITH {ivf_assign_sql(cents)},
 cell AS (
@@ -818,7 +793,7 @@ ORDER BY centroid_id
 """
 
 
-@register("ann_index_stats", oracle=_stats_oracle())
+@register("ann_index_stats", oracle=_stats_oracle)
 def q_ann_index_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-cell index health report: sizes, id ranges, mean vector norm,
     and each cell's share of the corpus — the numbers that tell an
@@ -938,12 +913,8 @@ def maintenance_plan(assigned_old: DataFrame, assigned_new: DataFrame) -> DataFr
     ).orderBy("centroid_id")
 
 
-def _maintenance_oracle() -> str | None:
-    try:
-        _, x = load_sorted_vectors(ORACLE_SF_DIR)
-    except Exception:  # pragma: no cover - testdata absent
-        return None
-    cents = train_centroids([list(v) for v in x[:TRAIN_SAMPLE]])
+def _maintenance_oracle() -> str:
+    cents = oracle_centroids()
     n = len(cents)
     values = ",\n  ".join(
         f"({i}, {sql_floats(c)}::DOUBLE[])" for i, c in enumerate(cents)
@@ -1016,7 +987,7 @@ ORDER BY centroid_id
 """
 
 
-@register("ann_index_maintenance_plan", oracle=_maintenance_oracle())
+@register("ann_index_maintenance_plan", oracle=_maintenance_oracle)
 def q_ann_index_maintenance_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The index-maintenance DECISION operator: after the standard
     upsert batch (ids >= the UPSERT_FRACTION cut re-embedded as their
@@ -1057,12 +1028,9 @@ def q_ann_index_maintenance_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _recall_oracle() -> str | None:
-    try:
-        ids, x = load_sorted_vectors(ORACLE_SF_DIR)
-    except Exception:  # pragma: no cover - testdata absent
-        return None
-    cents = train_centroids([list(v) for v in x[:TRAIN_SAMPLE]])
+def _recall_oracle() -> str:
+    ids, x = load_sorted_vectors(ORACLE_SF_DIR)
+    cents = oracle_centroids()
     qvec = [float(v) for v in x[ids.index(QUERY_VEC_ID)]]
     probes = nearest_centroids(qvec, cents, NPROBE)
     return f"""
@@ -1091,7 +1059,7 @@ SELECT CAST({K} AS INTEGER) AS k,
 """
 
 
-@register("ann_recall_certificate", oracle=_recall_oracle())
+@register("ann_recall_certificate", oracle=_recall_oracle)
 def q_ann_recall_certificate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recall@k of the IVF index vs the exact scan, AS A QUERY — the
     index-quality number an operator monitors, computed by the engine

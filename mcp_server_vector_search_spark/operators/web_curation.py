@@ -37,6 +37,8 @@ literal predicate folded into the scan.
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -123,7 +125,7 @@ ORDER BY doc_id
 
 @register(
     "curation_url_canonicalize",
-    oracle=_oracle_text(_CANONICALIZE_SQL),
+    oracle=functools.partial(_oracle_text, _CANONICALIZE_SQL),
 )
 def q_curation_url_canonicalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """URL canonicalization as a pure projection: parse the raw URL
@@ -163,7 +165,7 @@ ORDER BY domain
 
 @register(
     "curation_domain_caps",
-    oracle=_oracle_text(_DOMAIN_CAPS_SQL),
+    oracle=functools.partial(_oracle_text, _DOMAIN_CAPS_SQL),
 )
 def q_curation_domain_caps(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-domain document caps (RefinedWeb §3.1: a few giant domains
@@ -213,7 +215,7 @@ ORDER BY domain
 
 @register(
     "curation_url_blocklist",
-    oracle=_oracle_text(_BLOCKLIST_SQL),
+    oracle=functools.partial(_oracle_text, _BLOCKLIST_SQL),
 )
 def q_curation_url_blocklist(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Blocklist filter over canonical URLs: drop documents whose
@@ -292,7 +294,7 @@ ORDER BY domain
 
 @register(
     "curation_url_dedup_snapshots",
-    oracle=_oracle_text(_SNAPSHOT_DEDUP_SQL),
+    oracle=functools.partial(_oracle_text, _SNAPSHOT_DEDUP_SQL),
 )
 def q_curation_url_dedup_snapshots(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cross-snapshot URL dedup: canonicalize BOTH snapshots' URLs with

@@ -369,7 +369,7 @@ it{k} AS (
     return "".join(parts)
 
 
-@register("events_pagerank_states", oracle=_pagerank_oracle())
+@register("events_pagerank_states", oracle=_pagerank_oracle)
 def q_events_pagerank_states(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Weighted PageRank over the event-type transition graph — the
     iterative-graph-algorithm slot (the same unrolled-join shape scales

@@ -3,31 +3,36 @@
 Every operator registers a named query (``fn(spark, sf_dir) ->
 DataFrame``) and the equivalent DuckDB oracle SQL.  Approximate
 operators (IVF/PQ/SRP ANN) are oracle-checked too: their training
-stages are deterministic driver-side numpy, re-run at registration
-time and folded into the SQL as literals (see functions/train.py).
-A query registered with ``oracle=None`` falls back to the driver's
+stages are deterministic driver-side numpy, re-run on the first
+``oracle_sql()`` call and folded into the SQL as literals (see
+functions/train.py).  A query registered with ``oracle=None``, or whose
+oracle generator finds its testdata missing, falls back to the driver's
 weaker rows-only record.
 """
 
 from __future__ import annotations
 
 from collections.abc import Callable
-from typing import Optional
+from typing import Optional, Union
 
 from pyspark.sql import DataFrame, SparkSession
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
+OracleSource = Union[str, Callable[[], str]]
 
 QUERIES: dict[str, QueryFn] = {}
-ORACLES: dict[str, str] = {}
+ORACLES: dict[str, OracleSource] = {}
+_RESOLVED: dict[str, Optional[str]] = {}
 
 
-def register(name: str, oracle: Optional[str] = None):
+def register(name: str, oracle: Optional[OracleSource] = None):
     """Decorator: register ``fn(spark, sf_dir)`` under ``name``.
 
     ``oracle`` is ANSI-ish SQL DuckDB can run against the pre-registered
-    testdata views; column names/aliases MUST match the Spark result
-    (the driver sorts columns by name before value-hashing).
+    testdata views, or a zero-arg generator returning that SQL (run on
+    the first :func:`oracles` call, never at import); column
+    names/aliases MUST match the Spark result (the driver sorts columns
+    by name before value-hashing).
     """
 
     def deco(fn: QueryFn) -> QueryFn:
@@ -39,6 +44,26 @@ def register(name: str, oracle: Optional[str] = None):
         return fn
 
     return deco
+
+
+def oracles() -> dict[str, str]:
+    """name -> oracle SQL, in registration order; each generator runs
+    once per process.
+
+    A generator whose input files are missing (pyarrow's
+    ``FileNotFoundError``, DuckDB ``read_parquet``'s ``IOException``)
+    leaves its query rows-only; any other error propagates, so a broken
+    generator cannot silently drop its oracle."""
+    import duckdb
+
+    for name, source in ORACLES.items():
+        if name in _RESOLVED:
+            continue
+        try:
+            _RESOLVED[name] = source() if callable(source) else source
+        except (FileNotFoundError, duckdb.IOException):
+            _RESOLVED[name] = None
+    return {n: _RESOLVED[n] for n in ORACLES if _RESOLVED[n] is not None}
 
 
 def load_all_operators() -> None:

@@ -43,6 +43,9 @@ SERVER_INFO = {"name": "mcp-server-vector-search-spark", "version": "1.0.0"}
 # keeps the same one-required-string-argument shape and description
 # intent (server.py:72-76).
 TOOL_NAME = "vector_search_spark"
+# Upper bound on a tool call's ``k``: the top-k rows are collected to the
+# driver, so an unbounded k would pull the whole corpus there.
+MAX_K = 1000
 TOOL_SPEC = {
     "name": TOOL_NAME,
     "description": (
@@ -61,6 +64,8 @@ TOOL_SPEC = {
             },
             "k": {
                 "type": "integer",
+                "minimum": 1,
+                "maximum": MAX_K,
                 "description": "Number of results (default 10)",
             },
         },
@@ -129,8 +134,11 @@ class MCPServer:
         if not isinstance(prompt, str):
             return _error(msg_id, INVALID_PARAMS, "'prompt' (string) is required")
         k = args.get("k", DEFAULT_K)
+        if isinstance(k, bool) or not isinstance(k, int) or not 1 <= k <= MAX_K:
+            return _error(msg_id, INVALID_PARAMS,
+                          f"'k' must be an integer in [1, {MAX_K}]")
         try:
-            payload = self.search.search(prompt, k=int(k))
+            payload = self.search.search(prompt, k=k)
         except Exception as exc:  # noqa: BLE001 — tool errors are results
             return _result(msg_id, {
                 "content": [{"type": "text", "text": f"{type(exc).__name__}: {exc}"}],

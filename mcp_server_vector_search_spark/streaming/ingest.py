@@ -24,6 +24,7 @@ runs are smoke-tested with the parquet source + memory/parquet sinks
 
 from __future__ import annotations
 
+import functools
 import os
 import tempfile
 from pathlib import Path
@@ -384,17 +385,11 @@ def run_tumbling_stream(spark: SparkSession, sf_dir: str):
 # ---------------------------------------------------------------------------
 
 
-def _index_append_oracle() -> str | None:
-    from ..functions.train import ORACLE_SF_DIR, load_sorted_vectors
-    from ..operators.ann import TRAIN_SAMPLE, ivf_assign_sql, train_centroids
+def _index_append_oracle() -> str:
+    from ..operators.ann import ivf_assign_sql, oracle_centroids
 
-    try:
-        _ids, x = load_sorted_vectors(ORACLE_SF_DIR)
-    except Exception:  # pragma: no cover - testdata absent
-        return None
-    cents = train_centroids([list(v) for v in x[:TRAIN_SAMPLE]])
     return f"""
-WITH {ivf_assign_sql(cents)}
+WITH {ivf_assign_sql(oracle_centroids())}
 SELECT CAST(centroid_id AS INTEGER) AS centroid_id,
        COUNT(*) AS n_vectors,
        CAST(SUM(vec_id) AS BIGINT) AS id_sum
@@ -404,7 +399,7 @@ ORDER BY centroid_id
 """
 
 
-@register("streaming_index_append", oracle=_index_append_oracle())
+@register("streaming_index_append", oracle=_index_append_oracle)
 def q_streaming_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming IVF ingest through the gate: replay the embeddings
     table as a file stream, assign each micro-batch with the SAME
@@ -1543,8 +1538,6 @@ def run_session_stream(spark: SparkSession, sf_dir: str):
 
 from ..operators.analytics import welch_sql as _batch_welch_sql  # noqa: E402
 
-_WELCH_BATCH_ORACLE = _batch_welch_sql("events")
-
 
 def _welch_stats_stream_agg(stream: DataFrame) -> DataFrame:
     """The batch row's _WELCH_STATS_SQL executed over a STREAMING temp
@@ -1563,7 +1556,7 @@ def _welch_stats_stream_agg(stream: DataFrame) -> DataFrame:
     )
 
 
-@register("streaming_ab_welch", oracle=_WELCH_BATCH_ORACLE)
+@register("streaming_ab_welch", oracle=functools.partial(_batch_welch_sql, "events"))
 def q_streaming_ab_welch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Welch A/B statistics maintained BY A STREAM: events replayed as
     4 micro-batch files, per-variant sufficient statistics merged
@@ -1648,7 +1641,7 @@ ORDER BY a_id, rnk
 """
 
 
-@register("streaming_knn_append", oracle=_knn_stream_oracle())
+@register("streaming_knn_append", oracle=_knn_stream_oracle)
 def q_streaming_knn_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Replay the embeddings table as THREE micro-batches
     (vec_id mod 3 slices, maxFilesPerTrigger=1), maintain the kNN

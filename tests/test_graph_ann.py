@@ -258,9 +258,7 @@ def test_hnsw_dim1536_planted_navigation_floor():
     descent or the hierarchy regressed, not the fixture."""
     from mcp_server_vector_search_spark.operators import lifecycle as L
 
-    corpus = L._corpus_1536()
-    assert corpus is not None, "sf0.01 testdata required"
-    ids, vecs, cents, assign = corpus
+    ids, vecs, cents, assign = L._corpus_1536()
     h = graph_ann.build_hnsw(cents)
     sample = list(range(0, len(ids), max(1, len(ids) // 50)))
     hits = 0
@@ -304,8 +302,7 @@ def test_hnsw_dim1536_query_matches_oracle(spark):
     time numpy replication exactly (ids, scores, cells)."""
     from mcp_server_vector_search_spark.operators import lifecycle as L
 
-    assert L._HNSW1536 is not None, "sf0.01 testdata required"
-    _cents, _probes, expected = L._HNSW1536
+    _cents, _probes, expected = L._hnsw1536_model()
     got = [
         (int(r.doc_id), float(r.score), int(r.node_id))
         for r in L.q_ann_hnsw_dim1536(spark, SF_CORRECTNESS).collect()

@@ -46,8 +46,9 @@ def test_query_parity(name, spark, oracle_con):
         f"{name}: top-level complex output columns break the driver's "
         f"canonicalizer (r11 red-row failure mode): {bad}"
     )
-    if name in registry.ORACLES:
-        problems = compare(df, oracle_con, registry.ORACLES[name])
+    oracle = registry.oracles().get(name)
+    if oracle is not None:
+        problems = compare(df, oracle_con, oracle)
         assert not problems, f"{name}: " + "; ".join(problems)
     else:
         # rows-only check (approximate operators) — must run and be well-formed

@@ -97,6 +97,40 @@ def test_error_surfaces(server):
     assert resp["error"]["code"] == serving.INVALID_REQUEST
 
 
+class _NoSpark:
+    """A search backend that must never be reached."""
+
+    def search(self, prompt, k):
+        raise AssertionError(f"search ran with k={k!r}")
+
+
+@pytest.mark.parametrize(
+    "k", [10**9, serving.MAX_K + 1, 0, -1, "ten", "10", True, 2.5, None]
+)
+def test_k_out_of_bounds_is_invalid_params(k):
+    """A bad ``k`` is a protocol error, raised before any Spark work."""
+    resp = MCPServer(_NoSpark()).handle_message(
+        _req("tools/call", msg_id=9, name=TOOL_NAME,
+             arguments={"prompt": "x", "k": k})
+    )
+    assert resp["error"]["code"] == serving.INVALID_PARAMS
+    assert str(serving.MAX_K) in resp["error"]["message"]
+
+
+def test_k_bounds_in_schema_admit_the_serving_range(server):
+    schema = serving.TOOL_SPEC["inputSchema"]["properties"]["k"]
+    assert (schema["minimum"], schema["maximum"]) == (1, serving.MAX_K)
+    assert serving.MAX_K >= 100
+    for k in (1, serving.MAX_K):
+        resp = server.handle_message(
+            _req("tools/call", msg_id=10, name=TOOL_NAME,
+                 arguments={"prompt": "vector similarity search", "k": k})
+        )
+        assert resp["result"]["isError"] is False
+        rows = json.loads(resp["result"]["content"][0]["text"])
+        assert 1 <= len(rows) <= k
+
+
 def test_notifications_never_answered(server):
     """JSON-RPC 2.0 §4.1: a message without an id is a notification and
     MUST NOT be answered — for ANY method, known or unknown.  Side
