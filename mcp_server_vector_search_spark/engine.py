@@ -11,6 +11,16 @@ request/response MCP transport itself is out of engine scope
 (SURVEY.md §3.3 — the reference's own CLI entry point is broken, and
 the driver contract here is plain Python).
 
+The corpus is materialized ONCE, at construction: the reference stores
+each embedding as a node property behind its vector index
+(README.md:72-79) and per request embeds only the prompt and runs one
+index query (server.py:85-91).  ``SparkVectorSearch.__init__``
+persists the corpus (``MEMORY_AND_DISK``) and runs one action, so the
+embedding UDF and any shuffle in the corpus plan run once; a request is
+one scan of the cached rows into ``TakeOrderedAndProject``, with the
+prompt vector built from one SQL parse (``neo4j_score``'s literal
+form).  ``close()`` releases the cached blocks.
+
 Parity decisions, each cited to the reference:
 
 - **Dimension validation is a hard error** (``ValueError``), applied to
@@ -36,6 +46,7 @@ from __future__ import annotations
 import json
 from typing import Callable, Optional
 
+from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -55,6 +66,11 @@ class SparkVectorSearch:
     text column to an embedding column; the default is the
     deterministic hash embedder (functions/embedder.py) — swap in
     ``model_embedder(...)`` for a real model.
+
+    Construction persists ``corpus`` and materializes it with one
+    action; call ``close()`` to release the cached blocks.  Persisting
+    is keyed by plan, so closing also uncaches any other DataFrame with
+    the same plan.
     """
 
     def __init__(
@@ -76,7 +92,12 @@ class SparkVectorSearch:
         missing = {"name", "description", "embedding"} - set(corpus.columns)
         if missing:
             raise ValueError(f"corpus is missing columns {sorted(missing)}")
-        self.corpus = corpus
+        self.corpus = corpus.persist(StorageLevel.MEMORY_AND_DISK)
+        self.corpus.count()
+
+    def close(self) -> None:
+        """Release the cached corpus."""
+        self.corpus.unpersist()
 
     def _embed_prompt(self, prompt: str) -> list[float]:
         if self._driver_prompt_embed:
@@ -102,12 +123,10 @@ class SparkVectorSearch:
     def search_df(self, prompt: str, k: int = DEFAULT_K) -> DataFrame:
         """The lazy form: scored, ordered, limited DataFrame of
         (name, description, score)."""
-        qv = F.array(*[F.lit(float(x)) for x in self._embed_prompt(prompt)])
-        scored = self.corpus.withColumn(
-            "score", F.round(neo4j_score("embedding", qv), SCORE_DECIMALS)
-        )
-        hits = topk(scored, k, [F.desc("score"), F.asc("name")])
-        return hits.select("name", "description", "score")
+        qv = self._embed_prompt(prompt)
+        score = F.round(neo4j_score("embedding", qv), SCORE_DECIMALS)
+        hits = self.corpus.select("name", "description", score.alias("score"))
+        return topk(hits, k, [F.desc("score"), F.asc("name")])
 
     def search(self, prompt: str, k: int = DEFAULT_K) -> str:
         """The reference tool's contract: JSON array string of top-k

@@ -12,11 +12,11 @@ hash or a stub.  This module is that model: a genuine transformer
 encoder (byte-level tokens, learned positions, multi-head scaled-dot
 attention, pre-LN residual blocks, GELU FFN, mean pooling, L2
 normalization — the MiniLM recipe at toy scale) whose weights are
-DETERMINISTIC seeded Gaussians stored as an ``.npz`` fixture in the
-repo.  No attention/pooling masks are implemented — none are needed,
-because ``encode`` runs ONE unpadded text per forward pass; anyone
-adding batched (padded) forward passes must add both masks or the
-results will be wrong (ADVICE r11).
+DETERMINISTIC seeded Gaussians (seed 20260815) stored as an ``.npz``
+fixture in the repo.  No attention/pooling masks are implemented —
+none are needed, because ``encode`` runs ONE unpadded text per forward
+pass; anyone adding batched (padded) forward passes must add both
+masks or the results will be wrong (ADVICE r11).
 
 Honesty note: the weights are untrained (no network to fetch public
 pretrained weights), so the embeddings carry no semantic meaning.
@@ -47,7 +47,6 @@ N_HEADS = 2
 N_LAYERS = 2
 FFN = 128
 MAX_LEN = 64
-SEED = 20260815
 
 FIXTURE_PATH = (
     Path(__file__).resolve().parents[2]
@@ -78,38 +77,6 @@ def _softmax(x: np.ndarray) -> np.ndarray:
     m = x.max(axis=-1, keepdims=True)
     e = np.exp(x - m)
     return e / e.sum(axis=-1, keepdims=True)
-
-
-def generate_weights(seed: int = SEED) -> dict[str, np.ndarray]:
-    """Deterministic Gaussian init, scaled like a standard transformer
-    (0.02 std, residual projections down-scaled by sqrt(2*layers))."""
-    rng = np.random.default_rng(seed)
-    s = np.float32(0.02)
-    rs = s / np.float32(np.sqrt(2.0 * N_LAYERS))
-
-    def g(*shape, scale=s):
-        return (rng.standard_normal(shape) * scale).astype(np.float32)
-
-    w: dict[str, np.ndarray] = {
-        "tok": g(VOCAB, DIM),
-        "pos": g(MAX_LEN, DIM),
-        "ln_f.g": np.ones(DIM, dtype=np.float32),
-        "ln_f.b": np.zeros(DIM, dtype=np.float32),
-    }
-    for i in range(N_LAYERS):
-        w[f"l{i}.ln1.g"] = np.ones(DIM, dtype=np.float32)
-        w[f"l{i}.ln1.b"] = np.zeros(DIM, dtype=np.float32)
-        w[f"l{i}.ln2.g"] = np.ones(DIM, dtype=np.float32)
-        w[f"l{i}.ln2.b"] = np.zeros(DIM, dtype=np.float32)
-        w[f"l{i}.wq"] = g(DIM, DIM)
-        w[f"l{i}.wk"] = g(DIM, DIM)
-        w[f"l{i}.wv"] = g(DIM, DIM)
-        w[f"l{i}.wo"] = g(DIM, DIM, scale=rs)
-        w[f"l{i}.ffn1"] = g(DIM, FFN)
-        w[f"l{i}.ffn1.b"] = np.zeros(FFN, dtype=np.float32)
-        w[f"l{i}.ffn2"] = g(FFN, DIM, scale=rs)
-        w[f"l{i}.ffn2.b"] = np.zeros(DIM, dtype=np.float32)
-    return w
 
 
 class MiniTransformer:

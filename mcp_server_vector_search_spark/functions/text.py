@@ -91,14 +91,6 @@ def stopword_ratio(text: Column) -> Column:
     return F.size(stops).cast("double") / F.size(toks)
 
 
-def mean_token_length(text: Column) -> Column:
-    toks = tokens(text)
-    total = F.aggregate(
-        toks, F.lit(0).cast("long"), lambda acc, t: acc + F.length(t)
-    )
-    return total.cast("double") / F.size(toks)
-
-
 def quality_score(text: Column) -> Column:
     """Heuristic quality in [0,1]: length saturation + low stopword mass
     + vocabulary diversity (the classic pretraining-filter trio)."""

@@ -36,8 +36,12 @@ def kmeans(x: np.ndarray, k: int, iters: int, seed: int) -> np.ndarray:
     (per-subspace)."""
     rng = np.random.default_rng(seed)
     centers = x[rng.choice(len(x), k, replace=False)].copy()
+    d = np.empty((len(x), k), dtype=x.dtype)
     for _ in range(iters):
-        d = ((x[:, None, :] - centers[None, :, :]) ** 2).sum(axis=2)
+        # one center at a time: an n x k x d broadcast is ~0.4 GB per
+        # iteration at 1536 dims; the per-row sums are bit-identical
+        for c in range(k):
+            d[:, c] = ((x - centers[c]) ** 2).sum(axis=1)
         assign = d.argmin(axis=1)
         for c in range(k):
             mask = assign == c

@@ -15,7 +15,7 @@ compute in double (``embedding::DOUBLE[]``).
 
 from __future__ import annotations
 
-from typing import Iterable, Union
+from typing import Iterable, Sequence, Union
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -27,14 +27,22 @@ def _c(col: ColumnOrName) -> Column:
     return col if isinstance(col, Column) else F.col(col)
 
 
+def _sql_array(values: Iterable[float]) -> str:
+    """SQL text of an array<double> literal.  ``repr`` emits shortest
+    round-tripping decimals and the D suffix parses them as doubles, so
+    the values are bit-identical to per-element ``F.lit(float(v))``."""
+    return "array(" + ",".join(f"{float(v)!r}D" for v in values) + ")"
+
+
 def vector_lit(values: Iterable[float]) -> Column:
     """A literal query vector as an array<double> column.
 
     The Spark analog of the reference binding the prompt embedding as the
     ``$prompt_embeddings`` Cypher parameter (server.py:86,95): a constant
     folded into the plan, shipped once with the task binary, never joined.
+    Built from ONE SQL-parsed expression (see ``matrix_lit``).
     """
-    return F.array(*[F.lit(float(v)) for v in values])
+    return F.expr(_sql_array(values))
 
 
 def matrix_lit(rows: Iterable[Iterable[float]]) -> Column:
@@ -42,13 +50,8 @@ def matrix_lit(rows: Iterable[Iterable[float]]) -> Column:
     expression.  Per-element ``F.lit`` construction costs a py4j round
     trip each — a quantizer plan with 5k literal elements spends ~3-5 s
     of DRIVER time just building the plan; the JVM SQL parser does the
-    same in milliseconds.  ``repr`` emits shortest round-tripping
-    decimals, and the D suffix parses them as doubles, so values are
-    bit-identical to the per-lit form."""
-    body = ",".join(
-        "array(" + ",".join(f"{float(v)!r}D" for v in row) + ")" for row in rows
-    )
-    return F.expr(f"array({body})")
+    same in milliseconds."""
+    return F.expr("array(" + ",".join(_sql_array(row) for row in rows) + ")")
 
 
 def dot(a: ColumnOrName, b: ColumnOrName) -> Column:
@@ -81,7 +84,17 @@ def cosine_similarity(a: ColumnOrName, b: ColumnOrName) -> Column:
     return dot(a, b) / F.nullif(denom, F.lit(0.0))
 
 
-def neo4j_score(a: ColumnOrName, b: ColumnOrName) -> Column:
+def _sql_dot(a: str, b: str) -> str:
+    """SQL text of ``dot(a, b)``: the same zip_with/aggregate tree."""
+    return (
+        f"aggregate(zip_with({a}, {b}, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)),"
+        " 0.0D, (acc, x) -> acc + x)"
+    )
+
+
+def neo4j_score(
+    a: ColumnOrName, b: Union[ColumnOrName, Sequence[float]]
+) -> Column:
     """Neo4j's cosine-index score normalization ``(1 + cos) / 2`` in [0, 1].
 
     A cosine-configured Neo4j vector index yields this normalized score
@@ -89,8 +102,22 @@ def neo4j_score(a: ColumnOrName, b: ColumnOrName) -> Column:
     public Neo4j 5.x docs).  Kept as a distinct function because the
     [0, 1] range and DESC ordering are semantic commitments of the
     reference's output (server.py:88-90).
+
+    ``b`` is a column, or a literal query vector (a sequence of floats)
+    scored against the column NAMED ``a``.  The literal form emits the
+    same expression tree as the column form from one SQL string: one
+    parse instead of ~100 py4j calls building six Python-lambda HOFs
+    and a per-element literal array.
     """
-    return (F.lit(1.0) + cosine_similarity(a, b)) / F.lit(2.0)
+    if isinstance(b, (Column, str)):
+        return (F.lit(1.0) + cosine_similarity(a, b)) / F.lit(2.0)
+    if not isinstance(a, str):
+        raise TypeError("a literal query vector is scored against a column name")
+    col, q = f"`{a}`", _sql_array(b)
+    return F.expr(
+        f"(1.0D + {_sql_dot(col, q)} / nullif(sqrt({_sql_dot(col, col)})"
+        f" * sqrt({_sql_dot(q, q)}), 0.0D)) / 2.0D"
+    )
 
 
 def l2_normalize(a: ColumnOrName) -> Column:

@@ -37,8 +37,6 @@ from typing import Sequence
 
 import numpy as np
 import pandas as pd
-from pyspark.ml.feature import BucketedRandomProjectionLSH
-from pyspark.ml.functions import array_to_vector
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -48,10 +46,8 @@ from ..functions.train import ORACLE_SF_DIR, kmeans, load_sorted_vectors, sql_fl
 from ..functions.vector import (
     dot,
     l2_norm,
-    l2_normalize,
     matrix_lit,
     neo4j_score,
-    vector_lit,
 )
 from ..registry import register
 from ..sources.tables import load_table, table_path
@@ -308,10 +304,9 @@ def ivf_topk(
     centroid_id-partitioned path, the IN-filter is partition pruning —
     non-probed cells are never read from storage."""
     probes = nearest_centroids(query_vec, centroids, nprobe)
-    qcol = vector_lit(query_vec)
     return (
         indexed.where(F.col("centroid_id").isin(probes))
-        .withColumn("score", F.round(neo4j_score("embedding", qcol), SCORE_DECIMALS))
+        .withColumn("score", F.round(neo4j_score("embedding", query_vec), SCORE_DECIMALS))
         .orderBy(F.desc("score"), F.asc("vec_id"))
         .limit(k)
         .select("vec_id", "centroid_id", "score")
@@ -481,10 +476,9 @@ def srp_lsh_topk(
     for t in range(SRP_TABLES):
         this = F.col(f"b{t}") == F.lit(_py_bucket(query_vec, planes, t))
         cond = this if cond is None else cond | this
-    qcol = vector_lit(query_vec)
     return (
         indexed.where(cond)
-        .withColumn("score", F.round(neo4j_score("embedding", qcol), SCORE_DECIMALS))
+        .withColumn("score", F.round(neo4j_score("embedding", query_vec), SCORE_DECIMALS))
         .orderBy(F.desc("score"), F.asc("vec_id"))
         .limit(k)
         .select("vec_id", "score")
@@ -576,10 +570,9 @@ def srp_multiprobe_topk(
     for t in range(MP_TABLES):
         this = F.col(f"b{t}").isin(probe_sequence(query_vec, planes, t))
         cond = this if cond is None else cond | this
-    qcol = vector_lit(query_vec)
     return (
         indexed.where(cond)
-        .withColumn("score", F.round(neo4j_score("embedding", qcol), SCORE_DECIMALS))
+        .withColumn("score", F.round(neo4j_score("embedding", query_vec), SCORE_DECIMALS))
         .orderBy(F.desc("score"), F.asc("vec_id"))
         .limit(k)
         .select("vec_id", "score")
@@ -640,41 +633,6 @@ def q_ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return srp_lsh_topk(indexed, qvec)
 
 
-def lsh_topk(
-    embeddings: DataFrame,
-    query_df: DataFrame,
-    k: int = K,
-    bucket_length: float = 0.5,
-    num_hash_tables: int = 4,
-) -> DataFrame:
-    """Cosine ANN via MLlib's Euclidean BRP-LSH on unit vectors
-    (``l2² = 2 - 2·cos`` is monotone on the unit sphere, SURVEY §4.3.2).
-    Kept as the library alternative to :func:`srp_lsh_topk`; its
-    hash functions are not SQL-portable, so the registered query uses
-    the SRP variant and this one is recall-tested in tests/test_ann.py."""
-    unit = embeddings.withColumn(
-        "__unit", array_to_vector(l2_normalize("embedding"))
-    )
-    lsh = BucketedRandomProjectionLSH(
-        inputCol="__unit",
-        outputCol="__hashes",
-        bucketLength=bucket_length,
-        numHashTables=num_hash_tables,
-        seed=SEED,
-    )
-    model = lsh.fit(unit)
-    qrow = query_df.select(
-        array_to_vector(l2_normalize("__query_vec")).alias("__unit")
-    ).first()
-    hits = model.approxNearestNeighbors(unit, qrow["__unit"], k, distCol="__l2")
-    cos = 1 - (F.col("__l2") * F.col("__l2")) / 2
-    return (
-        hits.withColumn("score", F.round((1 + cos) / 2, SCORE_DECIMALS))
-        .select("vec_id", "score")
-        .orderBy(F.desc("score"), F.asc("vec_id"))
-    )
-
-
 # ---------------------------------------------------------------------------
 # Semantic search: prompt → embed (driver-side, like the reference's
 # client-side OpenAI call) → exact top-k over the pre-embedded corpus
@@ -724,9 +682,9 @@ def q_semantic_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     in functions/embedder.py, exercised by tests/test_embedders.py."""
     emb = load_table(spark, sf_dir, "embeddings")
     docs = load_table(spark, sf_dir, "documents")
-    qcol = vector_lit(prompt_embedding())
+    qvec = prompt_embedding()
     hits = (
-        emb.withColumn("score", F.round(neo4j_score("embedding", qcol), SCORE_DECIMALS))
+        emb.withColumn("score", F.round(neo4j_score("embedding", qvec), SCORE_DECIMALS))
         .orderBy(F.desc("score"), F.asc("vec_id"))
         .limit(K)
         .select("vec_id", "score")
@@ -1035,11 +993,10 @@ def ivf_range_search(
     global LAST_RANGE_STATS
     feasible = range_feasible_cells(query_vec, centroids, radii, min_score)
     LAST_RANGE_STATS = {"feasible": len(feasible), "cells": len(centroids)}
-    qcol = vector_lit(query_vec)
     return (
         indexed.where(F.col("centroid_id").isin(feasible))
         .withColumn(
-            "score", F.round(neo4j_score("embedding", qcol), SCORE_DECIMALS)
+            "score", F.round(neo4j_score("embedding", query_vec), SCORE_DECIMALS)
         )
         .where(F.col("score") >= min_score)
         .orderBy(F.desc("score"), F.asc("vec_id"))

@@ -59,6 +59,7 @@ import pandas as pd  # module-level: pandas_udf type-hint resolution
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.vector import vector_lit
 from ..registry import register
 from ..sources.tables import EMBEDDING_DIM, load_table
 
@@ -107,7 +108,7 @@ def _dist_micro(centroid: list[float]) -> Column:
     the interpreted eval only loses past ~10^5 rows per core; at real
     cluster scale the assignment goes GEMM (the ``ann_assign_gemm_cells``
     device) and this exact path remains the oracle reference."""
-    c = F.array(*[F.lit(float(v)) for v in centroid])
+    c = vector_lit(centroid)
     terms = F.zip_with(
         "emb", c, lambda a, b: F.floor((a - b) * (a - b) * F.lit(DIST_SCALE))
     )

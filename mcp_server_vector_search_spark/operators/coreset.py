@@ -55,6 +55,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.vector import vector_lit
 from ..registry import register
 from ..sources.tables import EMBEDDING_DIM, load_table
 
@@ -69,7 +70,7 @@ def micro_sqdist(center: list[float]) -> Column:
     """Exact long micro squared distance of the ``emb`` column to a
     literal center: per-dimension ``floor(((x_d-c_d)^2)*1e9)`` terms,
     order-free integer sum."""
-    lit_c = F.array(*[F.lit(float(x)) for x in center])
+    lit_c = vector_lit(center)
     terms = F.zip_with(
         "emb", lit_c, lambda a, b: F.floor(((a - b) * (a - b)) * F.lit(SCALE))
     )

@@ -73,7 +73,9 @@ def q_engine_search_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     the facade: construct the engine over the corpus, search a fixed
     prompt, return the top-k (name, description, score) rows."""
     engine = SparkVectorSearch(_engine_corpus(spark, sf_dir))
-    return engine.search_df(PROMPT_TEXT, k=ENGINE_K)
+    out = engine.search_df(PROMPT_TEXT, k=ENGINE_K).localCheckpoint(eager=True)
+    engine.close()
+    return out
 
 
 def _engine_ann_oracle() -> str:
@@ -146,11 +148,12 @@ def q_engine_search_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (VERDICT r9 item 3): the reference claims pooled/async serving
 # (README.md:131-132) but publishes no numbers; the Spark analog of its
 # always-warm Neo4j index is a BUILD-ONCE cached corpus behind the
-# facade.  This row issues one COLD search (embeds + caches the corpus
-# as a side effect) then WARM_REPEATS consecutive searches against the
-# cache, asserting (a) every repeat returns byte-identical JSON and
-# (b) median warm latency beats the cold call — the measured form of
-# "the index is resident; queries don't pay the build".
+# facade.  This row times one COLD build-and-search (the facade embeds
+# and caches the corpus on construction) then WARM_REPEATS consecutive
+# searches against the cache, asserting (a) every repeat returns
+# byte-identical JSON and (b) median warm latency beats the cold
+# call — the measured form of "the index is resident; queries don't
+# pay the build".
 # ---------------------------------------------------------------------------
 
 WARM_REPEATS = 8
@@ -206,21 +209,21 @@ SELECT name, score FROM (VALUES
 @register("engine_search_warm_cache", oracle=_warm_oracle)
 def q_engine_search_warm_cache(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Warm-serving certificate: corpus built by embedding document
-    text through the facade's Arrow UDF and persisted ONCE; the cold
-    search pays the embed + cache fill, the 8 warm repeats must all
-    serve from cached blocks, return byte-identical JSON, and beat the
-    cold latency at the median.  Returns the (name, score) top-k so
-    the driver value-hashes the actual served results against the
-    oracle-time replication."""
+    text through the facade's Arrow UDF and materialized ONCE by the
+    facade; the cold timing covers construction (embed + cache fill)
+    and the first search, the 8 warm repeats must all serve from cached
+    blocks, return byte-identical JSON, and beat the cold latency at
+    the median.  Returns the (name, score) top-k so the driver
+    value-hashes the actual served results against the oracle-time
+    replication."""
     import time
 
     from ..engine import SparkVectorSearch, corpus_from_documents
 
     global LAST_WARM_STATS
     docs = load_table(spark, sf_dir, "documents")
-    corpus = corpus_from_documents(docs).persist()
-    engine = SparkVectorSearch(corpus)
     t0 = time.perf_counter()
+    engine = SparkVectorSearch(corpus_from_documents(docs))
     cold_payload = engine.search(PROMPT_TEXT, k=ENGINE_K)
     cold_s = time.perf_counter() - t0
     warm_s: list[float] = []
@@ -270,7 +273,7 @@ def q_engine_search_warm_cache(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("name", "score")
         .localCheckpoint(eager=True)
     )
-    corpus.unpersist()
+    engine.close()
     return out
 
 
@@ -333,8 +336,7 @@ def q_engine_search_concurrent(spark: SparkSession, sf_dir: str) -> DataFrame:
     from concurrent.futures import ThreadPoolExecutor
 
     global LAST_CONCURRENT_STATS
-    corpus = _engine_corpus(spark, sf_dir).persist()
-    engine = SparkVectorSearch(corpus)
+    engine = SparkVectorSearch(_engine_corpus(spark, sf_dir))
 
     t0 = time.perf_counter()
     sequential = [engine.search(p, k=ENGINE_K) for p in CONCURRENT_PROMPTS]
@@ -362,7 +364,7 @@ def q_engine_search_concurrent(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = spark.createDataFrame(
         rows, "prompt_id int, name string, score double"
     ).localCheckpoint(eager=True)
-    corpus.unpersist()
+    engine.close()
     return out
 
 
@@ -406,9 +408,11 @@ def q_semantic_search_mini_transformer(
     from ..functions import mini_transformer as MT
 
     docs = load_table(spark, sf_dir, "documents")
-    corpus = corpus_from_documents(
-        docs, embedder=MT.mini_transformer_embedder(), dim=MT.DIM
-    ).persist()
+    engine = SparkVectorSearch(
+        corpus_from_documents(docs, embedder=MT.mini_transformer_embedder(), dim=MT.DIM),
+        dim=MT.DIM,
+    )
+    corpus = engine.corpus
     n_docs = corpus.count()
     bad_dim = corpus.where(F.size("embedding") != MT.DIM).count()
     norm_off = corpus.where(
@@ -424,12 +428,8 @@ def q_semantic_search_mini_transformer(
         )
         > 1e-4
     ).count()
-    served = (
-        SparkVectorSearch(corpus, dim=MT.DIM)
-        .search_df(PROMPT_TEXT, k=5)
-        .collect()
-    )  # bounded: k rows
-    corpus.unpersist()
+    served = engine.search_df(PROMPT_TEXT, k=5).collect()  # bounded: k rows
+    engine.close()
     scores = [r.score for r in served]
     return spark.createDataFrame(
         [

@@ -46,7 +46,7 @@ from pyspark.sql import functions as F
 
 from ..artifacts import load_or_build
 from ..functions.train import ORACLE_SF_DIR, load_sorted_vectors
-from ..functions.vector import neo4j_score, vector_lit
+from ..functions.vector import neo4j_score
 from ..registry import register
 from ..sources.tables import load_table, table_path
 from .ann import (
@@ -234,10 +234,9 @@ def _pruned_node_topk(
     """Shared scan half of the graph-ANN family: prune to the probe
     cells, exact-score, top-k.  Identical for flat NSW and layered HNSW
     — the families differ only in how the probe list is navigated."""
-    qcol = vector_lit(query_vec)
     return (
         index.where(F.col("node_id").isin(probes))
-        .withColumn("score", F.round(neo4j_score("embedding", qcol), SCORE_DECIMALS))
+        .withColumn("score", F.round(neo4j_score("embedding", query_vec), SCORE_DECIMALS))
         .orderBy(F.desc("score"), F.asc("vec_id"))
         .limit(k)
         .select("vec_id", F.col("node_id").cast("int").alias("node_id"), "score")

@@ -45,7 +45,7 @@ from ..functions.train import (
     sql_float,
     sql_floats,
 )
-from ..functions.vector import l2_normalize, matrix_lit, neo4j_score
+from ..functions.vector import l2_normalize, matrix_lit, neo4j_score, vector_lit
 from ..registry import register
 from ..sources.tables import load_table, table_path
 from .ann import (
@@ -192,7 +192,7 @@ def ivfpq_topk(
     probes = nearest_centroids(query_vec, cents, nprobe)
     lut_lit = matrix_lit(_adc_lut(books, query_vec))
     offs = _cell_offsets(query_vec, cents)
-    off_lit = F.array(*[F.lit(float(o)) for o in offs])
+    off_lit = vector_lit(offs)
     idx = F.sequence(F.lit(0), F.lit(M_SUBSPACES - 1))
     approx = F.round(
         F.aggregate(
@@ -210,10 +210,9 @@ def ivfpq_topk(
         .limit(rerank)
         .select("vec_id", "centroid_id")
     )
-    qcol = F.array(*[F.lit(float(x)) for x in query_vec])
     return (
         embeddings.join(F.broadcast(pool), "vec_id")
-        .withColumn("score", F.round(neo4j_score("embedding", qcol), SCORE_DECIMALS))
+        .withColumn("score", F.round(neo4j_score("embedding", query_vec), SCORE_DECIMALS))
         .orderBy(F.desc("score"), F.asc("vec_id"))
         .limit(k)
         .select("vec_id", F.col("centroid_id").cast("int").alias("centroid_id"), "score")

@@ -41,7 +41,7 @@ from ..functions.train import (
     sql_float,
     sql_floats,
 )
-from ..functions.vector import dim_check, neo4j_score, vector_lit
+from ..functions.vector import dim_check, neo4j_score
 from ..registry import register
 from ..sources.tables import load_table, spread, table_path
 from .ann import (
@@ -177,12 +177,12 @@ def q_semantic_search_dim1536(spark: SparkSession, sf_dir: str) -> DataFrame:
     # passes through spread() untouched
     docs = spread(load_table(spark, sf_dir, "documents"))
     embed = hash_embedder(OPENAI_EMBED_DIM)
-    qcol = vector_lit([float(v) for v in _embed_1536(PROMPT_1536)])
+    qvec = _embed_1536(PROMPT_1536)
     emb = docs.select("doc_id", embed(F.col("text")).alias("embedding"))
     return (
         emb.select(
             "doc_id",
-            F.round(neo4j_score("embedding", qcol), SCORE_DECIMALS).alias("score"),
+            F.round(neo4j_score("embedding", qvec), SCORE_DECIMALS).alias("score"),
             dim_check("embedding", OPENAI_EMBED_DIM).alias("dim_ok"),
         )
         .orderBy(F.desc("score"), F.asc("doc_id"))
@@ -244,10 +244,9 @@ LIMIT {K}
 
 
 def _pruned_topk(layout_df: DataFrame, probes: list[int], qvec) -> DataFrame:
-    qcol = vector_lit(qvec)
     return (
         layout_df.where(F.col("centroid_id").isin(probes))
-        .withColumn("score", F.round(neo4j_score("embedding", qcol), SCORE_DECIMALS))
+        .withColumn("score", F.round(neo4j_score("embedding", qvec), SCORE_DECIMALS))
         .orderBy(F.desc("score"), F.asc("vec_id"))
         .limit(K)
         .select("vec_id", F.col("centroid_id").cast("int").alias("centroid_id"), "score")
@@ -481,13 +480,13 @@ def q_ann_ivf_dim1536(spark: SparkSession, sf_dir: str) -> DataFrame:
     drift anywhere in the 1536-dim build shifts an id, a score, or a
     cell."""
     cents, probes, _expected = _ivf1536_model()
-    qcol = vector_lit([float(v) for v in _embed_1536(PROMPT_1536)])
+    qvec = _embed_1536(PROMPT_1536)
     assigned = _load_or_build_1536_layout(spark, sf_dir, cents, "centroid_id")
     return (
         assigned.where(F.col("centroid_id").isin(*probes))
         .select(
             "doc_id",
-            F.round(neo4j_score("embedding", qcol), SCORE_DECIMALS).alias("score"),
+            F.round(neo4j_score("embedding", qvec), SCORE_DECIMALS).alias("score"),
             "centroid_id",
         )
         .orderBy(F.desc("score"), F.asc("doc_id"))
@@ -560,13 +559,13 @@ def q_ann_hnsw_dim1536(spark: SparkSession, sf_dir: str) -> DataFrame:
     CLUSTERED synthetic 1536-dim node set, where real-corpus structure
     exists and the descent must find it."""
     cents, probes, _expected = _hnsw1536_model()
-    qcol = vector_lit([float(v) for v in _embed_1536(PROMPT_1536)])
+    qvec = _embed_1536(PROMPT_1536)
     assigned = _load_or_build_1536_layout(spark, sf_dir, cents, "node_id")
     return (
         assigned.where(F.col("node_id").isin(*probes))
         .select(
             "doc_id",
-            F.round(neo4j_score("embedding", qcol), SCORE_DECIMALS).alias("score"),
+            F.round(neo4j_score("embedding", qvec), SCORE_DECIMALS).alias("score"),
             "node_id",
         )
         .orderBy(F.desc("score"), F.asc("doc_id"))

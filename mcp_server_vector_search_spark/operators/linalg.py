@@ -43,6 +43,7 @@ import math
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.vector import vector_lit
 from ..registry import register
 from ..sources.tables import EMBEDDING_DIM, load_table
 
@@ -57,7 +58,7 @@ OUT_SCALE = 1000000000.0  # component output quantum (1e-9)
 def _row_dot_micro(v: list[float]) -> Column:
     """Exact long micro dot-product against the literal iterate:
     floor((x_d * v_d) * 1e9) per element, order-free integer sum."""
-    lit_v = F.array(*[F.lit(float(x)) for x in v])
+    lit_v = vector_lit(v)
     terms = F.zip_with(
         "emb", lit_v, lambda a, b: F.floor((a * b) * F.lit(DOT_SCALE))
     )

@@ -30,7 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.vector import neo4j_score
+from ..functions.vector import neo4j_score, vector_lit
 from ..registry import register
 from ..sources.tables import load_table
 from .pq import DIST_DECIMALS, K, RERANK_POOL, cached_query_vector
@@ -48,7 +48,7 @@ def _prefix_cosine(vec_col: F.Column, q_prefix: list[float]) -> F.Column:
     query prefix — sequential dot/norm sums matching DuckDB's
     ``list_dot_product`` evaluation order."""
     sub = F.slice(vec_col, 1, PREFIX_DIM)
-    q = F.array(*[F.lit(float(x)) for x in q_prefix])
+    q = vector_lit(q_prefix)
     dot = F.aggregate(
         F.zip_with(sub, q, lambda a, b: a * b), F.lit(0.0), lambda acc, v: acc + v
     )
@@ -101,10 +101,9 @@ def q_ann_matryoshka_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .limit(RERANK_POOL)
         .select("vec_id")
     )
-    qcol = F.array(*[F.lit(float(x)) for x in qvec])
     return (
         emb.join(F.broadcast(pool), "vec_id")
-        .withColumn("score", F.round(neo4j_score("embedding", qcol), SCORE_DECIMALS))
+        .withColumn("score", F.round(neo4j_score("embedding", qvec), SCORE_DECIMALS))
         .orderBy(F.desc("score"), F.asc("vec_id"))
         .limit(K)
         .select("vec_id", "score")

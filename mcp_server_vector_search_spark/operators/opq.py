@@ -221,10 +221,9 @@ def opq_adc_topk(
         .limit(rerank)
         .select("vec_id")
     )
-    qcol = F.array(*[F.lit(float(x)) for x in query_vec])
     return (
         embeddings.join(F.broadcast(pool), "vec_id")
-        .withColumn("score", F.round(neo4j_score("embedding", qcol), SCORE_DECIMALS))
+        .withColumn("score", F.round(neo4j_score("embedding", query_vec), SCORE_DECIMALS))
         .orderBy(F.desc("score"), F.asc("vec_id"))
         .limit(k)
         .select("vec_id", "score")

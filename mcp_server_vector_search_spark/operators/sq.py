@@ -156,10 +156,9 @@ def sq8_adc_topk(
         .limit(rerank)
         .select("vec_id")
     )
-    qcol = F.array(*[F.lit(float(x)) for x in query_vec])
     return (
         embeddings.join(F.broadcast(pool), "vec_id")
-        .withColumn("score", F.round(neo4j_score("embedding", qcol), SCORE_DECIMALS))
+        .withColumn("score", F.round(neo4j_score("embedding", query_vec), SCORE_DECIMALS))
         .orderBy(F.desc("score"), F.asc("vec_id"))
         .limit(k)
         .select("vec_id", "score")
@@ -306,10 +305,9 @@ def q_ann_bq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .limit(RERANK_POOL)
         .select("vec_id")
     )
-    qcol = F.array(*[F.lit(float(x)) for x in qvec])
     return (
         emb.join(F.broadcast(pool), "vec_id")
-        .withColumn("score", F.round(neo4j_score("embedding", qcol), SCORE_DECIMALS))
+        .withColumn("score", F.round(neo4j_score("embedding", qvec), SCORE_DECIMALS))
         .orderBy(F.desc("score"), F.asc("vec_id"))
         .limit(K)
         .select("vec_id", "score")

@@ -45,7 +45,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.train import ORACLE_SF_DIR, load_sorted_vectors, sql_floats
-from ..functions.vector import neo4j_score, vector_lit
+from ..functions.vector import neo4j_score
 from ..registry import register
 from ..sources.tables import load_table
 from .ann import (
@@ -88,10 +88,9 @@ def filtered_ivf_topk(
     the parquet scan, so BOTH conditions are pushed to the reader —
     filter-during-search semantics, never post-filtering."""
     probes = nearest_centroids(query_vec, centroids, nprobe)
-    qcol = vector_lit(query_vec)
     return (
         indexed.where(F.col("centroid_id").isin(probes) & predicate)
-        .withColumn("score", F.round(neo4j_score("embedding", qcol), SCORE_DECIMALS))
+        .withColumn("score", F.round(neo4j_score("embedding", query_vec), SCORE_DECIMALS))
         .orderBy(F.desc("score"), F.asc("vec_id"))
         .limit(k)
         .select("vec_id", "centroid_id", "label", "score")
@@ -178,10 +177,9 @@ def adaptive_filtered_topk(
             break
         cur = min(2 * cur, n_cells)
         rounds += 1
-    qcol = vector_lit(query_vec)
     out = (
         matched.withColumn(
-            "score", F.round(neo4j_score("embedding", qcol), SCORE_DECIMALS)
+            "score", F.round(neo4j_score("embedding", query_vec), SCORE_DECIMALS)
         )
         .orderBy(F.desc("score"), F.asc("vec_id"))
         .limit(k)
@@ -318,10 +316,9 @@ def planned_filtered_topk(
         if cur >= n_cells or rungs > ADAPTIVE_MAX_ROUNDS or matched.count() >= k:
             break
         cur = min(2 * cur, n_cells)
-    qcol = vector_lit(query_vec)
     out = (
         matched.withColumn(
-            "score", F.round(neo4j_score("embedding", qcol), SCORE_DECIMALS)
+            "score", F.round(neo4j_score("embedding", query_vec), SCORE_DECIMALS)
         )
         .orderBy(F.desc("score"), F.asc("vec_id"))
         .limit(k)
@@ -446,11 +443,10 @@ def q_ann_delete_tombstone(spark: SparkSession, sf_dir: str) -> DataFrame:
     ]
     tombstones = emb.where(F.expr(TOMBSTONE_SQL)).select("vec_id")
     probes = nearest_centroids(qvec, centroids, NPROBE)
-    qcol = vector_lit(qvec)
     return (
         indexed.where(F.col("centroid_id").isin(probes))
         .join(F.broadcast(tombstones), "vec_id", "left_anti")
-        .withColumn("score", F.round(neo4j_score("embedding", qcol), SCORE_DECIMALS))
+        .withColumn("score", F.round(neo4j_score("embedding", qvec), SCORE_DECIMALS))
         .orderBy(F.desc("score"), F.asc("vec_id"))
         .limit(K)
         .select("vec_id", "centroid_id", "score")
@@ -563,9 +559,8 @@ def q_topk_mmr_diverse(spark: SparkSession, sf_dir: str) -> DataFrame:
         [float(v) for v in emb.where(F.col("vec_id") == QUERY_VEC_ID).first()["embedding"]],
         dtype=np.float64,
     )
-    qcol = vector_lit([float(v) for v in qvec])
     pool_rows = (
-        emb.withColumn("score", F.round(neo4j_score("embedding", qcol), SCORE_DECIMALS))
+        emb.withColumn("score", F.round(neo4j_score("embedding", qvec), SCORE_DECIMALS))
         .orderBy(F.desc("score"), F.asc("vec_id"))
         .limit(MMR_POOL)
         .select("vec_id", "embedding")
@@ -579,7 +574,7 @@ def q_topk_mmr_diverse(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return (
         emb.join(F.broadcast(ranks), "vec_id")
-        .withColumn("score", F.round(neo4j_score("embedding", qcol), SCORE_DECIMALS))
+        .withColumn("score", F.round(neo4j_score("embedding", qvec), SCORE_DECIMALS))
         .select("mmr_rank", "vec_id", "score")
         .orderBy("mmr_rank")
     )
@@ -640,7 +635,7 @@ def q_maxsim_multivector(spark: SparkSession, sf_dir: str) -> DataFrame:
     sims = [
         F.max(
             F.round(
-                neo4j_score("embedding", vector_lit(qrows[qid])), SCORE_DECIMALS
+                neo4j_score("embedding", qrows[qid]), SCORE_DECIMALS
             )
         ).alias(f"s{i}")
         for i, qid in enumerate(MAXSIM_QUERY_IDS)
@@ -1079,17 +1074,16 @@ def q_ann_recall_certificate(spark: SparkSession, sf_dir: str) -> DataFrame:
         float(v)
         for v in emb.where(F.col("vec_id") == QUERY_VEC_ID).first()["embedding"]
     ]
-    qcol = vector_lit(qvec)
     probes = nearest_centroids(qvec, centroids, NPROBE)
     exact = (
-        emb.withColumn("score", F.round(neo4j_score("embedding", qcol), SCORE_DECIMALS))
+        emb.withColumn("score", F.round(neo4j_score("embedding", qvec), SCORE_DECIMALS))
         .orderBy(F.desc("score"), F.asc("vec_id"))
         .limit(K)
         .select("vec_id")
     )
     approx = (
         indexed.where(F.col("centroid_id").isin(probes))
-        .withColumn("score", F.round(neo4j_score("embedding", qcol), SCORE_DECIMALS))
+        .withColumn("score", F.round(neo4j_score("embedding", qvec), SCORE_DECIMALS))
         .orderBy(F.desc("score"), F.asc("vec_id"))
         .limit(K)
         .select("vec_id")

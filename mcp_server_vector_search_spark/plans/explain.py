@@ -28,10 +28,3 @@ def formatted_plan(df: DataFrame) -> str:
 def executed_plan(df: DataFrame) -> str:
     """The executed physical plan tree (post-AQE top level)."""
     return df._jdf.queryExecution().executedPlan().toString()
-
-
-def assert_in_plan(df: DataFrame, *needles: str) -> None:
-    plan = formatted_plan(df)
-    missing = [n for n in needles if n not in plan]
-    if missing:
-        raise AssertionError(f"plan is missing {missing}:\n{plan}")

@@ -243,8 +243,13 @@ def main(argv: Optional[list] = None) -> None:
 
     args = parse_args(argv)
     spark = get_spark(app_name="mcp-serving", cpus=args.cpus)
-    corpus = corpus_from_documents(load_table(spark, args.corpus_dir, "documents"))
-    serve_stdio(SparkVectorSearch(corpus))
+    search = SparkVectorSearch(
+        corpus_from_documents(load_table(spark, args.corpus_dir, "documents"))
+    )
+    try:
+        serve_stdio(search)
+    finally:
+        search.close()
 
 
 if __name__ == "__main__":

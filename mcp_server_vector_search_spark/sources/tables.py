@@ -84,30 +84,3 @@ def register_views(spark: SparkSession, sf_dir: str) -> None:
     """Register every table as a temp view so SQL-text operators can run."""
     for name in TABLES:
         load_table(spark, sf_dir, name).createOrReplaceTempView(name)
-
-
-def validated_embeddings(
-    spark: SparkSession, sf_dir: str, dim: int = EMBEDDING_DIM
-) -> DataFrame:
-    """Embeddings scan with the dimension invariant enforced.
-
-    Mirrors the reference's client-side dim assertion
-    (server.py:55-56 and the re-check at server.py:80-84): a vector of
-    the wrong length is a hard error, not a silent null.  Expressed as a
-    codegen'd filter + ``raise_error`` so the check runs distributed,
-    not on the driver.
-    """
-    df = load_table(spark, sf_dir, "embeddings")
-    bad = F.size("embedding") != dim
-    return df.withColumn(
-        "embedding",
-        F.when(
-            bad,
-            F.raise_error(
-                F.concat(
-                    F.lit(f"embedding dimension mismatch: expected {dim}, got "),
-                    F.size("embedding").cast("string"),
-                )
-            ).cast(df.schema["embedding"].dataType),
-        ).otherwise(F.col("embedding")),
-    )

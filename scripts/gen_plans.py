@@ -708,7 +708,7 @@ STREAMING_PLAN = {"streaming_tumbling_counts", "streaming_session_window"}
 
 # The warm-serve showcase: the registered query returns a
 # localCheckpoint (its plan is a bare checkpoint scan), so the evidence
-# plan is the facade's search_df over the persisted corpus directly.
+# plan is the facade's search_df over its materialized corpus directly.
 ENGINE_PLAN = {"engine_search_warm_cache"}
 
 
@@ -721,13 +721,12 @@ def engine_warm_plan(spark, name: str) -> str:
     from mcp_server_vector_search_spark.operators.ann import PROMPT_TEXT
     from mcp_server_vector_search_spark.sources.tables import load_table
 
-    corpus = corpus_from_documents(load_table(spark, SF, "documents")).persist()
+    engine = SparkVectorSearch(corpus_from_documents(load_table(spark, SF, "documents")))
     try:
-        corpus.count()  # fill the cache so the scan explains as InMemory
-        engine = SparkVectorSearch(corpus)
         return formatted_plan(engine.search_df(PROMPT_TEXT))
     finally:
-        corpus.unpersist()
+        engine.close()
+
 
 HEADER = """# PLANS — physical-plan evidence for the scale design
 

@@ -41,6 +41,38 @@ def test_search_k_bounds_results(search):
     assert len(parse_results(search.search("vector", k=3))) == 3
 
 
+def test_search_scans_cached_corpus(search):
+    """The corpus is materialized at construction: a request's plan
+    reads cached rows, with no shuffle and no embedding UDF above the
+    cache (the part below ``InMemoryRelation`` ran once, when built)."""
+    from mcp_server_vector_search_spark.plans.explain import executed_plan
+
+    plan = executed_plan(search.search_df("spark window query join", k=10))
+    per_request = plan.split("InMemoryRelation")[0]
+    assert "InMemoryTableScan" in per_request
+    assert "Exchange" not in per_request
+    assert "ArrowEvalPython" not in per_request
+
+
+def test_search_runs_one_job(spark_module, search):
+    sc = spark_module.sparkContext
+    group = "test_engine.one_search"
+    sc.setJobGroup(group, "one search")
+    try:
+        search.search("spark window query join", k=10)
+    finally:
+        sc._jsc.clearJobGroup()
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+
+
+def test_close_releases_corpus(spark_module):
+    docs = load_table(spark_module, SF_SMOKE, "documents")
+    engine = SparkVectorSearch(corpus_from_documents(docs).limit(7))
+    assert engine.corpus.is_cached
+    engine.close()
+    assert not engine.corpus.is_cached
+
+
 def test_dim_mismatch_raises(spark_module):
     """server.py:55-56 parity: wrong-dimension embedding is a hard error."""
     from mcp_server_vector_search_spark.functions.embedder import hash_embedder

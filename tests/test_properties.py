@@ -127,6 +127,54 @@ def test_matrix_lit_bit_exact_roundtrip(spark, rows):
         assert list(grow) == [float(v) for v in row]
 
 
+@settings(max_examples=5, deadline=None, suppress_health_check=[HealthCheck.too_slow])
+@given(
+    st.lists(vec, min_size=1, max_size=16),
+    vec,
+    st.booleans(),
+)
+def test_literal_score_matches_column_score(spark, rows, q, zero_query):
+    """``neo4j_score(name, <floats>)`` (one SQL parse) scores every row
+    exactly like the column-vs-column form against a broadcast 1-row
+    ``__query_vec``: zero-norm rows and a zero query give null, and a
+    scaled copy of a row ties with it at 6 decimals in both forms."""
+    from mcp_server_vector_search_spark.operators.topk import SCORE_DECIMALS
+
+    q = [0.0] * DIM if zero_query else [float(v) for v in q]
+    corpus = rows + [[0.0] * DIM] + [[2.0 * v for v in rows[0]]]
+    df = spark.createDataFrame(
+        [(i, list(map(float, v))) for i, v in enumerate(corpus)],
+        "id int, embedding array<float>",
+    )
+    qdf = spark.createDataFrame([(q,)], "__query_vec array<double>")
+    lit_rows = df.select(
+        "id", F.round(neo4j_score("embedding", q), SCORE_DECIMALS).alias("s")
+    )
+    col_rows = df.crossJoin(F.broadcast(qdf)).select(
+        "id", F.round(neo4j_score("embedding", "__query_vec"), SCORE_DECIMALS).alias("s")
+    )
+    order = [F.desc("s"), F.asc("id")]
+    assert lit_rows.orderBy(*order).collect() == col_rows.orderBy(*order).collect()
+    assert lit_rows.where(F.col("id") == len(rows)).first()["s"] is None
+
+
+def test_literal_score_builds_no_per_element_literals(spark, monkeypatch):
+    """Plan-cost guard: a literal query vector is one SQL parse, never
+    a py4j ``F.lit`` per element or an ``F.array`` of them."""
+    from mcp_server_vector_search_spark.functions.vector import vector_lit
+
+    calls = []
+    for name in ("lit", "array"):
+        real = getattr(F, name)
+        monkeypatch.setattr(
+            F, name, lambda *a, _n=name, _f=real, **k: calls.append(_n) or _f(*a, **k)
+        )
+    q = [float(i) / 7 for i in range(64)]
+    neo4j_score("embedding", q)
+    vector_lit(q)
+    assert calls == []
+
+
 def test_kmeans_deterministic_and_partitions_sample():
     """Same (input, seed) → identical centers; different seed → a valid
     codebook of the same shape."""
@@ -139,6 +187,28 @@ def test_kmeans_deterministic_and_partitions_sample():
     assert np.array_equal(c1, c2)
     c3 = kmeans(x, 4, 5, seed=7)
     assert c3.shape == c1.shape
+
+
+def test_kmeans_matches_broadcast_reference():
+    """The per-center distance loop gives bit-identical centers to the
+    n x k x d broadcast form it replaced (same per-row sums)."""
+    from mcp_server_vector_search_spark.functions.train import kmeans
+
+    def broadcast_kmeans(x, k, iters, seed):
+        rng = np.random.default_rng(seed)
+        centers = x[rng.choice(len(x), k, replace=False)].copy()
+        for _ in range(iters):
+            d = ((x[:, None, :] - centers[None, :, :]) ** 2).sum(axis=2)
+            assign = d.argmin(axis=1)
+            for c in range(k):
+                if (assign == c).any():
+                    centers[c] = x[assign == c].mean(axis=0)
+        return centers
+
+    rng = np.random.default_rng(1)
+    for shape, k in (((300, 1536), 16), ((500, 8), 64)):
+        x = rng.standard_normal(shape)
+        assert np.array_equal(kmeans(x, k, 4, seed=3), broadcast_kmeans(x, k, 4, seed=3))
 
 
 @settings(max_examples=5, deadline=None, suppress_health_check=[HealthCheck.too_slow])
