@@ -41,6 +41,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..artifacts import load_or_build
+from ..cache import scratch_dir
 from ..functions.embedder import DEFAULT_DIM, _token_vector
 from ..functions.train import ORACLE_SF_DIR, kmeans, load_sorted_vectors, sql_floats
 from ..functions.vector import (
@@ -791,8 +792,6 @@ def q_ann_ivf_upsert_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     read-back aggregate must match it exactly, which certifies the
     write path (no lost rows, no stale duplicates, no missed cells).
     """
-    import tempfile
-
     emb = load_table(spark, sf_dir, "embeddings")
     cents = train_centroids(_sample_vectors(emb, TRAIN_SAMPLE))
     cut = emb.agg(
@@ -802,7 +801,7 @@ def q_ann_ivf_upsert_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = emb.select(
         "vec_id", "embedding", assignment_col(cents).alias("centroid_id")
     )
-    layout = tempfile.mkdtemp(prefix="ivf_upsert_")
+    layout = scratch_dir("ivf_upsert_")
     base.repartition("centroid_id").write.mode("overwrite").partitionBy(
         "centroid_id"
     ).parquet(layout)
@@ -828,21 +827,14 @@ def q_ann_ivf_upsert_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("vec_id", "embedding", "centroid_id").unionAll(new_assigned)
     replace_partitions(layout, affected, replacement)
 
-    out = (
+    return (
         spark.read.parquet(layout)
         .groupBy(F.col("centroid_id").cast("int").alias("centroid_id"))
         .agg(
             F.count(F.lit(1)).alias("n_vectors"),
             F.sum((F.col("vec_id") >= cut).cast("long")).alias("n_updated"),
         )
-        # materialize before deleting the scratch layout (the returned
-        # plan must not reference the removed files)
-        .localCheckpoint(eager=True)
     )
-    import shutil
-
-    shutil.rmtree(layout, ignore_errors=True)
-    return out
 
 
 # ---------------------------------------------------------------------------

@@ -38,6 +38,7 @@ from __future__ import annotations
 import hashlib
 import heapq
 import math
+import shutil
 from typing import Sequence
 
 import numpy as np
@@ -45,6 +46,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..artifacts import load_or_build
+from ..cache import scratch_dir
 from ..functions.train import ORACLE_SF_DIR, load_sorted_vectors
 from ..functions.vector import neo4j_score
 from ..registry import register
@@ -725,9 +727,6 @@ def q_ann_hnsw_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     scratch over the full node set, so any write-path defect (stale
     files in a donor cell, lost movers, duplicated rows) breaks the
     value hash."""
-    import shutil
-    import tempfile
-
     from .ann import replace_partitions
 
     path, meta = _graph_entry(spark, sf_dir)
@@ -751,8 +750,7 @@ def q_ann_hnsw_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (same nodes, same assignment) — the shared cache must not be
     # mutated by a query run, and cloning files costs IO proportional
     # to the index, never a recompute of the assignment pass
-    layout = tempfile.mkdtemp(prefix="hnsw_upsert_")
-    shutil.rmtree(layout)
+    layout = scratch_dir("hnsw_upsert_") + "/layout"
     shutil.copytree(path, layout)
 
     stored = spark.read.parquet(layout)
@@ -785,11 +783,9 @@ def q_ann_hnsw_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         replace_partitions(layout, affected, replacement, key="node_id")
 
     probes = hnsw_search(all_nodes, hnsw, qvec)
-    out = _pruned_node_topk(spark.read.parquet(layout), probes, qvec).localCheckpoint(
+    return _pruned_node_topk(spark.read.parquet(layout), probes, qvec).localCheckpoint(
         eager=True
     )
-    shutil.rmtree(layout, ignore_errors=True)
-    return out
 
 
 # ---------------------------------------------------------------------------

@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..artifacts import load_or_build
+from ..cache import scratch_dir
 from ..functions.embedder import OPENAI_EMBED_DIM, embed_text_driver, hash_embedder
 from ..functions.train import (
     ORACLE_SF_DIR,
@@ -270,9 +271,6 @@ def q_ann_lifecycle_churn(spark: SparkSession, sf_dir: str) -> DataFrame:
     The oracle recomputes the effective state declaratively, so a lost
     row, resurrected tombstone, or stale duplicate in ANY step shifts
     the result hash."""
-    import shutil
-    import tempfile
-
     emb = load_table(spark, sf_dir, "embeddings")
     cents = train_centroids(_sample_vectors(emb, TRAIN_SAMPLE))
     cut = emb.agg(
@@ -288,7 +286,7 @@ def q_ann_lifecycle_churn(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = emb.select(
         "vec_id", "embedding", assignment_col(cents).alias("centroid_id")
     )
-    layout = tempfile.mkdtemp(prefix="ivf_churn_")
+    layout = scratch_dir("ivf_churn_")
     base.repartition("centroid_id").write.mode("overwrite").partitionBy(
         "centroid_id"
     ).parquet(layout)
@@ -369,7 +367,6 @@ def q_ann_lifecycle_churn(spark: SparkSession, sf_dir: str) -> DataFrame:
     assert [tuple(r) for r in got] == [tuple(r) for r in expected], (
         "post-churn top-k diverged from the from-scratch build"
     )
-    shutil.rmtree(layout, ignore_errors=True)
     return churned
 
 
@@ -381,23 +378,37 @@ def q_ann_lifecycle_churn(spark: SparkSession, sf_dir: str) -> DataFrame:
 IVF1536_NPROBE = 8
 
 
-@functools.cache
-def _ivf1536_model() -> tuple[tuple, list[int], list[tuple[int, float, int]]]:
-    """Numpy replication of the whole 1536-dim IVF path in
-    numpy: corpus embed (the certified float32 mirror), unit-sphere
-    k-means, GEMM assignment (same round-then-argmax), query-probe cell
-    ranking, exact re-rank inside the probe set.  Returns (centroids,
-    probe cells, expected top-K rows)."""
-    _ids, _vecs, cents, _assign = _corpus_1536()
+def _ivf1536_probes(cents) -> list[int]:
+    """Flat cell ranking: the IVF1536_NPROBE cells whose centroids are
+    nearest the prompt (rounded cosine, ties to the lower cell id)."""
     C = np.asarray(cents, dtype=np.float64)
-    qvec = _embed_1536(PROMPT_1536)
-    q64 = np.asarray(qvec, dtype=np.float64)
+    q64 = np.asarray(_embed_1536(PROMPT_1536), dtype=np.float64)
     qsims = np.round(
         (C @ q64) / max(float(np.linalg.norm(q64)), 1e-12), ASSIGN_DECIMALS
     )
-    probes = sorted(range(IVF1536_CELLS), key=lambda c: (-qsims[c], c))[
-        :IVF1536_NPROBE
-    ]
+    return sorted(range(len(C)), key=lambda c: (-qsims[c], c))[:IVF1536_NPROBE]
+
+
+def _hnsw1536_probes(cents) -> list[int]:
+    """Layered-HNSW probe selection over the routing nodes: geometric
+    level hierarchy, greedy upper-layer descent, layer-0 beam
+    (graph_ann.build_hnsw / hnsw_search — the code the dim-64 row
+    certifies)."""
+    from .graph_ann import build_hnsw, hnsw_search
+
+    qvec = [float(v) for v in _embed_1536(PROMPT_1536)]
+    return hnsw_search(cents, build_hnsw(cents), qvec)
+
+
+@functools.cache
+def _ivf1536_model() -> tuple[tuple, list[int], list[tuple[int, float, int]]]:
+    """Oracle-time numpy replication of the whole 1536-dim IVF path:
+    corpus embed (the certified float32 mirror), unit-sphere k-means,
+    GEMM assignment (same round-then-argmax), query-probe cell ranking,
+    exact re-rank inside the probe set.  Returns (centroids, probe
+    cells, expected top-K rows)."""
+    cents = _corpus_1536()[2]
+    probes = _ivf1536_probes(cents)
     return cents, probes, _probe_topk_1536(probes)
 
 
@@ -416,10 +427,13 @@ FROM (VALUES
 
 
 def _load_or_build_1536_layout(
-    spark: SparkSession, sf_dir: str, cents, cell_col: str
-) -> DataFrame:
-    """Build-once / query-many layout at the reference dimension: the
-    1536-dim corpus embed + GEMM cell assignment materialize as a
+    spark: SparkSession, sf_dir: str, cell_col: str
+) -> tuple[DataFrame, list[list[float]]]:
+    """Build-once / query-many layout at the reference dimension, and
+    the 64-cell quantizer it was assigned with.  The quantizer is
+    trained on ``sf_dir``'s own first ``TRAIN_SAMPLE`` documents by
+    doc_id, embedded with the driver mirror (``_embed_1536``); the
+    1536-dim corpus embed + GEMM cell assignment then materialize as a
     cell-partitioned parquet artifact on first use, exactly the
     ``load_or_build_ivf_index`` discipline the dim-64 family already
     follows (and the reference's own index DDL vs per-query
@@ -434,33 +448,39 @@ def _load_or_build_1536_layout(
     ONE artifact serves both navigation styles (``cell_col`` names only
     the caller's cell-column alias): the IVF and HNSW rows share the
     quantizer, so their layouts are byte-identical — the flat-probe vs
-    graph-descent difference is entirely in WHICH cells they read."""
-    import hashlib
-
+    graph-descent difference is entirely in WHICH cells they read.
+    The centroids ride in the entry's meta, so the query path never
+    reads another corpus's quantizer."""
     from .ann import assignment_gemm
 
     def build(out: str) -> dict:
-        docs = spread(load_table(spark, sf_dir, "documents"))
+        docs = load_table(spark, sf_dir, "documents")
+        sample = (
+            docs.select("doc_id", "text").orderBy("doc_id").limit(TRAIN_SAMPLE).collect()
+        )  # bounded: TRAIN_SAMPLE rows
+        cents = train_centroids(
+            np.stack([_embed_1536(r["text"]) for r in sample]), IVF1536_CELLS
+        )
         embed = hash_embedder(OPENAI_EMBED_DIM)
-        emb = docs.select("doc_id", embed(F.col("text")).alias("embedding"))
+        emb = spread(docs).select("doc_id", embed(F.col("text")).alias("embedding"))
         assigned = emb.withColumn("cell", assignment_gemm(cents))
         # repartition on the cell aligns writer tasks with partitions
         # (write_ivf_index's small-files discipline)
         assigned.repartition("cell").write.partitionBy("cell").parquet(
             out
         )
-        return {}
+        return {"cents": cents}
 
-    # The centroid VALUES are part of the entry's identity: a caller with
-    # a different quantizer (or a change to the assignment math — bump
-    # the version token for that) must miss and rebuild, not read a
-    # layout whose cell ids were assigned against other centroids.
-    cents_tag = hashlib.md5(np.asarray(cents, dtype=np.float32).tobytes()).hexdigest()
-    params = {"cells": IVF1536_CELLS, "cents": cents_tag, "v": 1}
-    path, _ = load_or_build("idx1536", params, [table_path(sf_dir, "documents")], build)
-    return spark.read.parquet(path).select(
+    # bump the version token on any change to the training sample or
+    # the assignment math: the key covers params and the source files
+    params = {"cells": IVF1536_CELLS, "sample": TRAIN_SAMPLE, "v": 2}
+    path, meta = load_or_build(
+        "idx1536", params, [table_path(sf_dir, "documents")], build
+    )
+    layout = spark.read.parquet(path).select(
         "doc_id", "embedding", F.col("cell").alias(cell_col)
     )
+    return layout, meta["cents"]
 
 
 @register("ann_ivf_dim1536", oracle=_ivf1536_oracle)
@@ -479,11 +499,10 @@ def q_ann_ivf_dim1536(spark: SparkSession, sf_dir: str) -> DataFrame:
     same unit-sphere k-means, same round-then-argmax assignment), so a
     drift anywhere in the 1536-dim build shifts an id, a score, or a
     cell."""
-    cents, probes, _expected = _ivf1536_model()
+    assigned, cents = _load_or_build_1536_layout(spark, sf_dir, "centroid_id")
     qvec = _embed_1536(PROMPT_1536)
-    assigned = _load_or_build_1536_layout(spark, sf_dir, cents, "centroid_id")
     return (
-        assigned.where(F.col("centroid_id").isin(*probes))
+        assigned.where(F.col("centroid_id").isin(*_ivf1536_probes(cents)))
         .select(
             "doc_id",
             F.round(neo4j_score("embedding", qvec), SCORE_DECIMALS).alias("score"),
@@ -508,17 +527,12 @@ def q_ann_ivf_dim1536(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @functools.cache
 def _hnsw1536_model() -> tuple[tuple, list[int], list[tuple[int, float, int]]]:
-    """Layered-HNSW probe selection over the 1536-dim routing nodes:
-    geometric level hierarchy, greedy upper-layer descent, layer-0 beam
-    (graph_ann.build_hnsw / hnsw_search — the code the dim-64 row
-    certifies), then the family's shared exact re-rank inside the probe
-    cells.  Deterministic end to end, so the oracle is a complete
-    oracle-time numpy replication."""
-    _ids, _vecs, cents, _assign = _corpus_1536()
-    from .graph_ann import build_hnsw, hnsw_search
-
-    qvec = [float(v) for v in _embed_1536(PROMPT_1536)]
-    probes = hnsw_search(cents, build_hnsw(cents), qvec)
+    """Oracle-time numpy replication of the 1536-dim HNSW path: the
+    descent over the oracle corpus's routing nodes, then the family's
+    shared exact re-rank inside the probe cells.  Returns (centroids,
+    probe cells, expected top-K rows)."""
+    cents = _corpus_1536()[2]
+    probes = _hnsw1536_probes(cents)
     return cents, probes, _probe_topk_1536(probes)
 
 
@@ -558,11 +572,10 @@ def q_ann_hnsw_dim1536(spark: SparkSession, sf_dir: str) -> DataFrame:
     cell) at its measured floor and (b) >=0.95 planted recall on a
     CLUSTERED synthetic 1536-dim node set, where real-corpus structure
     exists and the descent must find it."""
-    cents, probes, _expected = _hnsw1536_model()
+    assigned, cents = _load_or_build_1536_layout(spark, sf_dir, "node_id")
     qvec = _embed_1536(PROMPT_1536)
-    assigned = _load_or_build_1536_layout(spark, sf_dir, cents, "node_id")
     return (
-        assigned.where(F.col("node_id").isin(*probes))
+        assigned.where(F.col("node_id").isin(*_hnsw1536_probes(cents)))
         .select(
             "doc_id",
             F.round(neo4j_score("embedding", qvec), SCORE_DECIMALS).alias("score"),

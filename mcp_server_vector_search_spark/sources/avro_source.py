@@ -265,18 +265,17 @@ def source_avro_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     deflate codec and the int/long/double/string lanes of the binary
     encoding."""
     import json as _json
-    import shutil
-    import tempfile
 
     from pyspark.sql import functions as F
 
+    from ..cache import scratch_dir
     from .tables import load_table
 
     register_pyavro(spark)
     part = load_table(spark, sf_dir, "part").select(
         "p_partkey", "p_brand", "p_size", "p_retailprice"
     )
-    out_dir = tempfile.mkdtemp(prefix="pyavro_sink_")
+    out_dir = scratch_dir("pyavro_sink_")
     part.repartition(4).write.format("pyavro").mode("append").option(
         "path", out_dir
     ).save()
@@ -286,7 +285,7 @@ def source_avro_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     assert manifest["rows"] == n_back, (
         f"manifest {manifest['rows']} != rows read back {n_back}"
     )
-    out = (
+    return (
         back.groupBy("p_brand")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_parts"),
@@ -303,5 +302,3 @@ def source_avro_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("p_brand")
         .localCheckpoint(eager=True)
     )
-    shutil.rmtree(out_dir, ignore_errors=True)
-    return out

@@ -19,14 +19,12 @@ layout in operators/ann.py).
 
 from __future__ import annotations
 
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..cache import scratch_dir, scratch_persist
 from ..registry import register
 from ..sources.tables import load_table
-from ..cache import scratch_persist
 
 _AGG_SQL = """
 SELECT '{fmt}' AS fmt, l_returnflag,
@@ -80,7 +78,7 @@ def source_roundtrip_formats(spark: SparkSession, sf_dir: str) -> DataFrame:
     cols = ["l_orderkey", "l_returnflag", "l_quantity", "l_extendedprice"]
     li = load_table(spark, sf_dir, "lineitem").select(*cols).transform(scratch_persist)
     li.count()  # materialize once before the concurrent writers fork
-    tmp = tempfile.mkdtemp(prefix="fmt_roundtrip_")
+    tmp = scratch_dir("fmt_roundtrip_")
     with ThreadPoolExecutor(max_workers=len(FORMATS)) as pool:
         back = list(
             pool.map(lambda fmt: _roundtrip(li, fmt, f"{tmp}/{fmt}"), FORMATS)
@@ -108,7 +106,7 @@ def sink_partitioned_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_plans.py).  At 100 TB this is the difference between
     reading a status's slice and reading the table."""
     o = load_table(spark, sf_dir, "orders")
-    tmp = tempfile.mkdtemp(prefix="part_sink_")
+    tmp = scratch_dir("part_sink_")
     o.write.mode("overwrite").partitionBy("o_orderstatus").parquet(f"{tmp}/orders")
     back = spark.read.parquet(f"{tmp}/orders")
     return (
@@ -149,7 +147,7 @@ def source_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     status, null count localized to generation 1).  At scale the
     merged-schema read costs one footer pass; no data rewrite."""
     o = load_table(spark, sf_dir, "orders")
-    tmp = tempfile.mkdtemp(prefix="schema_evo_")
+    tmp = scratch_dir("schema_evo_")
     gen1 = o.where(F.col("o_orderkey") % 2 == 0).select(
         "o_orderkey", "o_orderstatus"
     )
@@ -196,7 +194,7 @@ def source_csv_quoted_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.substring("text", 21, 20),
     ).alias("tricky")
     df = docs.select("doc_id", tricky)
-    tmp = tempfile.mkdtemp(prefix="csv_quoted_")
+    tmp = scratch_dir("csv_quoted_")
     # the CSV WRITER trims leading/trailing whitespace by default
     # (ignore*WhiteSpace default true on write, false on read) — a
     # trailing-space field would silently shrink through the roundtrip
@@ -256,7 +254,7 @@ def source_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_name",
         F.concat(F.lit('&<>"'), F.col("n_name")).alias("comment_text"),
     )
-    tmp = tempfile.mkdtemp(prefix="xml_roundtrip_")
+    tmp = scratch_dir("xml_roundtrip_")
     n.write.mode("overwrite").option("rowTag", "nation").format("xml").save(tmp)
     back = spark.read.option("rowTag", "nation").format("xml").load(tmp)
     return (

@@ -182,16 +182,15 @@ def sink_compaction_certificate(spark: SparkSession, sf_dir: str) -> DataFrame:
     compaction job reads only the landing zone's small files and never
     reshuffles rows, so its cost is IO-proportional.
     """
-    import shutil
-    import tempfile
     from pathlib import Path
 
     from pyspark.sql import functions as F
 
+    from ..cache import scratch_dir
     from .tables import load_table
 
     d = load_table(spark, sf_dir, "documents")
-    scratch = tempfile.mkdtemp(prefix="compaction_")
+    scratch = scratch_dir("compaction_")
     small, compacted = f"{scratch}/small", f"{scratch}/compacted"
     d.repartition(COMPACT_FRAGMENTS).write.mode("overwrite").parquet(small)
     compact(spark, small, compacted, COMPACT_TARGET_ROWS)
@@ -199,7 +198,7 @@ def sink_compaction_certificate(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_in = spark.read.parquet(small).count()
     files_in = len(list(Path(small).glob("*.parquet")))
     files_out = len(list(Path(compacted).glob("*.parquet")))
-    out = (
+    return (
         spark.read.parquet(compacted)
         .agg(F.count(F.lit(1)).alias("n_rows"))
         .select(
@@ -208,11 +207,7 @@ def sink_compaction_certificate(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("n_rows") == F.lit(n_in)).alias("rows_preserved"),
             F.lit(files_out < files_in).alias("files_reduced"),
         )
-        # materialize before deleting the scratch layout
-        .localCheckpoint(eager=True)
     )
-    shutil.rmtree(scratch, ignore_errors=True)
-    return out
 
 
 ZORDER_FILES = 16

@@ -304,11 +304,9 @@ def source_python_stream_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
     match is exact.  This closes the extension-surface matrix: batch
     Python source (`source_python_datasource`) / streaming Python
     source (this row), both Arrow/driver-fed, both oracle-checked."""
-    import shutil
-    import tempfile
-    import uuid
-
     from pyspark.sql import functions as F
+
+    from ..cache import scratch_dir, scratch_view
 
     register_pytail(spark)
     # row count from the parquet footer (driver-side metadata read, no
@@ -337,13 +335,12 @@ def source_python_stream_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("chunk_rows", str(chunk))
         .load()
     )
-    name = f"pytail_{uuid.uuid4().hex[:8]}"
-    ckpt = tempfile.mkdtemp(prefix="pytail_ckpt_")
+    name = scratch_view(spark, "pytail_")
     q = (
         stream.writeStream.format("memory")
         .queryName(name)
         .outputMode("append")
-        .option("checkpointLocation", ckpt)
+        .option("checkpointLocation", scratch_dir("pytail_ckpt_"))
         .trigger(processingTime="0 seconds")
         .start()
     )
@@ -352,7 +349,7 @@ def source_python_stream_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
     q.awaitTermination()
     data_batches = sum(1 for p in q.recentProgress if p["numInputRows"] > 0)
     assert data_batches >= 3, f"expected >=3 pulled chunks, got {data_batches}"
-    out = (
+    return (
         spark.table(name)
         .groupBy("event_type")
         .agg(
@@ -365,8 +362,6 @@ def source_python_stream_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("event_type")
         .localCheckpoint(eager=True)
     )
-    shutil.rmtree(ckpt, ignore_errors=True)
-    return out
 
 
 # ---------------------------------------------------------------------------
@@ -509,16 +504,15 @@ def sink_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     manifest total must equal the rows read back — the exactly-once
     receipt the commit protocol exists to provide."""
     import json as _json
-    import shutil
-    import tempfile
 
     from pyspark.sql import functions as F
 
+    from ..cache import scratch_dir
     from .tables import load_table
 
     register_pyjsonl(spark)
     events = load_table(spark, sf_dir, "events").select("event_id", "event_type")
-    out_dir = tempfile.mkdtemp(prefix="pyjsonl_sink_")
+    out_dir = scratch_dir("pyjsonl_sink_")
     events.repartition(4).write.format("pyjsonl").mode("append").option(
         "path", out_dir
     ).save()
@@ -530,7 +524,7 @@ def sink_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     assert manifest["rows"] == n_back, (
         f"manifest {manifest['rows']} != rows read back {n_back}"
     )
-    out = (
+    return (
         back.groupBy("event_type")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_events"),
@@ -539,5 +533,3 @@ def sink_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("event_type")
         .localCheckpoint(eager=True)
     )
-    shutil.rmtree(out_dir, ignore_errors=True)
-    return out

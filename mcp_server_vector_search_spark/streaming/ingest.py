@@ -20,18 +20,26 @@ operators used in batch (operators/windows.py), which is how the
 oracle-checked batch results certify the streaming logic; streaming
 runs are smoke-tested with the parquet source + memory/parquet sinks
 (tests/test_streaming.py).
+
+Every stream reads a testdata table through ``table_stream`` or a
+staged ``scratch_dir``, and runs through ``run_available_now``: one
+bounded availableNow execution.  Its checkpoint, staged inputs and
+memory-sink view are scratch owned by ``cache.py``.  They live until
+the owner of the result calls ``cache.release_scratch()``.
 """
 
 from __future__ import annotations
 
 import functools
 import os
-import tempfile
 from pathlib import Path
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQuery
 
+from ..cache import scratch_dir, scratch_view
 from ..sources.tables import load_table
 
 WATERMARK = "2 hours"
@@ -47,24 +55,53 @@ def data_batches(q) -> int:
     return sum(1 for p in q.recentProgress if p["numInputRows"] > 0)
 
 
-def _as_stream_dir(file_path: str) -> str:
-    """Spark's file-stream source requires a DIRECTORY; expose a single
-    parquet file through a temp dir symlink (testdata stays read-only)."""
-    d = tempfile.mkdtemp(prefix="stream_src_")
-    os.symlink(file_path, os.path.join(d, os.path.basename(file_path)))
-    return d
+def run_available_now(
+    df: DataFrame,
+    sink: str | Callable[[DataFrame, int], None],
+    mode: str = "append",
+    checkpoint: str | None = None,
+) -> StreamingQuery:
+    """Run the streaming ``df`` to completion under
+    ``trigger(availableNow=True)`` and return the finished query.
+
+    ``sink`` is ``"memory"`` (a tracked memory-sink view, read back as
+    ``spark.table(q.name)``), a directory (parquet sink) or a
+    ``foreachBatch`` function.  The checkpoint is a fresh scratch dir
+    unless a restart passes the same ``checkpoint`` again."""
+    w = df.writeStream.outputMode(mode).option(
+        "checkpointLocation", checkpoint or scratch_dir("stream_ckpt_")
+    )
+    if callable(sink):
+        w = w.foreachBatch(sink)
+    elif sink == "memory":
+        w = w.format("memory").queryName(scratch_view(df.sparkSession, "stream_sink_"))
+    else:
+        w = w.format("parquet").option("path", sink)
+    q = w.trigger(availableNow=True).start()
+    q.awaitTermination()
+    return q
+
+
+def table_stream(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
+    """``sf_dir``'s ``table`` as a file stream, one file per trigger,
+    schema pinned from the batch reader.  Spark's file-stream source
+    requires a DIRECTORY, so the parquet file is exposed through a
+    symlink in a scratch dir (testdata stays read-only)."""
+    path = f"{sf_dir}/{table}.parquet"
+    src = scratch_dir("stream_src_")
+    os.symlink(path, os.path.join(src, os.path.basename(path)))
+    return (
+        spark.readStream.schema(spark.read.parquet(path).schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src)
+    )
 
 
 def read_event_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The events table as a file stream (schema pinned from the batch
     reader, including the nanos→micros ts normalization)."""
     batch = load_table(spark, sf_dir, "events")
-    raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    stream = (
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(_as_stream_dir(f"{sf_dir}/events.parquet"))
-    )
+    stream = table_stream(spark, sf_dir, "events")
     ts_type = dict(stream.dtypes).get("ts")
     if ts_type == "bigint":
         stream = stream.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
@@ -110,16 +147,12 @@ def incremental_index_append(
     sf_dir: str,
     centroids: list[list[float]],
     index_path: str,
-    checkpoint_path: str,
-):
+) -> StreamingQuery:
     """Streaming IVF maintenance: assign each arriving vector to its
     nearest centroid (argmax over a broadcast-folded literal centroid
     table — pure codegen, no Python) and append into the partitioned
-    index layout.  Returns the StreamingQuery."""
-    schema = spark.read.parquet(f"{sf_dir}/embeddings.parquet").schema
-    stream = spark.readStream.schema(schema).parquet(
-        _as_stream_dir(f"{sf_dir}/embeddings.parquet")
-    )
+    index layout.  Returns the finished StreamingQuery."""
+    stream = table_stream(spark, sf_dir, "embeddings")
 
     # The SAME assignment expression as the batch index build
     # (operators/ann.assignment_expr: matrix-literal transform, rounded
@@ -136,12 +169,7 @@ def incremental_index_append(
             .parquet(index_path)
         )
 
-    return (
-        assigned.writeStream.foreachBatch(append_batch)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return run_available_now(assigned, append_batch)
 
 
 def chunk_document_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -152,13 +180,7 @@ def chunk_document_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     Batch/stream equivalence is asserted in tests/test_streaming.py."""
     from ..operators.text_analysis import chunk_with_overlap
 
-    schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(_as_stream_dir(f"{sf_dir}/documents.parquet"))
-    )
-    return chunk_with_overlap(stream)
+    return chunk_with_overlap(table_stream(spark, sf_dir, "documents"))
 
 
 def incremental_dedup_stream(
@@ -166,9 +188,8 @@ def incremental_dedup_stream(
     sf_dir: str,
     corpus_fps: DataFrame,
     out_path: str,
-    checkpoint_path: str,
     min_doc_id: int,
-):
+) -> StreamingQuery:
     """Rolling-ingest dedup as a STREAM: each micro-batch of arriving
     documents (doc_id ≥ ``min_doc_id`` — the same new/old boundary the
     batch query computes) is fingerprinted and probed against the
@@ -177,27 +198,17 @@ def incremental_dedup_stream(
     / probe_new_batch), with matches appended to parquet.  The corpus
     side is a bounded static frame reused across batches — the stream
     never re-shuffles it (the foreachBatch analog of the batch plan's
-    broadcast shape).  Returns the StreamingQuery."""
+    broadcast shape).  Returns the finished StreamingQuery."""
     from ..operators.dedup import doc_fingerprints, probe_new_batch
 
-    schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(_as_stream_dir(f"{sf_dir}/documents.parquet"))
-    )
+    stream = table_stream(spark, sf_dir, "documents")
     new_docs = stream.where(F.col("doc_id") >= F.lit(min_doc_id))
 
     def probe_batch(batch_df: DataFrame, epoch_id: int) -> None:
         out = probe_new_batch(doc_fingerprints(batch_df), corpus_fps)
         out.write.mode("append").parquet(out_path)
 
-    return (
-        new_docs.writeStream.foreachBatch(probe_batch)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return run_available_now(new_docs, probe_batch)
 
 
 def redact_document_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -210,13 +221,7 @@ def redact_document_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     full-corpus check.  Equivalence asserted in tests/test_streaming.py."""
     from ..operators.curation import redact_rows
 
-    schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(_as_stream_dir(f"{sf_dir}/documents.parquet"))
-    )
-    return redact_rows(stream)
+    return redact_rows(table_stream(spark, sf_dir, "documents"))
 
 
 def temperature_mix_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -234,18 +239,11 @@ def temperature_mix_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         temperature_mix_plan,
         temperature_replicate,
     )
-    from ..sources.tables import load_table
 
     plan = temperature_mix_plan(
         corpus_source_counts(load_table(spark, sf_dir, "documents"))
     )
-    schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(_as_stream_dir(f"{sf_dir}/documents.parquet"))
-    )
-    return temperature_replicate(stream, plan)
+    return temperature_replicate(table_stream(spark, sf_dir, "documents"), plan)
 
 
 def incremental_minhash_stream(
@@ -273,12 +271,7 @@ def incremental_minhash_stream(
         sig_agreement_expr,
     )
 
-    schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(_as_stream_dir(f"{sf_dir}/documents.parquet"))
-    )
+    stream = table_stream(spark, sf_dir, "documents")
     arriving = stream.where(F.col("doc_id") >= min_doc_id).select(
         "doc_id",
         minhash_sig_expr(F.col("text")).alias("sigs"),
@@ -347,32 +340,18 @@ def q_streaming_tumbling_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     watermark tests in tests/test_streaming.py).  The stateful-agg
     state and the memory sink hold one row per (window, event_type) —
     bounded by the time span, not the corpus."""
-    _q, name = run_tumbling_stream(spark, sf_dir)
-    return spark.table(name)
+    return spark.table(run_tumbling_stream(spark, sf_dir).name)
 
 
-def run_tumbling_stream(spark: SparkSession, sf_dir: str):
-    """Run the tumbling-count stream to completion; return the finished
-    StreamingQuery handle and the memory-sink table name.  Shared by the
-    gate query above and ``scripts/gen_plans.py``, which renders the
-    executed micro-batch physical plan (StateStoreRestore/Save pair)
-    from the handle via ``explainInternal``."""
-    import uuid
-
-    stream = read_event_stream(spark, sf_dir)
-    name = f"stream_tumbling_{uuid.uuid4().hex[:8]}"
-    ckpt = tempfile.mkdtemp(prefix="stream_ckpt_")
-    q = (
-        tumbling_agg(stream)
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+def run_tumbling_stream(spark: SparkSession, sf_dir: str) -> StreamingQuery:
+    """Run the tumbling-count stream to completion into a memory sink;
+    return the finished StreamingQuery.  Shared by the gate query above
+    and ``scripts/gen_plans.py``, which renders the executed micro-batch
+    physical plan (StateStoreRestore/Save pair) from the handle via
+    ``explainInternal``."""
+    return run_available_now(
+        tumbling_agg(read_event_stream(spark, sf_dir)), "memory", "complete"
     )
-    q.awaitTermination()
-    return q, name
 
 
 # ---------------------------------------------------------------------------
@@ -411,17 +390,13 @@ def q_streaming_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     (no forked cells, no lost or duplicated vectors).  ``id_sum``
     makes identity preservation visible: a duplicated or dropped
     vec_id shifts it even when counts collide."""
-    import shutil
-
     from ..operators.ann import TRAIN_SAMPLE, _sample_vectors, train_centroids
 
     emb = load_table(spark, sf_dir, "embeddings")
     cents = train_centroids(_sample_vectors(emb, TRAIN_SAMPLE))
-    index_path = tempfile.mkdtemp(prefix="stream_ivf_")
-    ckpt = tempfile.mkdtemp(prefix="stream_ivf_ckpt_")
-    q = incremental_index_append(spark, sf_dir, cents, index_path, ckpt)
-    q.awaitTermination()
-    out = (
+    index_path = scratch_dir("stream_ivf_")
+    incremental_index_append(spark, sf_dir, cents, index_path)
+    return (
         spark.read.parquet(index_path)
         .groupBy(F.col("centroid_id").cast("int").alias("centroid_id"))
         .agg(
@@ -431,9 +406,6 @@ def q_streaming_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("centroid_id")
         .localCheckpoint(eager=True)
     )
-    shutil.rmtree(index_path, ignore_errors=True)
-    shutil.rmtree(ckpt, ignore_errors=True)
-    return out
 
 
 # ---------------------------------------------------------------------------
@@ -466,9 +438,6 @@ def q_streaming_dedup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     event_id (the bounded test corpus); the unbounded-corpus form is
     ``dropDuplicatesWithinWatermark``, which evicts ids older than
     the watermark — same plan, bounded state."""
-    import shutil
-    import uuid
-
     # narrow state partitions for the bounded fixture (a sizing conf at
     # scale); repartition(1), not coalesce(1), so the staging scan stays
     # parallel and only the write is single-file
@@ -477,11 +446,11 @@ def q_streaming_dedup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     # stage only the columns the dedup + aggregate read (r17, guide
     # §2.3/§6) — the duplicate replay scans each staged byte twice
     events = load_table(spark, sf_dir, "events").select("event_id", "event_type")
-    src = tempfile.mkdtemp(prefix="dedup_src_")
+    src = scratch_dir("dedup_src_")
     events.repartition(1).write.mode("overwrite").parquet(f"{src}/a")
     # ONE write pass; the duplicate arrival is two hard links to the
     # same file, which the file-stream source treats as two inputs
-    merged = tempfile.mkdtemp(prefix="dedup_merged_")
+    merged = scratch_dir("dedup_merged_")
     for n, f in enumerate(sorted(Path(f"{src}/a").glob("*.parquet"))):
         os.link(f, f"{merged}/part_a_{n}.parquet")
         os.link(f, f"{merged}/part_b_{n}.parquet")
@@ -490,33 +459,18 @@ def q_streaming_dedup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", 1)
         .parquet(merged)
     )
-    name = f"dedup_stream_{uuid.uuid4().hex[:8]}"
-    ckpt = tempfile.mkdtemp(prefix="dedup_ckpt_")
-    q = (
+    q = run_available_now(
         stream.dropDuplicates(["event_id"])
         .groupBy("event_type")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
             F.sum("event_id").alias("id_sum"),
-        )
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+        ),
+        "memory",
+        "complete",
     )
-    q.awaitTermination()
     assert data_batches(q) >= 2, "duplicates must span micro-batches"
-    out = (
-        spark.table(name)
-        .orderBy("event_type")
-        .localCheckpoint(eager=True)
-    )
-    shutil.rmtree(src, ignore_errors=True)
-    shutil.rmtree(merged, ignore_errors=True)
-    shutil.rmtree(ckpt, ignore_errors=True)
-    return out
+    return spark.table(q.name).orderBy("event_type").localCheckpoint(eager=True)
 
 
 # ---------------------------------------------------------------------------
@@ -549,14 +503,11 @@ def q_streaming_join_static(spark: SparkSession, sf_dir: str) -> DataFrame:
     the sink table must hash-match the single-shot batch SQL.  Value
     sums go through DECIMAL so micro-batch accumulation order can't
     drift the double."""
-    import shutil
-    import uuid
-
     # stage only the join key + measure (r17, guide §2.3/§6): the
     # per-batch broadcast join and segment aggregate read nothing else
     events = load_table(spark, sf_dir, "events").select("user_id", "value")
     customer = load_table(spark, sf_dir, "customer")
-    src = tempfile.mkdtemp(prefix="ssjoin_src_")
+    src = scratch_dir("ssjoin_src_")
     # two files -> two micro-batches under maxFilesPerTrigger=1
     events.repartition(2).write.mode("overwrite").parquet(src)
     stream = (
@@ -564,9 +515,7 @@ def q_streaming_join_static(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    name = f"ssjoin_stream_{uuid.uuid4().hex[:8]}"
-    ckpt = tempfile.mkdtemp(prefix="ssjoin_ckpt_")
-    q = (
+    q = run_available_now(
         stream.join(customer, stream.user_id == customer.c_custkey)
         .groupBy("c_mktsegment")
         .agg(
@@ -574,20 +523,12 @@ def q_streaming_join_static(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.col("value").cast("decimal(12,2)"))
             .cast("double")
             .alias("total_value"),
-        )
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+        ),
+        "memory",
+        "complete",
     )
-    q.awaitTermination()
     assert data_batches(q) >= 2, "join must span micro-batches"
-    out = spark.table(name).orderBy("c_mktsegment").localCheckpoint(eager=True)
-    shutil.rmtree(src, ignore_errors=True)
-    shutil.rmtree(ckpt, ignore_errors=True)
-    return out
+    return spark.table(q.name).orderBy("c_mktsegment").localCheckpoint(eager=True)
 
 
 # ---------------------------------------------------------------------------
@@ -619,15 +560,13 @@ def q_streaming_checkpoint_resume(spark: SparkSession, sf_dir: str) -> DataFrame
     so a re-processed or skipped file shifts n_events AND id_sum.
     This is the mechanism that lets a 100 TB/day ingest survive
     restarts without reprocessing history."""
-    import shutil
-
     # stage only the two columns the sink projection reads (r17, guide
     # §2.3/§6) — the restart re-lists and the delta-run re-scans them
     events = load_table(spark, sf_dir, "events").select("event_id", "event_type")
-    stage = tempfile.mkdtemp(prefix="ckptres_stage_")
-    src = tempfile.mkdtemp(prefix="ckptres_src_")
-    sink = tempfile.mkdtemp(prefix="ckptres_sink_")
-    ckpt = tempfile.mkdtemp(prefix="ckptres_ckpt_")
+    stage = scratch_dir("ckptres_stage_")
+    src = scratch_dir("ckptres_src_")
+    sink = scratch_dir("ckptres_sink_")
+    ckpt = scratch_dir("ckptres_ckpt_")
     # one events scan stages both halves (r16: _stage_sliced_phases)
     half_a_dir, half_b_dir = _stage_sliced_phases(
         events, stage, F.col("event_id") % 2, 2
@@ -640,15 +579,9 @@ def q_streaming_checkpoint_resume(spark: SparkSession, sf_dir: str) -> DataFrame
 
     def run_once():
         stream = spark.readStream.schema(events.schema).parquet(src)
-        q = (
-            stream.select("event_id", "event_type")
-            .writeStream.format("parquet")
-            .option("path", sink)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+        q = run_available_now(
+            stream.select("event_id", "event_type"), sink, checkpoint=ckpt
         )
-        q.awaitTermination()
         return sum(p["numInputRows"] for p in q.recentProgress)
 
     run_once()  # first run: file A only
@@ -658,7 +591,7 @@ def q_streaming_checkpoint_resume(spark: SparkSession, sf_dir: str) -> DataFrame
     assert n_second == n_b, (
         f"restart must process exactly the delta ({n_b} rows), got {n_second}"
     )
-    out = (
+    return (
         spark.read.parquet(sink)
         .groupBy("event_type")
         .agg(
@@ -668,9 +601,6 @@ def q_streaming_checkpoint_resume(spark: SparkSession, sf_dir: str) -> DataFrame
         .orderBy("event_type")
         .localCheckpoint(eager=True)
     )
-    for d in (stage, src, sink, ckpt):
-        shutil.rmtree(d, ignore_errors=True)
-    return out
 
 
 # ---------------------------------------------------------------------------
@@ -713,7 +643,6 @@ def q_streaming_watermark_late_drop(spark: SparkSession, sf_dir: str) -> DataFra
     timeline is synthetic (fixed literals) because the certificate is
     about TIME semantics, not the corpus — sf only picks the session.
     Bounded state: one row per open window."""
-    import shutil
     from datetime import datetime
 
     # 4-way stateful shuffle (see streaming_stream_stream_join): the
@@ -722,10 +651,10 @@ def q_streaming_watermark_late_drop(spark: SparkSession, sf_dir: str) -> DataFra
     child = spark.newSession()
     child.conf.set("spark.sql.shuffle.partitions", "4")
 
-    src = tempfile.mkdtemp(prefix="wm_src_")
-    sink = tempfile.mkdtemp(prefix="wm_sink_")
-    ckpt = tempfile.mkdtemp(prefix="wm_ckpt_")
-    stage = tempfile.mkdtemp(prefix="wm_stage_")
+    src = scratch_dir("wm_src_")
+    sink = scratch_dir("wm_sink_")
+    ckpt = scratch_dir("wm_ckpt_")
+    stage = scratch_dir("wm_stage_")
     # both phases staged by ONE write job (r16: _stage_literal_phases);
     # repartition(1) inside it, NOT coalesce(1) — a coalesced single
     # task over the 32 empty parallelize partitions stalls ~3s on
@@ -742,32 +671,20 @@ def q_streaming_watermark_late_drop(spark: SparkSession, sf_dir: str) -> DataFra
 
     def run_once():
         stream = child.readStream.schema("ts timestamp, v double").parquet(src)
-        q = (
+        run_available_now(
             stream.withWatermark("ts", WM_DELAY)
             .groupBy(F.window("ts", "1 hour").alias("win"))
             .agg(F.count(F.lit(1)).alias("n"))
-            .select(F.col("win.start").alias("win_start"), "n")
-            .writeStream.format("parquet")
-            .option("path", sink)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
+            .select(F.col("win.start").alias("win_start"), "n"),
+            sink,
+            checkpoint=ckpt,
         )
-        q.awaitTermination()
 
     for i, phase_dir in enumerate(phase_dirs):
         for n, f in enumerate(sorted(Path(f"{stage}/{phase_dir}").glob("*.parquet"))):
             os.link(f, f"{src}/part_{i}_{n}.parquet")
         run_once()
-    out = (
-        child.read.parquet(sink)
-        .orderBy("win_start")
-        .localCheckpoint(eager=True)
-    )
-    for d in (src, sink, ckpt, stage):
-        shutil.rmtree(d, ignore_errors=True)
-    return out
+    return child.read.parquet(sink).orderBy("win_start").localCheckpoint(eager=True)
 
 
 # ---------------------------------------------------------------------------
@@ -832,9 +749,6 @@ def q_streaming_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFram
     in production; at sf0.01 it cuts this row from 15.2 s to ~5 s of
     pure state-store commit overhead.
     """
-    import shutil
-    import uuid
-
     child = spark.newSession()
     child.conf.set("spark.sql.shuffle.partitions", "4")
     # Stage ONLY the columns the two stream sides read (r17, guide
@@ -843,7 +757,7 @@ def q_streaming_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFram
     events = load_table(child, sf_dir, "events").select(
         "event_id", "user_id", "ts", "event_type", "value"
     )
-    src = tempfile.mkdtemp(prefix="ss2j_src_")
+    src = scratch_dir("ss2j_src_")
     # two files -> two micro-batches per side under maxFilesPerTrigger=1
     events.repartition(2).write.mode("overwrite").parquet(src)
 
@@ -889,26 +803,13 @@ def q_streaming_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFram
         "purchase_value",
     )
 
-    name = f"ss2j_stream_{uuid.uuid4().hex[:8]}"
-    ckpt = tempfile.mkdtemp(prefix="ss2j_ckpt_")
-    q = (
-        joined.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    q = run_available_now(joined, "memory")
     assert data_batches(q) >= 2, "join must span micro-batches"
-    out = (
-        child.table(name)
+    return (
+        child.table(q.name)
         .orderBy("click_id", "purchase_id")
         .localCheckpoint(eager=True)
     )
-    shutil.rmtree(src, ignore_errors=True)
-    shutil.rmtree(ckpt, ignore_errors=True)
-    return out
 
 
 # ---------------------------------------------------------------------------
@@ -1030,7 +931,6 @@ def q_streaming_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> Data
     batch/incremental dedup family (``dedup_exact``,
     ``dedup_incremental_exact``).  Timeline synthetic (fixed literals)
     because the certificate is about TIME semantics, not the corpus."""
-    import shutil
     from datetime import datetime
 
     # 4-way stateful shuffle (see streaming_stream_stream_join): the
@@ -1040,10 +940,9 @@ def q_streaming_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> Data
     child = spark.newSession()
     child.conf.set("spark.sql.shuffle.partitions", "4")
 
-    src = tempfile.mkdtemp(prefix="ddw_src_")
-    sink = tempfile.mkdtemp(prefix="ddw_sink_")
-    ckpt = tempfile.mkdtemp(prefix="ddw_ckpt_")
-    stage = tempfile.mkdtemp(prefix="ddw_stage_")
+    src = scratch_dir("ddw_src_")
+    sink = scratch_dir("ddw_sink_")
+    stage = scratch_dir("ddw_stage_")
     # state purge runs at the END of a batch against the watermark that
     # batch opened with, so the eviction driven by 'advance' (batch 2,
     # watermark 19:00 from batch 1's max) lands at batch 2's close —
@@ -1070,23 +969,13 @@ def q_streaming_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> Data
     stream = child.readStream.schema(
         "id bigint, ts timestamp, tag string"
     ).option("maxFilesPerTrigger", 1).parquet(src)
-    q = (
-        stream.withWatermark("ts", DDW_DELAY)
-        .dropDuplicatesWithinWatermark(["id"])
-        .writeStream.format("parquet")
-        .option("path", sink)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+    q = run_available_now(
+        stream.withWatermark("ts", DDW_DELAY).dropDuplicatesWithinWatermark(["id"]),
+        sink,
     )
-    q.awaitTermination()
     n_data = data_batches(q)
     assert n_data >= 4, f"expected 4 ordered arrivals, got {n_data}"
-    out = child.read.parquet(sink).orderBy("ts", "id").localCheckpoint(eager=True)
-    for d in (src, sink, ckpt, stage):
-        shutil.rmtree(d, ignore_errors=True)
-    return out
+    return child.read.parquet(sink).orderBy("ts", "id").localCheckpoint(eager=True)
 
 
 # ---------------------------------------------------------------------------
@@ -1144,17 +1033,14 @@ def q_streaming_stream_stream_outer(spark: SparkSession, sf_dir: str) -> DataFra
     bounded: join state ~ delay+window of rows per side, and
     no-shows surface as NULL rows exactly one watermark-advance after
     their window closes — never earlier, never lost."""
-    import shutil
-    import uuid
     from datetime import datetime
 
     child = spark.newSession()
     child.conf.set("spark.sql.shuffle.partitions", "4")
 
-    src = tempfile.mkdtemp(prefix="sso_src_")
-    sink = tempfile.mkdtemp(prefix="sso_sink_")
-    ckpt = tempfile.mkdtemp(prefix="sso_ckpt_")
-    stage = tempfile.mkdtemp(prefix="sso_stage_")
+    src = scratch_dir("sso_src_")
+    sink = scratch_dir("sso_sink_")
+    stage = scratch_dir("sso_stage_")
     phases = [
         [
             (1, "click", (10, 0), 0.0),
@@ -1203,21 +1089,10 @@ def q_streaming_stream_stream_outer(spark: SparkSession, sf_dir: str) -> DataFra
         & (F.col("purchase_ts") <= F.col("click_ts") + F.expr("INTERVAL 1 HOUR")),
         "left_outer",
     ).select("user_id", "click_ts", "purchase_ts", "purchase_value")
-    q = (
-        joined.writeStream.format("parquet")
-        .option("path", sink)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    q = run_available_now(joined, sink)
     n_data = data_batches(q)
     assert n_data >= 3, f"expected 3 ordered arrivals, got {n_data}"
-    out = child.read.parquet(sink).orderBy("user_id").localCheckpoint(eager=True)
-    for d in (src, sink, ckpt, stage):
-        shutil.rmtree(d, ignore_errors=True)
-    return out
+    return child.read.parquet(sink).orderBy("user_id").localCheckpoint(eager=True)
 
 
 # ---------------------------------------------------------------------------
@@ -1264,8 +1139,6 @@ def q_streaming_rocksdb_state_store(spark: SparkSession, sf_dir: str) -> DataFra
     asserted from the executed query's stateOperators progress metrics
     (rocksdb* custom metrics only exist on this provider).  Runs in a
     child session so the provider conf cannot leak into other rows."""
-    import uuid
-
     child = spark.newSession()
     child.conf.set("spark.sql.streaming.stateStore.providerClass", ROCKSDB_PROVIDER)
     child.conf.set(
@@ -1281,8 +1154,8 @@ def q_streaming_rocksdb_state_store(spark: SparkSession, sf_dir: str) -> DataFra
     events = load_table(child, sf_dir, "events").select(
         "event_id", "ts", "event_type", "value"
     )
-    src = tempfile.mkdtemp(prefix="rocksdb_src_")
-    stage = tempfile.mkdtemp(prefix="rocksdb_stage_")
+    src = scratch_dir("rocksdb_src_")
+    stage = scratch_dir("rocksdb_stage_")
     # one explicit file per third -> three micro-batches under
     # maxFilesPerTrigger=1, so windows genuinely accumulate across
     # RocksDB commits; ONE partitionBy write stages all thirds from a
@@ -1294,31 +1167,14 @@ def q_streaming_rocksdb_state_store(spark: SparkSession, sf_dir: str) -> DataFra
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    name = f"rocksdb_tumbling_{uuid.uuid4().hex[:8]}"
-    ckpt = tempfile.mkdtemp(prefix="rocksdb_ckpt_")
-    q = (
-        tumbling_agg(stream)
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    q = run_available_now(tumbling_agg(stream), "memory", "complete")
     assert data_batches(q) >= 2, "state must cross micro-batches"
     ops = (q.lastProgress or q.recentProgress[-1])["stateOperators"]
     rocks_metrics = [
         m for op in ops for m in op.get("customMetrics", {}) if m.startswith("rocksdb")
     ]
     assert rocks_metrics, "expected rocksdb* state-store metrics in progress"
-    out = child.table(name).localCheckpoint(eager=True)
-    import shutil
-
-    shutil.rmtree(ckpt, ignore_errors=True)
-    shutil.rmtree(src, ignore_errors=True)
-    shutil.rmtree(stage, ignore_errors=True)
-    return out
+    return child.table(q.name).localCheckpoint(eager=True)
 
 
 # ---------------------------------------------------------------------------
@@ -1352,14 +1208,11 @@ def q_streaming_state_reader(spark: SparkSession, sf_dir: str) -> DataFrame:
     asserted to report the operator (stateStoreSave) and its batch
     range, which is how tooling discovers what a foreign checkpoint
     contains."""
-    import shutil
-    import uuid
-
     # stage only the phase key + the aggregate's grouping column (r17,
     # guide §2.3/§6)
     events = load_table(spark, sf_dir, "events").select("event_id", "event_type")
-    src = tempfile.mkdtemp(prefix="ssread_src_")
-    stage = tempfile.mkdtemp(prefix="ssread_stage_")
+    src = scratch_dir("ssread_src_")
+    stage = scratch_dir("ssread_stage_")
     # explicit per-half files (a hash repartition(2) could land both
     # key values in ONE partition, collapsing the stream to a single
     # data batch); ONE partitionBy write stages both halves from a
@@ -1371,19 +1224,13 @@ def q_streaming_state_reader(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    name = f"ssread_{uuid.uuid4().hex[:8]}"
-    ckpt = tempfile.mkdtemp(prefix="ssread_ckpt_")
-    q = (
-        stream.groupBy("event_type")
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+    ckpt = scratch_dir("ssread_ckpt_")
+    q = run_available_now(
+        stream.groupBy("event_type").agg(F.count(F.lit(1)).alias("n_events")),
+        "memory",
+        "update",
+        checkpoint=ckpt,
     )
-    q.awaitTermination()
     assert data_batches(q) >= 2, "state must accumulate across batches"
     meta = spark.read.format("state-metadata").load(ckpt).collect()
     assert any(r["operatorName"] == "stateStoreSave" for r in meta), meta
@@ -1392,7 +1239,7 @@ def q_streaming_state_reader(spark: SparkSession, sf_dir: str) -> DataFrame:
     # name (`count`), not the query's output alias — resolve it by
     # position so the certificate doesn't depend on buffer naming
     buf_field = state.schema["value"].dataType.fieldNames()[0]
-    out = (
+    return (
         state.select(
             F.col("key.event_type").alias("event_type"),
             F.col(f"value.{buf_field}").alias("n_events"),
@@ -1400,10 +1247,6 @@ def q_streaming_state_reader(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("event_type")
         .localCheckpoint(eager=True)
     )
-    shutil.rmtree(src, ignore_errors=True)
-    shutil.rmtree(stage, ignore_errors=True)
-    shutil.rmtree(ckpt, ignore_errors=True)
-    return out
 
 
 # ---------------------------------------------------------------------------
@@ -1463,35 +1306,27 @@ def q_streaming_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB state is one entry per OPEN session per user — bounded by
     active users, not corpus — on the RocksDB provider the
     ``streaming_rocksdb_state_store`` row certifies."""
-    import shutil
-
-    q, name, src, ckpt = run_session_stream(spark, sf_dir)
+    q = run_session_stream(spark, sf_dir)
     assert data_batches(q) >= 2, "sessions must be assembled across batches"
-    out = (
-        spark.table(name)
+    return (
+        spark.table(q.name)
         .orderBy("user_id", "session_start")
         .localCheckpoint(eager=True)
     )
-    shutil.rmtree(src, ignore_errors=True)
-    shutil.rmtree(ckpt, ignore_errors=True)
-    return out
 
 
-def run_session_stream(spark: SparkSession, sf_dir: str):
-    """Run the session-window stream to completion; return the finished
-    handle, memory-sink table name, and the two tmp dirs the caller
-    sweeps.  Shared by the gate query above and ``scripts/gen_plans.py``,
-    which renders the executed micro-batch plan (the
-    ``SessionWindowStateStore`` restore/save pair) via
+def run_session_stream(spark: SparkSession, sf_dir: str) -> StreamingQuery:
+    """Run the session-window stream to completion into a memory sink;
+    return the finished StreamingQuery.  Shared by the gate query above
+    and ``scripts/gen_plans.py``, which renders the executed micro-batch
+    plan (the ``SessionWindowStateStore`` restore/save pair) via
     ``explainInternal``."""
-    import uuid
-
     # Stage ONLY the two columns the session aggregate reads (r17,
     # guide §2.3/§6): the staged write and every micro-batch scan move
     # user_id+ts instead of all six event columns (props alone is most
     # of the bytes).  Session membership and counts are unaffected.
     events = load_table(spark, sf_dir, "events").select("user_id", "ts")
-    src = tempfile.mkdtemp(prefix="stream_sess_src_")
+    src = scratch_dir("stream_sess_src_")
     events.repartition(3).write.mode("overwrite").parquet(src)
 
     stream = (
@@ -1499,8 +1334,6 @@ def run_session_stream(spark: SparkSession, sf_dir: str):
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    name = f"stream_session_{uuid.uuid4().hex[:8]}"
-    ckpt = tempfile.mkdtemp(prefix="stream_ckpt_")
     sessions = (
         stream.groupBy("user_id", F.session_window("ts", SESSION_GAP))
         .agg(F.count(F.lit(1)).alias("n_events"))
@@ -1510,16 +1343,7 @@ def run_session_stream(spark: SparkSession, sf_dir: str):
             "n_events",
         )
     )
-    q = (
-        sessions.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q, name, src, ckpt
+    return run_available_now(sessions, "memory", "complete")
 
 
 # ---------------------------------------------------------------------------
@@ -1544,12 +1368,10 @@ def _welch_stats_stream_agg(stream: DataFrame) -> DataFrame:
     view — one source of truth for the sufficient-statistics text, so
     the 'identical tail over identical stats' claim can never drift
     between the batch and streaming spellings."""
-    import uuid
-
     from ..operators.analytics import _WELCH_STATS_SQL
 
     spark = stream.sparkSession
-    view = f"welch_stream_in_{uuid.uuid4().hex[:8]}"
+    view = scratch_view(spark, "welch_stream_in_")
     stream.createOrReplaceTempView(view)
     return spark.sql(
         "WITH " + _WELCH_STATS_SQL.replace("{events}", view) + " SELECT * FROM g"
@@ -1566,9 +1388,6 @@ def q_streaming_ab_welch(spark: SparkSession, sf_dir: str) -> DataFrame:
     integers through the same float path as the batch oracle.  Any
     non-mergeable statistic (a mean kept as a float, a variance
     accumulated per batch) would shift a value."""
-    import shutil
-    import uuid
-
     from ..operators.analytics import welch_tail_sql
 
     spark = spark.newSession()
@@ -1578,7 +1397,7 @@ def q_streaming_ab_welch(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = load_table(spark, sf_dir, "events").select(
         "event_type", "user_id", "value"
     )
-    src = tempfile.mkdtemp(prefix="welch_src_")
+    src = scratch_dir("welch_src_")
     # 4 files -> 4 micro-batches at maxFilesPerTrigger=1
     events.repartition(4).write.mode("overwrite").parquet(src)
     stream = (
@@ -1586,23 +1405,9 @@ def q_streaming_ab_welch(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    name = f"welch_stream_{uuid.uuid4().hex[:8]}"
-    ckpt = tempfile.mkdtemp(prefix="welch_ckpt_")
-    q = (
-        _welch_stats_stream_agg(stream)
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    q = run_available_now(_welch_stats_stream_agg(stream), "memory", "complete")
     assert data_batches(q) >= 2, "stats must merge across micro-batches"
-    out = spark.sql(welch_tail_sql(name)).localCheckpoint(eager=True)
-    shutil.rmtree(src, ignore_errors=True)
-    shutil.rmtree(ckpt, ignore_errors=True)
-    return out
+    return spark.sql(welch_tail_sql(q.name)).localCheckpoint(eager=True)
 
 
 # ---------------------------------------------------------------------------
@@ -1653,8 +1458,6 @@ def q_streaming_knn_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     against itself again), so steady-state ingest work is
     O(|store|·|Δ|/B) dgemm flops, and the appended candidate file
     grows k·NB rows per arriving vector, not n."""
-    import shutil
-
     from ..operators.similarity_join import (
         KNN_K,
         _knn_partials,
@@ -1662,15 +1465,14 @@ def q_streaming_knn_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
-    src = tempfile.mkdtemp(prefix="stream_knn_src_")
-    stage = tempfile.mkdtemp(prefix="stream_knn_stage_")
+    src = scratch_dir("stream_knn_src_")
+    stage = scratch_dir("stream_knn_stage_")
     # one embeddings scan stages all three epochs (r16:
     # _stage_sliced_phases); explicit mtime links keep epoch order
     slices = _stage_sliced_phases(emb, stage, F.pmod(F.col("vec_id"), F.lit(3)), 3)
     _link_ordered_phases(stage, src, slices)
-    store_path = tempfile.mkdtemp(prefix="stream_knn_store_") + "/store"
-    part_path = tempfile.mkdtemp(prefix="stream_knn_parts_") + "/parts"
-    ckpt = tempfile.mkdtemp(prefix="stream_knn_ckpt_")
+    store_path = scratch_dir("stream_knn_store_") + "/store"
+    part_path = scratch_dir("stream_knn_parts_") + "/parts"
 
     def probe_batch(batch_df: DataFrame, epoch_id: int) -> None:
         batch = batch_df.select("vec_id", "embedding").localCheckpoint(eager=True)
@@ -1686,17 +1488,8 @@ def q_streaming_knn_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = spark.readStream.schema(emb.schema).option(
         "maxFilesPerTrigger", 1
     ).parquet(src)
-    q = (
-        stream.writeStream.foreachBatch(probe_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    q = run_available_now(stream, probe_batch)
     assert data_batches(q) == 3, "replay must span three micro-batches"
-    out = _knn_rank_merge(spark.read.parquet(part_path), KNN_K).localCheckpoint(
+    return _knn_rank_merge(spark.read.parquet(part_path), KNN_K).localCheckpoint(
         eager=True
     )
-    for d in (src, stage, os.path.dirname(store_path), os.path.dirname(part_path), ckpt):
-        shutil.rmtree(d, ignore_errors=True)
-    return out

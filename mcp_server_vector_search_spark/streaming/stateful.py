@@ -137,8 +137,16 @@ def running_user_cents(events: DataFrame) -> DataFrame:
 from pyspark.sql import SparkSession  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
+from ..cache import scratch_dir  # noqa: E402
 from ..registry import register  # noqa: E402
 from ..sources.tables import load_table  # noqa: E402
+from .ingest import (  # noqa: E402
+    _link_ordered_phases,
+    _stage_literal_phases,
+    _stage_sliced_phases,
+    data_batches,
+    run_available_now,
+)
 
 
 @register(
@@ -163,12 +171,7 @@ def q_streaming_stateful_user_totals(spark: SparkSession, sf_dir: str) -> DataFr
     selects each user's FINAL state regardless of sink row order.
     Values fold as integer cents, so the value hash against the batch
     SQL oracle is exact — no float summation-order escape hatch."""
-    import tempfile
-    import uuid
-
     from pyspark.sql import Window as W
-
-    from .ingest import _link_ordered_phases, _stage_sliced_phases
 
     # Child session: 8 state partitions instead of 32.  The fixture has
     # ~1.5k keys; 3 micro-batches x 32 state-store tasks is pure task
@@ -182,8 +185,8 @@ def q_streaming_stateful_user_totals(spark: SparkSession, sf_dir: str) -> DataFr
     events = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "value"
     )
-    src = tempfile.mkdtemp(prefix="stateful_src_")
-    stage = tempfile.mkdtemp(prefix="stateful_stage_")
+    src = scratch_dir("stateful_src_")
+    stage = scratch_dir("stateful_stage_")
     # one explicit file per third via ONE partitionBy write (r16: one
     # events scan instead of three — _stage_sliced_phases)
     thirds = _stage_sliced_phases(events, stage, F.pmod("event_id", F.lit(3)), 3)
@@ -193,36 +196,17 @@ def q_streaming_stateful_user_totals(spark: SparkSession, sf_dir: str) -> DataFr
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    name = f"stateful_{uuid.uuid4().hex[:8]}"
-    ckpt = tempfile.mkdtemp(prefix="stateful_ckpt_")
-    q = (
-        running_user_cents(stream)
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    from .ingest import data_batches
-
+    q = run_available_now(running_user_cents(stream), "memory", "update")
     assert data_batches(q) >= 3, "state must cross micro-batches"
     w = W.partitionBy("user_id").orderBy(F.desc("n_events"))
-    out = (
-        spark.table(name)
+    return (
+        spark.table(q.name)
         .withColumn("rn", F.row_number().over(w))
         .where(F.col("rn") == 1)
         .select("user_id", "n_events", "total_cents", "max_cents")
         .orderBy("user_id")
         .localCheckpoint(eager=True)
     )
-    import shutil
-
-    shutil.rmtree(src, ignore_errors=True)
-    shutil.rmtree(stage, ignore_errors=True)
-    shutil.rmtree(ckpt, ignore_errors=True)
-    return out
 
 
 # ---------------------------------------------------------------------------
@@ -367,8 +351,6 @@ def q_streaming_transform_with_state(spark: SparkSession, sf_dir: str) -> DataFr
     were recovered from the state store, not carried in memory.  Output
     rows ride a parquet sink, hash-matched order-insensitively."""
     import os
-    import shutil
-    import tempfile
     from datetime import datetime
     from pathlib import Path
 
@@ -387,18 +369,16 @@ def q_streaming_transform_with_state(spark: SparkSession, sf_dir: str) -> DataFr
     # dominates two whole StreamExecutions otherwise; a conf at scale)
     spark.conf.set("spark.sql.shuffle.partitions", "8")
 
-    src = tempfile.mkdtemp(prefix="tws_src_")
-    sink = tempfile.mkdtemp(prefix="tws_sink_")
-    ckpt = tempfile.mkdtemp(prefix="tws_ckpt_")
-    stage = tempfile.mkdtemp(prefix="tws_stage_")
+    src = scratch_dir("tws_src_")
+    sink = scratch_dir("tws_sink_")
+    ckpt = scratch_dir("tws_ckpt_")
+    stage = scratch_dir("tws_stage_")
     phases = [
         [(1, (10, 0), 5.0), (1, (10, 10), 7.0), (2, (10, 0), 3.0)],
         [(1, (10, 20), 10.0), (3, (20, 0), 1.0)],
         [(4, (20, 30), 2.0)],
     ]
     # all three phases staged by ONE write job (r16: _stage_literal_phases)
-    from .ingest import _stage_literal_phases
-
     phase_dirs = _stage_literal_phases(
         spark,
         [
@@ -429,15 +409,7 @@ def q_streaming_transform_with_state(spark: SparkSession, sf_dir: str) -> DataFr
                 timeMode="eventtime",
             )
         )
-        q = (
-            out.writeStream.format("parquet")
-            .option("path", sink)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        run_available_now(out, sink, checkpoint=ckpt)
 
     # Execution 1 sees phases a+b as two micro-batches; execution 2 is
     # a cold restart from the checkpoint that must recover u1/u2's
@@ -457,14 +429,11 @@ def q_streaming_transform_with_state(spark: SparkSession, sf_dir: str) -> DataFr
     # never duplicate a 'closed' row — it only de-flakes the shutdown.
     if spark.read.parquet(sink).where("kind = 'closed'").count() < 2:
         run_once()
-    out = (
+    return (
         spark.read.parquet(sink)
         .orderBy("user_id", "kind", "total")
         .localCheckpoint(eager=True)
     )
-    for d in (src, sink, ckpt, stage):
-        shutil.rmtree(d, ignore_errors=True)
-    return out
 
 
 if _HAS_PROTOBUF:  # pragma: no cover - protobuf absent in this container
@@ -568,16 +537,7 @@ def q_streaming_tws_map_list_state(spark: SparkSession, sf_dir: str) -> DataFram
     number of parities each user's events span — proving MapState
     entries accumulate across batches, absent keys initialize cleanly,
     and ListState length tracks batch participation."""
-    import os
-    import shutil
-    import tempfile
-    import uuid
-    from pathlib import Path
-
     from pyspark.sql import Window as W
-
-    from ..sources.tables import load_table
-    from .ingest import _link_ordered_phases, _stage_sliced_phases, data_batches
 
     propagate_to_workers(spark)
     spark = spark.newSession()
@@ -591,8 +551,8 @@ def q_streaming_tws_map_list_state(spark: SparkSession, sf_dir: str) -> DataFram
     events = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type", "value"
     )
-    src = tempfile.mkdtemp(prefix="twsmap_src_")
-    stage = tempfile.mkdtemp(prefix="twsmap_stage_")
+    src = scratch_dir("twsmap_src_")
+    stage = scratch_dir("twsmap_stage_")
     # one events scan for both halves (r16: _stage_sliced_phases)
     halves = _stage_sliced_phases(events, stage, F.pmod("event_id", F.lit(2)), 2)
     _link_ordered_phases(stage, src, halves)
@@ -611,32 +571,19 @@ def q_streaming_tws_map_list_state(spark: SparkSession, sf_dir: str) -> DataFram
             timeMode="none",
         )
     )
-    name = f"twsmap_{uuid.uuid4().hex[:8]}"
-    ckpt = tempfile.mkdtemp(prefix="twsmap_ckpt_")
-    q = (
-        out_stream.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    q = run_available_now(out_stream, "memory", "update")
     assert data_batches(q) >= 2, "ledger must accumulate across micro-batches"
     w = W.partitionBy("user_id", "event_type").orderBy(
         F.desc("user_batches"), F.desc("n_events")
     )
-    out = (
-        spark.table(name)
+    return (
+        spark.table(q.name)
         .withColumn("rn", F.row_number().over(w))
         .where("rn = 1")
         .select("user_id", "event_type", "total_cents", "n_events", "user_batches")
         .orderBy("user_id", "event_type")
         .localCheckpoint(eager=True)
     )
-    for d in (src, stage, ckpt):
-        shutil.rmtree(d, ignore_errors=True)
-    return out
 
 
 if _HAS_PROTOBUF:  # pragma: no cover - gated with the session-timer row

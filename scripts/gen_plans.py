@@ -765,22 +765,21 @@ _STREAM_NOISE = [
 
 def streaming_plan(spark, name: str) -> str:
     """Executed micro-batch physical plan for a streaming showcase
-    query, with run-specific noise normalized."""
-    import shutil
-
+    query, with run-specific noise normalized (scratch paths included:
+    checkpoints and staged sources print as ``file:/...``)."""
+    from mcp_server_vector_search_spark.cache import release_scratch
     from mcp_server_vector_search_spark.streaming.ingest import (
         run_session_stream,
         run_tumbling_stream,
     )
 
     if name == "streaming_tumbling_counts":
-        q, _table = run_tumbling_stream(spark, SF)
+        q = run_tumbling_stream(spark, SF)
     else:
         assert name == "streaming_session_window"
-        q, _table, src, ckpt = run_session_stream(spark, SF)
-        shutil.rmtree(src, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
+        q = run_session_stream(spark, SF)
     plan = q._jsq.explainInternal(False)
+    release_scratch()
     for pat, repl in _STREAM_NOISE:
         plan = pat.sub(repl, plan)
     return plan

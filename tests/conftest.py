@@ -10,6 +10,7 @@ import pytest
 REPO_ROOT = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO_ROOT))
 
+from mcp_server_vector_search_spark.cache import release_scratch  # noqa: E402
 from mcp_server_vector_search_spark.session import get_spark  # noqa: E402
 
 SF_SMOKE = "/root/testdata/sf0.001"
@@ -20,6 +21,14 @@ SF_CORRECTNESS = "/root/testdata/sf0.01"
 def spark():
     s = get_spark(app_name="tests", shuffle_partitions=8)
     yield s
+
+
+@pytest.fixture(autouse=True)
+def _release_scratch():
+    """Each test owns the results it consumes: release the scratch its
+    queries left (cached blocks, directories, memory-sink views)."""
+    yield
+    release_scratch()
 
 
 @pytest.fixture(scope="session")

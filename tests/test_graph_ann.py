@@ -376,3 +376,30 @@ def test_hnsw_heuristic_row_matches_plain_scan_contract(spark):
     assert len(rows) == 10
     scores = [r.score for r in rows]
     assert scores == sorted(scores, reverse=True)
+
+
+def test_dim1536_queries_never_read_the_oracle_corpus(spark, monkeypatch):
+    """Both dim-1536 rows serve the quantizer their own ``sf_dir`` trained
+    inside the idx1536 artifact build: with the oracle corpus unreadable
+    (``_corpus_1536`` raising, models uncached) they still return the
+    oracle's K rows at sf0.01, where the two corpora are the same."""
+    from mcp_server_vector_search_spark.operators import lifecycle as L
+
+    want = {
+        "ivf": [tuple(r) for r in L._ivf1536_model()[2]],
+        "hnsw": [tuple(r) for r in L._hnsw1536_model()[2]],
+    }
+
+    def unreadable(*_a, **_k):
+        raise AssertionError("the query path read the oracle corpus")
+
+    monkeypatch.setattr(L, "_corpus_1536", unreadable)
+    monkeypatch.setattr(L, "_ivf1536_model", L._ivf1536_model.__wrapped__)
+    monkeypatch.setattr(L, "_hnsw1536_model", L._hnsw1536_model.__wrapped__)
+    for key, fn in (("ivf", L.q_ann_ivf_dim1536), ("hnsw", L.q_ann_hnsw_dim1536)):
+        got = [
+            (int(r[0]), float(r[1]), int(r[2]))
+            for r in fn(spark, SF_CORRECTNESS).collect()
+        ]
+        assert len(got) == L.K
+        assert got == want[key]

@@ -3,6 +3,7 @@ file's row groups and the scan must reproduce the JVM reader's rows."""
 
 from __future__ import annotations
 
+from mcp_server_vector_search_spark.cache import scratch_dir
 from mcp_server_vector_search_spark.sources.pysource import (
     RowGroupReader,
     register_pysource,
@@ -68,7 +69,6 @@ def test_pyjsonl_writer_abort_leaves_nothing_visible(spark):
     committed .jsonl files, no _MANIFEST — rename-on-commit means a
     crashed job can never expose partial output to readers."""
     import glob
-    import tempfile
 
     import pytest
     from pyspark.sql import functions as F
@@ -84,7 +84,7 @@ def test_pyjsonl_writer_abort_leaves_nothing_visible(spark):
             raise RuntimeError("planted task failure")
         return x
 
-    out_dir = tempfile.mkdtemp(prefix="pyjsonl_abort_")
+    out_dir = scratch_dir("pyjsonl_abort_")
     df = spark.range(0, 16, 1, 4).select(boom("id").alias("event_id"))
     with pytest.raises(Exception):
         df.write.format("pyjsonl").mode("append").option("path", out_dir).save()
@@ -97,11 +97,10 @@ def test_pyjsonl_sweep_is_job_scoped():
     other's in-flight temp files (ADVICE r11): each writer's sweep
     matches only its own per-job uuid prefix."""
     import glob
-    import tempfile
 
     from mcp_server_vector_search_spark.sources.pysource import JsonlSinkWriter
 
-    out_dir = tempfile.mkdtemp(prefix="pyjsonl_concurrent_")
+    out_dir = scratch_dir("pyjsonl_concurrent_")
 
     class _Row:
         def asDict(self):
@@ -143,14 +142,13 @@ def test_python_datasource_lookup_survives_child_session(spark):
     transformWithState row before the sink row in one session).  The
     register_* helpers now pin the target session as active."""
     import glob
-    import tempfile
 
     from mcp_server_vector_search_spark.sources.pysource import register_pyjsonl
 
     child = spark.newSession()
     child.createDataFrame([(1,)], "x long").collect()  # leaks child as active
     register_pyjsonl(spark)
-    out_dir = tempfile.mkdtemp(prefix="pyjsonl_child_")
+    out_dir = scratch_dir("pyjsonl_child_")
     spark.range(3).write.format("pyjsonl").mode("append").option(
         "path", out_dir
     ).save()

@@ -11,36 +11,24 @@ from __future__ import annotations
 
 import os
 import tempfile
-import uuid
 
 from pyspark.sql import functions as F
 
+from mcp_server_vector_search_spark.cache import scratch_dir
 from mcp_server_vector_search_spark.operators.ann import build_ivf_index
 from mcp_server_vector_search_spark.sources.tables import load_table
 from mcp_server_vector_search_spark.streaming import ingest
+from mcp_server_vector_search_spark.streaming.ingest import run_available_now
 
 from .conftest import SF_CORRECTNESS, SF_SMOKE
 
 
-def _run_to_memory(df, name):
-    q = (
-        df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-
-
 def test_windowed_counts_stream_matches_batch(spark):
     stream = ingest.read_event_stream(spark, SF_SMOKE)
-    name = f"wc_{uuid.uuid4().hex[:8]}"
-    _run_to_memory(ingest.windowed_counts(stream), name)
+    q = run_available_now(ingest.windowed_counts(stream), "memory")
     got = {
         (r.win_start, r.event_type): r.n_events
-        for r in spark.sql(f"SELECT * FROM {name}").collect()
+        for r in spark.table(q.name).collect()
     }
     batch = ingest.windowed_counts(load_table(spark, SF_SMOKE, "events")).collect()
     want = {(r.win_start, r.event_type): r.n_events for r in batch}
@@ -52,9 +40,8 @@ def test_windowed_counts_stream_matches_batch(spark):
 
 def test_session_windows_stream_runs(spark):
     stream = ingest.read_event_stream(spark, SF_SMOKE)
-    name = f"sw_{uuid.uuid4().hex[:8]}"
-    _run_to_memory(ingest.session_windows(stream), name)
-    rows = spark.sql(f"SELECT * FROM {name}").collect()
+    q = run_available_now(ingest.session_windows(stream), "memory")
+    rows = spark.table(q.name).collect()
     assert rows and all(r.n_events > 0 for r in rows)
 
 
@@ -62,10 +49,7 @@ def test_incremental_index_append_prunable(spark):
     emb = load_table(spark, SF_SMOKE, "embeddings")
     _, centroids = build_ivf_index(emb)
     with tempfile.TemporaryDirectory() as tmp:
-        q = ingest.incremental_index_append(
-            spark, SF_SMOKE, centroids, f"{tmp}/index", f"{tmp}/ckpt"
-        )
-        q.awaitTermination(120)
+        ingest.incremental_index_append(spark, SF_SMOKE, centroids, f"{tmp}/index")
         indexed = spark.read.parquet(f"{tmp}/index")
         assert indexed.count() == emb.count()
         assert "centroid_id" in indexed.columns
@@ -96,22 +80,12 @@ def test_stateful_running_user_stats_across_batches(spark):
             .option("maxFilesPerTrigger", 1)
             .parquet(f"{tmp}/src")
         )
-        name = f"st_{uuid.uuid4().hex[:8]}"
-        q = (
-            running_user_stats(stream)
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.processAllAvailable()
+        q = run_available_now(running_user_stats(stream), "memory", "update")
         n_batches = len(q.recentProgress)
-        q.stop()
         assert n_batches >= 3  # state really crossed batch boundaries
         # update mode: the LAST emitted row per user is the final state
         final = {}
-        for r in spark.sql(f"SELECT * FROM {name}").collect():
+        for r in spark.table(q.name).collect():
             final[r.user_id] = (r.n_events, r.total_value, r.max_value)
         want = {
             r.user_id: (r.n, r.total, r.mx)
@@ -179,24 +153,12 @@ def test_watermark_drops_late_window(spark):
             .agg(F.count(F.lit(1)).alias("n"))
             .select(F.col("window.start").alias("win_start"), "n")
         )
-        name = f"late_{uuid.uuid4().hex[:8]}"
-        q = (
-            windowed.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.processAllAvailable()
+        q = run_available_now(windowed, "memory")
         dropped = sum(
             (p["stateOperators"][0]["numRowsDroppedByWatermark"] if p["stateOperators"] else 0)
             for p in q.recentProgress
         )
-        q.stop()
-        starts = {
-            r.win_start.isoformat()
-            for r in spark.sql(f"SELECT * FROM {name}").collect()
-        }
+        starts = {r.win_start.isoformat() for r in spark.table(q.name).collect()}
         assert dropped >= 1  # the engine itself reported the drop
         # event 4's 05:00 window must NOT appear; finalized on-time
         # 10:00 window must
@@ -218,17 +180,8 @@ def test_stream_static_enrichment_join(spark):
         .groupBy("category")
         .agg(F.count(F.lit(1)).alias("n"))
     )
-    name = f"enr_{uuid.uuid4().hex[:8]}"
-    q = (
-        enriched.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    got = {r.category: r.n for r in spark.sql(f"SELECT * FROM {name}").collect()}
+    q = run_available_now(enriched, "memory", "complete")
+    got = {r.category: r.n for r in spark.table(q.name).collect()}
     want = {
         r.category: r.n
         for r in load_table(spark, SF_SMOKE, "events")
@@ -265,16 +218,7 @@ def test_streaming_dedup_within_watermark(spark):
         deduped = stream.withWatermark("ts", "10 days").dropDuplicatesWithinWatermark(
             ["event_id"]
         )
-        name = f"dd_{uuid.uuid4().hex[:8]}"
-        q = (
-            deduped.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
+        name = run_available_now(deduped, "memory").name
         n = spark.sql(f"SELECT COUNT(DISTINCT event_id) c FROM {name}").first()["c"]
         total = spark.sql(f"SELECT COUNT(*) c FROM {name}").first()["c"]
         assert n == events.count()  # every key survives exactly once
@@ -316,8 +260,7 @@ def test_stream_stream_interval_join(spark):
             """
         ),
     )
-    name = f"ssj_{uuid.uuid4().hex[:8]}"
-    _run_to_memory(joined, name)
+    name = run_available_now(joined, "memory").name
     got = spark.sql(
         f"SELECT COUNT(*) AS n, COUNT(DISTINCT purchase_id) AS np FROM {name}"
     ).first()
@@ -348,26 +291,6 @@ def test_stream_stream_interval_join(spark):
     assert (got.n, got.np) == (want.n, want.np)
 
 
-def _run_complete_foreach_batch(df):
-    """Drive a streaming aggregation in COMPLETE mode through
-    foreachBatch; each epoch delivers the full updated state, so the
-    last epoch IS the final result."""
-    state = {}
-
-    def sink(batch_df, epoch_id):
-        state["rows"] = [tuple(r) for r in batch_df.collect()]
-
-    q = (
-        df.writeStream.foreachBatch(sink)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    return state.get("rows", [])
-
-
 def test_tumbling_stream_equals_batch(spark):
     """FULL batch≡stream equivalence for the registered tumbling shape
     (VERDICT r2 #6): the same operators/windows.tumbling_agg expression
@@ -376,7 +299,11 @@ def test_tumbling_stream_equals_batch(spark):
     the identical result set — not just an append-mode subset."""
     from mcp_server_vector_search_spark.operators.windows import tumbling_agg
 
-    got = set(_run_complete_foreach_batch(tumbling_agg(ingest.read_event_stream(spark, SF_SMOKE))))
+    # complete mode: each epoch replaces the memory sink with the full
+    # updated state, so the sink holds the final result
+    stream = ingest.read_event_stream(spark, SF_SMOKE)
+    q = run_available_now(tumbling_agg(stream), "memory", "complete")
+    got = {tuple(r) for r in spark.table(q.name).collect()}
     want = {tuple(r) for r in tumbling_agg(load_table(spark, SF_SMOKE, "events")).collect()}
     assert got == want and got
 
@@ -385,11 +312,9 @@ def test_session_stream_equals_batch(spark):
     """FULL batch≡stream equivalence for gap-based session windows:
     F.session_window is the same Catalyst expression in both modes; the
     streaming state machine must converge to the batch gap-merge."""
-    got = set(
-        _run_complete_foreach_batch(
-            ingest.session_windows(ingest.read_event_stream(spark, SF_SMOKE))
-        )
-    )
+    stream = ingest.read_event_stream(spark, SF_SMOKE)
+    q = run_available_now(ingest.session_windows(stream), "memory", "complete")
+    got = {tuple(r) for r in spark.table(q.name).collect()}
     want = {
         tuple(r)
         for r in ingest.session_windows(load_table(spark, SF_SMOKE, "events")).collect()
@@ -406,18 +331,8 @@ def test_chunking_stream_equals_batch(spark):
         chunk_documents_overlap,
     )
 
-    tmp = tempfile.mkdtemp(prefix="chunk_stream_")
-    q = (
-        ingest.chunk_document_stream(spark, SF_SMOKE)
-        .writeStream.format("memory")
-        .queryName("chunk_stream_eq")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    got = {tuple(r) for r in spark.sql("SELECT * FROM chunk_stream_eq").collect()}
+    q = run_available_now(ingest.chunk_document_stream(spark, SF_SMOKE), "memory")
+    got = {tuple(r) for r in spark.table(q.name).collect()}
     want = {tuple(r) for r in chunk_documents_overlap(spark, SF_SMOKE).collect()}
     assert got == want and got
 
@@ -444,12 +359,8 @@ def test_incremental_dedup_stream_equals_batch(spark):
         doc_fingerprints(docs.where(F.col("doc_id") < cut))
     ).localCheckpoint(eager=True)
 
-    out = tempfile.mkdtemp(prefix="incr_dedup_out_")
-    ckpt = tempfile.mkdtemp(prefix="incr_dedup_ckpt_")
-    q = ingest.incremental_dedup_stream(
-        spark, SF_SMOKE, corpus_fps, out, ckpt, min_doc_id=cut
-    )
-    q.awaitTermination(120)
+    out = scratch_dir("incr_dedup_out_")
+    ingest.incremental_dedup_stream(spark, SF_SMOKE, corpus_fps, out, min_doc_id=cut)
     got = {tuple(r) for r in spark.read.parquet(out).collect()}
     want = {tuple(r) for r in dedup_incremental_exact(spark, SF_SMOKE).collect()}
     assert got == want and got
@@ -462,17 +373,8 @@ def test_redaction_stream_equals_batch(spark):
     from mcp_server_vector_search_spark.operators.curation import redact_rows
     from mcp_server_vector_search_spark.sources.tables import load_table
 
-    q = (
-        ingest.redact_document_stream(spark, SF_SMOKE)
-        .writeStream.format("memory")
-        .queryName("redact_stream_eq")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    got = {tuple(r) for r in spark.sql("SELECT * FROM redact_stream_eq").collect()}
+    q = run_available_now(ingest.redact_document_stream(spark, SF_SMOKE), "memory")
+    got = {tuple(r) for r in spark.table(q.name).collect()}
     want = {
         tuple(r)
         for r in redact_rows(load_table(spark, SF_SMOKE, "documents")).collect()
@@ -490,18 +392,9 @@ def test_temperature_mix_stream_equals_batch(spark):
         mix_temperature_sources,
     )
 
-    q = (
-        ingest.temperature_mix_stream(spark, SF_SMOKE)
-        .writeStream.format("memory")
-        .queryName("temp_mix_stream_eq")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
+    q = run_available_now(ingest.temperature_mix_stream(spark, SF_SMOKE), "memory")
     got = (
-        spark.sql("SELECT * FROM temp_mix_stream_eq")
+        spark.table(q.name)
         .groupBy("source")
         .agg(
             F.count(F.lit(1)).alias("n_rows_out"),
@@ -542,10 +435,7 @@ def test_streaming_append_serves_identically_to_rebuild(spark):
             glob.glob(f"{tmp}/delta_out/part-*.parquet")[0],
             f"{tmp}/delta_sf/embeddings.parquet",
         )
-        q = ingest.incremental_index_append(
-            spark, f"{tmp}/delta_sf", centroids, f"{tmp}/idx", f"{tmp}/ckpt"
-        )
-        q.awaitTermination(120)
+        ingest.incremental_index_append(spark, f"{tmp}/delta_sf", centroids, f"{tmp}/idx")
         # from-scratch rebuild over the full corpus
         write_ivf_index(assigned, f"{tmp}/full")
         qvec = prompt_embedding()
@@ -587,19 +477,11 @@ def test_incremental_minhash_stream_equals_batch(spark):
         extra_cols=("toks",),
     ).localCheckpoint(eager=True)
 
-    q = (
-        ingest.incremental_minhash_stream(spark, SF_SMOKE, store, min_doc_id=cut)
-        .writeStream.format("memory")
-        .queryName("inc_minhash_stream_eq")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+    q = run_available_now(
+        ingest.incremental_minhash_stream(spark, SF_SMOKE, store, min_doc_id=cut),
+        "memory",
     )
-    q.processAllAvailable()
-    q.stop()
-    got = sorted(
-        tuple(r) for r in spark.sql("SELECT * FROM inc_minhash_stream_eq").collect()
-    )
+    got = sorted(tuple(r) for r in spark.table(q.name).collect())
     want = sorted(tuple(r) for r in dedup_incremental_minhash(spark, SF_SMOKE).collect())
     assert got == want and got  # row-level: the first-match filter dedupes
 
