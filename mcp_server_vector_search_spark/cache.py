@@ -6,8 +6,11 @@ A query may leave three kinds of scratch:
   shingles, edge lists read several times within ONE query's plan;
 - directories (``scratch_dir``): staged stream sources, checkpoints,
   sink round-trips, rewritten index layouts;
-- temp views (``scratch_view``): memory-sink tables and streaming
-  input views, which keep their rows in driver memory.
+- temp views (``scratch_view``, ``scratch_table``): memory-sink
+  tables and streaming input views, which keep their rows in driver
+  memory, and the input views of SQL-text queries.  A query never
+  registers a fixed view name: that would replace a view the caller
+  has under the same name.
 
 The one rule for scratch lifetime: it lives until the owner of the
 query's result has consumed it, and that owner then calls
@@ -66,6 +69,13 @@ def scratch_view(spark: SparkSession, prefix: str) -> str:
     registered under it is dropped by the next ``release_scratch()``."""
     name = f"{prefix}{next(_SEQ)}"
     _VIEWS.append((spark, name))
+    return name
+
+
+def scratch_table(df: DataFrame, prefix: str) -> str:
+    """Register ``df`` under a new ``scratch_view`` name; returns it."""
+    name = scratch_view(df.sparkSession, prefix)
+    df.createOrReplaceTempView(name)
     return name
 
 

@@ -14,12 +14,20 @@ the driver contract here is plain Python).
 The corpus is materialized ONCE, at construction: the reference stores
 each embedding as a node property behind its vector index
 (README.md:72-79) and per request embeds only the prompt and runs one
-index query (server.py:85-91).  ``SparkVectorSearch.__init__``
-persists the corpus (``MEMORY_AND_DISK``) and runs one action, so the
-embedding UDF and any shuffle in the corpus plan run once; a request is
-one scan of the cached rows into ``TakeOrderedAndProject``, with the
-prompt vector built from one SQL parse (``neo4j_score``'s literal
-form).  ``close()`` releases the cached blocks.
+index query (server.py:85-91).  ``SparkVectorSearch.__init__`` adds
+each row's embedding norm (``l2_norm``, the same expression the score
+would compute per row, so the same bits), persists the corpus
+(``MEMORY_AND_DISK``), runs one action and registers it as a temp view
+under a name unique to the facade; so the embedding UDF, any shuffle in
+the corpus plan and every request-independent norm run once.
+
+A request is ONE SQL statement over that view: one parse and analysis
+on the driver, one scan of the cached rows into
+``TakeOrderedAndProject`` on the executors.  The prompt vector enters
+as one folded array literal (``neo4j_score_sql``), and its norm only
+inside an array literal, so after warm-up a request compiles no new
+code (see ``functions/vector.py``).  ``close()`` drops the view and
+releases the cached blocks.
 
 Parity decisions, each cited to the reference:
 
@@ -44,6 +52,7 @@ Parity decisions, each cited to the reference:
 from __future__ import annotations
 
 import json
+import uuid
 from typing import Callable, Optional
 
 from pyspark import StorageLevel
@@ -51,10 +60,12 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .functions.embedder import DEFAULT_DIM, hash_embedder
-from .operators.topk import SCORE_DECIMALS, topk
-from .functions.vector import neo4j_score
+from .functions.vector import l2_norm, neo4j_score_sql
+# topk stays importable from here: perfbench's serve tracer wraps engine.topk
+from .operators.topk import SCORE_DECIMALS, topk  # noqa: F401
 
 DEFAULT_K = 10  # reference server.py:87
+NORM_COL = "__embedding_norm"
 
 
 class SparkVectorSearch:
@@ -67,10 +78,11 @@ class SparkVectorSearch:
     deterministic hash embedder (functions/embedder.py) — swap in
     ``model_embedder(...)`` for a real model.
 
-    Construction persists ``corpus`` and materializes it with one
-    action; call ``close()`` to release the cached blocks.  Persisting
-    is keyed by plan, so closing also uncaches any other DataFrame with
-    the same plan.
+    Construction adds the ``NORM_COL`` norm column, persists the
+    corpus, materializes it with one action and registers it as a temp
+    view; call ``close()`` to drop the view and release the cached
+    blocks.  Persisting is keyed by plan, so closing also uncaches any
+    other DataFrame with the same plan.
     """
 
     def __init__(
@@ -92,11 +104,16 @@ class SparkVectorSearch:
         missing = {"name", "description", "embedding"} - set(corpus.columns)
         if missing:
             raise ValueError(f"corpus is missing columns {sorted(missing)}")
-        self.corpus = corpus.persist(StorageLevel.MEMORY_AND_DISK)
+        self.corpus = corpus.withColumn(NORM_COL, l2_norm("embedding")).persist(
+            StorageLevel.MEMORY_AND_DISK
+        )
         self.corpus.count()
+        self._view = f"__vector_search_corpus_{uuid.uuid4().hex}"
+        self.corpus.createOrReplaceTempView(self._view)
 
     def close(self) -> None:
-        """Release the cached corpus."""
+        """Drop the corpus view and release the cached corpus."""
+        self.corpus.sparkSession.catalog.dropTempView(self._view)
         self.corpus.unpersist()
 
     def _embed_prompt(self, prompt: str) -> list[float]:
@@ -120,26 +137,28 @@ class SparkVectorSearch:
             )
         return vec
 
+    def _topk_sql(self, prompt: str, k: int) -> str:
+        """The one request statement: (name, description, score) scored
+        against the embedded prompt, ordered and limited (Catalyst fuses
+        ORDER BY + LIMIT into ``TakeOrderedAndProject``)."""
+        score = neo4j_score_sql("embedding", self._embed_prompt(prompt), norm=NORM_COL)
+        return (
+            f"SELECT name, description, round({score}, {SCORE_DECIMALS}) AS score"
+            f" FROM {self._view} ORDER BY score DESC, name ASC LIMIT {k:d}"
+        )
+
     def search_df(self, prompt: str, k: int = DEFAULT_K) -> DataFrame:
         """The lazy form: scored, ordered, limited DataFrame of
         (name, description, score)."""
-        qv = self._embed_prompt(prompt)
-        score = F.round(neo4j_score("embedding", qv), SCORE_DECIMALS)
-        hits = self.corpus.select("name", "description", score.alias("score"))
-        return topk(hits, k, [F.desc("score"), F.asc("name")])
+        return self.corpus.sparkSession.sql(self._topk_sql(prompt, k))
 
     def search(self, prompt: str, k: int = DEFAULT_K) -> str:
         """The reference tool's contract: JSON array string of top-k
         rows, score-descending (server.py:64,102)."""
-        rows = (
-            self.search_df(prompt, k)
-            .select(
-                F.to_json(
-                    F.struct("name", "description", "score")
-                ).alias("j")
-            )
-            .collect()
-        )
+        rows = self.corpus.sparkSession.sql(
+            "SELECT to_json(struct(name, description, score)) AS j"
+            f" FROM ({self._topk_sql(prompt, k)})"
+        ).collect()
         return "[" + ", ".join(r["j"] for r in rows) + "]"
 
 

@@ -36,6 +36,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from ..cache import scratch_table
 from ..registry import register
 from ..sources.tables import load_table
 from .relational import _dec, _dsum
@@ -875,8 +876,8 @@ def q_stats_ab_welch(spark: SparkSession, sf_dir: str) -> DataFrame:
     order.  The Welch form (unequal variances, Satterthwaite df) is the
     standard experimentation readout; |t| > 1.96 flags ~95% two-sided
     significance."""
-    load_table(spark, sf_dir, "events").createOrReplaceTempView("ab_events")
-    return spark.sql(welch_sql("ab_events"))
+    events = scratch_table(load_table(spark, sf_dir, "events"), "ab_events_")
+    return spark.sql(welch_sql(events))
 
 
 # ---------------------------------------------------------------------------
@@ -980,8 +981,8 @@ def q_stats_ab_cuped(spark: SparkSession, sf_dir: str) -> DataFrame:
     BIGINT sufficient statistics, one shared SQL text, so theta and the
     adjusted means hash bit for bit; the variant split is the same
     sign-safe user-parity rule."""
-    load_table(spark, sf_dir, "events").createOrReplaceTempView("cuped_events")
-    return spark.sql(_CUPED_SQL.format(events="cuped_events"))
+    events = scratch_table(load_table(spark, sf_dir, "events"), "cuped_events_")
+    return spark.sql(_CUPED_SQL.format(events=events))
 
 
 # ---------------------------------------------------------------------------
@@ -1035,8 +1036,8 @@ def q_stats_ab_srm_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     so the flag is engine-exact.  One corpus pass, 5-key agg + a 5-row
     rollup — the cheapest query in the experimentation family, and the
     one that must run FIRST."""
-    load_table(spark, sf_dir, "events").createOrReplaceTempView("srm_events")
-    return spark.sql(_SRM_SQL.format(events="srm_events"))
+    events = scratch_table(load_table(spark, sf_dir, "events"), "srm_events_")
+    return spark.sql(_SRM_SQL.format(events=events))
 
 
 # ---------------------------------------------------------------------------
@@ -1283,5 +1284,5 @@ def q_events_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     coarse user-hash band and ntile within band, same plan shape).
     The identical SQL text runs on both engines, so the quartile cuts
     — which depend on exact rank arithmetic — hash bit for bit."""
-    load_table(spark, sf_dir, "events").createOrReplaceTempView("rfm_events")
-    return spark.sql(_RFM_SQL.format(events="rfm_events"))
+    events = scratch_table(load_table(spark, sf_dir, "events"), "rfm_events_")
+    return spark.sql(_RFM_SQL.format(events=events))

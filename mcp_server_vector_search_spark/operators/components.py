@@ -32,7 +32,7 @@ from pyspark.sql import functions as F
 
 from ..registry import register
 from .dedup import _NGRAM_ORACLE, dedup_ngram_jaccard
-from ..cache import scratch_persist
+from ..cache import scratch_persist, scratch_table
 
 MAX_ITER = 50
 # Below this edge count the pair table fits trivially on the driver and
@@ -385,25 +385,25 @@ _PAGERANK_DST_EXPR = (
 )
 
 
-def _pagerank_iter_sql(prev: str, nxt: str) -> str:
-    """One exact-integer PageRank round as a CTE pair: damped base +
-    floor-divided neighbor contributions (dangling mass intentionally
-    dropped — the decision is documented, identical on both engines)."""
-    return f"""{nxt} AS (
-  SELECT n.node,
-         CAST({15 * PAGERANK_START // 100} + COALESCE(SUM(
-           CAST(FLOOR((85.0 * p.r) / (100.0 * g.d)) AS BIGINT)), 0) AS BIGINT) AS r
-  FROM nodes n
-  LEFT JOIN edges e ON e.dst = n.node
-  LEFT JOIN {prev} p ON p.node = e.src
-  LEFT JOIN deg g ON g.src = e.src
-  GROUP BY n.node
-)"""
+def _citation_edges(spark: SparkSession, docs: str, n: int) -> DataFrame:
+    """The synthesized 3-out citation graph over the view ``docs`` of an
+    ``n``-doc corpus, materialized once (localCheckpoint)."""
+    return spark.sql(
+        f"""
+        SELECT src, dst FROM (
+          SELECT d.doc_id AS src,
+                 ({_PAGERANK_DST_EXPR.replace("{n}", str(n))}) AS dst
+          FROM {docs} d
+          CROSS JOIN (VALUES (0), (1), (2)) AS js(j)
+        ) t WHERE src <> dst
+        """
+    ).localCheckpoint(eager=True)
 
 
 def _pagerank_sql(documents: str) -> str:
     iters = ",\n".join(
-        _pagerank_iter_sql(f"r{i}", f"r{i + 1}") for i in range(PAGERANK_ROUNDS)
+        _pagerank_iter_sql_t(f"r{i}", f"r{i + 1}", "nodes", "edges", "deg")
+        for i in range(PAGERANK_ROUNDS)
     )
     dst = _PAGERANK_DST_EXPR.replace("{n}", "nn.n")
     return f"""
@@ -452,27 +452,22 @@ def q_graph_pagerank_integer(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = load_table(spark, sf_dir, "documents")
     n = d.count()  # bounded: 1 driver scalar (the corpus count)
-    d.createOrReplaceTempView("__pr_docs")
-    spark.sql(
-        f"""
-        SELECT src, dst FROM (
-          SELECT d.doc_id AS src,
-                 ({_PAGERANK_DST_EXPR.replace("{n}", str(n))}) AS dst
-          FROM __pr_docs d
-          CROSS JOIN (VALUES (0), (1), (2)) AS js(j)
-        ) t WHERE src <> dst
-        """
-    ).localCheckpoint(eager=True).createOrReplaceTempView("edges")
-    spark.sql(
-        "SELECT src, CAST(COUNT(*) AS BIGINT) AS d FROM edges GROUP BY src"
-    ).localCheckpoint(eager=True).createOrReplaceTempView("deg")
+    docs = scratch_table(d, "pr_docs_")
+    edges = scratch_table(_citation_edges(spark, docs, n), "pr_edges_")
+    deg = scratch_table(
+        spark.sql(
+            f"SELECT src, CAST(COUNT(*) AS BIGINT) AS d FROM {edges} GROUP BY src"
+        ).localCheckpoint(eager=True),
+        "pr_deg_",
+    )
     iters = ",\n".join(
-        _pagerank_iter_sql(f"r{i}", f"r{i + 1}") for i in range(PAGERANK_ROUNDS)
+        _pagerank_iter_sql_t(f"r{i}", f"r{i + 1}", "nodes", edges, deg)
+        for i in range(PAGERANK_ROUNDS)
     )
     return spark.sql(
         f"""
-WITH nodes AS (SELECT doc_id AS node FROM __pr_docs),
-r0 AS (SELECT doc_id AS node, CAST({PAGERANK_START} AS BIGINT) AS r FROM __pr_docs),
+WITH nodes AS (SELECT doc_id AS node FROM {docs}),
+r0 AS (SELECT doc_id AS node, CAST({PAGERANK_START} AS BIGINT) AS r FROM {docs}),
 {iters}
 SELECT node AS doc_id, r AS rank_scaled
 FROM r{PAGERANK_ROUNDS}
@@ -618,29 +613,22 @@ def q_graph_pagerank_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     new batch's edge derivation is the only scan of new data."""
     from ..sources.tables import load_table
 
-    d = load_table(spark, sf_dir, "documents")
-    d.createOrReplaceTempView("__pri_docs")
-    graph = _PAGERANK_INCR_GRAPH_SQL.replace("{documents}", "__pri_docs")
+    docs = scratch_table(load_table(spark, sf_dir, "documents"), "pri_docs_")
+    graph = _PAGERANK_INCR_GRAPH_SQL.replace("{documents}", docs)
     # edges_new is NOT checkpointed: the tail SQL reads only the four
     # views below (edges_all's CTE re-derives the new batch inline), so
     # materializing it was a wasted job per invocation (r14 advisor).
+    body = _pagerank_incr_tail_sql()
     for name in ("edges_old", "edges_all", "deg_old", "deg_all"):
-        spark.sql(
-            f"WITH {graph}\nSELECT * FROM {name}"
-        ).localCheckpoint(eager=True).createOrReplaceTempView(f"__pri_{name}")
-    body = (
-        _pagerank_incr_tail_sql()
-        .replace("edges_old", "__pri_edges_old")
-        .replace("edges_all", "__pri_edges_all")
-        .replace("deg_old", "__pri_deg_old")
-        .replace("deg_all", "__pri_deg_all")
-    )
+        table = spark.sql(f"WITH {graph}\nSELECT * FROM {name}")
+        view = scratch_table(table.localCheckpoint(eager=True), f"pri_{name}_")
+        body = body.replace(name, view)
     return spark.sql(
         f"""
 WITH cut AS (SELECT CAST(FLOOR({PAGERANK_INCR_FRACTION} * MAX(doc_id)) AS BIGINT) AS c
-             FROM __pri_docs),
-nodes_old AS (SELECT doc_id AS node FROM __pri_docs, cut WHERE doc_id < cut.c),
-nodes_all AS (SELECT doc_id AS node FROM __pri_docs),
+             FROM {docs}),
+nodes_old AS (SELECT doc_id AS node FROM {docs}, cut WHERE doc_id < cut.c),
+nodes_all AS (SELECT doc_id AS node FROM {docs}),
 {body}
 """
     )
@@ -750,21 +738,12 @@ def q_graph_hits_integer(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = load_table(spark, sf_dir, "documents")
     n = d.count()  # bounded: 1 driver scalar (the corpus count)
-    d.createOrReplaceTempView("__hits_docs")
-    spark.sql(
-        f"""
-        SELECT src, dst FROM (
-          SELECT d.doc_id AS src,
-                 ({_PAGERANK_DST_EXPR.replace("{n}", str(n))}) AS dst
-          FROM __hits_docs d
-          CROSS JOIN (VALUES (0), (1), (2)) AS js(j)
-        ) t WHERE src <> dst
-        """
-    ).localCheckpoint(eager=True).createOrReplaceTempView("__hits_edges")
-    body = _hits_tail_sql(edges="__hits_edges")
+    docs = scratch_table(d, "hits_docs_")
+    edges = scratch_table(_citation_edges(spark, docs, n), "hits_edges_")
+    body = _hits_tail_sql(edges=edges)
     return spark.sql(
         f"""
-WITH nodes AS (SELECT doc_id AS node FROM __hits_docs),
+WITH nodes AS (SELECT doc_id AS node FROM {docs}),
 {body}
 """
     )
@@ -864,18 +843,8 @@ def q_graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = load_table(spark, sf_dir, "documents")
     n = d.count()  # bounded: 1 driver scalar (the corpus count)
-    d.createOrReplaceTempView("__tri_docs")
-    spark.sql(
-        f"""
-        SELECT src, dst FROM (
-          SELECT d.doc_id AS src,
-                 ({_PAGERANK_DST_EXPR.replace("{n}", str(n))}) AS dst
-          FROM __tri_docs d
-          CROSS JOIN (VALUES (0), (1), (2)) AS js(j)
-        ) t WHERE src <> dst
-        """
-    ).localCheckpoint(eager=True).createOrReplaceTempView("__tri_edges")
-    body = _triangle_tail_sql(edges="__tri_edges")
+    edges = _citation_edges(spark, scratch_table(d, "tri_docs_"), n)
+    body = _triangle_tail_sql(edges=scratch_table(edges, "tri_edges_"))
     return spark.sql(f"WITH {body}")
 
 
@@ -1007,24 +976,22 @@ def q_graph_kcore_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = load_table(spark, sf_dir, "documents")
     n = d.count()  # bounded: 1 driver scalar (the corpus count)
-    d.createOrReplaceTempView("__kc_docs")
-    cur = "__kc_a0"
-    spark.sql(_kcore_edges_sql("__kc_docs d", str(n))).localCheckpoint(
-        eager=True
-    ).createOrReplaceTempView(cur)
-    for i in range(KCORE_ROUNDS):
-        nxt = f"__kc_a{i + 1}"
+    docs = scratch_table(d, "kc_docs_")
+    cur = scratch_table(
+        spark.sql(_kcore_edges_sql(f"{docs} d", str(n))).localCheckpoint(eager=True),
+        "kc_a_",
+    )
+    for _ in range(KCORE_ROUNDS):
         step = spark.sql(
-            f"WITH {_kcore_round_sql_t(cur, '__kc_deg', '__kc_rm', nxt)}\n"
-            f"SELECT * FROM {nxt}"
+            f"WITH {_kcore_round_sql_t(cur, '__kc_deg', '__kc_rm', '__kc_next')}\n"
+            "SELECT * FROM __kc_next"
         ).localCheckpoint(eager=True)
         # bounded driver scalar: did this round remove anything?
         removed = spark.sql(
             f"WITH {_kcore_round_sql_t(cur, '__kc_deg2', '__kc_rm2', '__kc_nxt2')}\n"
             f"SELECT COUNT(*) AS c FROM __kc_rm2"
         ).collect()[0]["c"]
-        step.createOrReplaceTempView(nxt)
-        cur = nxt
+        cur = scratch_table(step, "kc_a_")
         if removed == 0:
             break
     return spark.sql(_kcore_final_sql_t(cur))

@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..cache import scratch_table
 from ..registry import register
 from ..sources.tables import load_table
 
@@ -108,11 +109,11 @@ WHERE doc_id < 100
 def udtf_tokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents").where(F.col("doc_id") < 100)
     spark.udtf.register("tokenize_udtf", _TokenizeUDTF)
-    d.createOrReplaceTempView("__udtf_docs")
+    docs = scratch_table(d, "udtf_docs_")
     return spark.sql(
-        """
+        f"""
         SELECT d.doc_id, t.pos, t.tok
-        FROM __udtf_docs d, LATERAL tokenize_udtf(d.text) t
+        FROM {docs} d, LATERAL tokenize_udtf(d.text) t
         """
     )
 
@@ -345,11 +346,11 @@ def udtf_polymorphic_schema(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly the eval's padding)."""
     d = load_table(spark, sf_dir, "documents").where(F.col("doc_id") < 100)
     spark.udtf.register("first_tokens_udtf", _FirstTokensUDTF)
-    d.createOrReplaceTempView("__udtf_poly_docs")
+    docs = scratch_table(d, "udtf_poly_docs_")
     return spark.sql(
-        """
+        f"""
         SELECT d.doc_id, t.t0, t.t1, t.t2
-        FROM __udtf_poly_docs d, LATERAL first_tokens_udtf(d.text, 3) t
+        FROM {docs} d, LATERAL first_tokens_udtf(d.text, 3) t
         """
     )
 
@@ -429,14 +430,17 @@ def udtf_table_argument(spark: SparkSession, sf_dir: str) -> DataFrame:
     itself).  The floor is intrinsic to the row-at-a-time UDTF
     contract — a vectorizable fold belongs in a grouped-agg pandas
     UDF, which is exactly what ``udaf_grouped_geomean`` certifies."""
-    load_table(spark, sf_dir, "events").where(
-        F.pmod("event_id", F.lit(4)) == 0
-    ).select("event_type", "value").createOrReplaceTempView("__udtf_events")
+    events = scratch_table(
+        load_table(spark, sf_dir, "events")
+        .where(F.pmod("event_id", F.lit(4)) == 0)
+        .select("event_type", "value"),
+        "udtf_events_",
+    )
     spark.udtf.register("partition_summary_udtf", _PartitionSummaryUDTF)
     return spark.sql(
-        """
+        f"""
         SELECT * FROM partition_summary_udtf(
-          TABLE(__udtf_events) PARTITION BY event_type
+          TABLE({events}) PARTITION BY event_type
         )
         ORDER BY event_type
         """

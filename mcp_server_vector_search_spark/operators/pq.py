@@ -55,7 +55,7 @@ from ..functions.train import (
     sql_float,
     sql_floats,
 )
-from ..functions.vector import l2_normalize, matrix_lit, neo4j_score
+from ..functions.vector import l2_normalize, matrix_lit, neo4j_score, vector_lit
 from ..registry import register
 from ..sources.tables import load_table, table_path
 from .topk import QUERY_VEC_ID, SCORE_DECIMALS
@@ -111,9 +111,7 @@ def _encode(unit_df: DataFrame, books) -> DataFrame:
     def code_for(m: int) -> F.Column:
         sub = F.slice(F.col("__unit"), m * SUB_DIM + 1, SUB_DIM)
         book_m = matrix_lit(books[m])
-        cn2_m = F.expr(
-            "array(" + ",".join(f"{float(v)!r}D" for v in norms2[m]) + ")"
-        )
+        cn2_m = vector_lit(norms2[m])
         dists = F.transform(
             F.sequence(F.lit(1), F.lit(K_CODEWORDS)),
             lambda c: F.round(

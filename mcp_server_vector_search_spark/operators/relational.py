@@ -36,6 +36,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from ..cache import scratch_table
 from ..registry import register
 from ..sources.tables import load_table
 
@@ -175,11 +176,11 @@ GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority))
 def agg_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """GROUPING SETS via Spark SQL (same Catalyst Expand plan as
     rollup/cube; the SQL form is the idiomatic spelling)."""
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("orders")
+    orders = scratch_table(load_table(spark, sf_dir, "orders"), "orders_")
     return spark.sql(
-        """
+        f"""
         SELECT o_orderstatus, o_orderpriority, COUNT(*) AS n
-        FROM orders
+        FROM {orders}
         GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority))
         """
     )
@@ -770,15 +771,17 @@ def scalar_json_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
 _CORRELATED_SQL = """
 SELECT o.o_orderkey, o.o_custkey,
        CAST(o.o_totalprice AS DOUBLE) AS o_totalprice
-FROM orders o
+FROM {orders} o
 WHERE o.o_totalprice > 2 * (
-  SELECT AVG(o2.o_totalprice) FROM orders o2
+  SELECT AVG(o2.o_totalprice) FROM {orders} o2
   WHERE o2.o_custkey = o.o_custkey
 )
 """
 
 
-@register("subquery_correlated_above_avg", oracle=_CORRELATED_SQL)
+@register(
+    "subquery_correlated_above_avg", oracle=_CORRELATED_SQL.format(orders="orders")
+)
 def subquery_correlated_above_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Correlated scalar subquery through the SQL-TEXT entry path (the
     engine's second API surface next to the DataFrame builders; same
@@ -786,8 +789,8 @@ def subquery_correlated_above_avg(spark: SparkSession, sf_dir: str) -> DataFrame
     an aggregate + join — never a per-row re-execution, which is what
     makes correlated predicates survive at 100 TB.  Identical SQL runs
     on the DuckDB oracle."""
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("orders")
-    return spark.sql(_CORRELATED_SQL)
+    orders = scratch_table(load_table(spark, sf_dir, "orders"), "orders_")
+    return spark.sql(_CORRELATED_SQL.format(orders=orders))
 
 
 @register(
@@ -817,15 +820,18 @@ def unpivot_lineitem_measures(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _LATERAL_SQL = """
 SELECT c.c_custkey, t.o_orderkey, t.o_totalprice
-FROM customer c,
-LATERAL (SELECT o_orderkey, o_totalprice FROM orders o
+FROM {customer} c,
+LATERAL (SELECT o_orderkey, o_totalprice FROM {orders} o
          WHERE o.o_custkey = c.c_custkey
          ORDER BY o_totalprice DESC, o_orderkey
          LIMIT 2) t
 """
 
 
-@register("join_lateral_topn", oracle=_LATERAL_SQL)
+@register(
+    "join_lateral_topn",
+    oracle=_LATERAL_SQL.format(customer="customer", orders="orders"),
+)
 def join_lateral_topn(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Correlated LATERAL subquery with per-row ORDER BY + LIMIT (the
     SQL-standard spelling of "top-N per key"), through the SQL-text
@@ -837,16 +843,19 @@ def join_lateral_topn(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-execution of the subquery.  That rewrite is what makes lateral
     top-N survive at 100 TB: cost is one shuffle of orders on the
     correlation key, not |customer| subqueries."""
-    load_table(spark, sf_dir, "customer").createOrReplaceTempView("customer")
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("orders")
-    return spark.sql(_LATERAL_SQL)
+    return spark.sql(
+        _LATERAL_SQL.format(
+            customer=scratch_table(load_table(spark, sf_dir, "customer"), "customer_"),
+            orders=scratch_table(load_table(spark, sf_dir, "orders"), "orders_"),
+        )
+    )
 
 
 _RECURSIVE_SPINE_SQL = """
 WITH RECURSIVE bounds AS (
   SELECT DATE_TRUNC('year', MIN(o_orderdate)) AS lo,
          DATE_TRUNC('year', MAX(o_orderdate)) AS hi
-  FROM orders
+  FROM {orders}
 ),
 years(y) AS (
   SELECT lo FROM bounds
@@ -855,7 +864,7 @@ years(y) AS (
 ),
 per_year AS (
   SELECT DATE_TRUNC('year', o_orderdate) AS y, COUNT(*) AS n_orders
-  FROM orders GROUP BY 1
+  FROM {orders} GROUP BY 1
 )
 SELECT CAST(years.y AS DATE) AS year_start,
        CAST(COALESCE(per_year.n_orders, 0) AS BIGINT) AS n_orders
@@ -863,7 +872,7 @@ FROM years LEFT JOIN per_year ON per_year.y = years.y
 """
 
 
-@register("recursive_year_spine", oracle=_RECURSIVE_SPINE_SQL)
+@register("recursive_year_spine", oracle=_RECURSIVE_SPINE_SQL.format(orders="orders"))
 def recursive_year_spine(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recursive CTE (Spark 4's ``WITH RECURSIVE``) building a calendar
     SPINE — the warehouse pattern that guarantees a row for every
@@ -879,8 +888,8 @@ def recursive_year_spine(spark: SparkSession, sf_dir: str) -> DataFrame:
     coarsest granularity the report needs; the same shape covers
     org-hierarchy / BOM closures where the frontier is the newly
     reached nodes."""
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("orders")
-    return spark.sql(_RECURSIVE_SPINE_SQL)
+    orders = scratch_table(load_table(spark, sf_dir, "orders"), "orders_")
+    return spark.sql(_RECURSIVE_SPINE_SQL.format(orders=orders))
 
 
 @register(
@@ -1297,19 +1306,19 @@ def q_scalar_sql_udf(spark: SparkSession, sf_dir: str) -> DataFrame:
     (no serialization boundary, no black box blocking predicate
     pushdown through it).  The oracle inlines the same arithmetic,
     which is precisely the claim being certified."""
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("sqludf_orders")
+    orders = scratch_table(load_table(spark, sf_dir, "orders"), "sqludf_orders_")
     spark.sql(
         "CREATE OR REPLACE TEMPORARY FUNCTION discounted("
         "p DECIMAL(12,2)) RETURNS DECIMAL(16,4) "
         "RETURN p * CAST(0.9 AS DECIMAL(3,2))"
     )
     return spark.sql(
-        """
+        f"""
 SELECT o_orderpriority,
        COUNT(*) AS n_orders,
        CAST(SUM(discounted(CAST(o_totalprice AS DECIMAL(12,2)))) AS DOUBLE)
            AS total_discounted
-FROM sqludf_orders
+FROM {orders}
 WHERE o_orderstatus = 'F'
 GROUP BY o_orderpriority
 ORDER BY o_orderpriority
@@ -1338,10 +1347,10 @@ def q_sql_pipe_syntax(spark: SparkSession, sf_dir: str) -> DataFrame:
     identical to the oracle's classic formulation.  Matters for an
     engine meant to host generated queries: pipes compose by string
     append, no re-nesting."""
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("pipe_orders")
+    orders = scratch_table(load_table(spark, sf_dir, "orders"), "pipe_orders_")
     return spark.sql(
-        """
-FROM pipe_orders
+        f"""
+FROM {orders}
 |> WHERE o_orderstatus = 'O'
 |> AGGREGATE COUNT(*) AS n_orders,
              CAST(SUM(CAST(o_totalprice AS DECIMAL(14,2))) AS DOUBLE)
@@ -1377,13 +1386,13 @@ def q_scalar_parameterized_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
     values.  The bound markers cover an equality, a numeric range, and
     an IN-list (array parameter expanded by element_at/array_contains
     semantics)."""
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("param_orders")
+    orders = scratch_table(load_table(spark, sf_dir, "orders"), "param_orders_")
     return spark.sql(
-        """
+        f"""
 SELECT o_orderkey,
        o_orderpriority,
        CAST(o_totalprice AS DOUBLE) AS price
-FROM param_orders
+FROM {orders}
 WHERE o_orderstatus = :status
   AND o_totalprice >= :minprice
   AND array_contains(:prios, o_orderpriority)
@@ -1416,14 +1425,14 @@ def q_agg_listagg_ordered(spark: SparkSession, sf_dir: str) -> DataFrame:
     and no two runs hash alike; with it the aggregate buffers sort
     locally per group before emitting.  DuckDB's STRING_AGG with
     ORDER BY is the exact oracle."""
-    load_table(spark, sf_dir, "nation").createOrReplaceTempView("la_nation")
-    load_table(spark, sf_dir, "region").createOrReplaceTempView("la_region")
+    nation = scratch_table(load_table(spark, sf_dir, "nation"), "la_nation_")
+    region = scratch_table(load_table(spark, sf_dir, "region"), "la_region_")
     return spark.sql(
-        """
+        f"""
 SELECT r.r_name,
        LISTAGG(n.n_name, ',') WITHIN GROUP (ORDER BY n.n_name) AS members,
        COUNT(*) AS n_members
-FROM la_nation n JOIN la_region r ON n.n_regionkey = r.r_regionkey
+FROM {nation} n JOIN {region} r ON n.n_regionkey = r.r_regionkey
 GROUP BY r.r_name
 ORDER BY r.r_name
 """
@@ -1453,19 +1462,19 @@ def q_scalar_session_variables(spark: SparkSession, sf_dir: str) -> DataFrame:
     injection-proof because values never enter SQL text.  The variable
     here carries a computed aggregate into a second query; the oracle
     inlines the same scalar subquery."""
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("var_orders")
+    orders = scratch_table(load_table(spark, sf_dir, "orders"), "var_orders_")
     spark.sql(
         "DECLARE OR REPLACE VARIABLE var_avg_price DOUBLE DEFAULT 0.0"
     )
     spark.sql(
-        "SET VAR var_avg_price = (SELECT AVG(o_totalprice) FROM var_orders "
+        f"SET VAR var_avg_price = (SELECT AVG(o_totalprice) FROM {orders} "
         "WHERE o_orderstatus = 'O')"
     )
     return spark.sql(
-        """
+        f"""
 SELECT o_orderpriority,
        COUNT(*) AS n_above_avg
-FROM var_orders
+FROM {orders}
 WHERE o_orderstatus = 'O' AND o_totalprice > var_avg_price
 GROUP BY o_orderpriority
 ORDER BY o_orderpriority
@@ -1501,16 +1510,16 @@ def q_sql_scripting_control_flow(spark: SparkSession, sf_dir: str) -> DataFrame:
     the double arithmetic exact.  The DuckDB oracle finds the same
     fixpoint declaratively: the first k in an enumerated ladder whose
     exceed-count reaches the target."""
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("script_orders")
+    orders = scratch_table(load_table(spark, sf_dir, "orders"), "script_orders_")
     return spark.sql(
         f"""
 BEGIN
   DECLARE thresh DOUBLE DEFAULT {SCRIPT_START_THRESH};
   DECLARE c BIGINT DEFAULT 0;
-  SET c = (SELECT COUNT(*) FROM script_orders WHERE o_totalprice > thresh);
+  SET c = (SELECT COUNT(*) FROM {orders} WHERE o_totalprice > thresh);
   WHILE c > {SCRIPT_TARGET} DO
     SET thresh = thresh * 2;
-    SET c = (SELECT COUNT(*) FROM script_orders WHERE o_totalprice > thresh);
+    SET c = (SELECT COUNT(*) FROM {orders} WHERE o_totalprice > thresh);
   END WHILE;
   SELECT thresh, c AS n_above;
 END
@@ -1541,7 +1550,7 @@ def q_scalar_dynamic_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
     — values, identifiers, whole statements — has a binding mechanism
     that never concatenates user input into SQL text.  Values match
     the oracle's static formulation exactly."""
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("dyn_orders")
+    orders = scratch_table(load_table(spark, sf_dir, "orders"), "dyn_orders_")
     inner = (
         "SELECT o_orderstatus, COUNT(*) AS n_orders, "
         "CAST(MAX(o_totalprice) AS DOUBLE) AS max_price "
@@ -1549,8 +1558,8 @@ def q_scalar_dynamic_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
         "GROUP BY o_orderstatus ORDER BY o_orderstatus"
     )
     return spark.sql(
-        "EXECUTE IMMEDIATE :stmt USING 'dyn_orders' AS tbl, 200000.0 AS minp",
-        args={"stmt": inner},
+        "EXECUTE IMMEDIATE :stmt USING :tbl AS tbl, 200000.0 AS minp",
+        args={"stmt": inner, "tbl": orders},
     )
 
 
@@ -1680,7 +1689,7 @@ SELECT o_orderpriority,
        CAST(n_hundred + n AS BIGINT) AS n_chained
 FROM (
   SELECT o_orderpriority, o_orderstatus, COUNT(*) AS n
-  FROM sugar_orders
+  FROM {orders}
   GROUP BY ALL
 )
 ORDER BY ALL
@@ -1689,7 +1698,7 @@ ORDER BY ALL
 
 @register(
     "scalar_sql_sugar",
-    oracle=SQL_SUGAR_QUERY.replace("sugar_orders", "orders").replace(
+    oracle=SQL_SUGAR_QUERY.format(orders="orders").replace(
         "CAST(n_hundred + n AS", "CAST(n * 100 + n AS"
     ),
 )
@@ -1703,5 +1712,5 @@ def q_scalar_sql_sugar(spark: SparkSession, sf_dir: str) -> DataFrame:
     and (c) order by the full output row.  The oracle expands the
     chained alias, so a resolution drift in any of the three shifts
     values or order."""
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("sugar_orders")
-    return spark.sql(SQL_SUGAR_QUERY)
+    orders = scratch_table(load_table(spark, sf_dir, "orders"), "sugar_orders_")
+    return spark.sql(SQL_SUGAR_QUERY.format(orders=orders))

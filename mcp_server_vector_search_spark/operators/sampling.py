@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from ..cache import scratch_table
 from ..registry import register
 from ..sources.tables import load_table
 
@@ -696,8 +697,8 @@ def q_mix_interleave_roundrobin(spark: SparkSession, sf_dir: str) -> DataFrame:
     window before it.  The certificate aggregation itself is one pass
     over the ordered stream."""
     d = load_table(spark, sf_dir, "documents")
-    d.createOrReplaceTempView("__il_docs")
-    return spark.sql(_INTERLEAVE_SQL.replace("{documents}", "__il_docs"))
+    docs = scratch_table(d, "il_docs_")
+    return spark.sql(_INTERLEAVE_SQL.replace("{documents}", docs))
 
 
 # ---------------------------------------------------------------------------

@@ -32,7 +32,7 @@ from pyspark.sql import functions as F
 
 from ..artifacts import load_or_build
 from ..functions.train import ORACLE_SF_DIR, load_sorted_vectors, sql_float, sql_floats
-from ..functions.vector import l2_normalize, neo4j_score
+from ..functions.vector import l2_normalize, neo4j_score, vector_lit
 from ..registry import register
 from ..sources.tables import load_table, table_path
 from .pq import (
@@ -69,17 +69,11 @@ def train_sq8_bounds(sample_vectors) -> tuple[list[float], list[float]]:
     return vmin, vdelta
 
 
-def _array_lit(values: Sequence[float]) -> F.Column:
-    """1-D double-array literal via one SQL-parsed expression (the
-    vector analog of functions.vector.matrix_lit)."""
-    return F.expr("array(" + ",".join(f"{float(v)!r}D" for v in values) + ")")
-
-
 def sq8_encode(unit_df: DataFrame, vmin: list[float], vdelta: list[float]) -> DataFrame:
     """codes[d] = clamp(round((u_d − vmin_d)/Δ_d · 255)) as one JVM
     transform over the dimension index — map-side only, runs once at
     index build."""
-    vmin_lit, delta_lit = _array_lit(vmin), _array_lit(vdelta)
+    vmin_lit, delta_lit = vector_lit(vmin), vector_lit(vdelta)
     code = F.transform(
         F.sequence(F.lit(1), F.lit(DIM)),
         lambda d: F.least(
@@ -140,7 +134,7 @@ def sq8_adc_topk(
     """Two-stage SQ8 query: weighted code-sum approximate scan → exact
     re-rank of the top ``rerank`` pool."""
     base, w = _query_weights(query_vec, vmin, vdelta)
-    w_lit = _array_lit(w)
+    w_lit = vector_lit(w)
     approx = F.round(
         F.aggregate(
             F.zip_with(F.col("codes"), w_lit, lambda c, wd: c.cast("double") * wd),

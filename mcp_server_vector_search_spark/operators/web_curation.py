@@ -42,6 +42,7 @@ import functools
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..cache import scratch_table
 from ..registry import register
 from ..sources.tables import load_table
 
@@ -100,12 +101,8 @@ canon AS (
 
 
 def _with_views(spark: SparkSession, sf_dir: str, sql: str) -> DataFrame:
-    load_table(spark, sf_dir, "documents").createOrReplaceTempView(
-        "__url_docs"
-    )
-    return spark.sql(
-        sql.replace("{documents}", "__url_docs").replace("{g}", "")
-    )
+    docs = scratch_table(load_table(spark, sf_dir, "documents"), "url_docs_")
+    return spark.sql(sql.replace("{documents}", docs).replace("{g}", ""))
 
 
 def _oracle_text(sql: str) -> str:

@@ -39,7 +39,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from ..cache import scratch_dir, scratch_view
+from ..cache import scratch_dir, scratch_table, scratch_view
 from ..sources.tables import load_table
 
 WATERMARK = "2 hours"
@@ -1370,10 +1370,8 @@ def _welch_stats_stream_agg(stream: DataFrame) -> DataFrame:
     between the batch and streaming spellings."""
     from ..operators.analytics import _WELCH_STATS_SQL
 
-    spark = stream.sparkSession
-    view = scratch_view(spark, "welch_stream_in_")
-    stream.createOrReplaceTempView(view)
-    return spark.sql(
+    view = scratch_table(stream, "welch_stream_in_")
+    return stream.sparkSession.sql(
         "WITH " + _WELCH_STATS_SQL.replace("{events}", view) + " SELECT * FROM g"
     )
 

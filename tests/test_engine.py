@@ -5,11 +5,15 @@ from __future__ import annotations
 
 import pytest
 
+from pyspark.sql import functions as F
+
 from mcp_server_vector_search_spark.engine import (
+    NORM_COL,
     SparkVectorSearch,
     corpus_from_documents,
     parse_results,
 )
+from mcp_server_vector_search_spark.functions.vector import neo4j_score, vector_lit
 from mcp_server_vector_search_spark.sources.tables import load_table
 
 from .conftest import SF_SMOKE
@@ -65,12 +69,72 @@ def test_search_runs_one_job(spark_module, search):
     assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
 
 
+def _column_form_search(search, qv, k):
+    """The column-form DataFrame chain a request used to build: the
+    score re-computed per row from the embedding and a literal column,
+    then select, orderBy, limit and the ``to_json`` select."""
+    score = F.round(neo4j_score("embedding", vector_lit(qv)), 6)
+    rows = (
+        search.corpus.select("name", "description", score.alias("score"))
+        .orderBy(F.desc("score"), F.asc("name"))
+        .limit(k)
+        .select(F.to_json(F.struct("name", "description", "score")).alias("j"))
+        .collect()
+    )
+    return "[" + ", ".join(r["j"] for r in rows) + "]"
+
+
+def test_search_equals_column_form_chain(search, monkeypatch):
+    """One SQL statement over the cached norm column returns the same
+    bytes as the per-row column form, for 25 prompts at k=10 and k=100,
+    and for a zero query vector (every score null)."""
+    for i in range(25):
+        prompt = f"spark {i} window query join w{i * 7}"
+        qv = search._embed_prompt(prompt)
+        for k in (10, 100):
+            assert search.search(prompt, k) == _column_form_search(search, qv, k)
+    zero = [0.0] * search.dim
+    monkeypatch.setattr(search, "_embed_prompt", lambda prompt: zero)
+    payload = search.search("zero", 10)
+    assert payload == _column_form_search(search, zero, 10)
+    assert all("score" not in r for r in parse_results(payload))  # null: omitted
+
+
+def test_search_compiles_no_code_per_request(spark_module, search):
+    """After warm-up, requests with new prompts reuse the generated
+    classes: the query vector and its norm reach generated code only as
+    array literals, passed by reference."""
+    metrics = spark_module._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    for i in range(3):
+        search.search(f"warm-up prompt {i}", k=10)
+    before = metrics.METRIC_COMPILATION_TIME().getCount()
+    for i in range(20):
+        search.search(f"distinct prompt number {i} about vectors", k=10)
+    assert metrics.METRIC_COMPILATION_TIME().getCount() == before
+
+
 def test_close_releases_corpus(spark_module):
     docs = load_table(spark_module, SF_SMOKE, "documents")
     engine = SparkVectorSearch(corpus_from_documents(docs).limit(7))
     assert engine.corpus.is_cached
+    view = engine._view
+    assert spark_module.catalog.tableExists(view)
     engine.close()
     assert not engine.corpus.is_cached
+    assert not spark_module.catalog.tableExists(view)
+
+
+def test_corpus_already_carrying_norm_column(spark_module, search):
+    """A facade over another facade's corpus replaces the norm column
+    instead of adding a second one, and scores the same."""
+    inner = SparkVectorSearch(search.corpus.limit(50))
+    try:
+        assert inner.corpus.columns.count(NORM_COL) == 1
+        prompt = "spark window query join"
+        want = _column_form_search(inner, inner._embed_prompt(prompt), 10)
+        assert inner.search(prompt, 10) == want
+    finally:
+        inner.close()
 
 
 def test_dim_mismatch_raises(spark_module):

@@ -5,6 +5,9 @@ per property (each example is a row, not a Spark job)."""
 from __future__ import annotations
 
 import math
+import re
+import struct
+from pathlib import Path
 
 import numpy as np
 import pytest
@@ -19,7 +22,9 @@ from mcp_server_vector_search_spark.functions.vector import (
     l2_distance,
     l2_norm,
     l2_normalize,
+    matrix_lit,
     neo4j_score,
+    vector_lit,
 )
 
 DIM = 8
@@ -114,17 +119,86 @@ def test_hash_embedder_deterministic_and_unit(spark):
             assert math.isclose(n, 1.0, rel_tol=1e-5)
 
 
-@settings(max_examples=5, deadline=None, suppress_health_check=[HealthCheck.too_slow])
-@given(st.lists(vec, min_size=1, max_size=12))
-def test_matrix_lit_bit_exact_roundtrip(spark, rows):
-    """matrix_lit's SQL-parsed literals must be bit-identical to the
-    per-element F.lit form (shortest-repr + D suffix round trip)."""
-    from mcp_server_vector_search_spark.functions.vector import matrix_lit
+def _bits(values):
+    return [struct.pack(">d", v) for v in values]
 
-    got = spark.range(1).select(matrix_lit(rows).alias("m")).first()["m"]
-    assert len(got) == len(rows)
-    for grow, row in zip(got, rows):
-        assert list(grow) == [float(v) for v in row]
+
+# the edges of the double range: signed zeros, subnormals, ±max, ±min normal
+EDGE_DOUBLES = [0.0, -0.0, 5e-324, -5e-324, 2.2250738585072014e-308,
+                -2.2250738585072014e-308, 1.7976931348623157e308,
+                -1.7976931348623157e308, 1e-300, 0.1, 1 / 3]
+any_double = st.floats(allow_nan=False, allow_infinity=False)
+
+
+@settings(max_examples=5, deadline=None, suppress_health_check=[HealthCheck.too_slow])
+@given(st.lists(vec, min_size=1, max_size=12), st.lists(any_double, max_size=40))
+def test_matrix_lit_bit_exact_roundtrip(spark, rows, values):
+    """``matrix_lit`` and ``vector_lit`` parse back to the same bits as
+    the Python floats, −0.0, subnormals and ±max included."""
+    vals = [float(v) for v in values] + EDGE_DOUBLES
+    got = spark.range(1).select(
+        matrix_lit(rows + [vals]).alias("m"), vector_lit(vals).alias("v")
+    ).first()
+    assert len(got["m"]) == len(rows) + 1
+    for grow, row in zip(got["m"], rows + [vals]):
+        assert _bits(grow) == _bits([float(v) for v in row])
+    assert _bits(got["v"]) == _bits(vals)
+
+
+@pytest.mark.parametrize("bad", [float("nan"), float("inf"), -float("inf")])
+def test_literal_vector_rejects_non_finite(bad):
+    """A NaN or infinite element is refused, naming its index, before
+    any SQL text is built (``from_json`` would accept ``NaN``)."""
+    v = [0.5, 1.0, -2.0, bad, 3.0]
+    with pytest.raises(ValueError, match="index 3 "):
+        vector_lit(v)
+    with pytest.raises(ValueError, match="index 3 "):
+        neo4j_score("embedding", v)
+    with pytest.raises(ValueError, match="row 1 index 3 "):
+        matrix_lit([[1.0] * 5, v])
+
+
+@settings(max_examples=5, deadline=None, suppress_health_check=[HealthCheck.too_slow])
+@given(st.lists(vec, min_size=1, max_size=16), vec, st.booleans())
+def test_literal_score_with_cached_norm_is_bit_identical(spark, rows, q, zero_query):
+    """``neo4j_score(name, q, norm=<l2_norm column>)`` equals the form
+    that re-computes the row norm, row for row and bit for bit (no
+    rounding), zero-norm rows and a zero query (null) included."""
+    q = [0.0] * DIM if zero_query else [float(v) for v in q]
+    corpus = rows + [[0.0] * DIM]
+    df = spark.createDataFrame(
+        [(i, list(map(float, v))) for i, v in enumerate(corpus)],
+        "id int, embedding array<float>",
+    ).withColumn("n", l2_norm("embedding"))
+    got = df.select(
+        "id",
+        neo4j_score("embedding", q, norm="n").alias("cached"),
+        neo4j_score("embedding", q).alias("per_row"),
+    ).orderBy("id").collect()
+    for r in got:
+        assert (r["cached"] is None) == (r["per_row"] is None)
+        if r["cached"] is not None:
+            assert _bits([r["cached"]]) == _bits([r["per_row"]])
+    assert got[-1]["cached"] is None
+    if zero_query:
+        assert all(r["cached"] is None for r in got)
+
+
+def test_literal_array_sql_is_built_only_in_vector_module():
+    """Source guard: literal-array SQL text (double-suffixed elements
+    joined into ``array(...)``, or a ``from_json('…')`` string literal)
+    is built only by ``functions/vector.py``; everything else calls
+    ``vector_lit`` / ``matrix_lit`` / ``neo4j_score``."""
+    pkg = Path(__file__).resolve().parent.parent / "mcp_server_vector_search_spark"
+    pattern = re.compile(r"!r\}D\b|\}D\"|from_json\('")
+    offenders = [
+        f"{f.relative_to(pkg)}:{i}"
+        for f in sorted(pkg.rglob("*.py"))
+        if f.relative_to(pkg).as_posix() != "functions/vector.py"
+        for i, line in enumerate(f.read_text().splitlines(), 1)
+        if pattern.search(line)
+    ]
+    assert offenders == []
 
 
 @settings(max_examples=5, deadline=None, suppress_health_check=[HealthCheck.too_slow])

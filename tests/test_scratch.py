@@ -1,7 +1,7 @@
 """Scratch ownership: every directory and memory-sink view a query
 leaves behind is removed by ``cache.release_scratch()`` — also when the
 query raised halfway — and no module outside ``cache.py`` hand-rolls
-its own temp dirs or deletes them."""
+its own temp dirs or deletes them, or registers a fixed view name."""
 
 from __future__ import annotations
 
@@ -88,3 +88,33 @@ def test_scratch_is_made_and_removed_only_by_its_owners():
         )
     }
     assert deleting == {"replace_partitions"}
+
+
+def test_query_keeps_the_callers_view_of_the_same_name(spark):
+    """A query's input views are scratch: a caller's own ``orders``
+    view survives ``agg_grouping_sets``, which reads the orders table
+    through SQL text, and the query's view is gone after release."""
+    from mcp_server_vector_search_spark.operators.relational import agg_grouping_sets
+
+    spark.range(3).createOrReplaceTempView("orders")
+    try:
+        before = _temp_views(spark)
+        assert agg_grouping_sets(spark, SF_SMOKE).count() > 0
+        assert spark.table("orders").count() == 3
+        cache.release_scratch()
+        assert _temp_views(spark) == before
+    finally:
+        spark.catalog.dropTempView("orders")
+
+
+def test_temp_views_are_registered_only_by_their_owners():
+    """Only cache.py (scratch views), sources/tables.register_views
+    (registering table names is its job) and the search facade (its
+    corpus view, dropped by ``close()``) register temp views; a query
+    that registered a fixed name would replace the caller's view."""
+    found = {
+        f.relative_to(PACKAGE).as_posix()
+        for f in PACKAGE.rglob("*.py")
+        if re.search(r"\.create(OrReplace)?(Global)?TempView\(", f.read_text())
+    }
+    assert found == {"cache.py", "sources/tables.py", "engine.py"}
