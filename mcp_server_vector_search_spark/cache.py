@@ -1,6 +1,6 @@
 """Query scratch: everything a query leaves behind has one owner.
 
-A query may leave three kinds of scratch:
+A query may leave four kinds of scratch:
 
 - persisted blocks (``scratch_persist``): signature tables, exploded
   shingles, edge lists read several times within ONE query's plan;
@@ -8,9 +8,13 @@ A query may leave three kinds of scratch:
   sink round-trips, rewritten index layouts;
 - temp views (``scratch_view``, ``scratch_table``): memory-sink
   tables and streaming input views, which keep their rows in driver
-  memory, and the input views of SQL-text queries.  A query never
-  registers a fixed view name: that would replace a view the caller
-  has under the same name.
+  memory, and the input views of SQL-text queries;
+- other session objects: temporary functions (SQL UDFs, registered
+  UDTFs — ``scratch_function``) and session variables
+  (``scratch_variable``).
+
+A query never registers a fixed view, function or variable name: that
+would replace the caller's object of the same name.
 
 The one rule for scratch lifetime: it lives until the owner of the
 query's result has consumed it, and that owner then calls
@@ -35,7 +39,13 @@ from pyspark.storagelevel import StorageLevel
 
 _SCRATCH: list[DataFrame] = []
 _DIRS: list[str] = []
-_VIEWS: list[tuple[SparkSession, str]] = []
+# (kind, session, name) of every named session object a query made
+_OBJECTS: list[tuple[str, SparkSession, str]] = []
+_DROP = {
+    "view": lambda spark, name: spark.catalog.dropTempView(name),
+    "function": lambda spark, name: spark.sql(f"DROP TEMPORARY FUNCTION IF EXISTS {name}"),
+    "variable": lambda spark, name: spark.sql(f"DROP TEMPORARY VARIABLE IF EXISTS {name}"),
+}
 _ROOT: str | None = None
 _SEQ = itertools.count()
 
@@ -64,12 +74,29 @@ def scratch_dir(prefix: str) -> str:
     return d
 
 
+def _scratch_name(spark: SparkSession, prefix: str, kind: str) -> str:
+    name = f"{prefix}{next(_SEQ)}"
+    _OBJECTS.append((kind, spark, name))
+    return name
+
+
 def scratch_view(spark: SparkSession, prefix: str) -> str:
     """A process-unique temp-view name in ``spark``'s session; the view
     registered under it is dropped by the next ``release_scratch()``."""
-    name = f"{prefix}{next(_SEQ)}"
-    _VIEWS.append((spark, name))
-    return name
+    return _scratch_name(spark, prefix, "view")
+
+
+def scratch_function(spark: SparkSession, prefix: str) -> str:
+    """A process-unique temporary-function name (a SQL UDF, or a UDTF
+    registered through ``spark.udtf.register``), dropped by the next
+    ``release_scratch()``."""
+    return _scratch_name(spark, prefix, "function")
+
+
+def scratch_variable(spark: SparkSession, prefix: str) -> str:
+    """A process-unique session-variable name, dropped by the next
+    ``release_scratch()``."""
+    return _scratch_name(spark, prefix, "variable")
 
 
 def scratch_table(df: DataFrame, prefix: str) -> str:
@@ -81,20 +108,21 @@ def scratch_table(df: DataFrame, prefix: str) -> str:
 
 def release_scratch() -> int:
     """Unpersist every tracked DataFrame (blocking=False), drop every
-    tracked view and remove every tracked directory.  Returns how many
-    handles were released.  Does nothing when nothing is tracked.  Safe
-    to call repeatedly and with stopped sessions (errors are swallowed —
-    the JVM frees blocks and views on session stop anyway)."""
-    n = len(_SCRATCH) + len(_VIEWS) + len(_DIRS)
+    tracked view, function and variable, and remove every tracked
+    directory.  Returns how many handles were released.  Does nothing
+    when nothing is tracked.  Safe to call repeatedly and with stopped
+    sessions (errors are swallowed — the JVM frees blocks and session
+    objects on session stop anyway)."""
+    n = len(_SCRATCH) + len(_OBJECTS) + len(_DIRS)
     while _SCRATCH:
         try:
             _SCRATCH.pop().unpersist()
         except Exception:  # noqa: BLE001 — session may be gone
             pass
-    while _VIEWS:
-        spark, name = _VIEWS.pop()
+    while _OBJECTS:
+        kind, spark, name = _OBJECTS.pop()
         try:
-            spark.catalog.dropTempView(name)
+            _DROP[kind](spark, name)
         except Exception:  # noqa: BLE001 — session may be gone
             pass
     while _DIRS:

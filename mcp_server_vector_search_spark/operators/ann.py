@@ -33,7 +33,7 @@ tests/test_ann.py additionally asserts recall@10 against the exact operator
 from __future__ import annotations
 
 import functools
-from typing import Sequence
+from typing import Callable, Sequence
 
 import numpy as np
 import pandas as pd
@@ -44,15 +44,17 @@ from ..artifacts import load_or_build
 from ..cache import scratch_dir
 from ..functions.embedder import DEFAULT_DIM, _token_vector
 from ..functions.train import ORACLE_SF_DIR, kmeans, load_sorted_vectors, sql_floats
-from ..functions.vector import (
-    dot,
-    l2_norm,
-    matrix_lit,
-    neo4j_score,
-)
+from ..functions.vector import dot, l2_norm, matrix_lit
 from ..registry import register
 from ..sources.tables import load_table, table_path
-from .topk import QUERY_VEC_ID, SCORE_DECIMALS, query_vector_df
+from .topk import (
+    QUERY_CTE,
+    QUERY_VEC_ID,
+    literal_topk,
+    query_vector,
+    score_col,
+    score_sql,
+)
 
 SEED = 42
 # Quantizer seed chosen by a recall sweep (tests/test_ann.py bar is
@@ -121,7 +123,7 @@ def assignment_expr(centroids: list[list[float]]) -> F.Column:
     over the literal centroid matrix computes the 16 rounded cosine
     sims; ``array_position(array_max)`` returns the FIRST maximum —
     i.e. the lowest centroid id on ties, matching the oracle's
-    ``ORDER BY sim DESC, cid`` pick.  No shuffle, no Python — the
+    rounded-sim argmax in ``ivf_assign_sql``.  No shuffle, no Python — the
     100 TB assignment pass is map-side only."""
     nrm = l2_norm("embedding")
     sims = F.transform(
@@ -305,74 +307,114 @@ def ivf_topk(
     centroid_id-partitioned path, the IN-filter is partition pruning —
     non-probed cells are never read from storage."""
     probes = nearest_centroids(query_vec, centroids, nprobe)
-    return (
-        indexed.where(F.col("centroid_id").isin(probes))
-        .withColumn("score", F.round(neo4j_score("embedding", query_vec), SCORE_DECIMALS))
-        .orderBy(F.desc("score"), F.asc("vec_id"))
-        .limit(k)
-        .select("vec_id", "centroid_id", "score")
+    return literal_topk(
+        indexed.where(F.col("centroid_id").isin(probes)),
+        query_vec,
+        k,
+        ["vec_id", "centroid_id", "score"],
     )
 
 
-def ivf_assign_sql(cents) -> str:
+ADAPTIVE_MAX_ROUNDS = 6  # 2^6 x nprobe covers any practical cell count
+
+
+def probe_ladder(
+    query_vec: Sequence[float],
+    centroids: list[list[float]],
+    start: int,
+    count: Callable[[list[int]], int],
+    k: int,
+) -> tuple[list[int], int, int]:
+    """The nprobe-widening ladder of the filtered searches (FAISS's
+    ``nprobe`` ladder, Qdrant's oversampling): probe the ``start``
+    nearest cells; while ``count(probes)`` — the rows surviving the
+    caller's predicate there — is below ``k``, double the width, clamped
+    to every cell (the full filtered scan) and bounded at
+    ``ADAPTIVE_MAX_ROUNDS`` doublings.  Returns ``(probes, nprobe,
+    rungs)``, rungs counting the probe sets evaluated.  The width only
+    advances when another rung runs, so ``probes`` is always the set at
+    ``nprobe``.  Spark and the oracle generators share this loop; only
+    their ``count`` differs."""
+    n_cells = len(centroids)
+    cur = min(start, n_cells)
+    rungs = 0
+    while True:
+        probes = nearest_centroids(query_vec, centroids, cur)
+        rungs += 1
+        if cur >= n_cells or rungs > ADAPTIVE_MAX_ROUNDS or count(probes) >= k:
+            return probes, cur, rungs
+        cur = min(2 * cur, n_cells)
+
+
+def ivf_assign_sql(
+    cents, src: str = "embeddings", carry: Sequence[str] = ("embedding",)
+) -> str:
     """Shared oracle fragment: trained-centroid literals + rounded-argmax
-    cell assignment (`cents`/`sims`/`assign` CTEs, with the embedding
-    carried through `assign`).  Single source for every IVF-mirroring
-    oracle (`_ivf_oracle`, engine_queries._engine_ann_oracle) so the
-    assignment arithmetic cannot desynchronize between them."""
+    cell assignment (`cents`/`sims`/`assign` CTEs) of every row of the
+    relation ``src`` by its ``embedding``; `assign` holds ``vec_id``,
+    the ``carry`` columns and ``centroid_id``.  The one owner of the
+    assignment rule (rounded sim DESC, lowest cid on ties) for every
+    IVF-mirroring oracle, so its arithmetic cannot desynchronize."""
     values = ",\n  ".join(
         f"({i}, {sql_floats(c)}::DOUBLE[])" for i, c in enumerate(cents)
     )
+    cols = ", ".join(["vec_id", *carry])
+    vec = "e.embedding::DOUBLE[]"
     return f"""cents(cid, cv) AS (VALUES
   {values}
 ),
 sims AS (
-  SELECT e.vec_id, e.embedding, c.cid,
-         ROUND(list_dot_product(e.embedding::DOUBLE[], c.cv)
-               / sqrt(list_dot_product(e.embedding::DOUBLE[], e.embedding::DOUBLE[])),
+  SELECT {", ".join(f"e.{c}" for c in ["vec_id", *carry])}, c.cid,
+         ROUND(list_dot_product({vec}, c.cv) / sqrt(list_dot_product({vec}, {vec})),
                {ASSIGN_DECIMALS}) AS sim
-  FROM embeddings e CROSS JOIN cents c
+  FROM {src} e CROSS JOIN cents c
 ),
 assign AS (
-  SELECT vec_id, embedding, cid AS centroid_id FROM (
+  SELECT {cols}, cid AS centroid_id FROM (
     SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY sim DESC, cid) AS rn
     FROM sims
   ) WHERE rn = 1
 )"""
 
 
-def _ivf_oracle() -> str:
-    """Exact DuckDB mirror of ``q_ann_ivf_topk`` at the driver's
-    correctness SF: the same numpy training produces the same centroid
-    literals; assignment is the same rounded-sim argmax (ROW_NUMBER
-    over sim DESC, cid ASC); probes come from the same
-    ``nearest_centroids`` call."""
-    ids, x = load_sorted_vectors(ORACLE_SF_DIR)
-    cents = oracle_centroids()
-    qvec = [float(v) for v in x[ids.index(QUERY_VEC_ID)]]
-    probes = nearest_centroids(qvec, cents, NPROBE)
+def ivf_probe_topk_sql(ctes: str, probes: list[int], where: str = "TRUE") -> str:
+    """Oracle twin of an IVF probe top-k (``ivf_topk`` and its filtered,
+    tombstoned, churned and graph-routed variants): ``ctes`` ends in an
+    ``ivf_assign_sql`` `assign` carrying ``embedding``; the rows of the
+    probed cells that satisfy ``where`` are exact-scored and the top K
+    kept, projecting every carried column but the vector."""
     return f"""
-WITH {ivf_assign_sql(cents)},
-q AS (SELECT embedding::DOUBLE[] AS qv FROM embeddings WHERE vec_id = {QUERY_VEC_ID})
-SELECT a.vec_id, a.centroid_id,
-       ROUND((1.0 + list_cosine_similarity(a.embedding::DOUBLE[], q.qv)) / 2.0,
-             {SCORE_DECIMALS}) AS score
+WITH {ctes},
+{QUERY_CTE}
+SELECT a.* EXCLUDE (embedding), {score_sql("a.embedding::DOUBLE[]", "q.qv")} AS score
 FROM assign a CROSS JOIN q
-WHERE a.centroid_id IN ({", ".join(str(p) for p in probes)})
+WHERE a.centroid_id IN ({", ".join(str(p) for p in probes)}) AND ({where})
 ORDER BY score DESC, a.vec_id
 LIMIT {K}
 """
+
+
+def oracle_ivf_query() -> tuple[tuple, list[float]]:
+    """(oracle centroids, fixture query vector): what every IVF-probe
+    oracle folds in."""
+    ids, x = load_sorted_vectors(ORACLE_SF_DIR)
+    return oracle_centroids(), [float(v) for v in x[ids.index(QUERY_VEC_ID)]]
+
+
+def _ivf_oracle() -> str:
+    """Exact DuckDB mirror of ``q_ann_ivf_topk`` at the driver's
+    correctness SF: the same numpy training produces the same centroid
+    literals; assignment is the same rounded-sim argmax; probes come
+    from the same ``nearest_centroids`` call."""
+    cents, qvec = oracle_ivf_query()
+    return ivf_probe_topk_sql(ivf_assign_sql(cents), nearest_centroids(qvec, cents, NPROBE))
 
 
 @register("ann_ivf_topk", oracle=_ivf_oracle)
 def q_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     indexed, centroids = load_or_build_ivf_index(spark, sf_dir)
     emb = load_table(spark, sf_dir, "embeddings")
-    qvec = [
-        float(x)
-        for x in emb.where(F.col("vec_id") == QUERY_VEC_ID).first()["embedding"]
-    ]
-    return ivf_topk(indexed, centroids, qvec)
+    return ivf_topk(indexed, centroids, query_vector(emb))
 
 
 # ---------------------------------------------------------------------------
@@ -477,42 +519,47 @@ def srp_lsh_topk(
     for t in range(SRP_TABLES):
         this = F.col(f"b{t}") == F.lit(_py_bucket(query_vec, planes, t))
         cond = this if cond is None else cond | this
-    return (
-        indexed.where(cond)
-        .withColumn("score", F.round(neo4j_score("embedding", query_vec), SCORE_DECIMALS))
-        .orderBy(F.desc("score"), F.asc("vec_id"))
-        .limit(k)
-        .select("vec_id", "score")
+    return literal_topk(indexed.where(cond), query_vec, k, ["vec_id", "score"])
+
+
+def srp_bucket_sql(planes: np.ndarray, t: int) -> str:
+    """DuckDB text of a row's bucket id in SRP table ``t``: the oracle
+    twin of ``bucket_columns_expr`` (same plane literals, same ``>= 0``
+    sign test, bit j worth 2^j)."""
+    bits = " + ".join(
+        f"(CASE WHEN list_dot_product(embedding::DOUBLE[], "
+        f"{sql_floats(planes[t * SRP_BITS + j])}::DOUBLE[]) >= 0 "
+        f"THEN {2**j} ELSE 0 END)"
+        for j in range(SRP_BITS)
     )
+    return f"({bits})"
 
 
-def _srp_oracle() -> str:
-    """DuckDB mirror of ``q_ann_lsh_topk``: same seeded planes as SQL
-    literals, same query buckets via ``_py_bucket``."""
+def _srp_oracle_sql(n_tables: int, match: Callable) -> str:
+    """DuckDB mirror of the SRP searches: the same seeded planes as SQL
+    literals recompute each row's bucket in the first ``n_tables``
+    tables; ``match(qvec, planes, t)`` is the SQL test a bucket must pass
+    (the query's own bucket, or its multi-probe set)."""
     ids, x = load_sorted_vectors(ORACLE_SF_DIR)
     planes = srp_planes()
     qvec = [float(v) for v in x[ids.index(QUERY_VEC_ID)]]
-
-    def table_expr(t: int) -> str:
-        bits = " + ".join(
-            f"(CASE WHEN list_dot_product(embedding::DOUBLE[], "
-            f"{sql_floats(planes[t * SRP_BITS + j])}::DOUBLE[]) >= 0 "
-            f"THEN {2**j} ELSE 0 END)"
-            for j in range(SRP_BITS)
-        )
-        return f"({bits}) = {_py_bucket(qvec, planes, t)}"
-
-    cand = "\n   OR ".join(table_expr(t) for t in range(SRP_TABLES))
+    cand = "\n   OR ".join(
+        f"{srp_bucket_sql(planes, t)} {match(qvec, planes, t)}" for t in range(n_tables)
+    )
     return f"""
-WITH q AS (SELECT embedding::DOUBLE[] AS qv FROM embeddings WHERE vec_id = {QUERY_VEC_ID})
+WITH {QUERY_CTE}
 SELECT e.vec_id,
-       ROUND((1.0 + list_cosine_similarity(e.embedding::DOUBLE[], q.qv)) / 2.0,
-             {SCORE_DECIMALS}) AS score
+       {score_sql("e.embedding::DOUBLE[]", "q.qv")} AS score
 FROM embeddings e CROSS JOIN q
 WHERE {cand}
 ORDER BY score DESC, e.vec_id
 LIMIT {K}
 """
+
+
+def _srp_oracle() -> str:
+    """Mirror of ``q_ann_lsh_topk``: the query's bucket via ``_py_bucket``."""
+    return _srp_oracle_sql(SRP_TABLES, lambda q, p, t: f"= {_py_bucket(q, p, t)}")
 
 
 # ---------------------------------------------------------------------------
@@ -571,43 +618,16 @@ def srp_multiprobe_topk(
     for t in range(MP_TABLES):
         this = F.col(f"b{t}").isin(probe_sequence(query_vec, planes, t))
         cond = this if cond is None else cond | this
-    return (
-        indexed.where(cond)
-        .withColumn("score", F.round(neo4j_score("embedding", query_vec), SCORE_DECIMALS))
-        .orderBy(F.desc("score"), F.asc("vec_id"))
-        .limit(k)
-        .select("vec_id", "score")
-    )
+    return literal_topk(indexed.where(cond), query_vec, k, ["vec_id", "score"])
 
 
 def _srp_multiprobe_oracle() -> str:
-    """Same seeded planes, same driver-computed probe sets, recomputed
-    stored buckets via the shared CASE fragment — `IN` per table."""
-    ids, x = load_sorted_vectors(ORACLE_SF_DIR)
-    planes = srp_planes()
-    qvec = [float(v) for v in x[ids.index(QUERY_VEC_ID)]]
-
-    def table_expr(t: int) -> str:
-        bits = " + ".join(
-            f"(CASE WHEN list_dot_product(embedding::DOUBLE[], "
-            f"{sql_floats(planes[t * SRP_BITS + j])}::DOUBLE[]) >= 0 "
-            f"THEN {2**j} ELSE 0 END)"
-            for j in range(SRP_BITS)
-        )
-        probes = ", ".join(str(b) for b in probe_sequence(qvec, planes, t))
-        return f"({bits}) IN ({probes})"
-
-    cand = "\n   OR ".join(table_expr(t) for t in range(MP_TABLES))
-    return f"""
-WITH q AS (SELECT embedding::DOUBLE[] AS qv FROM embeddings WHERE vec_id = {QUERY_VEC_ID})
-SELECT e.vec_id,
-       ROUND((1.0 + list_cosine_similarity(e.embedding::DOUBLE[], q.qv)) / 2.0,
-             {SCORE_DECIMALS}) AS score
-FROM embeddings e CROSS JOIN q
-WHERE {cand}
-ORDER BY score DESC, e.vec_id
-LIMIT {K}
-"""
+    """Same seeded planes, same driver-computed probe sets — `IN` per
+    table."""
+    return _srp_oracle_sql(
+        MP_TABLES,
+        lambda q, p, t: f"IN ({', '.join(str(b) for b in probe_sequence(q, p, t))})",
+    )
 
 
 @register("ann_lsh_multiprobe", oracle=_srp_multiprobe_oracle)
@@ -616,22 +636,14 @@ def q_ann_lsh_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     recall of many tables from a quarter of them."""
     indexed = load_or_build_srp_index(spark, sf_dir)
     emb = load_table(spark, sf_dir, "embeddings")
-    qvec = [
-        float(x)
-        for x in emb.where(F.col("vec_id") == QUERY_VEC_ID).first()["embedding"]
-    ]
-    return srp_multiprobe_topk(indexed, qvec)
+    return srp_multiprobe_topk(indexed, query_vector(emb))
 
 
 @register("ann_lsh_topk", oracle=_srp_oracle)
 def q_ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     indexed = load_or_build_srp_index(spark, sf_dir)
     emb = load_table(spark, sf_dir, "embeddings")
-    qvec = [
-        float(x)
-        for x in emb.where(F.col("vec_id") == QUERY_VEC_ID).first()["embedding"]
-    ]
-    return srp_lsh_topk(indexed, qvec)
+    return srp_lsh_topk(indexed, query_vector(emb))
 
 
 # ---------------------------------------------------------------------------
@@ -658,8 +670,7 @@ def _semantic_oracle() -> str:
     return f"""
 WITH hits AS (
   SELECT e.vec_id,
-         ROUND((1.0 + list_cosine_similarity(e.embedding::DOUBLE[], {qv}::DOUBLE[])) / 2.0,
-               {SCORE_DECIMALS}) AS score
+         {score_sql("e.embedding::DOUBLE[]", f"{qv}::DOUBLE[]")} AS score
   FROM embeddings e
   ORDER BY score DESC, e.vec_id
   LIMIT {K}
@@ -683,13 +694,7 @@ def q_semantic_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     in functions/embedder.py, exercised by tests/test_embedders.py."""
     emb = load_table(spark, sf_dir, "embeddings")
     docs = load_table(spark, sf_dir, "documents")
-    qvec = prompt_embedding()
-    hits = (
-        emb.withColumn("score", F.round(neo4j_score("embedding", qvec), SCORE_DECIMALS))
-        .orderBy(F.desc("score"), F.asc("vec_id"))
-        .limit(K)
-        .select("vec_id", "score")
-    )
+    hits = literal_topk(emb, prompt_embedding(), K, ["vec_id", "score"])
     return (
         F.broadcast(hits)
         .join(docs, hits.vec_id == docs.doc_id)
@@ -709,10 +714,6 @@ def _ivf_upsert_oracle() -> str:
     """Assignment of the post-upsert EFFECTIVE vectors (reversed for
     updated ids), aggregated per cell — what reading back the upserted
     layout must equal."""
-    cents = oracle_centroids()
-    values = ",\n  ".join(
-        f"({i}, {sql_floats(c)}::DOUBLE[])" for i, c in enumerate(cents)
-    )
     return f"""
 WITH cut AS (
   SELECT CAST(FLOOR({UPSERT_FRACTION} * MAX(vec_id)) AS BIGINT) AS c
@@ -721,25 +722,11 @@ WITH cut AS (
 eff AS (
   SELECT vec_id,
          CASE WHEN vec_id >= cut.c THEN list_reverse(embedding::DOUBLE[])
-              ELSE embedding::DOUBLE[] END AS v,
+              ELSE embedding::DOUBLE[] END AS embedding,
          CASE WHEN vec_id >= cut.c THEN 1 ELSE 0 END AS upd
   FROM embeddings, cut
 ),
-cents(cid, cv) AS (VALUES
-  {values}
-),
-sims AS (
-  SELECT e.vec_id, e.upd, c.cid,
-         ROUND(list_dot_product(e.v, c.cv)
-               / sqrt(list_dot_product(e.v, e.v)), {ASSIGN_DECIMALS}) AS sim
-  FROM eff e CROSS JOIN cents c
-),
-assign AS (
-  SELECT vec_id, upd, cid AS centroid_id FROM (
-    SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY sim DESC, cid) AS rn
-    FROM sims
-  ) WHERE rn = 1
-)
+{ivf_assign_sql(oracle_centroids(), "eff", ["upd"])}
 SELECT CAST(centroid_id AS INTEGER) AS centroid_id,
        COUNT(*) AS n_vectors,
        CAST(SUM(upd) AS BIGINT) AS n_updated
@@ -838,10 +825,12 @@ def q_ann_ivf_upsert_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Driver certification of the GEMM scale path: the fixture queries all
-# sit below GEMM_ASSIGN_MIN_CELLS (pure-JVM plans), so this row pins
-# the Arrow GEMM assignment itself against the DuckDB oracle at a
-# production-side cell count.
+# Driver certification of the GEMM scale path: this row pins the Arrow
+# GEMM assignment itself against the DuckDB oracle at a production-side
+# cell count (64 = GEMM_ASSIGN_MIN_CELLS).  The 16-cell fixture indexes
+# built through ``assignment_col`` take the GEMM too, since 16 cells x
+# 64 dims equals GEMM_ASSIGN_MIN_WORK (the streaming append in
+# ``streaming.ingest`` keeps the JVM ``assignment_expr``).
 # ---------------------------------------------------------------------------
 
 GEMM_CERT_CELLS = 64
@@ -987,9 +976,7 @@ def ivf_range_search(
     LAST_RANGE_STATS = {"feasible": len(feasible), "cells": len(centroids)}
     return (
         indexed.where(F.col("centroid_id").isin(feasible))
-        .withColumn(
-            "score", F.round(neo4j_score("embedding", query_vec), SCORE_DECIMALS)
-        )
+        .withColumn("score", score_col(query_vec))
         .where(F.col("score") >= min_score)
         .orderBy(F.desc("score"), F.asc("vec_id"))
         .select("vec_id", "score")
@@ -1001,16 +988,12 @@ def _range_oracle() -> str:
     means the pruned scan must equal the unpruned answer, so the oracle
     is the STRONGEST possible check (any over-pruning loses a row and
     breaks the hash)."""
+    score = score_sql("e.embedding::DOUBLE[]", "q.qv")
     return f"""
-WITH q AS (
-  SELECT embedding::DOUBLE[] AS qv FROM embeddings WHERE vec_id = {QUERY_VEC_ID}
-)
-SELECT e.vec_id,
-       ROUND((1.0 + list_cosine_similarity(e.embedding::DOUBLE[], q.qv)) / 2.0,
-             {SCORE_DECIMALS}) AS score
+WITH {QUERY_CTE}
+SELECT e.vec_id, {score} AS score
 FROM embeddings e CROSS JOIN q
-WHERE ROUND((1.0 + list_cosine_similarity(e.embedding::DOUBLE[], q.qv)) / 2.0,
-            {SCORE_DECIMALS}) >= {RANGE_MIN_SCORE}
+WHERE {score} >= {RANGE_MIN_SCORE}
 ORDER BY score DESC, e.vec_id
 """
 
@@ -1024,11 +1007,9 @@ def q_ann_range_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     path, meta = _ivf_entry(spark, sf_dir)
     radii = {int(c): r for c, r in meta["radii"].items()}
     emb = load_table(spark, sf_dir, "embeddings")
-    qvec = [
-        float(v)
-        for v in emb.where(F.col("vec_id") == QUERY_VEC_ID).first()["embedding"]
-    ]
-    return ivf_range_search(spark.read.parquet(path), meta["centroids"], radii, qvec)
+    return ivf_range_search(
+        spark.read.parquet(path), meta["centroids"], radii, query_vector(emb)
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -1139,9 +1120,7 @@ def q_ann_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "query_id",
             "vec_id",
-            F.round(neo4j_score("embedding", "qv"), SCORE_DECIMALS).alias(
-                "score"
-            ),
+            score_col("qv").alias("score"),
         )
     )
     w = W.partitionBy("query_id").orderBy(F.desc("score"), F.asc("vec_id"))

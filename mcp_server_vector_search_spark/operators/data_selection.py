@@ -52,6 +52,7 @@ from .ann import (
     oracle_centroids,
     train_centroids,
 )
+from .topk import score_sql
 
 # ---------------------------------------------------------------------------
 # SemDeDup: cluster-bounded semantic near-duplicate pruning
@@ -612,8 +613,7 @@ def mine_hard_negatives(
 ) -> DataFrame:
     from pyspark.sql import Window as W
 
-    from ..functions.vector import neo4j_score
-    from .topk import SCORE_DECIMALS
+    from .topk import score_col
 
     q = queries.select(
         F.col("vec_id").alias("query_id"),
@@ -626,7 +626,7 @@ def mine_hard_negatives(
         "query_id",
         "vec_id",
         F.col("label").alias("neg_label"),
-        F.round(neo4j_score("embedding", "__qv"), SCORE_DECIMALS).alias("score"),
+        score_col("__qv").alias("score"),
     )
     w = W.partitionBy("query_id").orderBy(F.desc("score"), F.asc("vec_id"))
     return (
@@ -645,8 +645,7 @@ WITH q AS (
 ),
 scored AS (
   SELECT q.query_id, e.vec_id, e.label AS neg_label,
-         ROUND((1.0 + list_cosine_similarity(e.embedding::DOUBLE[], q.qv)) / 2.0,
-               6) AS score
+         {score_sql("e.embedding::DOUBLE[]", "q.qv")} AS score
   FROM embeddings e JOIN q ON e.label != q.query_label
 ),
 ranked AS (

@@ -34,7 +34,7 @@ from ..functions.train import sql_floats
 from ..registry import register
 from ..sources.tables import load_table
 from .ann import PROMPT_TEXT, prompt_embedding
-from .topk import SCORE_DECIMALS
+from .topk import score_sql
 
 ENGINE_K = 10  # reference server.py:87
 
@@ -59,8 +59,7 @@ WITH corpus AS (
   FROM documents d JOIN embeddings e ON e.vec_id = d.doc_id
 )
 SELECT name, description,
-       ROUND((1.0 + list_cosine_similarity(embedding::DOUBLE[], {qv}::DOUBLE[])) / 2.0,
-             {SCORE_DECIMALS}) AS score
+       {score_sql("embedding::DOUBLE[]", f"{qv}::DOUBLE[]")} AS score
 FROM corpus
 ORDER BY score DESC, name
 LIMIT {ENGINE_K}
@@ -99,8 +98,7 @@ def _engine_ann_oracle() -> str:
 WITH {ivf_assign_sql(cents)},
 pool AS (
   SELECT vec_id,
-         ROUND((1.0 + list_cosine_similarity(embedding::DOUBLE[], {qv}::DOUBLE[])) / 2.0,
-               {SCORE_DECIMALS}) AS score
+         {score_sql("embedding::DOUBLE[]", f"{qv}::DOUBLE[]")} AS score
   FROM assign
   WHERE centroid_id IN ({", ".join(str(p) for p in probes)})
   ORDER BY score DESC, vec_id
@@ -306,8 +304,7 @@ def _concurrent_oracle() -> str:
         qv = sql_floats(prompt_embedding(p))
         branches.append(f"""
 (SELECT {i} AS prompt_id, name,
-        ROUND((1.0 + list_cosine_similarity(embedding::DOUBLE[], {qv}::DOUBLE[])) / 2.0,
-              {SCORE_DECIMALS}) AS score
+        {score_sql("embedding::DOUBLE[]", f"{qv}::DOUBLE[]")} AS score
  FROM corpus
  ORDER BY score DESC, name
  LIMIT {ENGINE_K})""")

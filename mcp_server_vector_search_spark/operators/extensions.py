@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..cache import scratch_table
+from ..cache import scratch_function, scratch_table
 from ..registry import register
 from ..sources.tables import load_table
 
@@ -108,12 +108,13 @@ WHERE doc_id < 100
 )
 def udtf_tokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents").where(F.col("doc_id") < 100)
-    spark.udtf.register("tokenize_udtf", _TokenizeUDTF)
+    tokenize = scratch_function(spark, "tokenize_udtf_")
+    spark.udtf.register(tokenize, _TokenizeUDTF)
     docs = scratch_table(d, "udtf_docs_")
     return spark.sql(
         f"""
         SELECT d.doc_id, t.pos, t.tok
-        FROM {docs} d, LATERAL tokenize_udtf(d.text) t
+        FROM {docs} d, LATERAL {tokenize}(d.text) t
         """
     )
 
@@ -345,12 +346,13 @@ def udtf_polymorphic_schema(spark: SparkSession, sf_dir: str) -> DataFrame:
     list-indexing oracle (DuckDB's out-of-range list index is NULL,
     exactly the eval's padding)."""
     d = load_table(spark, sf_dir, "documents").where(F.col("doc_id") < 100)
-    spark.udtf.register("first_tokens_udtf", _FirstTokensUDTF)
+    first_tokens = scratch_function(spark, "first_tokens_udtf_")
+    spark.udtf.register(first_tokens, _FirstTokensUDTF)
     docs = scratch_table(d, "udtf_poly_docs_")
     return spark.sql(
         f"""
         SELECT d.doc_id, t.t0, t.t1, t.t2
-        FROM {docs} d, LATERAL first_tokens_udtf(d.text, 3) t
+        FROM {docs} d, LATERAL {first_tokens}(d.text, 3) t
         """
     )
 
@@ -436,10 +438,11 @@ def udtf_table_argument(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("event_type", "value"),
         "udtf_events_",
     )
-    spark.udtf.register("partition_summary_udtf", _PartitionSummaryUDTF)
+    summary = scratch_function(spark, "partition_summary_udtf_")
+    spark.udtf.register(summary, _PartitionSummaryUDTF)
     return spark.sql(
         f"""
-        SELECT * FROM partition_summary_udtf(
+        SELECT * FROM {summary}(
           TABLE({events}) PARTITION BY event_type
         )
         ORDER BY event_type

@@ -48,7 +48,6 @@ from pyspark.sql import functions as F
 from ..artifacts import load_or_build
 from ..cache import scratch_dir
 from ..functions.train import ORACLE_SF_DIR, load_sorted_vectors
-from ..functions.vector import neo4j_score
 from ..registry import register
 from ..sources.tables import load_table, table_path
 from .ann import (
@@ -58,10 +57,11 @@ from .ann import (
     _sample_vectors,
     assignment_expr,
     ivf_assign_sql,
+    ivf_probe_topk_sql,
     oracle_centroids,
     train_centroids,
 )
-from .topk import QUERY_VEC_ID, SCORE_DECIMALS
+from .topk import QUERY_VEC_ID, literal_topk, query_vector, score_col, score_sql
 
 # Node count matches the IVF cell count so the two index families prune
 # at the same ratio on the fixtures and recall is directly comparable
@@ -236,12 +236,11 @@ def _pruned_node_topk(
     """Shared scan half of the graph-ANN family: prune to the probe
     cells, exact-score, top-k.  Identical for flat NSW and layered HNSW
     — the families differ only in how the probe list is navigated."""
-    return (
-        index.where(F.col("node_id").isin(probes))
-        .withColumn("score", F.round(neo4j_score("embedding", query_vec), SCORE_DECIMALS))
-        .orderBy(F.desc("score"), F.asc("vec_id"))
-        .limit(k)
-        .select("vec_id", F.col("node_id").cast("int").alias("node_id"), "score")
+    return literal_topk(
+        index.where(F.col("node_id").isin(probes)),
+        query_vec,
+        k,
+        ["vec_id", F.col("node_id").cast("int").alias("node_id"), "score"],
     )
 
 
@@ -250,17 +249,8 @@ def _probe_oracle_sql(nodes: list[list[float]], probes: list[int]) -> str:
     the IVF family's rounded-argmax fragment, probed-cell filter, exact
     Neo4j-normalized scoring.  Both graph families (flat NSW, layered
     HNSW) interpolate their own navigated probe list."""
-    return f"""
-WITH {ivf_assign_sql(nodes)},
-q AS (SELECT embedding::DOUBLE[] AS qv FROM embeddings WHERE vec_id = {QUERY_VEC_ID})
-SELECT a.vec_id, CAST(a.centroid_id AS INTEGER) AS node_id,
-       ROUND((1.0 + list_cosine_similarity(a.embedding::DOUBLE[], q.qv)) / 2.0,
-             {SCORE_DECIMALS}) AS score
-FROM assign a CROSS JOIN q
-WHERE a.centroid_id IN ({", ".join(str(p) for p in probes)})
-ORDER BY score DESC, a.vec_id
-LIMIT {K}
-"""
+    probe_topk = ivf_probe_topk_sql(ivf_assign_sql(nodes), probes)
+    return f"SELECT vec_id, centroid_id AS node_id, score FROM ({probe_topk})"
 
 
 def _oracle_nodes_and_query() -> tuple[list[list[float]], list[float]]:
@@ -287,11 +277,7 @@ def q_ann_graph_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     graph descent picks the cells, the engine reads only those."""
     index, nodes, graph = load_or_build_graph_index(spark, sf_dir)
     emb = load_table(spark, sf_dir, "embeddings")
-    qvec = [
-        float(v)
-        for v in emb.where(F.col("vec_id") == QUERY_VEC_ID).first()["embedding"]
-    ]
-    return graph_topk(index, nodes, graph, qvec)
+    return graph_topk(index, nodes, graph, query_vector(emb))
 
 
 # ---------------------------------------------------------------------------
@@ -430,11 +416,7 @@ def q_ann_hnsw_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     index, nodes, _ = load_or_build_graph_index(spark, sf_dir)
     hnsw = build_hnsw(nodes)
     emb = load_table(spark, sf_dir, "embeddings")
-    qvec = [
-        float(v)
-        for v in emb.where(F.col("vec_id") == QUERY_VEC_ID).first()["embedding"]
-    ]
-    return hnsw_topk(index, nodes, hnsw, qvec)
+    return hnsw_topk(index, nodes, hnsw, query_vector(emb))
 
 
 # ---------------------------------------------------------------------------
@@ -650,11 +632,7 @@ def q_ann_hnsw_heuristic_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     index, nodes, _ = load_or_build_graph_index(spark, sf_dir)
     hnsw = build_hnsw_incremental(nodes, heuristic=True)
     emb = load_table(spark, sf_dir, "embeddings")
-    qvec = [
-        float(v)
-        for v in emb.where(F.col("vec_id") == QUERY_VEC_ID).first()["embedding"]
-    ]
-    return hnsw_topk(index, nodes, hnsw, qvec)
+    return hnsw_topk(index, nodes, hnsw, query_vector(emb))
 
 
 # ---------------------------------------------------------------------------
@@ -817,8 +795,7 @@ q AS (
 scored AS (
   SELECT CAST(p.query_id AS BIGINT) AS query_id, a.vec_id,
          CAST(a.centroid_id AS INTEGER) AS node_id,
-         ROUND((1.0 + list_cosine_similarity(a.embedding::DOUBLE[], q.qv)) / 2.0,
-               {SCORE_DECIMALS}) AS score
+         {score_sql("a.embedding::DOUBLE[]", "q.qv")} AS score
   FROM assign a
   JOIN probes p ON p.cid = a.centroid_id
   JOIN q ON q.query_id = p.query_id
@@ -870,7 +847,7 @@ def q_ann_hnsw_batch_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = (
         index.where(F.col("node_id").isin(union_cells))
         .join(F.broadcast(probes), "node_id")
-        .withColumn("score", F.round(neo4j_score("embedding", qv), SCORE_DECIMALS))
+        .withColumn("score", score_col(qv))
     )
     w = W.partitionBy("query_id").orderBy(F.desc("score"), F.asc("vec_id"))
     return (

@@ -45,7 +45,7 @@ from ..functions.train import (
     sql_float,
     sql_floats,
 )
-from ..functions.vector import l2_normalize, matrix_lit, neo4j_score, vector_lit
+from ..functions.vector import l2_normalize, matrix_lit, vector_lit
 from ..registry import register
 from ..sources.tables import load_table, table_path
 from .ann import (
@@ -54,6 +54,7 @@ from .ann import (
     N_CENTROIDS,
     NPROBE,
     assignment_col,
+    ivf_assign_sql,
     nearest_centroids,
     train_centroids,
 )
@@ -73,8 +74,9 @@ from .pq import (
     _encode,
     _sorted_sample,
     cached_query_vector,
+    rerank_pool_sql,
 )
-from .topk import QUERY_VEC_ID, SCORE_DECIMALS
+from .topk import QUERY_VEC_ID, literal_topk
 
 
 def _train_residual_codebooks(sample_vectors, cents, seed: int = SEED):
@@ -210,12 +212,11 @@ def ivfpq_topk(
         .limit(rerank)
         .select("vec_id", "centroid_id")
     )
-    return (
-        embeddings.join(F.broadcast(pool), "vec_id")
-        .withColumn("score", F.round(neo4j_score("embedding", query_vec), SCORE_DECIMALS))
-        .orderBy(F.desc("score"), F.asc("vec_id"))
-        .limit(k)
-        .select("vec_id", F.col("centroid_id").cast("int").alias("centroid_id"), "score")
+    return literal_topk(
+        embeddings.join(F.broadcast(pool), "vec_id"),
+        query_vec,
+        k,
+        ["vec_id", F.col("centroid_id").cast("int").alias("centroid_id"), "score"],
     )
 
 
@@ -232,9 +233,6 @@ def _ivfpq_oracle() -> str:
     probes = nearest_centroids(qvec, cents, NPROBE)
     lut = _adc_lut(books, qvec)
     offs = _cell_offsets(qvec, cents)
-    cent_rows = ",\n  ".join(
-        f"({i}, {sql_floats(c)}::DOUBLE[])" for i, c in enumerate(cents)
-    )
     cw_rows = ",\n  ".join(
         f"({m}, {c}, {sql_float(norms2[m][c])}, {sql_floats(books[m][c])}::DOUBLE[])"
         for m in range(M_SUBSPACES)
@@ -248,23 +246,7 @@ def _ivfpq_oracle() -> str:
     off_rows = ",\n  ".join(
         f"({i}, {sql_float(o)})" for i, o in enumerate(offs)
     )
-    return f"""
-WITH cents(cid, cv) AS (VALUES
-  {cent_rows}
-),
-csims AS (
-  SELECT e.vec_id, c.cid,
-         ROUND(list_dot_product(e.embedding::DOUBLE[], c.cv)
-               / sqrt(list_dot_product(e.embedding::DOUBLE[], e.embedding::DOUBLE[])),
-               {ASSIGN_DECIMALS}) AS sim
-  FROM embeddings e CROSS JOIN cents c
-),
-assign AS (
-  SELECT vec_id, cid AS centroid_id FROM (
-    SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY sim DESC, cid) AS rn
-    FROM csims
-  ) WHERE rn = 1
-),
+    return rerank_pool_sql(f"""{ivf_assign_sql(cents)},
 unit AS (
   SELECT vec_id,
          list_transform(embedding::DOUBLE[],
@@ -312,20 +294,12 @@ approx AS (
   GROUP BY codes.vec_id, off.o
 ),
 pool AS (
-  SELECT x.vec_id, g.centroid_id
+  SELECT x.vec_id, CAST(g.centroid_id AS INTEGER) AS centroid_id
   FROM approx x JOIN assign g ON g.vec_id = x.vec_id
   WHERE g.centroid_id IN ({", ".join(str(p) for p in probes)})
   ORDER BY x.a DESC, x.vec_id
   LIMIT {RERANK_POOL}
-),
-q AS (SELECT embedding::DOUBLE[] AS qv FROM embeddings WHERE vec_id = {QUERY_VEC_ID})
-SELECT e.vec_id, CAST(p.centroid_id AS INTEGER) AS centroid_id,
-       ROUND((1.0 + list_cosine_similarity(e.embedding::DOUBLE[], q.qv)) / 2.0,
-             {SCORE_DECIMALS}) AS score
-FROM embeddings e JOIN pool p ON p.vec_id = e.vec_id CROSS JOIN q
-ORDER BY score DESC, e.vec_id
-LIMIT {K}
-"""
+)""")
 
 
 @register("ann_ivfpq_topk", oracle=_ivfpq_oracle)

@@ -37,12 +37,10 @@ from ..cache import scratch_dir
 from ..functions.embedder import OPENAI_EMBED_DIM, embed_text_driver, hash_embedder
 from ..functions.train import (
     ORACLE_SF_DIR,
-    load_sorted_vectors,
     round6_arr,
     sql_float,
-    sql_floats,
 )
-from ..functions.vector import dim_check, neo4j_score
+from ..functions.vector import dim_check
 from ..registry import register
 from ..sources.tables import load_table, spread, table_path
 from .ann import (
@@ -51,12 +49,14 @@ from .ann import (
     TRAIN_SAMPLE,
     _sample_vectors,
     assignment_col,
+    ivf_assign_sql,
+    ivf_probe_topk_sql,
     nearest_centroids,
-    oracle_centroids,
+    oracle_ivf_query,
     replace_partitions,
     train_centroids,
 )
-from .topk import QUERY_VEC_ID, SCORE_DECIMALS
+from .topk import literal_topk, query_vector
 
 K = 10
 
@@ -180,15 +180,8 @@ def q_semantic_search_dim1536(spark: SparkSession, sf_dir: str) -> DataFrame:
     embed = hash_embedder(OPENAI_EMBED_DIM)
     qvec = _embed_1536(PROMPT_1536)
     emb = docs.select("doc_id", embed(F.col("text")).alias("embedding"))
-    return (
-        emb.select(
-            "doc_id",
-            F.round(neo4j_score("embedding", qvec), SCORE_DECIMALS).alias("score"),
-            dim_check("embedding", OPENAI_EMBED_DIM).alias("dim_ok"),
-        )
-        .orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(K)
-    )
+    dim_ok = dim_check("embedding", OPENAI_EMBED_DIM).alias("dim_ok")
+    return literal_topk(emb, qvec, K, ["doc_id", "score", dim_ok], id_col="doc_id")
 
 
 # ---------------------------------------------------------------------------
@@ -201,56 +194,28 @@ CHURN_UPSERT_FRACTION = 0.9  # ids >= floor(frac·max) get re-embedded (reversed
 
 
 def _churn_oracle() -> str:
-    ids, x = load_sorted_vectors(ORACLE_SF_DIR)
-    cents = oracle_centroids()
-    qvec = [float(v) for v in x[ids.index(QUERY_VEC_ID)]]
-    probes = nearest_centroids(qvec, cents, NPROBE)
-    values = ",\n  ".join(
-        f"({i}, {sql_floats(c)}::DOUBLE[])" for i, c in enumerate(cents)
-    )
-    return f"""
-WITH cut AS (
+    cents, qvec = oracle_ivf_query()
+    effective = f"""cut AS (
   SELECT CAST(FLOOR({CHURN_UPSERT_FRACTION} * MAX(vec_id)) AS BIGINT) AS c
   FROM embeddings
-),
-cents(cid, cv) AS (VALUES
-  {values}
 ),
 eff AS (
   SELECT vec_id,
          CASE WHEN vec_id >= cut.c THEN list_reverse(embedding::DOUBLE[])
-              ELSE embedding::DOUBLE[] END AS v
+              ELSE embedding::DOUBLE[] END AS embedding
   FROM embeddings, cut
   WHERE NOT ({DELETE_SQL})
 ),
-assign AS (
-  SELECT vec_id, v, cid AS centroid_id FROM (
-    SELECT e.vec_id, e.v, c.cid,
-           ROW_NUMBER() OVER (PARTITION BY e.vec_id ORDER BY
-             ROUND(list_dot_product(e.v, c.cv)
-                   / sqrt(list_dot_product(e.v, e.v)), {ASSIGN_DECIMALS}) DESC,
-             c.cid) AS rn
-    FROM eff e CROSS JOIN cents c
-  ) WHERE rn = 1
-),
-q AS (SELECT embedding::DOUBLE[] AS qv FROM embeddings WHERE vec_id = {QUERY_VEC_ID})
-SELECT a.vec_id, CAST(a.centroid_id AS INTEGER) AS centroid_id,
-       ROUND((1.0 + list_cosine_similarity(a.v, q.qv)) / 2.0,
-             {SCORE_DECIMALS}) AS score
-FROM assign a CROSS JOIN q
-WHERE a.centroid_id IN ({", ".join(str(p) for p in probes)})
-ORDER BY score DESC, a.vec_id
-LIMIT {K}
-"""
+{ivf_assign_sql(cents, "eff")}"""
+    return ivf_probe_topk_sql(effective, nearest_centroids(qvec, cents, NPROBE))
 
 
 def _pruned_topk(layout_df: DataFrame, probes: list[int], qvec) -> DataFrame:
-    return (
-        layout_df.where(F.col("centroid_id").isin(probes))
-        .withColumn("score", F.round(neo4j_score("embedding", qvec), SCORE_DECIMALS))
-        .orderBy(F.desc("score"), F.asc("vec_id"))
-        .limit(K)
-        .select("vec_id", F.col("centroid_id").cast("int").alias("centroid_id"), "score")
+    return literal_topk(
+        layout_df.where(F.col("centroid_id").isin(probes)),
+        qvec,
+        K,
+        ["vec_id", F.col("centroid_id").cast("int").alias("centroid_id"), "score"],
     )
 
 
@@ -276,10 +241,7 @@ def q_ann_lifecycle_churn(spark: SparkSession, sf_dir: str) -> DataFrame:
     cut = emb.agg(
         F.floor(F.lit(CHURN_UPSERT_FRACTION) * F.max("vec_id")).cast("long").alias("c")
     ).first()["c"]
-    qvec = [
-        float(v)
-        for v in emb.where(F.col("vec_id") == QUERY_VEC_ID).first()["embedding"]
-    ]
+    qvec = query_vector(emb)
     probes = nearest_centroids(qvec, cents, NPROBE)
 
     # build: the pre-churn layout
@@ -501,15 +463,12 @@ def q_ann_ivf_dim1536(spark: SparkSession, sf_dir: str) -> DataFrame:
     cell."""
     assigned, cents = _load_or_build_1536_layout(spark, sf_dir, "centroid_id")
     qvec = _embed_1536(PROMPT_1536)
-    return (
-        assigned.where(F.col("centroid_id").isin(*_ivf1536_probes(cents)))
-        .select(
-            "doc_id",
-            F.round(neo4j_score("embedding", qvec), SCORE_DECIMALS).alias("score"),
-            "centroid_id",
-        )
-        .orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(K)
+    return literal_topk(
+        assigned.where(F.col("centroid_id").isin(*_ivf1536_probes(cents))),
+        qvec,
+        K,
+        ["doc_id", "score", "centroid_id"],
+        id_col="doc_id",
     )
 
 
@@ -574,13 +533,10 @@ def q_ann_hnsw_dim1536(spark: SparkSession, sf_dir: str) -> DataFrame:
     exists and the descent must find it."""
     assigned, cents = _load_or_build_1536_layout(spark, sf_dir, "node_id")
     qvec = _embed_1536(PROMPT_1536)
-    return (
-        assigned.where(F.col("node_id").isin(*_hnsw1536_probes(cents)))
-        .select(
-            "doc_id",
-            F.round(neo4j_score("embedding", qvec), SCORE_DECIMALS).alias("score"),
-            "node_id",
-        )
-        .orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(K)
+    return literal_topk(
+        assigned.where(F.col("node_id").isin(*_hnsw1536_probes(cents))),
+        qvec,
+        K,
+        ["doc_id", "score", "node_id"],
+        id_col="doc_id",
     )

@@ -30,11 +30,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.vector import neo4j_score, vector_lit
+from ..functions.vector import vector_lit
 from ..registry import register
 from ..sources.tables import load_table
-from .pq import DIST_DECIMALS, K, RERANK_POOL, cached_query_vector
-from .topk import QUERY_VEC_ID, SCORE_DECIMALS
+from .pq import DIST_DECIMALS, K, RERANK_POOL, cached_query_vector, rerank_pool_sql
+from .topk import QUERY_VEC_ID, literal_topk
 
 # Half the dimensions ⇒ half the scan bytes.  MRL-trained embeddings
 # tolerate much harder truncation (the paper uses 8-16× cuts); the
@@ -66,8 +66,7 @@ def _matryoshka_oracle() -> str:
     qvec = [float(v) for v in x[ids.index(QUERY_VEC_ID)]]
     qp = qvec[:PREFIX_DIM]
     qn2 = sum(v * v for v in qp)
-    return f"""
-WITH pre AS (
+    return rerank_pool_sql(f"""pre AS (
   SELECT vec_id,
          (embedding::DOUBLE[])[1:{PREFIX_DIM}] AS sub
   FROM embeddings
@@ -78,15 +77,7 @@ coarse AS (
                / sqrt(list_dot_product(sub, sub) * {qn2!r}), {DIST_DECIMALS}) AS a
   FROM pre
 ),
-pool AS (SELECT vec_id FROM coarse ORDER BY a DESC, vec_id LIMIT {RERANK_POOL}),
-q AS (SELECT embedding::DOUBLE[] AS qv FROM embeddings WHERE vec_id = {QUERY_VEC_ID})
-SELECT e.vec_id,
-       ROUND((1.0 + list_cosine_similarity(e.embedding::DOUBLE[], q.qv)) / 2.0,
-             {SCORE_DECIMALS}) AS score
-FROM embeddings e JOIN pool p ON p.vec_id = e.vec_id CROSS JOIN q
-ORDER BY score DESC, e.vec_id
-LIMIT {K}
-"""
+pool AS (SELECT vec_id FROM coarse ORDER BY a DESC, vec_id LIMIT {RERANK_POOL})""")
 
 
 @register("ann_matryoshka_topk", oracle=_matryoshka_oracle)
@@ -101,10 +92,4 @@ def q_ann_matryoshka_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .limit(RERANK_POOL)
         .select("vec_id")
     )
-    return (
-        emb.join(F.broadcast(pool), "vec_id")
-        .withColumn("score", F.round(neo4j_score("embedding", qvec), SCORE_DECIMALS))
-        .orderBy(F.desc("score"), F.asc("vec_id"))
-        .limit(K)
-        .select("vec_id", "score")
-    )
+    return literal_topk(emb.join(F.broadcast(pool), "vec_id"), qvec, K, ["vec_id", "score"])

@@ -55,7 +55,7 @@ from ..functions.train import (
     sql_float,
     sql_floats,
 )
-from ..functions.vector import l2_normalize, matrix_lit, neo4j_score
+from ..functions.vector import l2_normalize, matrix_lit
 from ..registry import register
 from ..sources.tables import load_table, table_path
 from .pq import (
@@ -71,8 +71,9 @@ from .pq import (
     SUB_DIM,
     TRAIN_SAMPLE,
     _codeword_norms2,
+    rerank_pool_sql,
 )
-from .topk import QUERY_VEC_ID, SCORE_DECIMALS
+from .topk import QUERY_VEC_ID, literal_topk
 
 SEED = 77
 DIM = 64
@@ -221,12 +222,8 @@ def opq_adc_topk(
         .limit(rerank)
         .select("vec_id")
     )
-    return (
-        embeddings.join(F.broadcast(pool), "vec_id")
-        .withColumn("score", F.round(neo4j_score("embedding", query_vec), SCORE_DECIMALS))
-        .orderBy(F.desc("score"), F.asc("vec_id"))
-        .limit(k)
-        .select("vec_id", "score")
+    return literal_topk(
+        embeddings.join(F.broadcast(pool), "vec_id"), query_vec, k, ["vec_id", "score"]
     )
 
 
@@ -252,8 +249,7 @@ def _opq_oracle() -> str:
         for m in range(M_SUBSPACES)
         for c in range(K_CODEWORDS)
     )
-    return f"""
-WITH unit AS (
+    return rerank_pool_sql(f"""unit AS (
   SELECT vec_id,
          list_transform(embedding::DOUBLE[],
                         y -> y / sqrt(list_dot_product(embedding::DOUBLE[],
@@ -295,15 +291,7 @@ approx AS (
   FROM codes JOIN lut ON lut.m = codes.m AND lut.c = codes.code
   GROUP BY codes.vec_id
 ),
-pool AS (SELECT vec_id FROM approx ORDER BY a DESC, vec_id LIMIT {RERANK_POOL}),
-q AS (SELECT embedding::DOUBLE[] AS qv FROM embeddings WHERE vec_id = {QUERY_VEC_ID})
-SELECT e.vec_id,
-       ROUND((1.0 + list_cosine_similarity(e.embedding::DOUBLE[], q.qv)) / 2.0,
-             {SCORE_DECIMALS}) AS score
-FROM embeddings e JOIN pool p ON p.vec_id = e.vec_id CROSS JOIN q
-ORDER BY score DESC, e.vec_id
-LIMIT {K}
-"""
+pool AS (SELECT vec_id FROM approx ORDER BY a DESC, vec_id LIMIT {RERANK_POOL})""")
 
 
 @register("ann_opq_topk", oracle=_opq_oracle)

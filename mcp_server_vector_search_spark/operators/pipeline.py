@@ -276,15 +276,10 @@ def pipeline_build_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _index_cells_oracle() -> str:
     """Centroid-assignment fragment (proven by the IVF family oracles)
     applied to the pipeline's kept TRAIN documents."""
-    from ..functions.train import sql_floats
     # ann's quantizer — must mirror the IVF index's own training sample
     # (load_or_build_ivf_index), not PQ's codebook sample
-    from ..operators.ann import ASSIGN_DECIMALS, oracle_centroids
+    from ..operators.ann import ivf_assign_sql, oracle_centroids
 
-    cents = oracle_centroids()
-    cent_rows = ",\n  ".join(
-        f"({i}, {sql_floats(c)}::DOUBLE[])" for i, c in enumerate(cents)
-    )
     return f"""
 WITH {_chunk_gate_split_sql()},
 kept AS (
@@ -293,27 +288,15 @@ kept AS (
   WHERE split = 'train'
   GROUP BY md5(array_to_string(list_sort(list_distinct(string_split(chunk_text, ' '))), ' '))
 ),
-cents(cid, cv) AS (VALUES
-  {cent_rows}
+kept_emb AS (
+  SELECT e.vec_id, e.embedding FROM embeddings e JOIN kept k ON k.doc_id = e.vec_id
 ),
-csims AS (
-  SELECT e.vec_id, c.cid,
-         ROUND(list_dot_product(e.embedding::DOUBLE[], c.cv)
-               / sqrt(list_dot_product(e.embedding::DOUBLE[], e.embedding::DOUBLE[])),
-               {ASSIGN_DECIMALS}) AS sim
-  FROM embeddings e JOIN kept k ON k.doc_id = e.vec_id
-  CROSS JOIN cents c
-)
-SELECT CAST(cid AS INTEGER) AS centroid_id,
+{ivf_assign_sql(oracle_centroids(), "kept_emb")}
+SELECT CAST(centroid_id AS INTEGER) AS centroid_id,
        COUNT(*) AS n_vectors,
        CAST(MIN(vec_id) AS BIGINT) AS min_vec
-FROM (
-  SELECT vec_id, cid FROM (
-    SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY sim DESC, cid) AS rn
-    FROM csims
-  ) WHERE rn = 1
-)
-GROUP BY cid
+FROM assign
+GROUP BY centroid_id
 """
 
 

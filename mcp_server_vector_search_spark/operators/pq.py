@@ -55,10 +55,10 @@ from ..functions.train import (
     sql_float,
     sql_floats,
 )
-from ..functions.vector import l2_normalize, matrix_lit, neo4j_score, vector_lit
+from ..functions.vector import l2_normalize, matrix_lit, vector_lit
 from ..registry import register
 from ..sources.tables import load_table, table_path
-from .topk import QUERY_VEC_ID, SCORE_DECIMALS
+from .topk import QUERY_CTE, QUERY_VEC_ID, literal_topk, query_vector, score_sql
 
 SEED = 42
 DIM = 64
@@ -181,11 +181,7 @@ def cached_query_vector(
     try:
         return m["sample_vecs"][m["sample_ids"].index(vec_id)]
     except ValueError:
-        emb = load_table(spark, sf_dir, "embeddings")
-        return [
-            float(x)
-            for x in emb.where(F.col("vec_id") == vec_id).first()["embedding"]
-        ]
+        return query_vector(load_table(spark, sf_dir, "embeddings"), vec_id)
 
 
 def _adc_lut(books, query_vec: Sequence[float]) -> list[list[float]]:
@@ -231,13 +227,24 @@ def pq_adc_topk(
         .limit(rerank)
         .select("vec_id")
     )
-    return (
-        embeddings.join(F.broadcast(pool), "vec_id")
-        .withColumn("score", F.round(neo4j_score("embedding", query_vec), SCORE_DECIMALS))
-        .orderBy(F.desc("score"), F.asc("vec_id"))
-        .limit(k)
-        .select("vec_id", "score")
+    return literal_topk(
+        embeddings.join(F.broadcast(pool), "vec_id"), query_vec, k, ["vec_id", "score"]
     )
+
+
+def rerank_pool_sql(ctes: str) -> str:
+    """Oracle twin of the two-stage searches' exact re-rank: ``ctes``
+    ends in a `pool` CTE of candidate ``vec_id``s (plus any carried
+    columns); the pool's vectors are exact-scored against the query and
+    the top K kept, projecting the pool's columns and ``score``."""
+    return f"""
+WITH {ctes},
+{QUERY_CTE}
+SELECT p.*, {score_sql("e.embedding::DOUBLE[]", "q.qv")} AS score
+FROM embeddings e JOIN pool p ON p.vec_id = e.vec_id CROSS JOIN q
+ORDER BY score DESC, e.vec_id
+LIMIT {K}
+"""
 
 
 def _pq_oracle() -> str:
@@ -260,8 +267,7 @@ def _pq_oracle() -> str:
         for m in range(M_SUBSPACES)
         for c in range(K_CODEWORDS)
     )
-    return f"""
-WITH unit AS (
+    return rerank_pool_sql(f"""unit AS (
   SELECT vec_id, embedding,
          list_transform(embedding::DOUBLE[],
                         y -> y / sqrt(list_dot_product(embedding::DOUBLE[],
@@ -293,15 +299,7 @@ approx AS (
   FROM codes JOIN lut ON lut.m = codes.m AND lut.c = codes.code
   GROUP BY codes.vec_id
 ),
-pool AS (SELECT vec_id FROM approx ORDER BY a DESC, vec_id LIMIT {RERANK_POOL}),
-q AS (SELECT embedding::DOUBLE[] AS qv FROM embeddings WHERE vec_id = {QUERY_VEC_ID})
-SELECT e.vec_id,
-       ROUND((1.0 + list_cosine_similarity(e.embedding::DOUBLE[], q.qv)) / 2.0,
-             {SCORE_DECIMALS}) AS score
-FROM embeddings e JOIN pool p ON p.vec_id = e.vec_id CROSS JOIN q
-ORDER BY score DESC, e.vec_id
-LIMIT {K}
-"""
+pool AS (SELECT vec_id FROM approx ORDER BY a DESC, vec_id LIMIT {RERANK_POOL})""")
 
 
 @register("ann_pq_topk", oracle=_pq_oracle)

@@ -36,7 +36,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from ..cache import scratch_table
+from ..cache import scratch_function, scratch_table, scratch_variable
 from ..registry import register
 from ..sources.tables import load_table
 
@@ -1307,8 +1307,9 @@ def q_scalar_sql_udf(spark: SparkSession, sf_dir: str) -> DataFrame:
     pushdown through it).  The oracle inlines the same arithmetic,
     which is precisely the claim being certified."""
     orders = scratch_table(load_table(spark, sf_dir, "orders"), "sqludf_orders_")
+    discounted = scratch_function(spark, "discounted_")
     spark.sql(
-        "CREATE OR REPLACE TEMPORARY FUNCTION discounted("
+        f"CREATE TEMPORARY FUNCTION {discounted}("
         "p DECIMAL(12,2)) RETURNS DECIMAL(16,4) "
         "RETURN p * CAST(0.9 AS DECIMAL(3,2))"
     )
@@ -1316,7 +1317,7 @@ def q_scalar_sql_udf(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"""
 SELECT o_orderpriority,
        COUNT(*) AS n_orders,
-       CAST(SUM(discounted(CAST(o_totalprice AS DECIMAL(12,2)))) AS DOUBLE)
+       CAST(SUM({discounted}(CAST(o_totalprice AS DECIMAL(12,2)))) AS DOUBLE)
            AS total_discounted
 FROM {orders}
 WHERE o_orderstatus = 'F'
@@ -1463,11 +1464,10 @@ def q_scalar_session_variables(spark: SparkSession, sf_dir: str) -> DataFrame:
     here carries a computed aggregate into a second query; the oracle
     inlines the same scalar subquery."""
     orders = scratch_table(load_table(spark, sf_dir, "orders"), "var_orders_")
+    avg_price = scratch_variable(spark, "var_avg_price_")
+    spark.sql(f"DECLARE VARIABLE {avg_price} DOUBLE DEFAULT 0.0")
     spark.sql(
-        "DECLARE OR REPLACE VARIABLE var_avg_price DOUBLE DEFAULT 0.0"
-    )
-    spark.sql(
-        f"SET VAR var_avg_price = (SELECT AVG(o_totalprice) FROM {orders} "
+        f"SET VAR {avg_price} = (SELECT AVG(o_totalprice) FROM {orders} "
         "WHERE o_orderstatus = 'O')"
     )
     return spark.sql(
@@ -1475,7 +1475,7 @@ def q_scalar_session_variables(spark: SparkSession, sf_dir: str) -> DataFrame:
 SELECT o_orderpriority,
        COUNT(*) AS n_above_avg
 FROM {orders}
-WHERE o_orderstatus = 'O' AND o_totalprice > var_avg_price
+WHERE o_orderstatus = 'O' AND o_totalprice > {avg_price}
 GROUP BY o_orderpriority
 ORDER BY o_orderpriority
 """

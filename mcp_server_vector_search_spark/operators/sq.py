@@ -32,7 +32,7 @@ from pyspark.sql import functions as F
 
 from ..artifacts import load_or_build
 from ..functions.train import ORACLE_SF_DIR, load_sorted_vectors, sql_float, sql_floats
-from ..functions.vector import l2_normalize, neo4j_score, vector_lit
+from ..functions.vector import l2_normalize, vector_lit
 from ..registry import register
 from ..sources.tables import load_table, table_path
 from .pq import (
@@ -43,8 +43,9 @@ from .pq import (
     TRAIN_SAMPLE,
     _sorted_sample,
     cached_query_vector,
+    rerank_pool_sql,
 )
-from .topk import QUERY_VEC_ID, SCORE_DECIMALS
+from .topk import QUERY_VEC_ID, literal_topk
 
 SQ_LEVELS = 255  # codes span 0..255
 
@@ -150,12 +151,8 @@ def sq8_adc_topk(
         .limit(rerank)
         .select("vec_id")
     )
-    return (
-        embeddings.join(F.broadcast(pool), "vec_id")
-        .withColumn("score", F.round(neo4j_score("embedding", query_vec), SCORE_DECIMALS))
-        .orderBy(F.desc("score"), F.asc("vec_id"))
-        .limit(k)
-        .select("vec_id", "score")
+    return literal_topk(
+        embeddings.join(F.broadcast(pool), "vec_id"), query_vec, k, ["vec_id", "score"]
     )
 
 
@@ -167,8 +164,7 @@ def _sq8_oracle() -> str:
     vmin, vdelta = train_sq8_bounds(vecs)
     qvec = [float(v) for v in x[ids.index(QUERY_VEC_ID)]]
     base, w = _query_weights(qvec, vmin, vdelta)
-    return f"""
-WITH params AS (
+    return rerank_pool_sql(f"""params AS (
   SELECT {sql_floats(vmin)}::DOUBLE[] AS vmin,
          {sql_floats(vdelta)}::DOUBLE[] AS vdelta,
          {sql_floats(w)}::DOUBLE[] AS w
@@ -197,15 +193,7 @@ approx AS (
 ),
 pool AS (
   SELECT vec_id FROM approx ORDER BY a DESC, vec_id LIMIT {RERANK_POOL}
-),
-q AS (SELECT embedding::DOUBLE[] AS qv FROM embeddings WHERE vec_id = {QUERY_VEC_ID})
-SELECT e.vec_id,
-       ROUND((1.0 + list_cosine_similarity(e.embedding::DOUBLE[], q.qv)) / 2.0,
-             {SCORE_DECIMALS}) AS score
-FROM embeddings e JOIN pool p ON p.vec_id = e.vec_id CROSS JOIN q
-ORDER BY score DESC, e.vec_id
-LIMIT {K}
-"""
+)""")
 
 
 @register("ann_sq8_topk", oracle=_sq8_oracle)
@@ -256,24 +244,16 @@ def _bq_oracle() -> str:
     of bit_count(xor) — independent of any bit-packing), then the exact
     re-rank."""
     load_sorted_vectors(ORACLE_SF_DIR)  # rows-only without the testdata, as sq8
-    qid = QUERY_VEC_ID
-    return f"""
-WITH q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = {qid}),
+    return rerank_pool_sql(f"""qs AS (
+  SELECT embedding AS qv FROM embeddings WHERE vec_id = {QUERY_VEC_ID}
+),
 ham AS (
   SELECT e.vec_id,
          len(list_filter(range(1, {DIM + 1}),
-             d -> (e.embedding[d] >= 0) <> (q.qv[d] >= 0))) AS h
-  FROM embeddings e CROSS JOIN q
+             d -> (e.embedding[d] >= 0) <> (qs.qv[d] >= 0))) AS h
+  FROM embeddings e CROSS JOIN qs
 ),
-pool AS (SELECT vec_id FROM ham ORDER BY h, vec_id LIMIT {RERANK_POOL}),
-qd AS (SELECT embedding::DOUBLE[] AS qv FROM embeddings WHERE vec_id = {qid})
-SELECT e.vec_id,
-       ROUND((1.0 + list_cosine_similarity(e.embedding::DOUBLE[], qd.qv)) / 2.0,
-             {SCORE_DECIMALS}) AS score
-FROM embeddings e JOIN pool p ON p.vec_id = e.vec_id CROSS JOIN qd
-ORDER BY score DESC, e.vec_id
-LIMIT {K}
-"""
+pool AS (SELECT vec_id FROM ham ORDER BY h, vec_id LIMIT {RERANK_POOL})""")
 
 
 @register("ann_bq_topk", oracle=_bq_oracle)
@@ -299,10 +279,4 @@ def q_ann_bq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .limit(RERANK_POOL)
         .select("vec_id")
     )
-    return (
-        emb.join(F.broadcast(pool), "vec_id")
-        .withColumn("score", F.round(neo4j_score("embedding", qvec), SCORE_DECIMALS))
-        .orderBy(F.desc("score"), F.asc("vec_id"))
-        .limit(K)
-        .select("vec_id", "score")
-    )
+    return literal_topk(emb.join(F.broadcast(pool), "vec_id"), qvec, K, ["vec_id", "score"])

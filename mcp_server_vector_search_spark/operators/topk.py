@@ -40,6 +40,34 @@ from ..registry import register
 from ..sources.tables import load_table
 
 SCORE_DECIMALS = 6  # round scores so Spark/DuckDB double math hash-matches
+QUERY_VEC_ID = 0  # deterministic stand-in for the reference's prompt embedding
+FLAGSHIP_K = 10  # k=10 hardcoded in the reference (server.py:87)
+
+
+def query_vector(emb: DataFrame, vec_id: int = QUERY_VEC_ID) -> list[float]:
+    """The query vector as driver-side floats: one bounded ``first()``
+    lookup, the analog of the reference binding its prompt embedding
+    client-side (server.py:86,95) before folding it into the plan."""
+    vec = emb.where(F.col("vec_id") == vec_id).first()["embedding"]
+    return [float(v) for v in vec]
+
+
+def score_col(query) -> Column:
+    """The rounded Neo4j score of the ``embedding`` column against
+    ``query``: a literal vector (folded into the plan) or a column."""
+    return F.round(neo4j_score("embedding", query), SCORE_DECIMALS)
+
+
+def score_sql(vec: str, qv: str) -> str:
+    """DuckDB text of :func:`score_col`: the rounded ``(1 + cos) / 2``
+    of the list expression ``vec`` against ``qv``."""
+    return f"ROUND((1.0 + list_cosine_similarity({vec}, {qv})) / 2.0, {SCORE_DECIMALS})"
+
+
+#: the oracle's query-vector CTE (``q.qv``), the twin of :func:`query_vector`
+QUERY_CTE = (
+    f"q AS (SELECT embedding::DOUBLE[] AS qv FROM embeddings WHERE vec_id = {QUERY_VEC_ID})"
+)
 
 
 def query_vector_df(embeddings: DataFrame, vec_id: int) -> DataFrame:
@@ -66,6 +94,17 @@ def score_against(df: DataFrame, query: DataFrame, vec_col: str = "embedding") -
 def topk(df: DataFrame, k: int, order: list[Column]) -> DataFrame:
     """ORDER BY + LIMIT — Catalyst fuses to TakeOrderedAndProject."""
     return df.orderBy(*order).limit(k)
+
+
+def literal_topk(
+    df: DataFrame, query_vec, k: int, cols: list, id_col: str = "vec_id"
+) -> DataFrame:
+    """The reference's one query (server.py:85-91) over ``df``: score
+    every row against the literal query vector, keep the ``k`` best by
+    (score DESC, ``id_col`` ASC) and project ``cols``.  The whole tail
+    is one ``TakeOrderedAndProject``."""
+    scored = df.withColumn("score", score_col(query_vec))
+    return topk(scored, k, [F.desc("score"), F.asc(id_col)]).select(*cols)
 
 
 def topk_cosine(
@@ -96,10 +135,6 @@ def topk_cosine(
     )
 
 
-QUERY_VEC_ID = 0  # deterministic stand-in for the reference's prompt embedding
-FLAGSHIP_K = 10  # k=10 hardcoded in the reference (server.py:87)
-
-
 def flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reference query end-to-end on the testdata tables.
 
@@ -116,13 +151,10 @@ def flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _FLAGSHIP_ORACLE = f"""
-WITH q AS (
-  SELECT embedding::DOUBLE[] AS qv FROM embeddings WHERE vec_id = {QUERY_VEC_ID}
-),
+WITH {QUERY_CTE},
 hits AS (
   SELECT e.vec_id,
-         ROUND((1.0 + list_cosine_similarity(e.embedding::DOUBLE[], q.qv)) / 2.0,
-               {SCORE_DECIMALS}) AS score
+         {score_sql("e.embedding::DOUBLE[]", "q.qv")} AS score
   FROM embeddings e CROSS JOIN q
   ORDER BY score DESC, e.vec_id
   LIMIT {FLAGSHIP_K}
@@ -141,12 +173,9 @@ def q_flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "vector_scores_all",
     oracle=f"""
-WITH q AS (
-  SELECT embedding::DOUBLE[] AS qv FROM embeddings WHERE vec_id = {QUERY_VEC_ID}
-)
+WITH {QUERY_CTE}
 SELECT e.vec_id,
-       ROUND((1.0 + list_cosine_similarity(e.embedding::DOUBLE[], q.qv)) / 2.0,
-             {SCORE_DECIMALS}) AS score
+       {score_sql("e.embedding::DOUBLE[]", "q.qv")} AS score
 FROM embeddings e CROSS JOIN q
 """,
 )
@@ -160,9 +189,7 @@ def q_scores_all(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "vector_distance_library",
     oracle=f"""
-WITH q AS (
-  SELECT embedding::DOUBLE[] AS qv FROM embeddings WHERE vec_id = {QUERY_VEC_ID}
-)
+WITH {QUERY_CTE}
 SELECT e.vec_id,
        ROUND(list_dot_product(e.embedding::DOUBLE[], q.qv), {SCORE_DECIMALS}) AS dot,
        ROUND(list_distance(e.embedding::DOUBLE[], q.qv), {SCORE_DECIMALS}) AS l2_dist,
@@ -170,8 +197,7 @@ SELECT e.vec_id,
              {SCORE_DECIMALS}) AS norm,
        ROUND(list_cosine_similarity(e.embedding::DOUBLE[], q.qv),
              {SCORE_DECIMALS}) AS cosine,
-       ROUND((1.0 + list_cosine_similarity(e.embedding::DOUBLE[], q.qv)) / 2.0,
-             {SCORE_DECIMALS}) AS neo4j_score
+       {score_sql("e.embedding::DOUBLE[]", "q.qv")} AS neo4j_score
 FROM embeddings e CROSS JOIN q
 """,
 )
@@ -193,9 +219,7 @@ def q_vector_distance_library(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(cosine_similarity("embedding", "__query_vec"), SCORE_DECIMALS).alias(
             "cosine"
         ),
-        F.round(neo4j_score("embedding", "__query_vec"), SCORE_DECIMALS).alias(
-            "neo4j_score"
-        ),
+        score_col("__query_vec").alias("neo4j_score"),
     )
 
 
@@ -222,9 +246,7 @@ def topk_per_query(
         .select(
             "query_id",
             "vec_id",
-            F.round(neo4j_score("embedding", "__query_vec"), SCORE_DECIMALS).alias(
-                "score"
-            ),
+            score_col("__query_vec").alias("score"),
         )
     )
     w = W.partitionBy("query_id").orderBy(F.desc("score"), F.asc("vec_id"))
@@ -244,8 +266,7 @@ WITH q AS (
 ),
 scored AS (
   SELECT q.query_id, e.vec_id,
-         ROUND((1.0 + list_cosine_similarity(e.embedding::DOUBLE[], q.qv)) / 2.0,
-               {SCORE_DECIMALS}) AS score
+         {score_sql("e.embedding::DOUBLE[]", "q.qv")} AS score
   FROM embeddings e CROSS JOIN q
 ),
 ranked AS (
@@ -326,12 +347,9 @@ def q_rows_as_json(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "empty_result_guard",
     oracle=f"""
-WITH q AS (
-  SELECT embedding::DOUBLE[] AS qv FROM embeddings WHERE vec_id = {QUERY_VEC_ID}
-)
+WITH {QUERY_CTE}
 SELECT e.vec_id,
-       ROUND((1.0 + list_cosine_similarity(e.embedding::DOUBLE[], q.qv)) / 2.0,
-             {SCORE_DECIMALS}) AS score
+       {score_sql("e.embedding::DOUBLE[]", "q.qv")} AS score
 FROM embeddings e CROSS JOIN q
 WHERE e.vec_id < 0
 ORDER BY score DESC, e.vec_id
@@ -365,13 +383,10 @@ PAGE_K = 10
 @register(
     "topk_search_after",
     oracle=f"""
-WITH q AS (
-  SELECT embedding::DOUBLE[] AS qv FROM embeddings WHERE vec_id = {QUERY_VEC_ID}
-),
+WITH {QUERY_CTE},
 ranked AS (
   SELECT e.vec_id,
-         ROUND((1.0 + list_cosine_similarity(e.embedding::DOUBLE[], q.qv)) / 2.0,
-               {SCORE_DECIMALS}) AS score
+         {score_sql("e.embedding::DOUBLE[]", "q.qv")} AS score
   FROM embeddings e CROSS JOIN q
   ORDER BY score DESC, e.vec_id
   LIMIT {PAGE_K} OFFSET {PAGE_K}

@@ -38,14 +38,13 @@ computation on the first ``oracle_sql()`` call (functions/train.py).
 
 from __future__ import annotations
 
-from typing import Sequence
+from typing import Callable, Sequence
 
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.train import ORACLE_SF_DIR, load_sorted_vectors, sql_floats
-from ..functions.vector import neo4j_score
 from ..registry import register
 from ..sources.tables import load_table
 from .ann import (
@@ -54,11 +53,22 @@ from .ann import (
     NPROBE,
     UPSERT_FRACTION,
     ivf_assign_sql,
+    ivf_probe_topk_sql,
     load_or_build_ivf_index,
     nearest_centroids,
     oracle_centroids,
+    oracle_ivf_query,
+    probe_ladder,
 )
-from .topk import QUERY_VEC_ID, SCORE_DECIMALS
+from .topk import (
+    QUERY_CTE,
+    QUERY_VEC_ID,
+    SCORE_DECIMALS,
+    literal_topk,
+    query_vector,
+    score_col,
+    score_sql,
+)
 
 K = 10
 
@@ -88,42 +98,28 @@ def filtered_ivf_topk(
     the parquet scan, so BOTH conditions are pushed to the reader —
     filter-during-search semantics, never post-filtering."""
     probes = nearest_centroids(query_vec, centroids, nprobe)
-    return (
-        indexed.where(F.col("centroid_id").isin(probes) & predicate)
-        .withColumn("score", F.round(neo4j_score("embedding", query_vec), SCORE_DECIMALS))
-        .orderBy(F.desc("score"), F.asc("vec_id"))
-        .limit(k)
-        .select("vec_id", "centroid_id", "label", "score")
+    return literal_topk(
+        indexed.where(F.col("centroid_id").isin(probes) & predicate),
+        query_vec,
+        k,
+        ["vec_id", "centroid_id", "label", "score"],
     )
 
 
 def _filtered_oracle() -> str:
-    ids, x = load_sorted_vectors(ORACLE_SF_DIR)
-    cents = oracle_centroids()
-    qvec = [float(v) for v in x[ids.index(QUERY_VEC_ID)]]
-    probes = nearest_centroids(qvec, cents, NPROBE)
-    return f"""
-WITH {ivf_assign_sql(cents)},
-q AS (SELECT embedding::DOUBLE[] AS qv FROM embeddings WHERE vec_id = {QUERY_VEC_ID})
-SELECT a.vec_id, a.centroid_id, e.label,
-       ROUND((1.0 + list_cosine_similarity(a.embedding::DOUBLE[], q.qv)) / 2.0,
-             {SCORE_DECIMALS}) AS score
-FROM assign a JOIN embeddings e ON e.vec_id = a.vec_id CROSS JOIN q
-WHERE a.centroid_id IN ({", ".join(str(p) for p in probes)}) AND ({FILTER_SQL})
-ORDER BY score DESC, a.vec_id
-LIMIT {K}
-"""
+    cents, qvec = oracle_ivf_query()
+    return ivf_probe_topk_sql(
+        ivf_assign_sql(cents, carry=["embedding", "label"]),
+        nearest_centroids(qvec, cents, NPROBE),
+        FILTER_SQL,
+    )
 
 
 @register("ann_filtered_topk", oracle=_filtered_oracle)
 def q_ann_filtered_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     indexed, centroids = load_or_build_ivf_index(spark, sf_dir)
     emb = load_table(spark, sf_dir, "embeddings")
-    qvec = [
-        float(v)
-        for v in emb.where(F.col("vec_id") == QUERY_VEC_ID).first()["embedding"]
-    ]
-    return filtered_ivf_topk(indexed, centroids, qvec, F.expr(FILTER_SQL))
+    return filtered_ivf_topk(indexed, centroids, query_vector(emb), F.expr(FILTER_SQL))
 
 
 # ---------------------------------------------------------------------------
@@ -138,7 +134,16 @@ def q_ann_filtered_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # budget starves and exactly one doubling (clamped to all 16 cells)
 # recovers a full k-list.
 ADAPTIVE_FILTER_SQL = "vec_id % 43 = 0"
-ADAPTIVE_MAX_ROUNDS = 6  # 2^6 x nprobe covers any practical cell count
+
+
+def _filtered_count(indexed: DataFrame, predicate: F.Column):
+    """The ladder's Spark count: a pruned ``COUNT(*)`` of the predicate's
+    survivors in the probed cells.  Partition pruning keeps each rung
+    proportional to the probed cells, and parquet row-group stats
+    satisfy most of the count without decompressing vectors."""
+    return lambda probes: indexed.where(
+        F.col("centroid_id").isin(probes) & predicate
+    ).count()
 
 
 def adaptive_filtered_topk(
@@ -151,90 +156,46 @@ def adaptive_filtered_topk(
 ) -> tuple[DataFrame, int]:
     """Filtered ANN with nprobe escalation: probe the default cells;
     while fewer than ``k`` rows survive the predicate, double nprobe
-    (bounded retries, clamped to every cell — the final rung IS the
-    full filtered scan fallback).  Returns ``(topk df, final nprobe)``.
-
-    The escalation counts are pruned ``COUNT(*)`` scans — partition
-    pruning keeps each retry proportional to the newly probed cells,
-    and parquet row-group stats satisfy most of the count without
-    decompressing vectors.  Driver-side looping is the serve-path
-    norm (FAISS's ``nprobe`` ladder, Qdrant's oversampling): the
-    decision needs one integer per rung, not data movement."""
-    n_cells = len(centroids)
-    cur = min(nprobe, n_cells)
-    rounds = 0
-    while True:
-        probes = nearest_centroids(query_vec, centroids, cur)
-        matched = indexed.where(F.col("centroid_id").isin(probes) & predicate)
-        # `cur` only advances when another probe/count iteration WILL
-        # run, so the returned final-nprobe always matches the probe
-        # set actually scanned — including on round exhaustion.
-        if (
-            cur >= n_cells
-            or rounds >= ADAPTIVE_MAX_ROUNDS
-            or matched.count() >= k
-        ):
-            break
-        cur = min(2 * cur, n_cells)
-        rounds += 1
-    out = (
-        matched.withColumn(
-            "score", F.round(neo4j_score("embedding", query_vec), SCORE_DECIMALS)
-        )
-        .orderBy(F.desc("score"), F.asc("vec_id"))
-        .limit(k)
-        .select("vec_id", "centroid_id", "score")
+    (``ann.probe_ladder`` — bounded retries, clamped to every cell, so
+    the final rung IS the full filtered scan fallback).  Returns
+    ``(topk df, final nprobe)``.  Driver-side looping is the serve-path
+    norm: the decision needs one integer per rung, not data movement."""
+    probes, cur, _ = probe_ladder(
+        query_vec, centroids, nprobe, _filtered_count(indexed, predicate), k
     )
-    return out, cur
+    matched = indexed.where(F.col("centroid_id").isin(probes) & predicate)
+    return literal_topk(matched, query_vec, k, ["vec_id", "centroid_id", "score"]), cur
 
 
-def _adaptive_oracle() -> str:
-    """Replays the SAME escalation ladder against DuckDB when the
-    oracle is built — each rung's starvation check runs the shared
-    ``ivf_assign_sql`` fragment, so the oracle's final probe list can
-    only diverge from the Spark side if the assignment SQL itself
-    diverges (which every IVF-family driver row already guards)."""
+def _ladder_oracle(start: Callable) -> str:
+    """Replays a filtered search's ``probe_ladder`` against DuckDB when
+    the oracle is built: ``start(con, cents, qvec)`` is the first width,
+    and each rung's starvation count runs the shared ``ivf_assign_sql``
+    fragment, so the oracle's final probe list can only diverge from the
+    Spark side if the assignment SQL itself diverges (which every
+    IVF-family driver row already guards)."""
     import duckdb
 
-    ids, x = load_sorted_vectors(ORACLE_SF_DIR)
-    cents = oracle_centroids()
-    qvec = [float(v) for v in x[ids.index(QUERY_VEC_ID)]]
+    cents, qvec = oracle_ivf_query()
     con = duckdb.connect()
     con.execute(
         "CREATE VIEW embeddings AS SELECT * FROM "
         f"read_parquet('{ORACLE_SF_DIR}/embeddings.parquet')"
     )
-    n_cells = len(cents)
-    cur = min(NPROBE, n_cells)
-    rounds = 0
-    while True:
-        probes = nearest_centroids(qvec, cents, cur)
-        if cur >= n_cells or rounds >= ADAPTIVE_MAX_ROUNDS:
-            break
-        cnt = con.execute(
+
+    def count(probes: list[int]) -> int:
+        return con.execute(
             f"WITH {ivf_assign_sql(cents)} SELECT count(*) FROM assign a "
             f"WHERE a.centroid_id IN ({', '.join(str(p) for p in probes)}) "
             f"AND ({ADAPTIVE_FILTER_SQL})"
         ).fetchone()[0]
-        if cnt >= K:
-            break
-        # advance only when another rung will actually run, so the
-        # final probe list always matches the final `cur` (mirrors
-        # adaptive_filtered_topk above)
-        cur = min(2 * cur, n_cells)
-        rounds += 1
-    return f"""
-WITH {ivf_assign_sql(cents)},
-q AS (SELECT embedding::DOUBLE[] AS qv FROM embeddings WHERE vec_id = {QUERY_VEC_ID})
-SELECT a.vec_id, a.centroid_id,
-       ROUND((1.0 + list_cosine_similarity(a.embedding::DOUBLE[], q.qv)) / 2.0,
-             {SCORE_DECIMALS}) AS score
-FROM assign a CROSS JOIN q
-WHERE a.centroid_id IN ({", ".join(str(p) for p in probes)})
-  AND ({ADAPTIVE_FILTER_SQL})
-ORDER BY score DESC, a.vec_id
-LIMIT {K}
-"""
+
+    probes, _, _ = probe_ladder(qvec, cents, start(con, cents, qvec), count, K)
+    return ivf_probe_topk_sql(ivf_assign_sql(cents), probes, ADAPTIVE_FILTER_SQL)
+
+
+def _adaptive_oracle() -> str:
+    return _ladder_oracle(lambda con, cents, qvec: NPROBE)
 
 
 @register("ann_filtered_adaptive", oracle=_adaptive_oracle)
@@ -245,12 +206,8 @@ def q_ann_filtered_adaptive(spark: SparkSession, sf_dir: str) -> DataFrame:
     k-list (or the whole filtered corpus) is returned."""
     indexed, centroids = load_or_build_ivf_index(spark, sf_dir)
     emb = load_table(spark, sf_dir, "embeddings")
-    qvec = [
-        float(v)
-        for v in emb.where(F.col("vec_id") == QUERY_VEC_ID).first()["embedding"]
-    ]
     df, _ = adaptive_filtered_topk(
-        indexed, centroids, qvec, F.expr(ADAPTIVE_FILTER_SQL)
+        indexed, centroids, query_vector(emb), F.expr(ADAPTIVE_FILTER_SQL)
     )
     return df
 
@@ -287,16 +244,16 @@ def planned_filtered_topk(
     single-cell aggregate (total rows + predicate survivors — parquet
     row-group stats and dictionary pages satisfy most of it) prices
     the predicate, ``_planned_nprobe`` sizes the probe set, and only a
-    genuine underestimate pays further reactive rungs.  Returns
-    ``(topk df, final nprobe, rungs)`` where rungs counts probe-set
-    evaluations — 1 means the estimate landed in one jump.
+    genuine underestimate pays further reactive rungs of
+    ``ann.probe_ladder``.  Returns ``(topk df, final nprobe, rungs)``
+    where rungs counts probe-set evaluations — 1 means the estimate
+    landed in one jump.
 
     At 100 TB this is the difference between log2(n_cells) pruned
     COUNT scans per starving query and exactly one cell-sized
     aggregate: the estimate cost is O(|one cell|) regardless of
     corpus size, the same discipline a cost-based optimizer applies
     with column NDV stats."""
-    n_cells = len(centroids)
     c0 = nearest_centroids(query_vec, centroids, 1)[0]
     est = (
         indexed.where(F.col("centroid_id") == c0)
@@ -306,77 +263,30 @@ def planned_filtered_topk(
         )
         .first()
     )
-    t, m = int(est["t"]), int(est["m"] or 0)
-    cur = _planned_nprobe(t, m, k, nprobe, n_cells)
-    rungs = 0
-    while True:
-        probes = nearest_centroids(query_vec, centroids, cur)
-        matched = indexed.where(F.col("centroid_id").isin(probes) & predicate)
-        rungs += 1
-        if cur >= n_cells or rungs > ADAPTIVE_MAX_ROUNDS or matched.count() >= k:
-            break
-        cur = min(2 * cur, n_cells)
-    out = (
-        matched.withColumn(
-            "score", F.round(neo4j_score("embedding", query_vec), SCORE_DECIMALS)
-        )
-        .orderBy(F.desc("score"), F.asc("vec_id"))
-        .limit(k)
-        .select("vec_id", "centroid_id", "score")
+    start = _planned_nprobe(int(est["t"]), int(est["m"] or 0), k, nprobe, len(centroids))
+    probes, cur, rungs = probe_ladder(
+        query_vec, centroids, start, _filtered_count(indexed, predicate), k
     )
+    matched = indexed.where(F.col("centroid_id").isin(probes) & predicate)
+    out = literal_topk(matched, query_vec, k, ["vec_id", "centroid_id", "score"])
     return out, cur, rungs
 
 
 def _planned_oracle() -> str:
-    """Replays the estimate arithmetic against DuckDB when the oracle
-    is built: the same single-cell (t, m) counts through the shared
-    ``ivf_assign_sql``, the same ``_planned_nprobe``, the same
-    fallback ladder — so Spark and oracle can only diverge if the
-    assignment SQL itself diverges."""
-    import duckdb
+    """Replays the estimate arithmetic: the same single-cell (t, m)
+    counts through the shared ``ivf_assign_sql``, the same
+    ``_planned_nprobe``, the same fallback ladder."""
 
-    ids, x = load_sorted_vectors(ORACLE_SF_DIR)
-    cents = oracle_centroids()
-    qvec = [float(v) for v in x[ids.index(QUERY_VEC_ID)]]
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW embeddings AS SELECT * FROM "
-        f"read_parquet('{ORACLE_SF_DIR}/embeddings.parquet')"
-    )
-    n_cells = len(cents)
-    c0 = nearest_centroids(qvec, cents, 1)[0]
-    t, m = con.execute(
-        f"WITH {ivf_assign_sql(cents)} SELECT count(*), "
-        f"count(*) FILTER (WHERE {ADAPTIVE_FILTER_SQL}) "
-        f"FROM assign a WHERE a.centroid_id = {c0}"
-    ).fetchone()
-    cur = _planned_nprobe(int(t), int(m), K, NPROBE, n_cells)
-    rungs = 0
-    while True:
-        probes = nearest_centroids(qvec, cents, cur)
-        rungs += 1
-        if cur >= n_cells or rungs > ADAPTIVE_MAX_ROUNDS:
-            break
-        cnt = con.execute(
-            f"WITH {ivf_assign_sql(cents)} SELECT count(*) FROM assign a "
-            f"WHERE a.centroid_id IN ({', '.join(str(p) for p in probes)}) "
-            f"AND ({ADAPTIVE_FILTER_SQL})"
-        ).fetchone()[0]
-        if cnt >= K:
-            break
-        cur = min(2 * cur, n_cells)
-    return f"""
-WITH {ivf_assign_sql(cents)},
-q AS (SELECT embedding::DOUBLE[] AS qv FROM embeddings WHERE vec_id = {QUERY_VEC_ID})
-SELECT a.vec_id, a.centroid_id,
-       ROUND((1.0 + list_cosine_similarity(a.embedding::DOUBLE[], q.qv)) / 2.0,
-             {SCORE_DECIMALS}) AS score
-FROM assign a CROSS JOIN q
-WHERE a.centroid_id IN ({", ".join(str(p) for p in probes)})
-  AND ({ADAPTIVE_FILTER_SQL})
-ORDER BY score DESC, a.vec_id
-LIMIT {K}
-"""
+    def start(con, cents, qvec) -> int:
+        c0 = nearest_centroids(qvec, cents, 1)[0]
+        t, m = con.execute(
+            f"WITH {ivf_assign_sql(cents)} SELECT count(*), "
+            f"count(*) FILTER (WHERE {ADAPTIVE_FILTER_SQL}) "
+            f"FROM assign a WHERE a.centroid_id = {c0}"
+        ).fetchone()
+        return _planned_nprobe(int(t), int(m), K, NPROBE, len(cents))
+
+    return _ladder_oracle(start)
 
 
 @register("ann_filtered_planned", oracle=_planned_oracle)
@@ -387,12 +297,8 @@ def q_ann_filtered_planned(spark: SparkSession, sf_dir: str) -> DataFrame:
     (asserted in tests) rather than walking the doubling ladder."""
     indexed, centroids = load_or_build_ivf_index(spark, sf_dir)
     emb = load_table(spark, sf_dir, "embeddings")
-    qvec = [
-        float(v)
-        for v in emb.where(F.col("vec_id") == QUERY_VEC_ID).first()["embedding"]
-    ]
     df, _, _ = planned_filtered_topk(
-        indexed, centroids, qvec, F.expr(ADAPTIVE_FILTER_SQL)
+        indexed, centroids, query_vector(emb), F.expr(ADAPTIVE_FILTER_SQL)
     )
     return df
 
@@ -405,22 +311,12 @@ TOMBSTONE_SQL = "vec_id % 7 = 3"  # the deleted set (demo predicate)
 
 
 def _tombstone_oracle() -> str:
-    ids, x = load_sorted_vectors(ORACLE_SF_DIR)
-    cents = oracle_centroids()
-    qvec = [float(v) for v in x[ids.index(QUERY_VEC_ID)]]
-    probes = nearest_centroids(qvec, cents, NPROBE)
-    return f"""
-WITH {ivf_assign_sql(cents)},
-q AS (SELECT embedding::DOUBLE[] AS qv FROM embeddings WHERE vec_id = {QUERY_VEC_ID})
-SELECT a.vec_id, a.centroid_id,
-       ROUND((1.0 + list_cosine_similarity(a.embedding::DOUBLE[], q.qv)) / 2.0,
-             {SCORE_DECIMALS}) AS score
-FROM assign a CROSS JOIN q
-WHERE a.centroid_id IN ({", ".join(str(p) for p in probes)})
-  AND a.vec_id NOT IN (SELECT vec_id FROM embeddings WHERE {TOMBSTONE_SQL})
-ORDER BY score DESC, a.vec_id
-LIMIT {K}
-"""
+    cents, qvec = oracle_ivf_query()
+    return ivf_probe_topk_sql(
+        ivf_assign_sql(cents),
+        nearest_centroids(qvec, cents, NPROBE),
+        f"a.vec_id NOT IN (SELECT vec_id FROM embeddings WHERE {TOMBSTONE_SQL})",
+    )
 
 
 @register("ann_delete_tombstone", oracle=_tombstone_oracle)
@@ -437,19 +333,16 @@ def q_ann_delete_tombstone(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     indexed, centroids = load_or_build_ivf_index(spark, sf_dir)
     emb = load_table(spark, sf_dir, "embeddings")
-    qvec = [
-        float(v)
-        for v in emb.where(F.col("vec_id") == QUERY_VEC_ID).first()["embedding"]
-    ]
+    qvec = query_vector(emb)
     tombstones = emb.where(F.expr(TOMBSTONE_SQL)).select("vec_id")
     probes = nearest_centroids(qvec, centroids, NPROBE)
-    return (
-        indexed.where(F.col("centroid_id").isin(probes))
-        .join(F.broadcast(tombstones), "vec_id", "left_anti")
-        .withColumn("score", F.round(neo4j_score("embedding", qvec), SCORE_DECIMALS))
-        .orderBy(F.desc("score"), F.asc("vec_id"))
-        .limit(K)
-        .select("vec_id", "centroid_id", "score")
+    return literal_topk(
+        indexed.where(F.col("centroid_id").isin(probes)).join(
+            F.broadcast(tombstones), "vec_id", "left_anti"
+        ),
+        qvec,
+        K,
+        ["vec_id", "centroid_id", "score"],
     )
 
 
@@ -537,10 +430,9 @@ def _mmr_oracle() -> str:
 WITH sel(mmr_rank, vec_id) AS (VALUES
   {values}
 ),
-q AS (SELECT embedding::DOUBLE[] AS qv FROM embeddings WHERE vec_id = {QUERY_VEC_ID})
+{QUERY_CTE}
 SELECT CAST(s.mmr_rank AS INTEGER) AS mmr_rank, CAST(s.vec_id AS BIGINT) AS vec_id,
-       ROUND((1.0 + list_cosine_similarity(e.embedding::DOUBLE[], q.qv)) / 2.0,
-             {SCORE_DECIMALS}) AS score
+       {score_sql("e.embedding::DOUBLE[]", "q.qv")} AS score
 FROM sel s JOIN embeddings e ON e.vec_id = s.vec_id CROSS JOIN q
 ORDER BY s.mmr_rank
 """
@@ -555,17 +447,8 @@ def q_topk_mmr_diverse(spark: SparkSession, sf_dir: str) -> DataFrame:
     diversity property (max pairwise sim strictly below the plain
     top-k's) on top of the oracle equality."""
     emb = load_table(spark, sf_dir, "embeddings")
-    qvec = np.asarray(
-        [float(v) for v in emb.where(F.col("vec_id") == QUERY_VEC_ID).first()["embedding"]],
-        dtype=np.float64,
-    )
-    pool_rows = (
-        emb.withColumn("score", F.round(neo4j_score("embedding", qvec), SCORE_DECIMALS))
-        .orderBy(F.desc("score"), F.asc("vec_id"))
-        .limit(MMR_POOL)
-        .select("vec_id", "embedding")
-        .collect()
-    )
+    qvec = np.asarray(query_vector(emb), dtype=np.float64)
+    pool_rows = literal_topk(emb, qvec, MMR_POOL, ["vec_id", "embedding"]).collect()
     pool_ids = [r["vec_id"] for r in pool_rows]
     pool_vecs = np.asarray([list(map(float, r["embedding"])) for r in pool_rows])
     sel = mmr_select(pool_ids, pool_vecs, qvec)
@@ -574,7 +457,7 @@ def q_topk_mmr_diverse(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return (
         emb.join(F.broadcast(ranks), "vec_id")
-        .withColumn("score", F.round(neo4j_score("embedding", qvec), SCORE_DECIMALS))
+        .withColumn("score", score_col(qvec))
         .select("mmr_rank", "vec_id", "score")
         .orderBy("mmr_rank")
     )
@@ -589,21 +472,24 @@ MAXSIM_QUERY_IDS = (0, 1, 2)  # the query's token vectors
 MAXSIM_K = K
 
 
+def _maxsim_sims_sql() -> str:
+    """Per query vector ``i``, the doc group's best rounded score ``s{i}``."""
+    qvs = [
+        f"(SELECT embedding::DOUBLE[] FROM embeddings WHERE vec_id = {q})"
+        for q in MAXSIM_QUERY_IDS
+    ]
+    return ",\n         ".join(
+        f"MAX({score_sql('e.embedding::DOUBLE[]', qv)}) AS s{i}" for i, qv in enumerate(qvs)
+    )
+
+
 @register(
     "maxsim_multivector",
     oracle=f"""
 WITH per AS (
   SELECT e.vec_id // {MAXSIM_GROUP} AS doc_group,
          COUNT(*) AS n_vectors,
-         MAX(ROUND((1.0 + list_cosine_similarity(e.embedding::DOUBLE[],
-             (SELECT embedding::DOUBLE[] FROM embeddings WHERE vec_id = {MAXSIM_QUERY_IDS[0]}))) / 2.0,
-             {SCORE_DECIMALS})) AS s0,
-         MAX(ROUND((1.0 + list_cosine_similarity(e.embedding::DOUBLE[],
-             (SELECT embedding::DOUBLE[] FROM embeddings WHERE vec_id = {MAXSIM_QUERY_IDS[1]}))) / 2.0,
-             {SCORE_DECIMALS})) AS s1,
-         MAX(ROUND((1.0 + list_cosine_similarity(e.embedding::DOUBLE[],
-             (SELECT embedding::DOUBLE[] FROM embeddings WHERE vec_id = {MAXSIM_QUERY_IDS[2]}))) / 2.0,
-             {SCORE_DECIMALS})) AS s2
+         {_maxsim_sims_sql()}
   FROM embeddings e
   GROUP BY 1
 )
@@ -633,11 +519,7 @@ def q_maxsim_multivector(spark: SparkSession, sf_dir: str) -> DataFrame:
         for r in emb.where(F.col("vec_id").isin(list(MAXSIM_QUERY_IDS))).collect()
     }
     sims = [
-        F.max(
-            F.round(
-                neo4j_score("embedding", qrows[qid]), SCORE_DECIMALS
-            )
-        ).alias(f"s{i}")
+        F.max(score_col(qrows[qid])).alias(f"s{i}")
         for i, qid in enumerate(MAXSIM_QUERY_IDS)
     ]
     per = (
@@ -686,8 +568,7 @@ q AS (
 ),
 scored AS (
   SELECT CAST(p.query_id AS BIGINT) AS query_id, a.vec_id, a.centroid_id,
-         ROUND((1.0 + list_cosine_similarity(a.embedding::DOUBLE[], q.qv)) / 2.0,
-               {SCORE_DECIMALS}) AS score
+         {score_sql("a.embedding::DOUBLE[]", "q.qv")} AS score
   FROM assign a
   JOIN probes p ON p.cid = a.centroid_id
   JOIN q ON q.query_id = p.query_id
@@ -745,7 +626,7 @@ def q_ann_batch_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = (
         indexed.where(F.col("centroid_id").isin(union_cells))
         .join(F.broadcast(probes), "centroid_id")
-        .withColumn("score", F.round(neo4j_score("embedding", qv), SCORE_DECIMALS))
+        .withColumn("score", score_col(qv))
     )
     w = W.partitionBy("query_id").orderBy(F.desc("score"), F.asc("vec_id"))
     return (
@@ -1024,26 +905,22 @@ def q_ann_index_maintenance_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _recall_oracle() -> str:
-    ids, x = load_sorted_vectors(ORACLE_SF_DIR)
-    cents = oracle_centroids()
-    qvec = [float(v) for v in x[ids.index(QUERY_VEC_ID)]]
+    cents, qvec = oracle_ivf_query()
     probes = nearest_centroids(qvec, cents, NPROBE)
     return f"""
 WITH {ivf_assign_sql(cents)},
-q AS (SELECT embedding::DOUBLE[] AS qv FROM embeddings WHERE vec_id = {QUERY_VEC_ID}),
+{QUERY_CTE},
 exact AS (
   SELECT e.vec_id
   FROM embeddings e CROSS JOIN q
-  ORDER BY ROUND((1.0 + list_cosine_similarity(e.embedding::DOUBLE[], q.qv)) / 2.0,
-                 {SCORE_DECIMALS}) DESC, e.vec_id
+  ORDER BY {score_sql("e.embedding::DOUBLE[]", "q.qv")} DESC, e.vec_id
   LIMIT {K}
 ),
 approx AS (
   SELECT a.vec_id
   FROM assign a CROSS JOIN q
   WHERE a.centroid_id IN ({", ".join(str(p) for p in probes)})
-  ORDER BY ROUND((1.0 + list_cosine_similarity(a.embedding::DOUBLE[], q.qv)) / 2.0,
-                 {SCORE_DECIMALS}) DESC, a.vec_id
+  ORDER BY {score_sql("a.embedding::DOUBLE[]", "q.qv")} DESC, a.vec_id
   LIMIT {K}
 )
 SELECT CAST({K} AS INTEGER) AS k,
@@ -1070,23 +947,11 @@ def q_ann_recall_certificate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     indexed, centroids = load_or_build_ivf_index(spark, sf_dir)
     emb = load_table(spark, sf_dir, "embeddings")
-    qvec = [
-        float(v)
-        for v in emb.where(F.col("vec_id") == QUERY_VEC_ID).first()["embedding"]
-    ]
+    qvec = query_vector(emb)
     probes = nearest_centroids(qvec, centroids, NPROBE)
-    exact = (
-        emb.withColumn("score", F.round(neo4j_score("embedding", qvec), SCORE_DECIMALS))
-        .orderBy(F.desc("score"), F.asc("vec_id"))
-        .limit(K)
-        .select("vec_id")
-    )
-    approx = (
-        indexed.where(F.col("centroid_id").isin(probes))
-        .withColumn("score", F.round(neo4j_score("embedding", qvec), SCORE_DECIMALS))
-        .orderBy(F.desc("score"), F.asc("vec_id"))
-        .limit(K)
-        .select("vec_id")
+    exact = literal_topk(emb, qvec, K, ["vec_id"])
+    approx = literal_topk(
+        indexed.where(F.col("centroid_id").isin(probes)), qvec, K, ["vec_id"]
     )
     hits = exact.join(approx, "vec_id").agg(F.count("*").alias("hits"))
     return hits.select(

@@ -154,10 +154,15 @@ def incremental_index_append(
     index layout.  Returns the finished StreamingQuery."""
     stream = table_stream(spark, sf_dir, "embeddings")
 
-    # The SAME assignment expression as the batch index build
-    # (operators/ann.assignment_expr: matrix-literal transform, rounded
-    # sims, lowest-id ties) — streamed appends land in exactly the cell
-    # a batch rebuild would choose, so the layout never forks.
+    # The same assignment RULE as the batch index build, through a
+    # different expression: batch builds call ann.assignment_col, which
+    # at the fixture's 16 cells x 64 dims (= GEMM_ASSIGN_MIN_WORK) takes
+    # the Arrow GEMM, while the stream keeps the pure-JVM
+    # ann.assignment_expr (matrix-literal transform, rounded sims,
+    # lowest-id ties).  The two agree only through the shared
+    # ASSIGN_DECIMALS rounding, which
+    # tests/test_ann.py::test_assignment_gemm_matches_jvm_expr pins, so a
+    # streamed append lands in the cell a batch rebuild would choose.
     from ..operators.ann import assignment_expr
 
     assigned = stream.withColumn("centroid_id", assignment_expr(centroids))

@@ -10,6 +10,7 @@ validated in CI before the driver ever sees it.
 from __future__ import annotations
 
 import datetime as dt
+import hashlib
 import math
 
 import duckdb
@@ -50,6 +51,13 @@ def canonical(rows: list, colnames: list[str]):
     order = sorted(range(len(colnames)), key=lambda i: colnames[i])
     mat = [tuple(_norm(row[i]) for i in order) for row in rows]
     return sorted(mat, key=repr)
+
+
+def rows_digest(rows: list, colnames: list[str]) -> str:
+    """sha256 of the canonical rows, with the sorted column names: equal
+    digests mean the same result set under the driver's comparison."""
+    payload = repr((sorted(colnames), canonical(rows, colnames)))
+    return hashlib.sha256(payload.encode()).hexdigest()
 
 
 # DuckDB result type → acceptable Spark simpleString()s.  The driver's
@@ -109,18 +117,22 @@ def type_problems(spark_df, rel) -> list[str]:
     return problems
 
 
-def compare(spark_df, con: duckdb.DuckDBPyConnection, sql: str) -> list[str]:
-    """Return a list of mismatch descriptions (empty = parity)."""
+def compare(
+    spark_df, con: duckdb.DuckDBPyConnection, sql: str
+) -> tuple[list[str], str]:
+    """Return the mismatch descriptions (empty = parity) and the
+    :func:`rows_digest` of the DuckDB rows."""
     problems: list[str] = []
     s_rows = [tuple(r) for r in spark_df.collect()]
     s_cols = list(spark_df.columns)
     rel = con.sql(sql)
     d_cols = list(rel.columns)
     d_rows = rel.fetchall()
+    digest = rows_digest(d_rows, d_cols)
 
     if sorted(s_cols) != sorted(d_cols):
         problems.append(f"schema mismatch: spark={sorted(s_cols)} duckdb={sorted(d_cols)}")
-        return problems
+        return problems, digest
     problems.extend(type_problems(spark_df, rel))
     if len(s_rows) != len(d_rows):
         problems.append(f"row count mismatch: spark={len(s_rows)} duckdb={len(d_rows)}")
@@ -132,4 +144,4 @@ def compare(spark_df, con: duckdb.DuckDBPyConnection, sql: str) -> list[str]:
             f"value mismatch: {len([r for r in sc if r not in dc])} spark-only rows, "
             f"e.g. spark-only={diff_s} duckdb-only={diff_d}"
         )
-    return problems
+    return problems, digest

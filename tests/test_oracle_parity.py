@@ -7,6 +7,9 @@ smoke check instead (mirroring the driver's weaker rows-only record).
 
 from __future__ import annotations
 
+import json
+from pathlib import Path
+
 import pytest
 
 from mcp_server_vector_search_spark import registry
@@ -15,6 +18,12 @@ from .conftest import SF_CORRECTNESS
 from .oracle import compare, duckdb_connection
 
 registry.load_all_operators()
+
+# Oracle row digests (``scripts/gen_oracle_digests.py``): a rewrite of
+# oracle text must leave every oracle's rows unchanged.
+DIGESTS = json.loads(
+    (Path(__file__).parent / "fixtures" / "oracle_digests.json").read_text()
+)
 
 
 @pytest.fixture(scope="module")
@@ -48,8 +57,11 @@ def test_query_parity(name, spark, oracle_con):
     )
     oracle = registry.oracles().get(name)
     if oracle is not None:
-        problems = compare(df, oracle_con, oracle)
+        problems, digest = compare(df, oracle_con, oracle)
         assert not problems, f"{name}: " + "; ".join(problems)
+        assert digest == DIGESTS.get(name), (
+            f"{name}: oracle rows differ from tests/fixtures/oracle_digests.json"
+        )
     else:
         # rows-only check (approximate operators) — must run and be well-formed
         rows = df.collect()

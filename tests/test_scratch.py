@@ -1,7 +1,8 @@
 """Scratch ownership: every directory and memory-sink view a query
 leaves behind is removed by ``cache.release_scratch()`` — also when the
 query raised halfway — and no module outside ``cache.py`` hand-rolls
-its own temp dirs or deletes them, or registers a fixed view name."""
+its own temp dirs or deletes them, or registers a fixed view, function
+or variable name."""
 
 from __future__ import annotations
 
@@ -118,3 +119,55 @@ def test_temp_views_are_registered_only_by_their_owners():
         if re.search(r"\.create(OrReplace)?(Global)?TempView\(", f.read_text())
     }
     assert found == {"cache.py", "sources/tables.py", "engine.py"}
+
+
+def test_query_keeps_the_callers_function_and_variable(spark):
+    """A query's SQL UDF, session variable and UDTFs are scratch: a
+    caller's own ``discounted`` function and ``var_avg_price`` variable
+    survive the queries that once used those names, and none of the
+    queries' functions or variables remain after release."""
+    spark.sql(
+        "CREATE OR REPLACE TEMPORARY FUNCTION discounted(p DOUBLE) "
+        "RETURNS DOUBLE RETURN p * 2"
+    )
+    spark.sql("DECLARE OR REPLACE VARIABLE var_avg_price DOUBLE DEFAULT 7.0")
+    try:
+        cache.release_scratch()
+        for name in (
+            "scalar_sql_udf",
+            "scalar_session_variables",
+            "udtf_tokenize",
+            "udtf_polymorphic_schema",
+            "udtf_table_argument",
+        ):
+            QUERIES[name](spark, SF_SMOKE).collect()
+        made = [(kind, name) for kind, _, name in cache._OBJECTS if kind != "view"]
+        assert sorted(kind for kind, _ in made) == ["function"] * 4 + ["variable"]
+        row = spark.sql("SELECT discounted(1.5) AS d, var_avg_price AS v").first()
+        assert (row["d"], row["v"]) == (3.0, 7.0)
+        cache.release_scratch()
+        for kind, name in made:
+            with pytest.raises(Exception, match="NOT_FOUND"):
+                spark.sql(f"DROP TEMPORARY {kind.upper()} {name}")
+    finally:
+        spark.sql("DROP TEMPORARY FUNCTION IF EXISTS discounted")
+        spark.sql("DROP TEMPORARY VARIABLE IF EXISTS var_avg_price")
+
+
+def test_session_objects_are_named_only_by_their_owner():
+    """Temporary functions, session variables and UDTF registrations
+    take their names from ``cache.scratch_function`` /
+    ``scratch_variable``: outside cache.py no fixed name follows
+    ``TEMPORARY FUNCTION`` or ``DECLARE VARIABLE``, and no string
+    literal is passed to ``udtf.register``."""
+    fixed = re.compile(
+        r"TEMPORARY\s+FUNCTION\s+(IF\s+NOT\s+EXISTS\s+)?\w"
+        r"|DECLARE\s+(OR\s+REPLACE\s+)?VARIABLE\s+(IF\s+NOT\s+EXISTS\s+)?\w"
+        r"|\.udtf\.register\(\s*[\"']"
+    )
+    found = {
+        f.relative_to(PACKAGE).as_posix()
+        for f in PACKAGE.rglob("*.py")
+        if f.name != "cache.py" and fixed.search(f.read_text())
+    }
+    assert found == set()
